@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{CosineSimilarity, CountTokensIn, HammingBits, LexiconScore, MinMd5, ScaledDot, ShingleJoin, SimHashSig, TopKStruct, ZOrderBits}
+import graft.functions.{CosineSimilarity, CountTokensIn, HammingBits, LexiconScore, MinHashSig, MinMd5, ScaledDot, ShingleJoin, SimHashSig, TopKStruct, ZOrderBits}
 
 /** Registers graft's native expressions as SQL functions so both the
   * Column API and `spark.sql("... graft_cosine(a,b) ...")` can use them.
@@ -57,6 +57,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_min_md5"),
       new ExpressionInfo(classOf[MinMd5].getName, "graft_min_md5"),
       arity("graft_min_md5", 1)(c => MinMd5(c(0)))))
+    ext.injectFunction((
+      FunctionIdentifier("graft_minhash"),
+      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
+      arity("graft_minhash", 3)(c => MinHashSig(c(0), c(1), c(2)))))
     ext.injectFunction((
       FunctionIdentifier("graft_sdot"),
       new ExpressionInfo(classOf[ScaledDot].getName, "graft_sdot"),

@@ -13,10 +13,15 @@ import graft.Ckpt._
   * full tokenize+hash scan per consumer would multiply the dominant cost of
   * the whole stage by the consumer count. This store is the single-JVM
   * twin of that signature table: first consumer builds and lazily
-  * checkpoints the relation, later consumers (dd_ngram_jaccard and
-  * dd_clusters after dd_minhash_lsh; sim_recall after sim_lsh_topk) reuse
-  * the blocks. Keyed on the session so a stopped session's plans are never
-  * reused (same discipline as [[Tables]]); `spark.catalog.clearCache()`
+  * checkpoints the relation, later consumers reuse the blocks. The MinHash
+  * signatures (`dd_mh_sigs`) are one full-corpus pass per session: the
+  * band memo (`dd_bands`) projects them and the candidate pairs
+  * (`dd_lsh_cand`) read the bands, so dd_minhash_lsh, dd_incremental,
+  * dd_lsh_tuning, dd_est_quality, ops_incremental_gate and
+  * ops_store_lifecycle share it, and dd_ngram_jaccard and dd_clusters
+  * reuse the candidates; sim_recall reuses sim_lsh_topk's build. Keyed on
+  * the session so a stopped session's plans are never reused (same
+  * discipline as [[Tables]]); `spark.catalog.clearCache()`
   * does NOT drop these blocks — they are checkpoint RDDs, freed by the
   * ContextCleaner when the store entry (and thus the plan) is released.
   */
@@ -99,6 +104,15 @@ object MatStore {
     lookup(s, key)(
       graft.sources.IndexStore.tryServe(s, key)
         .getOrElse(build.ckpt))
+
+  /** Like [[of]] but memoizes the lazy plan WITHOUT checkpointing it — for
+    * a cheap narrow projection of another memo (the LSH band rows over
+    * the MinHash signature table), so the session holds the blocks once
+    * and each read re-derives the projection. A published key still
+    * serves, exactly as through [[of]].
+    */
+  def view(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    lookup(s, key)(graft.sources.IndexStore.tryServe(s, key).getOrElse(build))
 
   /** get-then-putIfAbsent instead of computeIfAbsent: store builds nest
     * (lshCandM → tokenizedM, kmAssign → kmCents), and a nested

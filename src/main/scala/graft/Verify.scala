@@ -3,6 +3,10 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
+  * A query that throws does not stop the dump: every other query's
+  * output and oracle_sql.json are still written, then the failed query
+  * names are listed on stderr and the process exits 1.
+  *
   * Routed through GraftSession.builder so GraftExtensions (graft_cosine /
   * graft_hamming SQL functions), AQE, and the UTC session timezone apply
   * at verify time exactly as they do in Bench and in library use.
@@ -18,6 +22,7 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.get(cpus)
     new java.io.File(outDir).mkdirs()
+    val failed = Seq.newBuilder[String]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .foreach { case (name, fn) =>
@@ -26,6 +31,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -44,5 +50,11 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    val names = failed.result()
+    if (names.nonEmpty) {
+      System.err.println(
+        s"[verify] ${names.size} queries failed: ${names.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

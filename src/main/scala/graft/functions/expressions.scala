@@ -880,6 +880,122 @@ object MinMd5 {
   }
 }
 
+/** Native MinHash signature: `graft_minhash(tokens, k, n)` walks the
+  * document's k-token shingles once, hashes each shingle to the
+  * unsigned 32-bit h = the first 4 bytes of its md5 digest (exactly
+  * `hexToLong(md5(shingle), 1, 8)`, without the hex round trip), and
+  * returns the n affine mins `min((a_j·h + b_j) mod p)`, j = 0..n−1.
+  * Shingles are spelled as [[ShingleJoin]] spells them (space-joined,
+  * null tokens skipped like concat_ws), so the result equals the
+  * explode(graft_shingles) → md5 → n-column MIN aggregate formulation —
+  * as one per-document map with no per-shingle rows and no exchange.
+  * NULL for a null array and for an array with fewer than k tokens
+  * (no shingle, so no min — the aggregate formulation emits no row).
+  */
+case class MinHashSig(tokens: Expression, kArg: Expression, nArg: Expression)
+    extends TernaryExpression {
+
+  override def first: Expression = tokens
+  override def second: Expression = kArg
+  override def third: Expression = nArg
+  override def nullable: Boolean = true
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_minhash"
+
+  override def checkInputDataTypes(): TypeCheckResult = tokens.dataType match {
+    case ArrayType(StringType, _) =>
+      def lit(e: Expression) = e.foldable && e.dataType == IntegerType
+      if (!lit(kArg) || !lit(nArg))
+        TypeCheckResult.TypeCheckFailure(s"$prettyName requires literal int k and n")
+      else if (kArg.eval(InternalRow.empty).asInstanceOf[Int] < 1)
+        TypeCheckResult.TypeCheckFailure(s"$prettyName requires k >= 1")
+      else {
+        val n = nArg.eval(InternalRow.empty).asInstanceOf[Int]
+        if (n < 1 || n > MinHashSig.MaxN)
+          TypeCheckResult.TypeCheckFailure(
+            s"$prettyName requires 1 <= n <= ${MinHashSig.MaxN}")
+        else TypeCheckResult.TypeCheckSuccess
+      }
+    case dt => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<string> tokens, got ${dt.catalogString}")
+  }
+
+  @transient private lazy val k: Int =
+    kArg.eval(InternalRow.empty).asInstanceOf[Int]
+  @transient private lazy val n: Int =
+    nArg.eval(InternalRow.empty).asInstanceOf[Int]
+
+  override def eval(input: InternalRow): Any = {
+    val arr = tokens.eval(input)
+    if (arr == null) null else MinHashSig.build(arr.asInstanceOf[ArrayData], k, n)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val tokGen = tokens.genCode(ctx)
+    val helper = MinHashSig.getClass.getName.stripSuffix("$") + "$.MODULE$"
+    ev.copy(code = code"""
+      |${tokGen.code}
+      |boolean ${ev.isNull} = ${tokGen.isNull};
+      |ArrayData ${ev.value} = null;
+      |if (!${ev.isNull}) {
+      |  ${ev.value} = $helper.build(${tokGen.value}, $k, $n);
+      |  ${ev.isNull} = (${ev.value} == null);
+      |}
+    """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression): Expression =
+    copy(tokens = newFirst, kArg = newSecond, nArg = newThird)
+}
+
+object MinHashSig {
+  /** One md5 per shingle, then n affine derivations of it with literal
+    * constants: p = 2^31−1 and a_j < 2^31 keep a_j·h + b_j below 2^63
+    * for any 32-bit h, so the affine hashes never overflow a BIGINT in
+    * either engine (the oracle spells the same constants in SQL). */
+  val P = 2147483647L
+  def a(j: Int): Long = 1000003L * j + 12345L
+  def b(j: Int): Long = 999979L * j + 67891L
+  /** Largest n whose a_j stays below 2^31. */
+  val MaxN = 2048
+
+  private val Sep = ' '.toByte
+  private val digest = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  def build(arr: ArrayData, k: Int, n: Int): ArrayData = {
+    val m = arr.numElements() - k + 1
+    if (m <= 0) return null
+    val md = digest.get()
+    val mins = Array.fill(n)(Long.MaxValue)
+    var i = 0
+    while (i < m) {
+      var joined = false
+      var o = 0
+      while (o < k) {
+        if (!arr.isNullAt(i + o)) {
+          if (joined) md.update(Sep)
+          md.update(arr.getUTF8String(i + o).getByteBuffer)
+          joined = true
+        }
+        o += 1
+      }
+      val d = md.digest()
+      val h = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
+        ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
+      var j = 0
+      while (j < n) {
+        val v = (a(j) * h + b(j)) % P
+        if (v < mins(j)) mins(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(mins)
+  }
+}
+
 object SimHashSig {
   /** Signature width: 15 md5 nibbles — stays positive in a signed long
     * on both engines (see operators/Dedup.SimhashBits). */

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Ckpt._
 import graft.{QueryDef, Tables}
-import graft.functions.{Portable => P, PortableSql => PS}
+import graft.functions.{MinHashSig, Portable => P, PortableSql => PS}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,16 +44,6 @@ object Dedup {
     */
   val MaxBucket = 100
 
-  // MinHash via one md5 per shingle + 16 affine derivations: the shingle
-  // is hashed ONCE to a 32-bit int h, then h_j = (a_j*h + b_j) mod p with
-  // literal constants (p = 2^31-1; a_j < 2^24 keeps a_j*h < 2^63 so the
-  // arithmetic never overflows a BIGINT in either engine). The previous
-  // formulation (16 distinct md5 calls per shingle inside non-codegen
-  // higher-order functions) was 86% of the round-3 bench.
-  val MinhashP = 2147483647L
-  def minhashA(j: Int): Long = 1000003L * j + 12345L
-  def minhashB(j: Int): Long = 999979L * j + 67891L
-
   // ----------------------------------------------------------- exact dedup
 
   /** Kept (first-wins) document per distinct content hash. */
@@ -75,15 +65,20 @@ object Dedup {
 
   // ---------------------------------------------------------- minhash LSH
 
-  /** Spark-side LSH band rows (doc_id, band, bkey): 5-shingles exploded →
-    * one md5 per shingle → 16 affine minhash mins in a single hash
-    * aggregation → 4 bands of 4. The explode+groupBy shape is fully
-    * whole-stage-codegen'd (no higher-order functions in the hot path) and
-    * map-side partial aggregation shrinks the shuffle to one 16-column row
-    * per document — the shape that survives 100 TB.
+  /** MatStore-shared LSH band rows (doc_id, band, bkey) of the corpus: 4
+    * bands of 4 projected off the [[mhSigsM]] signature memo, so every
+    * band consumer (candidate generation, the incremental probes, the
+    * store lifecycle) and every signature consumer (the tuning sweep,
+    * the estimator eval) share ONE full-corpus MinHash pass per session.
+    * The projection is a [[graft.MatStore.view]]: only the signature
+    * blocks stay resident, and the banding re-runs per read. `dd_bands`
+    * is the key [[graft.sources.IndexStore.publishCorpus]] publishes; a
+    * serving session reads the bucketed table instead and never builds
+    * the signatures.
     */
   def minhashBands(s: SparkSession, dir: String): DataFrame =
-    minhashBandsOf(s, tokenizedM(s, dir))
+    graft.MatStore.view(s, s"dd_bands:$dir")(
+      bandsOf(mhSigsM(s, dir), NumBands, RowsPerBand))
 
   /** Band signatures computed from an ARBITRARY documents relation (at
     * minimum `doc_id`, `text`) — the file-incremental ingest path: a
@@ -94,7 +89,7 @@ object Dedup {
     * probe-compatible with the published store.
     */
   def bandsOfDocs(docs: DataFrame): DataFrame =
-    minhashBandsOf(docs.sparkSession, tokenizedOf(docs))
+    bandsOf(minhashSigsOf(tokenizedOf(docs)), NumBands, RowsPerBand)
 
   /** (doc_id, w) tokenization shared by the minhash and 3-gram paths.
     * The words array MUST be aliased in its own projection: referenced
@@ -129,48 +124,47 @@ object Dedup {
   def tokenizedM(s: SparkSession, dir: String): DataFrame =
     graft.MatStore.of(s, s"dd_toks:$dir")(tokenized(s, dir))
 
-  /** Materialized capped LSH candidate pairs — the signature-store output
-    * every minhash consumer (dd_minhash_lsh, the Jaccard verify,
-    * dd_clusters) reads.
+  /** Materialized capped LSH candidate pairs over the shared band memo
+    * ([[minhashBands]]) — the signature-store output every minhash
+    * consumer (dd_minhash_lsh, the Jaccard verify, dd_clusters) reads.
     */
   def lshCandM(s: SparkSession, dir: String): DataFrame =
     graft.MatStore.of(s, s"dd_lsh_cand:$dir")(lshCandidates(minhashBands(s, dir)))
 
-  /** (doc_id, mh0..mh15) MinHash signatures over the shared tokenization
-    * — the banding-independent core, shared by the production banding
-    * ([[minhashBandsOf]]) and the tuning sweep ([[lshTuning]]).
+  /** (doc_id, mh0..mh15) MinHash signatures of a (doc_id, w) token
+    * relation: one native `graft_minhash` call per document
+    * ([[graft.functions.MinHashSig]] — shingles, md5 and the 16 affine
+    * mins in one codegen'd loop), then a projection into columns. A
+    * per-document map with no per-shingle rows and no exchange, so the
+    * signature pass is one narrow stage over the token scan at any
+    * corpus size.
     */
-  private def minhashSigsOf(s: SparkSession, withW: DataFrame): DataFrame = {
-    import s.implicits._
-    // native codegen shingles (functions.ShingleJoin) — the HOF
-    // formulation ran the per-shingle lambda interpreted
-    val shH = withW
-      .select($"doc_id",
-        explode(call_function("graft_shingles", $"w", lit(ShingleK))).as("sgl"))
-      .select($"doc_id", P.hexToLong(md5($"sgl"), 1, 8).as("h"))
-    val mhAggs = (0 until NumHashes).map { j =>
-      min((lit(minhashA(j)) * $"h" + lit(minhashB(j))) % MinhashP).as(s"mh$j")
-    }
-    shH.groupBy($"doc_id").agg(mhAggs.head, mhAggs.tail: _*)
+  private def minhashSigsOf(withW: DataFrame): DataFrame = {
+    val sig = call_function("graft_minhash", col("w"), lit(ShingleK), lit(NumHashes))
+    withW.select(col("doc_id"), sig.as("sig"))
+      .select(col("doc_id") +: (0 until NumHashes).map(j =>
+        col("sig").getItem(j).as(s"mh$j")): _*)
   }
 
-  /** MatStore-shared full signature table (doc_id, mh0..mh15) — the 16
-    * minhash mins are the expensive pass; banding ([[lshTuning]]) and
-    * component-match estimation ([[estQuality]]) are projections over it.
+  /** MatStore-shared full signature table (doc_id, mh0..mh15) of the
+    * corpus — the one full-corpus MinHash pass; banding
+    * ([[minhashBands]], [[lshTuning]]) and component-match estimation
+    * ([[estQuality]]) are projections over it.
     */
   private def mhSigsM(s: SparkSession, dir: String): DataFrame =
-    graft.MatStore.of(s, s"dd_mh_sigs:$dir")(minhashSigsOf(s, tokenizedM(s, dir)))
+    graft.MatStore.of(s, s"dd_mh_sigs:$dir")(minhashSigsOf(tokenizedM(s, dir)))
 
-  private def minhashBandsOf(s: SparkSession, withW: DataFrame): DataFrame = {
-    import s.implicits._
-    val mh = minhashSigsOf(s, withW)
-    val keys = (0 until NumBands).map { b =>
+  /** (doc_id, band, bkey) rows of `nb` bands of `r` signature columns
+    * each — band b's key is mh(b·r)..mh(b·r+r−1) joined with ','.
+    */
+  private def bandsOf(sigs: DataFrame, nb: Int, r: Int): DataFrame = {
+    val keys = (0 until nb).map { b =>
       struct(lit(b).as("band"),
-        concat_ws(",", (0 until RowsPerBand).map(r =>
-          col(s"mh${b * RowsPerBand + r}").cast("string")): _*).as("bkey"))
+        concat_ws(",", (0 until r).map(j =>
+          col(s"mh${b * r + j}").cast("string")): _*).as("bkey"))
     }
-    mh.select($"doc_id", explode(array(keys: _*)).as("bk"))
-      .select($"doc_id", $"bk.band".as("band"), $"bk.bkey".as("bkey"))
+    sigs.select(col("doc_id"), explode(array(keys: _*)).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
   }
 
   /** Candidate pairs (doc_a < doc_b) sharing any LSH band bucket, with the
@@ -198,11 +192,11 @@ object Dedup {
     * adversary only steers by authoring colliding CONTENT, which the cap
     * already bounds.
     */
-  def lshCandidates(bands0: DataFrame, maxBucket: Int = MaxBucket): DataFrame = {
+  def lshCandidates(b0: DataFrame, maxBucket: Int = MaxBucket): DataFrame = {
     val chunk = maxBucket - 1
-    // one materialization of the band rows feeds the stats aggregate and
-    // the member side of the stats join
-    val b0 = bands0.ckpt
+    // the band rows feed the stats aggregate and the member side of the
+    // stats join; callers hand in a memo, a served store or a narrow
+    // projection of a checkpoint, so both reads are cheap scans
     val stats = b0.groupBy(col("band"), col("bkey"))
       .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("rep"))
     val nChunks = ceil((col("cnt") - 1) / lit(chunk.toDouble)).cast("int")
@@ -267,8 +261,10 @@ object Dedup {
     * tuning sweep.
     */
   private val mhSql = {
+    // the native kernel's affine constants, spelled as SQL literals
     val mhMins = (0 until NumHashes).map(j =>
-      s"MIN((${minhashA(j)} * h + ${minhashB(j)}) % $MinhashP) AS mh$j").mkString(",\n    ")
+      s"MIN((${MinHashSig.a(j)} * h + ${MinHashSig.b(j)}) % ${MinHashSig.P}) AS mh$j")
+      .mkString(",\n    ")
     s"""toks AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS w FROM documents
        |  WHERE len(string_split(text, ' ')) >= $ShingleK),
        |shingled AS MATERIALIZED (SELECT doc_id,
@@ -352,13 +348,7 @@ object Dedup {
     import s.implicits._
     val sigs = mhSigsM(s, dir)
     val rows = TuneConfigs.map { case (nb, r) =>
-      val keys = (0 until nb).map { b =>
-        struct(lit(b).as("band"),
-          concat_ws(",", (0 until r).map(j =>
-            col(s"mh${b * r + j}").cast("string")): _*).as("bkey"))
-      }
-      val bands = sigs.select($"doc_id", explode(array(keys: _*)).as("bk"))
-        .select($"doc_id", $"bk.band".as("band"), $"bk.bkey".as("bkey"))
+      val bands = bandsOf(sigs, nb, r)
       val a = bands.select($"doc_id".as("doc_a"), $"band", $"bkey")
       val b = bands.select($"doc_id".as("doc_b"), $"band", $"bkey")
       val thr = math.floor(math.pow(1.0 / nb, 1.0 / r) * 1e6 + 0.5) / 1e6
@@ -974,7 +964,7 @@ object Dedup {
     // ingest (train once, probe per batch): materialized session-wide so
     // the batch and base sides of the probe join read the same blocks
     // instead of re-deriving the signatures per side
-    val bands = graft.MatStore.of(s, s"dd_bands:$dir")(minhashBands(s, dir))
+    val bands = minhashBands(s, dir)
     val bb = bands.filter($"doc_id" >= IncSplit)
       .select($"doc_id".as("b_id"), $"band", $"bkey")
     val ba = bands.filter($"doc_id" < IncSplit)

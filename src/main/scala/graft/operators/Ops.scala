@@ -379,7 +379,7 @@ object Ops {
     val bandsB = graft.MatStore.of(s, s"ops_inc_bands:$dir")(
         Dedup.bandsOfDocs(batch))
       .select($"doc_id".as("b_id"), $"band", $"bkey")
-    val baseBands = graft.MatStore.of(s, s"dd_bands:$dir")(Dedup.minhashBands(s, dir))
+    val baseBands = Dedup.minhashBands(s, dir)
       .filter($"doc_id" < Dedup.IncSplit)
       .select($"doc_id".as("base_id"), $"band", $"bkey")
     val pairs = bandsB.join(baseBands, Seq("band", "bkey"))
@@ -467,8 +467,7 @@ object Ops {
       val prev = s.conf.get(graft.sources.IndexStore.DirConf, null)
       s.conf.set(graft.sources.IndexStore.DirConf, store)
       try {
-        val bands = graft.MatStore.of(s, s"dd_bands:$dir")(
-          Dedup.minhashBands(s, dir))
+        val bands = Dedup.minhashBands(s, dir)
         val key = s"lc_bands:$dir"
         // day 0: the base half is the published store
         graft.sources.IndexStore.publish(s, key,
@@ -871,8 +870,7 @@ object Ops {
       val prevConf = s.conf.get(graft.sources.IndexStore.DirConf, null)
       s.conf.set(graft.sources.IndexStore.DirConf, store)
       try {
-        val bands = graft.MatStore.of(s, s"dd_bands:$dir")(
-          Dedup.minhashBands(s, dir))
+        val bands = Dedup.minhashBands(s, dir)
         val kB = s"day_bands:$dir"
         graft.sources.IndexStore.publish(s, kB,
           bands.filter($"doc_id" < Dedup.IncSplit), "bkey")
@@ -1160,8 +1158,7 @@ object Ops {
       val prevConf = s.conf.get(graft.sources.IndexStore.DirConf, null)
       s.conf.set(graft.sources.IndexStore.DirConf, store)
       try {
-        val bands = graft.MatStore.of(s, s"dd_bands:$dir")(
-          Dedup.minhashBands(s, dir))
+        val bands = Dedup.minhashBands(s, dir)
         val kB = s"week_bands:$dir"
         graft.sources.IndexStore.publish(s, kB, bands.filter(docBase), "bkey")
         val kG = s"week_edges:$dir"

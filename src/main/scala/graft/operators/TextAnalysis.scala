@@ -989,8 +989,7 @@ object TextAnalysis {
   // ------------------------------------------------------------- BPE (r18)
 
   /** Number of BPE merge rounds — a CONSTANT, so the oracle unrolls the
-    * learner statically (the `gr_louvain_ml` level discipline) and the
-    * Spark side's per-round plans stay fixed-size.
+    * learner statically (the `gr_louvain_ml` level discipline).
     */
   val BpeMerges = 8
 
@@ -1036,117 +1035,158 @@ object TextAnalysis {
 
   /** Learn [[BpeMerges]]-round BPE segmentations over a vocabulary
     * relation (word, freq) — the Spark twin of the unrolled
-    * [[bpeRoundSql]] chain. State is VOCABULARY-sized ((word, pos, sym)
-    * rows, one per surviving symbol): merges never touch the corpus,
-    * only the vocab, so the learner costs the same whether the corpus
-    * is 1 GB or 100 TB — the corpus pays exactly one token-keyed join
-    * against the final segmentation's per-word symbol counts. The
-    * argmax pair each round is a 1-row relation broadcast into the
-    * match projection (never collected); windows all partition by
-    * `word`, so each round is one pair-count aggregate + one
-    * word-partitioned window chain.
+    * [[bpeRoundSql]] chain, returned as (word, pos, sym) rows. State is
+    * VOCABULARY-sized: merges never touch the corpus, only the vocab, so
+    * the learner costs the same whether the corpus is 1 GB or 100 TB —
+    * the corpus pays exactly one token-keyed join against the final
+    * segmentation's per-word symbol counts.
     */
   private[graft] def bpeSeg(vf: org.apache.spark.sql.DataFrame,
       merges: Int): org.apache.spark.sql.DataFrame =
     bpeSegTaps(vf, Seq(merges))(merges)
 
-  /** The textbook greedy left-to-right merge application as ONE
-    * higher-order fold over a word's symbol array: walk the symbols
-    * carrying (result-so-far, pending symbol); a (pending, current) hit
-    * on the best pair emits the merged symbol and consumes BOTH
-    * positions (pending resets, so an overlapping next match cannot
-    * fire — the non-overlap rule the row formulation encoded as
-    * odd-position-in-run + LAG guard), any other current symbol flushes
-    * the pending one. A null best pair (no adjacent pair left anywhere)
-    * makes the hit predicate null, so every round is a no-op flush —
-    * the same trailing-round behavior as the oracle's LEFT JOIN of an
-    * empty `bbst`.
+  /** Code-point symbols of a word: Spark's `substr(word, i, 1)` for
+    * i = 1..length(word), the oracle's `bseg0`. A null word has null
+    * symbols and contributes no pairs.
     */
-  private def bpeFold(syms: org.apache.spark.sql.Column,
-      bs1: org.apache.spark.sql.Column, bs2: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    def st(res: org.apache.spark.sql.Column, pend: org.apache.spark.sql.Column) =
-      struct(res.as("res"), pend.as("pend"))
-    aggregate(syms,
-      st(array().cast("array<string>"), lit(null).cast("string")),
-      (acc, x) => {
-        val res = acc.getField("res")
-        val pend = acc.getField("pend")
-        when(pend.isNull, st(res, x))
-          .when(pend === bs1 && x === bs2,
-            st(array_append(res, concat(pend, x)), lit(null).cast("string")))
-          .otherwise(st(array_append(res, pend), x))
-      },
-      acc => when(acc.getField("pend").isNull, acc.getField("res"))
-        .otherwise(array_append(acc.getField("res"), acc.getField("pend"))))
+  private def bpeSymbols(w: String): Array[String] =
+    if (w == null) null
+    else w.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
+
+  /** The textbook greedy left-to-right application of ONE merge: an
+    * (s1, s2) hit emits the merged symbol and consumes BOTH positions,
+    * so an overlapping next match cannot fire — the non-overlap rule
+    * the oracle encodes as odd-position-in-run + LAG guard. The one
+    * implementation of merge application: the learner's rounds and the
+    * tap replay both call it.
+    */
+  private def bpeMerge(syms: Array[String], s1: String,
+      s2: String): Array[String] =
+    if (syms == null) null
+    else {
+      val out = Array.newBuilder[String]
+      var i = 0
+      while (i < syms.length) {
+        if (i + 1 < syms.length && syms(i) == s1 && syms(i + 1) == s2) {
+          out += s1 + s2
+          i += 2
+        } else {
+          out += syms(i)
+          i += 1
+        }
+      }
+      out.result()
+    }
+
+  /** The better of two (cnt, s1, s2) pair candidates: cnt DESC, then s1,
+    * then s2 in UTF-8 byte order — the order of Spark's and DuckDB's
+    * string comparison ([[org.apache.spark.unsafe.types.UTF8String]]
+    * compareTo). `String.compareTo` compares UTF-16 units and disagrees
+    * with it on non-BMP symbols (U+FF5E sorts after U+1F600 in UTF-16,
+    * before it in UTF-8).
+    */
+  private def bpePick(x: Option[(Long, String, String)],
+      y: Option[(Long, String, String)]): Option[(Long, String, String)] =
+    (x, y) match {
+      case (Some((cx, ax, bx)), Some((cy, ay, by))) =>
+        def u(str: String) = org.apache.spark.unsafe.types.UTF8String.fromString(str)
+        val c = if (cx != cy) java.lang.Long.compare(cy, cx)
+          else if (ax != ay) u(ax).compareTo(u(ay))
+          else u(bx).compareTo(u(by))
+        if (c <= 0) x else y
+      case (None, _) => y
+      case _ => x
+    }
+
+  /** Learn up to `rounds` merges (fewer when the vocabulary runs out of
+    * adjacent pairs: every later round would be a no-op, as in the
+    * oracle's LEFT JOIN of an empty `bbst`). The state is a word-
+    * partitioned RDD of (word, freq, syms); each round is ONE small job —
+    * the pair counts (every adjacent position, × freq) in a
+    * `reduceByKey`, folded to the single best (cnt, s1, s2) the driver
+    * receives — then the state is merged with [[bpeMerge]] and persisted;
+    * the previous state is unpersisted once the next round's job has
+    * materialized its successor. No round goes through Catalyst, so
+    * a round pays only its data work; the driver holds one 3-tuple per
+    * round at any vocabulary size, and no block outlives the call.
+    */
+  private def bpeLearn(vf: org.apache.spark.sql.DataFrame,
+      rounds: Int): Seq[(String, String)] = {
+    val s = vf.sparkSession
+    import s.implicits._
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    var state = vf.select($"word", $"freq".cast("long")).as[(String, Long)].rdd
+      .map { case (w, f) => (w, f, bpeSymbols(w)) }
+      .persist()
+    var stale: Option[org.apache.spark.rdd.RDD[(String, Long, Array[String])]] = None
+    try {
+      var more = rounds > 0
+      while (more) {
+        val best = state
+          .flatMap { case (_, f, syms) =>
+            if (syms == null) Iterator.empty
+            else (0 until syms.length - 1).iterator.map(i => ((syms(i), syms(i + 1)), f))
+          }
+          .reduceByKey(_ + _)
+          .map { case ((a, b), c) => Option((c, a, b)) }
+          .fold(None)(bpePick)
+        stale.foreach(_.unpersist(blocking = false))
+        stale = None
+        best match {
+          case Some((_, a, b)) =>
+            merges += a -> b
+            more = merges.size < rounds
+            if (more) {
+              stale = Some(state)
+              state = state.map { case (w, f, syms) => (w, f, bpeMerge(syms, a, b)) }
+                .persist()
+            }
+          case None => more = false
+        }
+      }
+    } finally {
+      (state +: stale.toSeq).foreach(_.unpersist(blocking = false))
+    }
+    merges.toSeq
   }
 
-  /** The merge chain on ARRAY state: one row per vocabulary word,
-    * (word, freq, syms array), `taps.max` rounds, returning the state at
-    * each requested tap. Each round is (a) the pair-count aggregate —
-    * adjacent pairs read directly off the array (zip of the array with
-    * its own tail, so every adjacent position is counted exactly as the
-    * row formulation's pos+1 self-join did), one explode + one hash
-    * aggregate; (b) the 1-row argmax (cnt DESC, s1, s2 — unchanged);
-    * (c) the greedy merge as a per-row [[bpeFold]] under a broadcast
-    * left join of the argmax row. The r18 row formulation carried
-    * (word, pos, sym) state and paid 2 SortMergeJoins + 8 Windows + 14
-    * Exchanges PER ROUND (plans/r19/tx_bpe_round_before.txt) purely to
-    * re-derive adjacency and renumber positions — adjacency is free in
-    * the array, so the round collapses to one exchange pair for the
-    * pair counts and a narrow map for the merge (guide §2.4: remove
-    * shuffles outright; §1.2: fix the algorithm before the code).
-    * 32-round chain measured 17.9 s → 4.7 s warm at sf0.1 (326 → 76
-    * jobs). State stays vocabulary-sized; merges never touch the
-    * corpus.
+  /** The (word, freq, syms) segmentation after `merges` — the learned
+    * merge list replayed over `vf` as one narrow map, so a tap is a
+    * plan over the vocabulary memo and pins no blocks of its own.
+    */
+  private def bpeReplay(vf: org.apache.spark.sql.DataFrame,
+      merges: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {
+    val s = vf.sparkSession
+    import s.implicits._
+    vf.select($"word", $"freq".cast("long")).as[(String, Long)]
+      .map { case (w, f) =>
+        (w, f, merges.foldLeft(bpeSymbols(w)) { case (syms, (a, b)) =>
+          bpeMerge(syms, a, b) })
+      }
+      .toDF("word", "freq", "syms")
+  }
+
+  /** The merge chain on ARRAY state: (word, freq, syms array) at each
+    * requested tap round. ONE learner run to `taps.max`
+    * ([[bpeLearn]]); each tap replays that run's merge prefix
+    * ([[bpeReplay]]) — merges are strictly incremental, so round 2's
+    * segmentation is a prefix state of round 32's chain and refitting
+    * per depth would re-pay every shared round.
     */
   private[operators] def bpeSegArrTaps(vf: org.apache.spark.sql.DataFrame,
-      taps: Seq[Int],
-      onRound: (Int, org.apache.spark.sql.DataFrame) => Unit = (_, _) => ())
-      : Map[Int, org.apache.spark.sql.DataFrame] = {
-    val s = vf.sparkSession
-    import s.implicits._
-    val tapSet = taps.toSet
-    val out = scala.collection.mutable.Map.empty[Int, org.apache.spark.sql.DataFrame]
-    var seg = vf.select($"word", $"freq",
-      transform(sequence(lit(1), length($"word")),
-        i => $"word".substr(i, lit(1))).as("syms"))
-      .ckpt
-    for (r <- 1 to taps.max) {
-      val pc = seg.select($"freq", explode(zip_with(
-          slice($"syms", lit(1), size($"syms") - 1),
-          slice($"syms", lit(2), size($"syms") - 1),
-          (a, b) => struct(a.as("s1"), b.as("s2")))).as("p"))
-        .groupBy($"p.s1".as("s1"), $"p.s2".as("s2"))
-        .agg(sum($"freq").cast("long").as("cnt"))
-      val best = pc.orderBy($"cnt".desc, $"s1".asc, $"s2".asc).limit(1)
-        .select($"s1".as("bs1"), $"s2".as("bs2"))
-      val pre = seg.join(broadcast(best), lit(true), "left")
-        .select($"word", $"freq", bpeFold($"syms", $"bs1", $"bs2").as("syms"))
-      onRound(r, pre)
-      seg = pre.ckpt
-      if (tapSet(r)) out(r) = seg
-    }
-    out.toMap
+      taps: Seq[Int]): Map[Int, org.apache.spark.sql.DataFrame] = {
+    val merges = bpeLearn(vf, taps.max)
+    taps.map(r => r -> bpeReplay(vf, merges.take(r))).toMap
   }
 
-  /** [[bpeSeg]] with TAPS: run ONE merge chain to `taps.max` and return
-    * the segmentation at each requested round — the shared-learner-
-    * prefix form the depth-sensitivity panel reads (merges are strictly
-    * incremental, so round 2's segmentation is a prefix state of round
-    * 32's chain; refitting per depth would re-pay every shared round).
-    * Each round's state is checkpointed, so a tap holds O(vocab) blocks,
-    * not a 32-round lineage. The (word, pos, sym) row view is derived
-    * from the ARRAY state ([[bpeSegArrTaps]]) by one posexplode — array
-    * order IS the position order.
+  /** [[bpeSegArrTaps]] as (word, pos, sym) rows — one posexplode of the
+    * array state (array order IS the position order).
     */
   private[graft] def bpeSegTaps(vf: org.apache.spark.sql.DataFrame,
-      taps: Seq[Int],
-      onRound: (Int, org.apache.spark.sql.DataFrame) => Unit = (_, _) => ())
-      : Map[Int, org.apache.spark.sql.DataFrame] = {
+      taps: Seq[Int]): Map[Int, org.apache.spark.sql.DataFrame] = {
     val s = vf.sparkSession
     import s.implicits._
-    bpeSegArrTaps(vf, taps, onRound).map { case (r, df) =>
+    bpeSegArrTaps(vf, taps).map { case (r, df) =>
       r -> df.select($"word", posexplode($"syms").as(Seq("pos", "sym")))
         .select($"word", $"pos".cast("long").as("pos"), $"sym")
     }

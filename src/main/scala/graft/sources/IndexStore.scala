@@ -520,8 +520,7 @@ object IndexStore {
     // join on (band, bkey) — bucketing by bkey co-locates BOTH sides
     // (subset clustering), so the per-ingest probe plans no exchange
     publish(s, s"dd_bands:$dataDir",
-      graft.MatStore.of(s, s"dd_bands:$dataDir")(
-        graft.operators.Dedup.minhashBands(s, dataDir)), "bkey",
+      graft.operators.Dedup.minhashBands(s, dataDir), "bkey",
       sourceDir = Some(dataDir)),
     publish(s, s"gr_edges_num:$dataDir",
       graft.operators.GraphOps.edgesNum(s, dataDir), "src",

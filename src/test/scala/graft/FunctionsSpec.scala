@@ -287,6 +287,76 @@ class FunctionsSpec extends GraftSuite {
     }
   }
 
+  for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+    test(s"graft_minhash matches the explode+md5+min formulation [$mode]") {
+      underMode(mode) {
+        import spark.implicits._
+        import graft.functions.{MinHashSig, Portable => P}
+        val (k, n) = (5, 16)
+        val planted = Seq(
+          // non-ASCII and non-BMP tokens: md5 runs over the UTF-8 bytes
+          (101L, "héllo wörld 😀 ～ naïve 日本語 x"),
+          // exactly k tokens: one shingle
+          (102L, "a b c d e"),
+          // repeated shingles: duplicates must not change the mins
+          (103L, "a b a b a b a b a b a b")
+        ).toDF("doc_id", "text")
+        val toks = docs.select($"doc_id", $"text").union(planted)
+          .select($"doc_id", split($"text", " ").as("w"))
+          .filter(size($"w") >= k)
+        val h = toks.select($"doc_id",
+            explode(call_function("graft_shingles", $"w", lit(k))).as("sgl"))
+          .select($"doc_id", P.hexToLong(md5($"sgl"), 1, 8).as("h"))
+        val mins = (0 until n).map(j =>
+          min((lit(MinHashSig.a(j)) * $"h" + lit(MinHashSig.b(j))) % MinHashSig.P).as(s"mh$j"))
+        val legacy = h.groupBy($"doc_id").agg(mins.head, mins.tail: _*)
+          .select($"doc_id", array((0 until n).map(j => col(s"mh$j")): _*).as("legacy"))
+        val native = toks.select($"doc_id",
+          call_function("graft_minhash", $"w", lit(k), lit(n)).as("native"))
+        val rows = native.join(legacy, "doc_id").collect()
+        assert(rows.length == toks.count())
+        assert(Set(101L, 102L, 103L).subsetOf(rows.map(_.getLong(0)).toSet))
+        rows.foreach { r =>
+          assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"doc ${r.getLong(0)}")
+        }
+      }
+    }
+  }
+
+  test("graft_minhash edge cases: null array, fewer than k tokens, null tokens") {
+    import spark.implicits._
+    val df = Seq(
+      (1L, None: Option[Seq[String]]),     // null array → NULL
+      (2L, Some(Seq("a", "b"))),           // no shingle → NULL
+      (3L, Some(Seq("a", null, "c"))),     // null token skipped like concat_ws
+      (4L, Some(Seq("a", "c")))
+    ).toDF("id", "toks")
+    val out = df.select($"id", call_function("graft_minhash", $"toks", lit(3), lit(4)).as("m"))
+      .collect().map(r => (r.getLong(0), r)).toMap
+    assert(out(1L).isNullAt(1))
+    assert(out(2L).isNullAt(1))
+    val two = df.select($"id", call_function("graft_minhash", $"toks", lit(2), lit(4)).as("m"))
+      .collect().map(r => (r.getLong(0), r)).toMap
+    // "a c" is the one shingle of both [a, null, c] (k = 3) and [a, c]
+    assert(out(3L).getSeq[Long](1) == two(4L).getSeq[Long](1))
+    assert(out(3L).getSeq[Long](1).length == 4)
+  }
+
+  test("graft_minhash rejects a non-literal k, k < 1 and an out-of-range n at analysis time") {
+    import spark.implicits._
+    val df = Seq((Seq("a", "b", "c"), 2)).toDF("toks", "k")
+    def err(k: Column, n: Column): String = {
+      val e = intercept[Exception] {
+        df.select(call_function("graft_minhash", $"toks", k, n)).collect()
+      }
+      Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage)).mkString(" | ")
+    }
+    assert(err($"k", lit(16)).contains("literal int k and n"))
+    for (k <- Seq(0, -1)) assert(err(lit(k), lit(16)).contains("k >= 1"), s"k=$k")
+    assert(err(lit(2), lit(0)).contains("1 <= n <="))
+  }
+
   test("nanolog portability pin: the JVM's floor(ln(k)*1e9+0.5) stream matches the recorded CRC") {
     // The exact-integer NB scoring (sent_nb_eval) rests on
     // floor(ln(k)*1e9+0.5) being bit-identical between JVM Math.log and

@@ -546,4 +546,41 @@ class TextSentimentSpec extends GraftSuite {
         math.floor(sw.toDouble / t * 1e6 + 0.5) / 1e6)
     }
   }
+
+  /** word → symbols of a (word, pos, sym) segmentation. */
+  private def segMap(seg: org.apache.spark.sql.DataFrame): Map[String, Seq[String]] =
+    seg.collect().groupBy(_.getAs[String]("word"))
+      .map { case (w, rs) =>
+        w -> rs.sortBy(_.getAs[Long]("pos")).map(_.getAs[String]("sym")).toSeq }
+
+  test("BPE learner edges: UTF-8 tie order, exhausted pairs, empty vocab, taps equal separate runs") {
+    import spark.implicits._
+    import operators.TextAnalysis.{bpeSeg, bpeSegTaps}
+    // (a,～) and (a,😀) tie at count 1. UTF-8 orders U+FF5E (EF BD 9E)
+    // before U+1F600 (F0 9F 98 80); UTF-16 orders them the other way
+    // (FF5E vs the D83D surrogate). Symbols split by code point, so 😀
+    // is one symbol, not two surrogates.
+    val tie = Seq(("a～", 1L), ("a😀", 1L)).toDF("word", "freq")
+    assert(segMap(bpeSeg(tie, 1)) === Map(
+      "a～" -> Seq("a～"), "a😀" -> Seq("a", "😀")))
+    assert(segMap(bpeSeg(tie, 3)) === Map(
+      "a～" -> Seq("a～"), "a😀" -> Seq("a😀")))
+    // one pair in the vocabulary: rounds 2 and 3 find no pair and are
+    // no-ops; single-character words pass through
+    val short = Seq(("ab", 1L), ("c", 3L), ("d", 1L)).toDF("word", "freq")
+    assert(segMap(bpeSeg(short, 3)) === Map(
+      "ab" -> Seq("ab"), "c" -> Seq("c"), "d" -> Seq("d")))
+    // an empty vocabulary learns nothing and segments nothing
+    val empty = Seq.empty[(String, Long)].toDF("word", "freq")
+    assert(bpeSeg(empty, 4).count() === 0L)
+    // taps off one chain equal separate runs at each depth
+    val vf = Tables.documents(spark, sfDir)
+      .select(explode(split($"text", " ")).as("word"))
+      .filter($"word" =!= "")
+      .groupBy($"word").agg(count(lit(1)).as("freq"))
+    val taps = bpeSegTaps(vf, Seq(2, 4, 8))
+    for (r <- Seq(2, 4, 8))
+      assert(segMap(taps(r)) === segMap(bpeSeg(vf, r)), s"tap $r")
+    assert(segMap(taps(2)) !== segMap(taps(8)))
+  }
 }
