@@ -936,7 +936,7 @@ object Similarity {
 
   /** Pre-checkpoint filtered probe build — exposed for the plan-shape
     * spec (the MatStore boundary truncates the query-level plan to a
-    * LogicalRDD, the candGramsBuild pattern).
+    * LogicalRDD, as with [[Dedup.jaccardScoredBuild]]).
     */
   private[graft] def filteredRankedBuild(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

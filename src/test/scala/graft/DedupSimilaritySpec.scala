@@ -462,4 +462,86 @@ class DedupSimilaritySpec extends GraftSuite {
       assert(err >= 0.0 && err <= 1.0)
     }
   }
+
+  /** The explode + DISTINCT + join formulation of the exact 3-gram
+    * Jaccard (the oracle's `verCoreSql`, spelled in Spark): one row per
+    * (doc, distinct gram), pairs joined to it twice on (doc, gram),
+    * sizes joined back per side.
+    */
+  private def joinJaccard(pairs: org.apache.spark.sql.DataFrame,
+      toks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val g3 = toks.select($"doc_id",
+      explode(call_function("graft_shingles", $"w", lit(3))).as("s")).distinct()
+    val sz = g3.groupBy($"doc_id").agg(count(lit(1)).as("n"))
+    pairs
+      .join(g3.select($"doc_id".as("doc_a"), $"s"), "doc_a")
+      .join(g3.select($"doc_id".as("doc_b"), $"s"), Seq("doc_b", "s"))
+      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("ni"))
+      .join(sz.select($"doc_id".as("doc_a"), $"n".as("na")), "doc_a")
+      .join(sz.select($"doc_id".as("doc_b"), $"n".as("nb")), "doc_b")
+      .select($"doc_a", $"doc_b", ($"ni" / ($"na" + $"nb" - $"ni")).as("jac"))
+  }
+
+  private def jacMap(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Double] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+
+  for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+    test(s"per-pair Jaccard verify matches the explode+distinct+join formulation [$mode]") {
+      underMode(mode) {
+        import spark.implicits._
+        val toks = Seq(
+          // identical documents: J = 1
+          (1L, "the quick brown fox jumps over the lazy dog"),
+          (2L, "the quick brown fox jumps over the lazy dog"),
+          // 3 grams vs 6 grams, all 3 shared: J = 3/6 = 0.5 exactly
+          (3L, "a b c d e"),
+          (4L, "a b c d e f g h"),
+          // 3 grams vs 7 grams, all 3 shared: J = 3/7, just below 0.5
+          (5L, "a b c d e f g h i"),
+          // 7 gram occurrences but 3 distinct; 1 shared with doc 7's 4:
+          // J = 1/6 only if each repeated gram counts once
+          (6L, "x y z x y z x y z"),
+          (7L, "x y z q r s"),
+          // no shared gram: absent from the scored relation
+          (8L, "p q r s t"),
+          (9L, "u v w x y"),
+          // non-ASCII and emoji tokens: 5 grams each, 4 shared → J = 4/6
+          (10L, "héllo wörld 😀 ～ naïve 日本語 x"),
+          (11L, "héllo wörld 😀 ～ naïve 日本語 y"))
+          .toDF("doc_id", "text")
+          .select($"doc_id", split($"text", " ").as("w"))
+        val pairs = Seq((1L, 2L), (3L, 4L), (3L, 5L), (6L, 7L), (8L, 9L), (10L, 11L))
+          .toDF("doc_a", "doc_b")
+        val got = jacMap(operators.Dedup.jaccardVerify(pairs, toks, toks))
+        assert(got === jacMap(joinJaccard(pairs, toks)))
+        assert(got === Map((1L, 2L) -> 1.0, (3L, 4L) -> 0.5, (3L, 5L) -> 3.0 / 7,
+          (6L, 7L) -> 1.0 / 6, (10L, 11L) -> 4.0 / 6))
+        val keep = got.filter(_._2 >= operators.Dedup.JaccardThreshold).keySet
+        assert(keep === Set((1L, 2L), (3L, 4L), (10L, 11L)),
+          "J = 0.5 is kept, 3/7 is not")
+
+        // the corpus's own LSH candidates over the shared token memo
+        val cand = operators.Dedup.lshCandM(spark, sfDir)
+        val ctoks = operators.Dedup.tokenizedM(spark, sfDir)
+        val corpus = jacMap(operators.Dedup.jaccardVerify(cand, ctoks, ctoks))
+        assert(corpus.nonEmpty)
+        assert(corpus === jacMap(joinJaccard(cand, ctoks)))
+      }
+    }
+  }
+
+  test("per-pair Jaccard verify keeps the caller's pair column names and sides") {
+    import spark.implicits._
+    // the incremental probes pass (b_id, base_id) with a different token
+    // relation per side; ids present only on the wrong side never match
+    val batch = Seq((500L, "a b c d e f")).toDF("doc_id", "text")
+      .select($"doc_id", split($"text", " ").as("w"))
+    val base = Seq((5L, "a b c d e f g"), (500L, "a b c d e f")).toDF("doc_id", "text")
+      .select($"doc_id", split($"text", " ").as("w"))
+    val pairs = Seq((500L, 5L), (5L, 500L)).toDF("b_id", "base_id")
+    val out = operators.Dedup.jaccardVerify(pairs, batch, base)
+    assert(out.columns.toSeq === Seq("b_id", "base_id", "jac"))
+    assert(jacMap(out) === Map((500L, 5L) -> 4.0 / 5))
+  }
 }

@@ -184,16 +184,6 @@ class FunctionsSpec extends GraftSuite {
       lit(graft.functions.VaderLexicon.ButWords.mkString(" ")),
       lit(graft.functions.VaderLexicon.idiomArg))
 
-  /** Evaluate `mk` under a forced Catalyst evaluation mode so both the
-    * generated-Java and interpreted paths are exercised explicitly.
-    */
-  private def underMode[A](mode: String)(body: => A): A = {
-    val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.get(key, "FALLBACK")
-    spark.conf.set(key, mode)
-    try body finally spark.conf.set(key, prev)
-  }
-
   for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
     test(s"graft_lexicon_score matches the HOF formulation [$mode]") {
       underMode(mode) {

@@ -134,18 +134,18 @@ class ScalePlanSpec extends GraftSuite {
     }
   }
 
-  test("knob off: dedup candidate-gram semi-join plans no broadcast") {
-    // dd_ngram_jaccard/dd_clusters verify path: the candidate doc-id
-    // set scales with corpus × dup rate (30-50% on a real web crawl),
-    // so the static plan must not commit to a driver-side broadcast
-    // build; AQE may still downgrade at runtime when the set is
-    // actually small. Censused pre-checkpoint (the query-level plan is
-    // a LogicalRDD past the MatStore boundary).
+  test("knob off: dedup per-pair Jaccard verify plans no broadcast") {
+    // dd_ngram_jaccard/dd_clusters verify path: the candidate pair set
+    // and the token arrays it joins scale with corpus × dup rate (30-50%
+    // on a real web crawl), so the static plan must not commit to a
+    // driver-side broadcast build; AQE may still downgrade at runtime
+    // when they are actually small. Censused pre-checkpoint (the
+    // query-level plan is a LogicalRDD past the MatStore boundary).
     withKnobOff {
-      val n = nBroadcasts(operators.Dedup.candGramsBuild(spark, sfDir))
+      val n = nBroadcasts(operators.Dedup.jaccardScoredBuild(spark, sfDir))
       assert(n == 0,
-        s"candGramsBuild: $n BroadcastExchange nodes in the static plan — " +
-          "the candidate doc-id set is being broadcast unconditionally")
+        s"jaccardScoredBuild: $n BroadcastExchange nodes in the static plan — " +
+          "a pair or token relation is being broadcast unconditionally")
     }
   }
 

@@ -614,4 +614,43 @@ class SourcesSpec extends GraftSuite {
     assert(statuses.keySet === Set("unchanged"),
       s"byte-identical re-snapshot must schedule no work, got $statuses")
   }
+
+  test("parallel landing writes: a failed item waits for its running sibling write") {
+    // the day/week arcs land each day's files through Ops.inParallel: a
+    // failing item must not hand its exception to the caller while a
+    // sibling Spark write is still in flight behind it
+    val out = java.nio.file.Files.createTempDirectory("graft_par").toString + "/w"
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val boom = intercept[IllegalStateException] {
+      operators.Ops.inParallel(Seq(
+        () => {
+          started.await()
+          throw new IllegalStateException("landing failed")
+        },
+        () => {
+          started.countDown()
+          // still running when its sibling throws
+          Thread.sleep(300)
+          spark.range(1000).write.parquet(out)
+          finished.set(true)
+        }))
+    }
+    assert(boom.getMessage === "landing failed")
+    assert(finished.get, "the exception reached the caller before the sibling write finished")
+    assert(spark.read.parquet(out).count() === 1000L)
+  }
+
+  test("parallel landing writes: the first failure is rethrown, later ones suppressed") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger(0)
+    val e = intercept[IllegalStateException] {
+      operators.Ops.inParallel(Seq(
+        () => { ran.incrementAndGet(); throw new IllegalStateException("first") },
+        () => { ran.incrementAndGet() },
+        () => { ran.incrementAndGet(); throw new IllegalArgumentException("third") }))
+    }
+    assert(e.getMessage === "first")
+    assert(e.getSuppressed.map(_.getMessage).toSeq === Seq("third"))
+    assert(ran.get === 3)
+  }
 }

@@ -16,6 +16,17 @@ abstract class GraftSuite extends AnyFunSuite {
   def run(name: String): org.apache.spark.sql.DataFrame =
     Registry.byName(name).run(spark, sfDir)
 
+  /** Evaluate `body` under a forced Catalyst evaluation mode
+    * (`CODEGEN_ONLY` or `NO_CODEGEN`) so both the generated-Java and
+    * interpreted paths are exercised explicitly.
+    */
+  def underMode[A](mode: String)(body: => A): A = {
+    val key = "spark.sql.codegen.factoryMode"
+    val prev = spark.conf.get(key, "FALLBACK")
+    spark.conf.set(key, mode)
+    try body finally spark.conf.set(key, prev)
+  }
+
   /** Formatted physical plan text for plan-shape assertions. */
   def planOf(df: org.apache.spark.sql.DataFrame): String = {
     val out = new java.io.ByteArrayOutputStream()
