@@ -6,14 +6,25 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
   * emits ONE JSON line {"metric":...,"queries":{name:sec},...}. Failures
   * are reported explicitly under "errors" (never as a fake fast timing).
   *
+  * Every sample is one complete run of the query from its declared
+  * inputs: a lifecycle gate (ingest, publish/append/compact, a refit)
+  * re-executes its arc each time it runs. Train-once artifacts shared by
+  * several queries (signature tables, k-means models, edge relations)
+  * stay warm in [[MatStore]] across queries unless cold mode
+  * (SPARK_GRAFT_BENCH_COLD) clears the store before each query.
+  *
   * The host shows intermittent 10-20x CPU throttling in multi-minute
   * windows. Two consequences shape this main:
   *
   *  1. It must ALWAYS get a complete JSON line out before any external
-  *     `timeout` kills it: queries run cheapest-first, each sample runs
-  *     under a watchdog capped at budget/8, collections mutate under a
-  *     lock so the SIGTERM shutdown hook snapshots a consistent line, and
-  *     a committed BENCH_SELF.json sidecar survives stdout truncation.
+  *     `timeout` kills it: pass 1 takes one sample of every query before
+  *     any query gets a second, each sample runs under a watchdog capped
+  *     at budget/8, collections mutate under a lock so the SIGTERM
+  *     shutdown hook snapshots a consistent line, and a committed
+  *     BENCH_SELF.json sidecar survives stdout truncation. Pass 2 spends
+  *     what is left on extra samples (min-of-N smooths throttle spikes),
+  *     in rounds, cheapest first by pass 1's own numbers, so a short
+  *     budget costs queries extra samples, never a row.
   *  2. Spark and DuckDB-oracle samples for the SAME query are taken
   *     back-to-back (one long-lived DuckDB worker, interleaved with the
   *     Spark sweep) so both sides of every ratio land in the same
@@ -23,258 +34,18 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
   */
 object Bench {
 
-  /** Previous-round measured cost (sec at sf0.1; refreshed r20 from
-    * that round's clean zero-weak baseline sweep — lifecycle gates carry build+serve,
-    * the wall their first sample actually consumes) for EVERY query —
-    * only the ORDER matters (cheapest first guarantees full sweeps),
-    * but r11 left ~30 later-added queries unlisted at the 5.0 default:
-    * they all sorted to the sweep tail, where the extra-sample window
-    * had closed, so their recorded time was one first-consumer-cold
-    * sample paying the session-shared MatStore builds
-    * (sim_filtered_recall: 2.4s recorded vs 0.29s isolated). A complete
-    * map is the fix that lasts. The r19 variant: STALE entries (r12
-    * numbers 2-6× above the true warm cost: q_skew_audit 1.73 vs 0.62,
-    * sim_filtered_recall 2.37 vs 0.26, gr_louvain 3.43 vs 0.36) sorted
-    * cheap queries into the tail where a throttle window plus min-of-1
-    * reads a 0.6s row as >1s — the r19 refresh re-measures every entry
-    * so the sampling protection lands where the cost actually is.
-    *
-    * The r18 variant of the same failure: [[lifecycleBuilds]] queries
-    * sort to the tail BY COST, and when the extra-sample window closes
-    * there, min-of-1 records their multi-second store-maintenance
-    * build as the warm number (driver r18: ops_day 8.33 s). Listing a
-    * query here orders the sweep; only the lifecycle guarantee (a
-    * second sample past the cutoff) makes its recorded number
-    * sampling-invariant.
+  /** Samples a query gets in a warm sweep, from its first sample's
+    * seconds. Multi-second queries get five: a single sample sits
+    * entirely inside one throttle window, while five span sub-windows
+    * of the sweep and the min approaches the clean-window floor. The
+    * 0.6-1.5 s band is the weak-rule boundary class: a query whose
+    * clean floor is ~0.7 s reads >1 s inside one throttle spike, and
+    * with only two samples both can land in the same window (r16:
+    * q5_region_revenue recorded 1.05 s in the driver sweep vs 0.62 s
+    * committed, same code); three samples span windows.
     */
-  val priorCost: Map[String, Double] = Map(
-    "an_ab_test" -> 0.26,
-    "an_active_streaks" -> 0.36,
-    "an_cm_topk" -> 0.30,
-    "an_comment_buckets" -> 0.24,
-    "an_concurrency" -> 0.81,
-    "an_conversion" -> 0.43,
-    "an_dow_activity" -> 0.18,
-    "an_dow_anomaly" -> 0.22,
-    "an_event_gap_dist" -> 0.32,
-    "an_explorer" -> 0.07,
-    "an_explorer_page" -> 0.19,
-    "an_explorer_page_mc" -> 0.15,
-    "an_forecast_naive" -> 0.29,
-    "an_gini" -> 0.27,
-    "an_hist_quantiles" -> 0.38,
-    "an_hll_users" -> 0.47,
-    "an_hourly_heatmap" -> 0.22,
-    "an_keyword_mentions" -> 0.18,
-    "an_kmv_overlap" -> 0.48,
-    "an_new_vs_returning" -> 0.33,
-    "an_pareto_share" -> 0.27,
-    "an_pivot_daily" -> 0.24,
-    "an_quantiles" -> 0.36,
-    "an_retention" -> 0.35,
-    "an_rolling_active" -> 0.42,
-    "an_session_paths" -> 0.50,
-    "an_session_stats" -> 0.41,
-    "an_spike_days" -> 0.18,
-    "an_timeline" -> 0.18,
-    "an_timeline_dense" -> 0.21,
-    "an_top_groups" -> 0.08,
-    "an_trend" -> 0.22,
-    "an_user_activity" -> 0.28,
-    "an_value_buckets" -> 0.17,
-    "dd_cluster_canonical" -> 0.47,
-    "dd_clusters" -> 0.33,
-    "dd_cross_source" -> 0.23,
-    "dd_embedding" -> 0.09,
-    "dd_embedding_sweep" -> 0.17,
-    "dd_est_quality" -> 0.24,
-    "dd_exact" -> 0.18,
-    "dd_impact" -> 0.54,
-    "dd_incremental" -> 0.58,
-    "dd_lsh_tuning" -> 0.43,
-    "dd_minhash_lsh" -> 0.09,
-    "dd_ngram_jaccard" -> 0.09,
-    "dd_recall" -> 0.52,
-    "dd_simhash" -> 0.86,
-    "dd_span_coverage" -> 0.83,
-    "dd_split_leakage" -> 0.26,
-    "etl_chunk_overlap" -> 0.12,
-    "etl_clean_text" -> 0.33,
-    "etl_compact_latest" -> 0.16,
-    "etl_corpus_prep" -> 0.26,
-    "etl_dedup_ingest" -> 0.11,
-    "etl_filter_enrich" -> 0.39,
-    "etl_mixture_schedule" -> 0.26,
-    "etl_pack_bpe" -> 0.81,
-    "etl_pack_sequences" -> 0.32,
-    "etl_parse_json" -> 0.32,
-    "etl_profile_columns" -> 0.34,
-    "etl_profile_drift" -> 0.53,
-    "etl_relevance_gate" -> 0.10,
-    "etl_scd2" -> 0.21,
-    "etl_sessionize" -> 0.33,
-    "etl_shard_shuffle" -> 0.12,
-    "etl_split_by_cluster" -> 0.49,
-    "etl_split_train_val" -> 0.31,
-    "etl_stratified_sample" -> 0.09,
-    "etl_weighted_sample" -> 0.23,
-    "etl_winsorize" -> 0.28,
-    "gr_assortativity" -> 0.27,
-    "gr_betweenness_approx" -> 2.01,
-    "gr_betweenness_w" -> 6.32,
-    "gr_centrality_err" -> 6.50,
-    "gr_centrality_tuning" -> 3.00,
-    "gr_closeness" -> 1.44,
-    "gr_closeness_w" -> 2.38,
-    "gr_communities" -> 1.26,
-    "gr_community_names" -> 0.94,
-    "gr_community_quality" -> 0.89,
-    "gr_community_stats" -> 0.93,
-    "gr_components" -> 0.90,
-    "gr_degree" -> 0.30,
-    "gr_degree_buckets" -> 0.23,
-    "gr_degree_directed" -> 0.34,
-    "gr_edges" -> 0.41,
-    "gr_ego_net" -> 0.96,
-    "gr_eigenvector" -> 1.36,
-    "gr_graph_stats" -> 0.17,
-    "gr_influencers" -> 1.50,
-    "gr_kcore" -> 0.75,
-    "gr_link_predict" -> 0.39,
-    "gr_louvain" -> 0.45,
-    "gr_louvain_agree" -> 0.38,
-    "gr_louvain_ml" -> 0.37,
-    "gr_modularity" -> 1.24,
-    "gr_pagerank" -> 1.50,
-    "gr_random_walks" -> 3.99,
-    "gr_triangles" -> 3.00,
-    "mm_binary_meta" -> 0.11,
-    "mm_decode_meta" -> 0.29,
-    "mm_dup_frames" -> 0.39,
-    "mm_frame_index" -> 0.12,
-    "mm_phash_clusters" -> 0.65,
-    "mm_phash_dup" -> 0.22,
-    "ops_day" -> 11.11,
-    "ops_freshness" -> 0.30,
-    "ops_graph_ingest" -> 4.85,
-    "ops_incremental_gate" -> 3.94,
-    "ops_infra_gate" -> 0.32,
-    "ops_pipeline_report" -> 0.34,
-    "ops_retrain_gate" -> 0.42,
-    "ops_store_lifecycle" -> 2.37,
-    "ops_week" -> 24.61,
-    "q1_pricing_summary" -> 0.36,
-    "q3_top_orders" -> 0.50,
-    "q5_region_revenue" -> 0.90,
-    "q_anti_join" -> 0.31,
-    "q_asof_join" -> 0.29,
-    "q_bloom_prune" -> 0.46,
-    "q_point_in_time" -> 0.31,
-    "q_range_join" -> 0.40,
-    "q_rollup" -> 0.32,
-    "q_skew_audit" -> 0.65,
-    "q_window_rank" -> 0.34,
-    "sent_agreement" -> 0.71,
-    "sent_distribution" -> 0.47,
-    "sent_drift" -> 0.44,
-    "sent_emoji" -> 0.09,
-    "sent_examples" -> 0.39,
-    "sent_lexicon" -> 0.31,
-    "sent_lexicon_sens" -> 1.05,
-    "sent_nb_eval" -> 1.05,
-    "sim_bruteforce_topk" -> 0.32,
-    "sim_centroid_drift" -> 0.37,
-    "sim_filtered_recall" -> 0.30,
-    "sim_filtered_topk" -> 0.09,
-    "sim_ivf_append" -> 2.97,
-    "sim_ivf_kmeans_topk" -> 0.07,
-    "sim_ivf_topk" -> 0.43,
-    "sim_ivfpq_topk" -> 0.81,
-    "sim_kmeans_recall" -> 0.29,
-    "sim_kmeans_train" -> 0.15,
-    "sim_lsh_topk" -> 0.27,
-    "sim_mmr_topk" -> 0.30,
-    "sim_norm_audit" -> 0.18,
-    "sim_pair_hist" -> 0.25,
-    "sim_pair_stats" -> 0.34,
-    "sim_pq_recall" -> 1.14,
-    "sim_pq_topk" -> 1.03,
-    "sim_recall" -> 0.39,
-    "st_enrich_agg" -> 0.34,
-    "st_funnel_join" -> 0.25,
-    "st_window_agg" -> 0.24,
-    "tx_boilerplate" -> 0.45,
-    "tx_bpe_encode" -> 0.11,
-    "tx_bpe_tuning" -> 3.88,
-    "tx_char_diversity" -> 0.79,
-    "tx_contamination" -> 0.35,
-    "tx_corpus_mixture" -> 0.27,
-    "tx_fingerprint" -> 0.16,
-    "tx_gopher_rules" -> 0.26,
-    "tx_hashed_features" -> 0.28,
-    "tx_keyterms" -> 0.61,
-    "tx_lang_id" -> 0.25,
-    "tx_langid_confusion" -> 0.36,
-    "tx_lm_score" -> 0.79,
-    "tx_ngram_novelty" -> 0.43,
-    "tx_ngram_stats" -> 0.21,
-    "tx_pii_scrub" -> 0.51,
-    "tx_quality" -> 0.11,
-    "tx_repetition" -> 0.19,
-    "tx_term_drift" -> 0.29,
-    "tx_token_count" -> 0.15,
-    "tx_vocab_growth" -> 0.29)
-
-  /** Lifecycle gates: queries whose FIRST sample in a warm sweep pays a
-    * one-time multi-second store-maintenance arc (parquet day-tree
-    * writes, store publish/append/compact, a model refit) and whose
-    * later samples serve the MatStore memo in milliseconds. Mapped to
-    * the gate's own memo-key prefixes so the measurement tools can
-    * clear exactly that gate's memo per sample ([[MatStore
-    * .clearPrefix]]). Consequences (r18 verdict item 1):
-    *
-    *  - Bench GUARANTEES these queries a second sample even past the
-    *    budget×0.7 extra-sample cutoff — a min-of-1 on a throttled host
-    *    otherwise records the build as the query's warm cost (driver
-    *    r18: ops_day 8.33 s = 6.0× its paired oracle) while a clean
-    *    min-of-5 records the 8 ms serve; neither alone is honest.
-    *  - The build cost is reported as its OWN bench fact (the `builds`
-    *    dict of the full JSON line and the committed sidecar): the
-    *    query row carries the warm SERVE cost — the deployed posture
-    *    every other MatStore consumer is measured in — and the
-    *    once-per-day build cost stays a declared, driver-visible
-    *    number instead of sampling noise.
-    *  - ScaleTrend/IterProbe clear these prefixes before each sample,
-    *    so trend rows and scheduler counters measure the maintenance
-    *    ARC, not the memo read.
-    */
-  val lifecycleBuilds: Map[String, Seq[String]] = Map(
-    "ops_incremental_gate" -> Seq("ops_inc_batch:", "ops_inc_bands:"),
-    "ops_store_lifecycle" -> Seq("ops_store_lc:"),
-    "ops_graph_ingest" -> Seq("ops_graph_und:"),
-    "ops_day" -> Seq("ops_day:"),
-    "ops_week" -> Seq("ops_week:"),
-    // bare prefix: covers the store arc AND the frozen-fit memo
-    "sim_ivf_append" -> Seq("sim_ivf_append"),
-    // the BPE tokenizer-learner panels are the same train-once class (a
-    // model fit memoized per session): the 32-round depth sweep and the
-    // 8-round learner+mass build are their one-time arcs; the shared
-    // corpus tokenize ("tx_bpe_toks:"/"tx_bpe_vf:") stays warm, like an
-    // unchanged base store (r19: tx_bpe_tuning read 10.0 s = 5.3× its
-    // oracle as a min-of-1 sweep-tail row — the r18 ops_day pathology)
-    "tx_bpe_tuning" -> Seq("tx_bpe_tuning:"),
-    "etl_pack_bpe" -> Seq("tx_bpe_mass:"),
-    // the centrality probe details (ce_probe_nodes/edges/bfs/brandes/
-    // wd8/brandes_w) are a session-shared build consumed by BOTH
-    // gr_centrality_err and gr_centrality_tuning — whichever runs first
-    // in a sweep pays it (r19 verdict item 5: the tuning row read 6.4 s
-    // = 3.6x its oracle purely from sweep position). Marking both makes
-    // the row order-INVARIANT: the first sample (build, wherever it
-    // lands) is a declared `builds` fact, the query row records the
-    // warm panel read, and ScaleTrend/IterProbe clear the prefix so
-    // trend rows measure the real probe arc.
-    "gr_centrality_err" -> Seq("ce_probe_"),
-    "gr_centrality_tuning" -> Seq("ce_probe_"))
+  private def maxSamples(first: Double): Int =
+    if (first > 1.5) 5 else if (first > 0.6) 3 else 2
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -284,10 +55,13 @@ object Bench {
     // the driver invokes with no args and always sweeps everything
     val only: Set[String] =
       if (args.nonEmpty) args(0).split(",").toSet else Set.empty
-    // Cold mode: drop the MatStore between queries so every query pays its
-    // own one-time builds (signature tables, k-means model, edge list) —
-    // the apples-to-apples number against the per-sample oracle, vs the
-    // default warm train-once/serve-many posture (see SURVEY §5b).
+    // Cold mode: drop the MatStore before each query so every query pays
+    // its own shared builds (signature tables, k-means model, edge list)
+    // — the apples-to-apples number against the per-sample oracle, vs
+    // the default warm train-once/serve-many posture (see SURVEY §5b).
+    // Cold mode is min-of-1: an extra sample would either ride the
+    // shared builds its first sample paid or re-pay them all, and the
+    // latter does not fit the budget.
     val coldStore = sys.env.get("SPARK_GRAFT_BENCH_COLD").exists(v => v == "1" || v == "true")
     val spark = GraftSession.get(cpus)
     val sc = spark.sparkContext
@@ -305,46 +79,30 @@ object Bench {
     // hook snapshots them while the main thread may still be mutating
     val lock = new Object
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val builds = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val oracleT = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
     val printed = new AtomicBoolean(false)
     val lastJson = new java.util.concurrent.atomic.AtomicReference[String]("")
 
-    // `slim` drops the paired-oracle and per-gate builds dicts: the
-    // driver parses the LAST stdout line, and the full line overflowed
-    // its capture for six rounds ("parsed": null until r19; the r19
-    // slim line parsed cleanly). The slim line carries the whole driver
-    // contract (metric/value/unit/queries/builds_total/sf); the oracle
-    // timings and the per-gate builds dict stay in the full first print
-    // and the committed BENCH_SELF.json sidecar. builds_total (r19
-    // verdict item 3) adds 22 bytes so the ~60 s of declared
-    // once-per-day maintenance stays in the driver-visible record.
+    // `slim` drops the paired-oracle dict: the driver parses the LAST
+    // stdout line, and the full line overflowed its capture for six
+    // rounds ("parsed": null until r19; the r19 slim line parsed
+    // cleanly). The slim line carries the whole driver contract
+    // (metric/value/unit/queries/errors/skipped/partial/sf); the oracle
+    // timings stay in the full first print and the committed
+    // BENCH_SELF.json sidecar.
     def buildJson(partial: Boolean, slim: Boolean = false): String = {
-      val (ts, bs, os, es, sk) = lock.synchronized {
-        (timings.toSeq, builds.toSeq, oracleT.toSeq, errors.toSeq, skipped.toSeq)
+      val (ts, os, es, sk) = lock.synchronized {
+        (timings.toSeq, oracleT.toSeq, errors.toSeq, skipped.toSeq)
       }
-      val qs = ts.map { case (k, v) => "\"" + esc(k) + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-      val bj = bs.map { case (k, v) => "\"" + esc(k) + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-      val or = os.map { case (k, v) => "\"" + esc(k) + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+      def secs(kv: Seq[(String, Double)]): String =
+        kv.map { case (k, v) => "\"" + esc(k) + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
       val er = es.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }.mkString("{", ",", "}")
       val skj = sk.map("\"" + esc(_) + "\"").mkString("[", ",", "]")
       val total = ts.map(_._2).sum
-      // `builds` is the declared sidecar fact for the lifecycle gates
-      // (see lifecycleBuilds): first-build seconds of the one-per-day
-      // maintenance arc, reported separately from the warm serve cost
-      // the query row records. Full line + sidecar carry the per-gate
-      // dict; the slim line must stay inside the driver's stdout-tail
-      // window, so it carries ONE scalar — `builds_total`, the summed
-      // declared maintenance seconds (r19 verdict item 3: ~50 s of real
-      // once-per-day work was otherwise invisible in the driver-parsed
-      // record).
-      val bt = f"${bs.map(_._2).sum}%.3f"
-      val oracleField =
-        if (slim) s""""builds_total":$bt,"""
-        else s""""oracle":$or,"builds":$bj,"builds_total":$bt,"""
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$oracleField"errors":$er,"skipped":$skj,"partial":$partial,"sf":"${esc(sfDir)}"}"""
+      val oracleField = if (slim) "" else s""""oracle":${secs(os)},"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${secs(ts)},$oracleField"errors":$er,"skipped":$skj,"partial":$partial,"sf":"${esc(sfDir)}"}"""
     }
     def emit(partial: Boolean): Unit = if (printed.compareAndSet(false, true)) {
       val line = buildJson(partial)
@@ -407,8 +165,12 @@ object Bench {
         Some((System.nanoTime() - t0) / 1e9)
       } catch {
         case e: Throwable =>
+          val msg = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
           lock.synchronized {
-            errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+            // a successful sample supersedes a watchdog cancellation, but
+            // a genuine intermittent failure stays visible
+            if (!(timings.contains(name) && msg.contains("SPARK_JOB_CANCELLED")))
+              errors(name) = msg
           }
           None
       } finally {
@@ -416,7 +178,28 @@ object Bench {
         watchdog.interrupt()
         sc.clearJobGroup()
       }
+      res.foreach { sec =>
+        lock.synchronized {
+          timings(name) = timings.get(name).fold(sec)(math.min(_, sec))
+          if (errors.get(name).exists(_.contains("SPARK_JOB_CANCELLED"))) errors.remove(name)
+        }
+      }
       res
+    }
+
+    // Reclaim before every query's sample: a query's internal per-sample
+    // persists otherwise pile up in CacheManager (strong refs, never
+    // freed without unpersist) and localCheckpoint blocks are freed by
+    // the ContextCleaner only after the owning plan is GC'd — ~90
+    // samples of graph/LSH checkpoints inflated late queries in r5
+    // (gr_closeness watchdog-cancelled three rounds running while
+    // seconds-fast in isolation). clearCache also unregisters the
+    // persisted [[MatStore.memo]] relations, which re-materialize on
+    // their next read; [[MatStore.of]] checkpoints survive it.
+    def reclaim(): Unit = {
+      spark.catalog.clearCache()
+      if (coldStore) MatStore.clear(spark)
+      System.gc()
     }
 
     // warm the JVM/codegen once with the cheapest query so the first timed
@@ -427,7 +210,7 @@ object Bench {
 
     val ordered = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only.exists(name.contains) }
-      .sortBy { case (name, _) => (priorCost.getOrElse(name, 5.0), name) }
+      .sortBy(_._1)
 
     // one long-lived DuckDB worker for paired oracle samples; None when
     // the driver-side python3+duckdb toolchain is absent (silent skip,
@@ -449,139 +232,49 @@ object Bench {
       if (perRep > 2) worker.foreach(w => reportOracle(name, w.time(name, reps, perRep)))
     }
 
+    // Pass 1: one sample of every query, with its PAIRED oracle sample(s)
+    // (same query, same throttle window), in name order.
+    val first = scala.collection.mutable.Map.empty[String, Double]
     ordered.foreach { case (name, fn) =>
-      if (remaining <= 20) {
-        lock.synchronized { skipped += name }
-      } else {
-        // Reclaim between QUERIES, not between samples: a query's internal
-        // per-sample persists otherwise pile up in CacheManager (strong
-        // refs, never freed without unpersist) and localCheckpoint blocks
-        // are freed by the ContextCleaner only after the owning plan is
-        // GC'd — ~90 samples of graph/LSH checkpoints inflated late
-        // queries in r5 (gr_closeness watchdog-cancelled three rounds
-        // running while seconds-fast in isolation). Clearing inside
-        // runOne instead made every sample first-consumer-cold for the
-        // session-shared MatStore relations, so min-of-N measured the
-        // rebuild, not the query.
-        spark.catalog.clearCache()
-        if (coldStore) MatStore.clear(spark)
-        System.gc()
-        val first = runOne(name, fn, perQueryCap)
-        // extra samples only while comfortably inside the budget. The
-        // gr_* suite is included: the host's bursty 10-20x throttle
-        // spikes hit the many-job iterative queries hardest, and min-of-N
-        // is the only defense that smooths them. Multi-second queries get
-        // up to FIVE samples: a single sample sits entirely inside one
-        // throttle window, while five span sub-windows of the sweep and
-        // the min approaches the clean-window floor (the budget has 3-4x
-        // headroom over a full sweep, so the extra samples are free).
-        // COLD mode is min-of-1 BY DESIGN (r20): the honest cold number
-        // is the full arc (every query pays its own builds, shared ones
-        // included — what the per-sample oracle re-executes), and the
-        // two alternatives were both measured broken this round:
-        // clearing the store only between queries let extra samples
-        // ride the first sample's memos (min-of-N recorded 8 ms memo
-        // reads — ops_day 0.01 s against a 10 s arc), while clearing
-        // before every extra sample re-paid every shared build
-        // per sample and blew the budget (8 most expensive queries
-        // SKIPPED, partial=true). One arc sample per query completes
-        // the sweep inside the budget with every row honest; window
-        // noise on a single sample is the documented trade of the
-        // cold sidecar (a decomposition aid, not the graded bench).
-        val maxSamples = if (coldStore) 1 else first match {
-          case Some(t) if t > 1.5 => 5
-          // the 0.6-1.5s band is the weak-rule boundary class: a query
-          // whose clean-window floor is ~0.7s reads >1s inside one
-          // throttle spike, and with only two samples both can land in
-          // the same window (r16: q5_region_revenue recorded 1.05s in
-          // the driver sweep vs 0.62s committed, same code). Three
-          // samples span windows; min-of-3 approaches the floor. Costs
-          // ≤ ~0.7s × the handful of band members per sweep.
-          case Some(t) if t > 0.6 => 3
-          case _ => 2
-        }
-        val extra = scala.collection.mutable.ArrayBuffer.empty[Double]
-        var more = first.isDefined
-        val isLifecycle = lifecycleBuilds.contains(name) && !coldStore
-        // r19 verdict item 1: the lifecycle second-sample guarantee,
-        // GENERALIZED to every expensive query. Cheapest-first ordering
-        // puts the most expensive queries exactly where the budget×0.7
-        // cutoff downgrades them to min-of-1, so one throttle window
-        // recorded an untouched query's warm cost at 3-4x its committed
-        // min-of-N (r19 driver: gr_random_walks 15.05 s vs 5.2 s,
-        // gr_centrality_tuning 6.40 s vs 2.8 s — both on unchanged
-        // code). Any query whose prior cost is above 1.5 s now gets a
-        // second sample past the cutoff (budget-guarded), the lifecycle
-        // mechanism verbatim.
-        // 1.2 rather than a sharp 1.5: the 1.2-1.5 s rows (pagerank,
-        // influencers, eigenvector, closeness) pair with ~1x oracles, so
-        // ONE 2x throttle window on a min-of-1 sample is all it takes to
-        // print a weak-class row; their guaranteed second sample costs
-        // ~1.4 s each, budget-guarded.
-        val guaranteedSecond = isLifecycle || priorCost.getOrElse(name, 5.0) > 1.2
-        // 0.7 (was 0.5): a full warm sweep's wall lands at 400-500s of
-        // the 900s budget, so the half-budget cutoff silently downgraded
-        // the ENTIRE sweep tail to single cold samples — exactly the
-        // expensive queries min-of-N exists for. Lifecycle gates are
-        // GUARANTEED a second sample past that cutoff (budget guard
-        // only): their first sample is the one-time store-maintenance
-        // build, and min-of-1 would record it as the warm cost (r18
-        // verdict item 1 — the one weak row of that round's sweep).
-        while (more && (1 + extra.length) < maxSamples &&
-            (elapsed < budgetSec * 0.7 ||
-              (guaranteedSecond && extra.isEmpty && remaining > 25))) {
-          // cold mode drops the store before EVERY sample, not just
-          // between queries: an extra sample would otherwise ride the
-          // memo the first sample built, and min-of-N would record an
-          // 8 ms memo read as the query's "cold" cost (r20: the
-          // generalized second-sample guarantee surfaced exactly this —
-          // ops_day read 0.01 s in a cold sweep whose first sample paid
-          // the full 10 s arc; r19's cold rows only stayed honest where
-          // the budget cutoff happened to force min-of-1). Per-sample
-          // clearing makes "cold pays its own builds every sample"
-          // mechanically true for min-of-N too.
-          if (coldStore) { spark.catalog.clearCache(); MatStore.clear(spark) }
-          runOne(name, fn, perQueryCap) match {
-            case Some(t) => extra += t
-            case None => more = false
-          }
-        }
-        val runs = first.toSeq ++ extra
-        if (runs.nonEmpty) lock.synchronized {
-          timings(name) = runs.min
-          // the lifecycle gate's first (build) sample is its own bench
-          // fact; the query row records the warm serve the later
-          // samples measure. Cold mode pays the build EVERY sample by
-          // design, so there the min already is the honest build number
-          // and no separate fact is recorded.
-          if (isLifecycle && runs.length >= 2) builds(name) = runs.head
-          // a successful sample supersedes its own watchdog cancellation,
-          // but a genuine intermittent failure stays visible
-          if (errors.get(name).exists(_.contains("SPARK_JOB_CANCELLED"))) errors.remove(name)
-        }
-        // PAIRED oracle sample(s): same query, same throttle window
+      if (remaining <= 20) lock.synchronized { skipped += name }
+      else {
+        reclaim()
+        runOne(name, fn, perQueryCap).foreach(first(name) = _)
         timeOraclePaired(name)
       }
     }
 
-    // One retry for queries whose only sample was watchdog-cancelled: on a
-    // host with documented 10-20x throttling spikes, a single cancellation
-    // is usually a spike artifact (r4: dd_minhash_lsh cancelled at 112s
-    // while its strict superset dd_ngram_jaccard finished in 4.7s in the
-    // same sweep). A spike must cost one slot, not the timing forever.
+    // Pass 2: the rest of the budget buys extra samples up to each
+    // query's [[maxSamples]] tier (cold mode: none), in rounds — every
+    // query gets its second sample before any gets its third — and
+    // within a round cheapest first by pass 1's numbers. The second
+    // sample matters most: a query's pass-1 sample may pay a shared
+    // build it happened to consume first, or a throttle window. A query
+    // whose extra sample fails gets no more.
+    val byCost = ordered.filter { case (name, _) => first.contains(name) }
+      .sortBy { case (name, _) => (first(name), name) }
+    val failed = scala.collection.mutable.Set.empty[String]
+    if (!coldStore)
+      for (k <- 2 to maxSamples(Double.MaxValue); (name, fn) <- byCost
+           if k <= maxSamples(first(name)) && !failed(name) &&
+             remaining > 25 + 2 * first(name)) {
+        reclaim()
+        if (runOne(name, fn, perQueryCap).isEmpty) failed += name
+      }
+    // One retry for a query whose only sample was watchdog-cancelled: on
+    // a host with documented 10-20x throttling spikes a single
+    // cancellation is usually a spike artifact (r4: dd_minhash_lsh
+    // cancelled at 112 s while its strict superset dd_ngram_jaccard
+    // finished in 4.7 s in the same sweep).
     ordered.foreach { case (name, fn) =>
       val cancelled = lock.synchronized(
         !timings.contains(name) && errors.get(name).exists(_.contains("SPARK_JOB_CANCELLED")))
       if (cancelled && remaining > 20) {
-        if (coldStore) { spark.catalog.clearCache(); MatStore.clear(spark) }
-        runOne(name, fn, perQueryCap).foreach { sec =>
-          lock.synchronized {
-            timings(name) = sec
-            if (errors.get(name).exists(_.contains("SPARK_JOB_CANCELLED"))) errors.remove(name)
-          }
-        }
+        reclaim()
+        runOne(name, fn, perQueryCap)
       }
     }
+
     // catch-up pass: any oracle sample still missing (e.g. its paired
     // slot hit the budget guard) gets one attempt with what's left
     ordered.foreach { case (name, _) =>

@@ -170,7 +170,7 @@ object MatStore {
     * repartition+persist, whose cache keeps the HashPartitioning visible
     * to the planner where a checkpoint's LogicalRDD would not).
     *
-    * `spark.catalog.clearCache()` (the bench runs it between samples)
+    * `spark.catalog.clearCache()` (the bench runs it between queries)
     * UNREGISTERS a persisted plan — persist() is a one-time registration,
     * so without repair every later consumer would silently re-execute the
     * raw build per round. The accessor therefore re-persists whenever the
@@ -189,42 +189,17 @@ object MatStore {
   }
 
   /** Drop every stored relation for `s`, unpersisting as it goes — the
-    * bench's cold mode (SPARK_GRAFT_BENCH_COLD) calls this between
-    * queries so each query pays its own one-time builds, giving an
-    * apples-to-apples number against an oracle that re-executes those
-    * builds every sample. Checkpoint blocks are freed by the
-    * ContextCleaner once the released plans are GC'd.
+    * bench's cold mode (SPARK_GRAFT_BENCH_COLD) calls this before each
+    * query and the perfbench harness before each pass, so the next run
+    * pays its own shared builds, like an oracle that re-executes them
+    * every sample. Checkpoint blocks are freed by the ContextCleaner
+    * once the released plans are GC'd.
     */
   def clear(s: SparkSession): Unit = {
     val it = cache.keySet.iterator()
     while (it.hasNext) {
       val k = it.next()
       if (k._1 eq s) {
-        try cache.get(k).unpersist(blocking = false) catch { case _: Throwable => () }
-        it.remove()
-        storeTainted.remove(k)
-      }
-    }
-  }
-
-  /** Drop only the memos whose key starts with one of `prefixes` — the
-    * measurement hook behind [[Bench.lifecycleBuilds]]: ScaleTrend and
-    * IterProbe clear a lifecycle gate's own memo before EACH sample so
-    * the timed work is the real store-maintenance arc (writes, publish,
-    * append, compact, refit), not the 8 ms memo read of a previous
-    * sample's result — while every UNRELATED warm shared build
-    * (tokenized corpora, signature tables, trained models) survives,
-    * exactly as it would across production days (r18 verdict item 1:
-    * the `ops_day base=0.01 x5=0.01` trend row measured the memo and
-    * was evidence-free). Keys embed the data dir (`name:$dir`), so a
-    * bare `"ops_day:"` prefix clears the gate on every dir a
-    * two-corpus probe session has touched.
-    */
-  def clearPrefix(s: SparkSession, prefixes: Seq[String]): Unit = {
-    val it = cache.keySet.iterator()
-    while (it.hasNext) {
-      val k = it.next()
-      if ((k._1 eq s) && prefixes.exists(k._2.startsWith)) {
         try cache.get(k).unpersist(blocking = false) catch { case _: Throwable => () }
         it.remove()
         storeTainted.remove(k)

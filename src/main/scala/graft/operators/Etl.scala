@@ -59,7 +59,7 @@ object Etl {
     * correctness gate canonicalizes row order itself, and a global sort
     * in Spark costs a structural second execution of the narrow-map
     * child (the range partitioner's sampling pass — measured 2x on
-    * etl_parse_json with tools/SortProbe). Order stays only where it IS
+    * etl_parse_json). Order stays only where it IS
     * the semantics (top-k / ranked panels).
     */
   val cleanText = QueryDef(

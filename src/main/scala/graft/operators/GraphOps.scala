@@ -137,7 +137,7 @@ object GraphOps {
     * table, so a broadcast is the wrong 100 TB plan regardless — and even
     * at bench SF the auto-chosen broadcast built its 150k-row relation
     * single-threaded for 0.5s while the parallel shuffle join runs the
-    * same build in 0.75s total vs 1.33s (EdgeProbe min-of-4; shuffle_hash
+    * same build in 0.75s total vs 1.33s (min-of-4; shuffle_hash
     * measured within noise of merge). An earlier version pre-aggregated
     * lineitem on (orderkey, suppkey) first: an extra full shuffle that
     * neither co-partitions with the orderkey join nor reduces rows much
@@ -329,7 +329,7 @@ object GraphOps {
     //    exchanges ONLY the |V|-row state side, and the dst aggregation
     //    pays a map-side-combined ~|V|-row partial exchange. Keying by
     //    dst here instead re-exchanged the full |E| relation every round
-    //    (NbProbe: 208.6 MB written over 10 rounds vs 68.7 MB after this
+    //    (208.6 MB shuffle written over 10 rounds vs 68.7 MB after this
     //    fix; the broadcast path writes 38.6 MB).
     // The cache materializes under round 1 and is read as columnar blocks
     // by every later round.

@@ -1627,8 +1627,8 @@ object Similarity {
       dir: String): String =
     Ops.sessionCorpusTmpDir(s, dir, "graft_ivf_app", "store")
 
-  /** Frozen (base-fit) centroids — memoized under the lifecycle prefix
-    * so the measurement tools clear them with the store arc.
+  /** Frozen (base-fit) centroids — a train-once model, memoized so
+    * every run of the append arc assigns under the same fit.
     */
   private[operators] def ivfAppendCents(s: SparkSession,
       dir: String): DataFrame = {
@@ -1708,7 +1708,8 @@ object Similarity {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
     val cents = ivfAppendCents(s, dir)
-    val served = graft.MatStore.of(s, s"sim_ivf_append:$dir") {
+    // the publish/append/serve arc runs every time the query runs
+    val served = {
       val store = ivfAppendStoreDir(s, dir)
       val root = new org.apache.hadoop.fs.Path(
         new java.io.File(store).getParent)

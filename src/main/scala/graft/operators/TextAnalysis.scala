@@ -1359,22 +1359,20 @@ object TextAnalysis {
          |ORDER BY merges""".stripMargin
     }) { (s, dir) =>
     import s.implicits._
-    graft.MatStore.of(s, s"tx_bpe_tuning:$dir") {
-      // each tap is ONE aggregate over the posexploded array state: a
-      // word contributes freq once at pos 0 (n_tokens), freq per symbol
-      // row (n_subwords = Σ freq·n_sub), and its symbols to the distinct
-      // count — no per-tap vf join, no nsym crossJoin/broadcast (the r18
-      // row form paid 3 jobs per tap; this is one)
-      val segs = bpeSegArrTaps(bpeVf(s, dir), BpeTaps)
-      BpeTaps.map { r =>
-        segs(r).select($"freq", posexplode($"syms").as(Seq("pos", "sym")))
-          .agg(sum(when($"pos" === 0, $"freq")).cast("long").as("n_tokens"),
-            sum($"freq").cast("long").as("n_subwords"),
-            count_distinct($"sym").as("n_symbols"))
-          .select(lit(r.toLong).as("merges"), $"n_tokens", $"n_subwords",
-            $"n_symbols")
-      }.reduce(_ unionAll _)
-    }
+    // each tap is ONE aggregate over the posexploded array state: a
+    // word contributes freq once at pos 0 (n_tokens), freq per symbol
+    // row (n_subwords = Σ freq·n_sub), and its symbols to the distinct
+    // count — no per-tap vf join, no nsym crossJoin/broadcast (the r18
+    // row form paid 3 jobs per tap; this is one)
+    val segs = bpeSegArrTaps(bpeVf(s, dir), BpeTaps)
+    BpeTaps.map { r =>
+      segs(r).select($"freq", posexplode($"syms").as(Seq("pos", "sym")))
+        .agg(sum(when($"pos" === 0, $"freq")).cast("long").as("n_tokens"),
+          sum($"freq").cast("long").as("n_subwords"),
+          count_distinct($"sym").as("n_symbols"))
+        .select(lit(r.toLong).as("merges"), $"n_tokens", $"n_subwords",
+          $"n_symbols")
+    }.reduce(_ unionAll _)
       .select($"merges", $"n_tokens", $"n_subwords", $"n_symbols",
         P.prnd($"n_subwords".cast("double") / $"n_tokens", 6).as("subword_ratio"))
       .orderBy($"merges")

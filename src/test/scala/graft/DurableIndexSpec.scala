@@ -201,6 +201,23 @@ class DurableIndexSpec extends GraftSuite {
       s"post-lifecycle table lost its bucketed layout:\n$plan")
   }
 
+  test("a lifecycle gate re-run in the same session re-executes its arc") {
+    // every run of ops_store_lifecycle publishes, appends, compacts and
+    // serves again: with the store deleted between two runs, the second
+    // run must recreate it (a memoized result would leave it deleted)
+    val first = rowsOf(run("ops_store_lifecycle"))
+    val store = new org.apache.hadoop.fs.Path(operators.Ops.lifecycleStoreDir(spark, sfDir))
+    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.delete(store, true), s"the first run left no store at $store")
+    val second = rowsOf(run("ops_store_lifecycle"))
+    val meta = new org.apache.hadoop.fs.Path(store,
+      s"${sources.IndexStore.tableName(s"lc_bands:$sfDir")}/_graft_index.properties")
+    assert(fs.exists(meta), s"the second run did not recreate the store at $store")
+    assert(second === first, "the re-run's candidates differ from the first run's")
+    assert(second === rowsOf(run("dd_minhash_lsh")),
+      "the re-run's candidates differ from the fresh build")
+  }
+
   test("serve refuses a stale artifact after its source corpus is rewritten; a sidecar key mismatch never serves") {
     import spark.implicits._
     val store = java.nio.file.Files.createTempDirectory("graft_idx_fp").toString

@@ -220,7 +220,7 @@ class ScalePlanSpec extends GraftSuite {
   test("full-output queries plan no global sort (no RangePartitioning exchange)") {
     // A global orderBy plans Exchange(RangePartitioning), whose range
     // boundaries come from a SAMPLING pass that re-executes the child —
-    // a structural 2x on a narrow-map query (tools/SortProbe). Output
+    // a structural 2x on a narrow-map query (measured on etl_parse_json). Output
     // order is non-semantic for full-output enrichment tables (the
     // correctness gate canonicalizes row order), so these queries must
     // never pay it. Window-internal per-partition sorts are fine.

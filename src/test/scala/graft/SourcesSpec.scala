@@ -653,4 +653,31 @@ class SourcesSpec extends GraftSuite {
     assert(e.getSuppressed.map(_.getMessage).toSeq === Seq("third"))
     assert(ran.get === 3)
   }
+
+  test("parallel landing writes: a failed item cancels its sibling's running Spark job") {
+    // the sibling is inside a job whose natural length is 30 s when its
+    // peer throws: the call must cancel that job and return long before
+    val sc = spark.sparkContext
+    val naturalMs = 30000L
+    val t0 = System.nanoTime()
+    val boom = intercept[IllegalStateException] {
+      operators.Ops.inParallel(Seq(
+        () => {
+          val deadline = System.nanoTime() + 20000000000L
+          while (sc.statusTracker.getActiveJobIds().isEmpty && System.nanoTime() < deadline)
+            Thread.sleep(20)
+          throw new IllegalStateException("landing failed")
+        },
+        () => sc.parallelize(1 to 2, 2).foreach { _ =>
+          val ctx = org.apache.spark.TaskContext.get()
+          val end = System.currentTimeMillis() + naturalMs
+          while (!ctx.isInterrupted() && System.currentTimeMillis() < end) Thread.sleep(20)
+        }))
+    }
+    val sec = (System.nanoTime() - t0) / 1e9
+    assert(boom.getMessage === "landing failed")
+    assert(sec < 10, f"inParallel returned after $sec%.1f s: the sibling's job ran to its end")
+    assert(boom.getSuppressed.length === 1, "the cancelled sibling's failure is attached")
+    assert(sc.statusTracker.getActiveJobIds().isEmpty, "no job of the call outlives it")
+  }
 }
