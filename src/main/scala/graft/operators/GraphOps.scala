@@ -3,7 +3,7 @@ package graft.operators
 import graft.Ckpt._
 import graft.{MatStore, QueryDef, Tables}
 import graft.functions.{Portable => P, PortableSql => PS}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph / network suite (SURVEY §2c) on customer↔supplier interaction
@@ -565,7 +565,7 @@ object GraphOps {
   }
 
   /** 'c<id>' / 's<id>' string form of a [[numericUnd]] node id. */
-  def fmtNode(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def fmtNode(c: Column): Column =
     concat(when(c % 2 === 0, "c").otherwise("s"), shiftright(c, 1).cast("string"))
 
   /** Columnar landmark-BFS state: ONE row per node with per-landmark
@@ -1200,14 +1200,21 @@ object GraphOps {
     (base +: steps).mkString(",\n")
   }
 
-  /** cld0..cldN CTE chain — unrolled synchronous BFS relaxation from the
-    * K landmark sources, the SQL twin of [[closeness]].
+  /** `<pfx>nodes` (every node) and `<pfx>lmk` (the K-landmark seed,
+    * column `node`) over `und` — the node and source CTEs of the
+    * production landmark queries.
     */
-  private def clChain(k: Int, rounds: Int): String = {
-    val base =
-      s"""clnodes AS MATERIALIZED (SELECT DISTINCT node FROM und),
-         |lmk AS MATERIALIZED (SELECT node AS lmk FROM ${lmkSeedSql("und", k)}),
-         |cld0 AS MATERIALIZED (SELECT lmk AS node, lmk, 0 AS d FROM lmk)""".stripMargin
+  private def lmkSql(pfx: String, k: Int): String =
+    s"""${pfx}nodes AS MATERIALIZED (SELECT DISTINCT node FROM und),
+       |${pfx}lmk AS MATERIALIZED (SELECT node FROM ${lmkSeedSql("und", k)})""".stripMargin
+
+  /** `<pfx>0..<pfx>R`: unrolled synchronous hop-BFS rounds from the
+    * sources CTE `srcCte` (column `node`) over the edge CTE `und`, rows
+    * (src, node, d) — the SQL twin of [[landmarkBfs]] (production
+    * landmarks) and of the probe's hop detail ([[probeDists]]).
+    */
+  private def bfsChain(pfx: String, und: String, srcCte: String, rounds: Int): String = {
+    val base = s"${pfx}0 AS MATERIALIZED (SELECT node AS src, node, 0 AS d FROM $srcCte)"
     // candidate expansion joins ONLY the previous round's frontier
     // (p.d = i-1): a BFS distance is final the round it is first set,
     // so a non-frontier row p would contribute d = p.d + 1 ≤ i-1, a
@@ -1216,143 +1223,133 @@ object GraphOps {
     // baseline at K=24 (the full re-expansion form read 7.4s at sf0.1,
     // ~3x this one, all of it re-deriving distances it already had).
     val steps = (1 to rounds).map { i =>
-      s"""cld$i AS MATERIALIZED (SELECT x.node, x.lmk, MIN(x.d) AS d FROM (
-         |    SELECT node, lmk, d FROM cld${i - 1}
+      s"""$pfx$i AS MATERIALIZED (SELECT x.src, x.node, MIN(x.d) AS d FROM (
+         |    SELECT src, node, d FROM $pfx${i - 1}
          |    UNION ALL
-         |    SELECT u.node, p.lmk, p.d + 1 FROM und u
-         |    JOIN cld${i - 1} p ON u.nb = p.node AND p.d = ${i - 1}) x
-         |  GROUP BY x.node, x.lmk)""".stripMargin
+         |    SELECT p.src, u.node, p.d + 1 FROM $und u
+         |    JOIN $pfx${i - 1} p ON u.nb = p.node AND p.d = ${i - 1}) x
+         |  GROUP BY x.src, x.node)""".stripMargin
     }
     (base +: steps).mkString(",\n")
   }
 
-  /** bf0..bfN + dlN..dl0 CTE chain — unrolled forward-BFS (distance +
-    * σ path counts) and backward Brandes dependency levels, the SQL twin
-    * of [[betweenness]].
+  /** Unrolled hop Brandes from the sources CTE `srcCte` over the edge
+    * CTE `und`: forward BFS levels with σ path counts (`<pfx>f0..R`),
+    * the shortest-path DAG (`<pfx>dag`), backward δ levels
+    * (`<pfx>dR..0`), and `<pfx>dx` (node, src, delta) over node ≠ src —
+    * the SQL twin of [[betweenness]] (production landmarks) and of
+    * [[probeBrandesDetail]] (all probe sources). Each caller reduces
+    * `<pfx>dx` to its own final CTE.
     */
-  private def bwChain(k: Int, rounds: Int): String = {
+  private def brandesChain(pfx: String, und: String, srcCte: String, rounds: Int): String = {
     val base =
-      s"""bnodes AS MATERIALIZED (SELECT DISTINCT node FROM und),
-         |blmk AS MATERIALIZED (SELECT node AS lmk FROM ${lmkSeedSql("und", k)}),
-         |bf0 AS MATERIALIZED (SELECT lmk AS node, lmk, 0 AS d, CAST(1 AS BIGINT) AS sig FROM blmk)""".stripMargin
+      s"${pfx}f0 AS MATERIALIZED (SELECT node AS src, node, 0 AS d, CAST(1 AS BIGINT) AS sig FROM $srcCte)"
     val fwd = (1 to rounds).map { i =>
-      s"""bf${i}c AS MATERIALIZED (SELECT u.node, p.lmk, CAST(SUM(p.sig) AS BIGINT) AS sig
-         |  FROM und u JOIN bf${i - 1} p ON u.nb = p.node AND p.d = ${i - 1}
-         |  GROUP BY u.node, p.lmk),
-         |bf$i AS MATERIALIZED (SELECT node, lmk, d, sig FROM bf${i - 1}
+      s"""${pfx}f${i}c AS MATERIALIZED (SELECT p.src, u.node, CAST(SUM(p.sig) AS BIGINT) AS sig
+         |  FROM $und u JOIN ${pfx}f${i - 1} p ON u.nb = p.node AND p.d = ${i - 1}
+         |  GROUP BY p.src, u.node),
+         |${pfx}f$i AS MATERIALIZED (SELECT src, node, d, sig FROM ${pfx}f${i - 1}
          |  UNION ALL
-         |  SELECT c.node, c.lmk, $i AS d, c.sig FROM bf${i}c c
-         |  WHERE NOT EXISTS (SELECT 1 FROM bf${i - 1} p
-         |    WHERE p.node = c.node AND p.lmk = c.lmk))""".stripMargin
+         |  SELECT c.src, c.node, $i AS d, c.sig FROM ${pfx}f${i}c c
+         |  WHERE NOT EXISTS (SELECT 1 FROM ${pfx}f${i - 1} p
+         |    WHERE p.node = c.node AND p.src = c.src))""".stripMargin
     }
     val dag =
-      s"""bdag AS MATERIALIZED (SELECT v.lmk, v.node AS v, v.d AS dv, v.sig AS sv,
+      s"""${pfx}dag AS MATERIALIZED (SELECT v.src, v.node AS v, v.d AS dv, v.sig AS sv,
          |    w.node AS w, w.sig AS sw
-         |  FROM und u
-         |  JOIN bf$rounds v ON u.node = v.node
-         |  JOIN bf$rounds w ON u.nb = w.node AND w.lmk = v.lmk AND w.d = v.d + 1)""".stripMargin
+         |  FROM $und u
+         |  JOIN ${pfx}f$rounds v ON u.node = v.node
+         |  JOIN ${pfx}f$rounds w ON u.nb = w.node AND w.src = v.src AND w.d = v.d + 1)""".stripMargin
     val bwdBase =
-      s"""dl$rounds AS MATERIALIZED (SELECT node, lmk, CAST(0.0 AS DOUBLE) AS delta
-         |  FROM bf$rounds WHERE d = $rounds)""".stripMargin
+      s"""${pfx}d$rounds AS MATERIALIZED (SELECT node, src, CAST(0.0 AS DOUBLE) AS delta
+         |  FROM ${pfx}f$rounds WHERE d = $rounds)""".stripMargin
     val bwd = ((rounds - 1) to 0 by -1).map { r =>
-      s"""dl$r AS MATERIALIZED (SELECT g.v AS node, g.lmk,
+      s"""${pfx}d$r AS MATERIALIZED (SELECT g.v AS node, g.src,
          |  ${PS.dsum(PS.prnd("(CAST(g.sv AS DOUBLE) / CAST(g.sw AS DOUBLE)) * (CAST(1.0 AS DOUBLE) + COALESCE(d2.delta, CAST(0.0 AS DOUBLE)))", 9), 9)} AS delta
-         |  FROM bdag g LEFT JOIN dl${r + 1} d2 ON g.w = d2.node AND g.lmk = d2.lmk
+         |  FROM ${pfx}dag g LEFT JOIN ${pfx}d${r + 1} d2 ON g.w = d2.node AND g.src = d2.src
          |  WHERE g.dv = $r
-         |  GROUP BY g.v, g.lmk)""".stripMargin
+         |  GROUP BY g.v, g.src)""".stripMargin
     }
-    val unionDl = (0 to rounds).map(r => s"SELECT node, lmk, delta FROM dl$r").mkString(" UNION ALL ")
+    val unionDl = (0 to rounds).map(r => s"SELECT node, src, delta FROM ${pfx}d$r").mkString(" UNION ALL ")
     val fin =
-      s"""bdeltas AS MATERIALIZED (SELECT node, lmk, delta FROM ($unionDl) WHERE node <> lmk),
-         |bbc AS MATERIALIZED (SELECT node,
-         |  ${PS.dsum("delta", 9)} / CAST($k AS DOUBLE) AS b
-         |  FROM bdeltas GROUP BY node)""".stripMargin
+      s"${pfx}dx AS MATERIALIZED (SELECT node, src, delta FROM ($unionDl) WHERE node <> src)"
     ((base +: fwd) ++ Seq(dag, bwdBase) ++ bwd :+ fin).mkString(",\n")
   }
 
-  /** cw0..cwN CTE chain — unrolled synchronous WEIGHTED (Bellman-Ford)
-    * relax rounds from the K landmark sources, the SQL twin of
-    * [[weightedDists]] for [[closenessW]]. Per round the (node, lmk)
-    * minimum over (previous distances ∪ every neighbor's distance +
-    * edge weight) — semantically the full relaxation; the Spark side's
+  /** `<pfx>0..<pfx>R`: unrolled synchronous WEIGHTED (Bellman-Ford)
+    * relax rounds from the sources CTE `srcCte` over the edge CTE
+    * `und`, rows (src, node, d) with d the exact BIGINT weight sum — per
+    * round the (src, node) minimum over (previous distances ∪ every
+    * neighbor's distance + edge weight). The SQL twin of
+    * [[weightedDists]] (production landmarks) and of the probe's
+    * weighted detail ([[probeDists]]); the Spark landmark side's
     * changed-frontier delta relaxation produces the identical per-round
     * state (a skipped edge was already relaxed with the same source
     * distance).
     */
-  private def cwChain(k: Int, rounds: Int): String = {
-    val base =
-      s"""cwnodes AS MATERIALIZED (SELECT DISTINCT node FROM und),
-         |cwlmk AS MATERIALIZED (SELECT node AS lmk FROM ${lmkSeedSql("und", k)}),
-         |cw0 AS MATERIALIZED (SELECT lmk AS node, lmk, CAST(0 AS BIGINT) AS d FROM cwlmk)""".stripMargin
+  private def relaxChain(pfx: String, und: String, srcCte: String, rounds: Int): String = {
+    val base = s"${pfx}0 AS MATERIALIZED (SELECT node AS src, node, CAST(0 AS BIGINT) AS d FROM $srcCte)"
     val steps = (1 to rounds).map { i =>
-      s"""cw$i AS MATERIALIZED (SELECT x.node, x.lmk, MIN(x.d) AS d FROM (
-         |    SELECT node, lmk, d FROM cw${i - 1}
+      s"""$pfx$i AS MATERIALIZED (SELECT x.src, x.node, MIN(x.d) AS d FROM (
+         |    SELECT src, node, d FROM $pfx${i - 1}
          |    UNION ALL
-         |    SELECT u.node, p.lmk, p.d + u.weight FROM und u JOIN cw${i - 1} p ON u.nb = p.node) x
-         |  GROUP BY x.node, x.lmk)""".stripMargin
+         |    SELECT p.src, u.node, p.d + u.weight FROM $und u JOIN $pfx${i - 1} p ON u.nb = p.node) x
+         |  GROUP BY x.src, x.node)""".stripMargin
     }
     (base +: steps).mkString(",\n")
   }
 
-  /** wd0..wdN + ws0..wsT + wdl0..wdlT CTE chain — unrolled weighted
-    * relax rounds, forward σ relaxations and backward δ relaxations,
-    * the SQL twin of [[betweennessW]] (row-based (node, lmk) expansion;
-    * the Spark side's columnar state is the same recurrence).
+  /** Unrolled WEIGHTED Brandes from the sources CTE `srcCte` over the
+    * edge CTE `und`, dense over the node CTE `nodeCte`: [[relaxChain]]
+    * rounds (`<pfx>w0..R`), the weighted shortest-path DAG
+    * (`<pfx>dag`), forward σ relaxations (`<pfx>s0..T`), and backward δ
+    * relaxations (`<pfx>d0..T`), ending in `<pfx>dx` (node, src, delta)
+    * over node ≠ src — the SQL twin of [[betweennessW]] (production
+    * landmarks; its columnar state is the same recurrence) and of
+    * [[probeBrandesWDetail]] (all probe sources).
     */
-  private def bwwChain(k: Int, rounds: Int, dagIters: Int): String = {
-    val base =
-      s"""wnodes AS MATERIALIZED (SELECT DISTINCT node FROM und),
-         |wlmk AS MATERIALIZED (SELECT node AS lmk FROM ${lmkSeedSql("und", k)}),
-         |wd0 AS MATERIALIZED (SELECT lmk AS node, lmk, CAST(0 AS BIGINT) AS d FROM wlmk)""".stripMargin
-    val relax = (1 to rounds).map { i =>
-      s"""wd$i AS MATERIALIZED (SELECT x.node, x.lmk, MIN(x.d) AS d FROM (
-         |    SELECT node, lmk, d FROM wd${i - 1}
-         |    UNION ALL
-         |    SELECT u.node, p.lmk, p.d + u.weight FROM und u JOIN wd${i - 1} p ON u.nb = p.node) x
-         |  GROUP BY x.node, x.lmk)""".stripMargin
-    }
-    // DAG edge v→w for landmark l iff d(w) = d(v) + weight(v, w); no DAG
-    // edge enters the landmark itself (positive weights), so the pinned
-    // σ(lmk)=1 base row never collides with an aggregated row
+  private def brandesWChain(pfx: String, und: String, srcCte: String,
+      nodeCte: String, rounds: Int, dagIters: Int): String = {
+    val wd = relaxChain(s"${pfx}w", und, srcCte, rounds)
+    // DAG edge v→w for source s iff d(w) = d(v) + weight(v, w); positive
+    // weights mean no DAG edge enters the source, so the pinned
+    // σ(src)=1 base row never collides with an aggregated row
     val dag =
-      s"""wdag AS MATERIALIZED (SELECT v.lmk, v.node AS v, w.node AS w
-         |  FROM und u
-         |  JOIN wd$rounds v ON u.node = v.node
-         |  JOIN wd$rounds w ON u.nb = w.node AND w.lmk = v.lmk AND w.d = v.d + u.weight)""".stripMargin
+      s"""${pfx}dag AS MATERIALIZED (SELECT v.src, v.node AS v, w.node AS w
+         |  FROM $und u
+         |  JOIN ${pfx}w$rounds v ON u.node = v.node
+         |  JOIN ${pfx}w$rounds w ON u.nb = w.node AND w.src = v.src AND w.d = v.d + u.weight)""".stripMargin
     val sigBase =
-      s"""ws0 AS MATERIALIZED (SELECT lmk AS node, lmk, CAST(1 AS BIGINT) AS sig FROM wlmk)""".stripMargin
+      s"${pfx}s0 AS MATERIALIZED (SELECT node AS src, node, CAST(1 AS BIGINT) AS sig FROM $srcCte)"
     val sig = (1 to dagIters).map { t =>
-      s"""ws$t AS MATERIALIZED (
-         |  SELECT lmk AS node, lmk, CAST(1 AS BIGINT) AS sig FROM wlmk
+      s"""${pfx}s$t AS MATERIALIZED (
+         |  SELECT node AS src, node, CAST(1 AS BIGINT) AS sig FROM $srcCte
          |  UNION ALL
-         |  SELECT g.w AS node, g.lmk, CAST(SUM(p.sig) AS BIGINT) AS sig
-         |  FROM wdag g JOIN ws${t - 1} p ON g.v = p.node AND g.lmk = p.lmk
-         |  GROUP BY g.w, g.lmk)""".stripMargin
+         |  SELECT g.src, g.w AS node, CAST(SUM(p.sig) AS BIGINT) AS sig
+         |  FROM ${pfx}dag g JOIN ${pfx}s${t - 1} p ON g.v = p.node AND g.src = p.src
+         |  GROUP BY g.src, g.w)""".stripMargin
     }
     val dagR =
-      s"""wdag2 AS MATERIALIZED (SELECT g.lmk, g.v, g.w,
+      s"""${pfx}dag2 AS MATERIALIZED (SELECT g.src, g.v, g.w,
          |    CAST(sv.sig AS DOUBLE) / CAST(sw.sig AS DOUBLE) AS rt
-         |  FROM wdag g
-         |  JOIN ws$dagIters sv ON g.v = sv.node AND g.lmk = sv.lmk
-         |  JOIN ws$dagIters sw ON g.w = sw.node AND g.lmk = sw.lmk)""".stripMargin
+         |  FROM ${pfx}dag g
+         |  JOIN ${pfx}s$dagIters sv ON g.v = sv.node AND g.src = sv.src
+         |  JOIN ${pfx}s$dagIters sw ON g.w = sw.node AND g.src = sw.src)""".stripMargin
     val dltBase =
-      s"""wdl0 AS MATERIALIZED (SELECT n.node, l.lmk, CAST(0.0 AS DOUBLE) AS delta
-         |  FROM wnodes n CROSS JOIN wlmk l)""".stripMargin
+      s"""${pfx}d0 AS MATERIALIZED (SELECT n.node, l.node AS src, CAST(0.0 AS DOUBLE) AS delta
+         |  FROM $nodeCte n CROSS JOIN $srcCte l)""".stripMargin
     val dlt = (1 to dagIters).map { t =>
-      s"""wdl$t AS MATERIALIZED (SELECT n.node, l.lmk, COALESCE(a.delta, CAST(0.0 AS DOUBLE)) AS delta
-         |  FROM wnodes n CROSS JOIN wlmk l
+      s"""${pfx}d$t AS MATERIALIZED (SELECT n.node, l.node AS src, COALESCE(a.delta, CAST(0.0 AS DOUBLE)) AS delta
+         |  FROM $nodeCte n CROSS JOIN $srcCte l
          |  LEFT JOIN (
-         |    SELECT g.v AS node, g.lmk,
+         |    SELECT g.v AS node, g.src,
          |      ${PS.dsum(PS.prnd("g.rt * (CAST(1.0 AS DOUBLE) + d.delta)", 9), 9)} AS delta
-         |    FROM wdag2 g JOIN wdl${t - 1} d ON g.w = d.node AND g.lmk = d.lmk
-         |    GROUP BY g.v, g.lmk) a ON a.node = n.node AND a.lmk = l.lmk)""".stripMargin
+         |    FROM ${pfx}dag2 g JOIN ${pfx}d${t - 1} d ON g.w = d.node AND g.src = d.src
+         |    GROUP BY g.v, g.src) a ON a.node = n.node AND a.src = l.node)""".stripMargin
     }
     val fin =
-      s"""wbc AS MATERIALIZED (SELECT node,
-         |  (CAST(SUM(CASE WHEN node <> lmk THEN CAST(floor(delta * 1e9 + 0.5) AS BIGINT)
-         |    ELSE CAST(0 AS BIGINT) END) AS DOUBLE) / 1e9) / CAST($k AS DOUBLE) AS b
-         |  FROM wdl$dagIters GROUP BY node)""".stripMargin
-    ((base +: relax) ++ Seq(dag, sigBase) ++ sig ++ Seq(dagR, dltBase) ++ dlt :+ fin)
+      s"${pfx}dx AS MATERIALIZED (SELECT node, src, delta FROM ${pfx}d$dagIters WHERE node <> src)"
+    ((wd +: Seq(dag, sigBase)) ++ sig ++ Seq(dagR, dltBase) ++ dlt :+ fin)
       .mkString(",\n")
   }
 
@@ -1373,23 +1370,71 @@ object GraphOps {
     (base +: steps).mkString(",\n")
   }
 
-  /** Generalized unrolled constrained-Louvain local-move sweep chain —
-    * the SQL twin of [[louvainSweepLoop]] over an arbitrary (und, deg)
-    * graph relation. `pfx` namespaces the CTEs (labels land in
+  /** How a Louvain sweep turns each node's argmax candidate (own label
+    * `a`) into its next label — the one parameter separating the two
+    * sweep variants that share [[louvainSweepLoop]] and [[lvChainOver]].
+    */
+  private sealed trait MoveRule {
+    /** Next label at sweep `i` (1-based) from the argmax `best`, over
+      * columns `node` and `a`.
+      */
+    def next(i: Int, best: Column): Column
+    /** [[next]]'s SQL twin, the argmax in column `c`. */
+    def nextSql(i: Int): String
+    /** Whether a zero-move sweep is a fixed point the loop may stop at. */
+    def stopsAtFixedPoint: Boolean
+  }
+
+  /** The move-down-only symmetry constraint (see [[grLouvain]]): a node
+    * only moves to a smaller community id. Labels never increase, so a
+    * zero-move sweep is a fixed point (see [[LvSweeps]]).
+    */
+  private case object DownOnly extends MoveRule {
+    def next(i: Int, best: Column): Column =
+      when(best < col("a"), best).otherwise(col("a"))
+    def nextSql(i: Int): String = "CASE WHEN c < a THEN c ELSE a END"
+    val stopsAtFixedPoint = true
+  }
+
+  /** The SEEDED SCHEDULE (r15 verdict item 6) — the deterministic,
+    * engine-portable stand-in for the reference's seeded node-visit
+    * ORDER (`louvain_communities(seed=42)` visits nodes in a seeded
+    * random sequence, each move visible to later nodes in the same
+    * sweep — inherently serial). The distributed analogue from the
+    * parallel-Louvain literature is a seeded random SCHEDULE: per sweep
+    * t only the nodes whose md5("42:node:t") is even are ACTIVE and may
+    * take their argmax move (up OR down — no symmetry constraint needed,
+    * the inactive half breaks the synchronous oscillation the down-only
+    * rule exists to prevent); the rest hold. No early exit: a zero-move
+    * sweep is not a fixed point here (the next sweep activates a
+    * different half).
+    */
+  private case object SeededSchedule extends MoveRule {
+    def next(i: Int, best: Column): Column =
+      when(P.hexToLong(md5(concat(lit("42:"), col("node").cast("string"), lit(s":$i"))),
+        1, 15) % 2 === 0, best).otherwise(col("a"))
+    def nextSql(i: Int): String =
+      s"CASE WHEN (${PS.hexToLong(s"md5('42:' || CAST(node AS VARCHAR) || ':$i')", 1, 15)}) % 2 = 0 THEN c ELSE a END"
+    val stopsAtFixedPoint = false
+  }
+
+  /** Generalized unrolled Louvain local-move sweep chain — the SQL twin
+    * of [[louvainSweepLoop]] over an arbitrary (und, deg) graph
+    * relation. `pfx` namespaces the CTEs (labels land in
     * `<pfx>v0..<pfx>vN`), `baseSelect` seeds `<pfx>v0 (node, c)`, and
     * `tw` must be in scope (2m is a LEVEL-INVARIANT of the coarsening:
     * contracting communities preserves total edge weight, so every
     * level's gain scores use the same w2). Sweep i derives
     * per-community totals (<pfx>ct), neighbor-community weights
     * (<pfx>cd — self rows excluded: a coarse super-node's self-loop is
-    * internal weight, not a neighbor edge), the argmax move under the
-    * move-down-only constraint (<pfx>mv), the move count (<pfx>mvd),
-    * and the next label set. The `u.node <> u.nb` filter is vacuous on
-    * the base bipartite graph (even/odd id encoding) and load-bearing
-    * on coarse graphs, whose contraction emits self-loop rows.
+    * internal weight, not a neighbor edge), the argmax move under
+    * `rule` (<pfx>mv), the move count (<pfx>mvd), and the next label
+    * set. The `u.node <> u.nb` filter is vacuous on the base bipartite
+    * graph (even/odd id encoding) and load-bearing on coarse graphs,
+    * whose contraction emits self-loop rows.
     */
   private def lvChainOver(pfx: String, und: String, deg: String,
-      baseSelect: String, sweeps: Int): String = {
+      baseSelect: String, sweeps: Int, rule: MoveRule): String = {
     val base = s"${pfx}v0 AS MATERIALIZED ($baseSelect)"
     val steps = (1 to sweeps).map { i =>
       s"""${pfx}ct$i AS MATERIALIZED (SELECT l.c AS community, CAST(SUM(d.wdegree) AS BIGINT) AS wtot
@@ -1399,7 +1444,7 @@ object GraphOps {
          |    FROM $und u JOIN ${pfx}v${i - 1} lb ON u.nb = lb.node WHERE u.node <> u.nb
          |    UNION ALL SELECT node, c, 0 AS wnc FROM ${pfx}v${i - 1}) t
          |  GROUP BY node, c),
-         |${pfx}mv$i AS MATERIALIZED (SELECT node, a, CASE WHEN c < a THEN c ELSE a END AS c FROM (
+         |${pfx}mv$i AS MATERIALIZED (SELECT node, a, ${rule.nextSql(i)} AS c FROM (
          |    SELECT cd.node, la.c AS a, cd.c,
          |      row_number() OVER (PARTITION BY cd.node ORDER BY
          |        (w.w2 * cd.wnc - d.wdegree *
@@ -1417,14 +1462,13 @@ object GraphOps {
     (base +: steps).mkString(",\n")
   }
 
-  /** lv0..lvN CTE chain — the base-graph instance of [[lvChainOver]]
-    * (label CTEs keep their historical `lv<i>` names), seeded from the
-    * LPA labels. Requires `und`, `deg`, `tw` and `lp\$LpIters` CTEs in
-    * scope.
+  /** `<pfx>v0..<pfx>v<LvSweeps>` — the base-graph instance of
+    * [[lvChainOver]], seeded from the LPA labels. Requires `und`, `deg`,
+    * `tw` and `lp$LpIters` CTEs in scope.
     */
-  private def lvChain(sweeps: Int): String =
-    lvChainOver("l", "und", "deg",
-      s"SELECT node, lbl AS c FROM lp$LpIters", sweeps)
+  private def lvChain(pfx: String, rule: MoveRule): String =
+    lvChainOver(pfx, "und", "deg",
+      s"SELECT node, lbl AS c FROM lp$LpIters", LvSweeps, rule)
 
   /** Numeric-id edge CTEs — the SQL twin of [[numericUnd]]. */
   private val ccNumSql =
@@ -1640,7 +1684,7 @@ object GraphOps {
       min($"dg").as("mind"), max($"dg").as("maxd"),
       min($"wd").as("minw"), max($"wd").as("maxw"),
       min($"pr").as("minp"), max($"pr").as("maxp"))
-    def mm(x: org.apache.spark.sql.Column, lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column) =
+    def mm(x: Column, lo: Column, hi: Column) =
       when(hi === lo, lit(0.0)).otherwise((x - lo) / (hi - lo))
     met.crossJoin(broadcast(st))
       .select(fmtNode($"node").as("node"), P.prnd(
@@ -1654,11 +1698,12 @@ object GraphOps {
   val grCloseness = QueryDef(
     "gr_closeness",
     s"""WITH $eNumSql, $undSql,
-       |${clChain(ClLandmarks, ClRounds)}
+       |${lmkSql("cl", ClLandmarks)},
+       |${bfsChain("cld", "und", "cllmk", ClRounds)}
        |SELECT ${fmtNodeSql("n.node")} AS node,
        |  ${PS.prnd(s"CAST($ClLandmarks AS DOUBLE) / CAST(SUM(COALESCE(d.d, ${ClRounds + 1})) AS DOUBLE)", 8)} AS closeness
-       |FROM clnodes n CROSS JOIN lmk l
-       |LEFT JOIN cld$ClRounds d ON d.node = n.node AND d.lmk = l.lmk
+       |FROM clnodes n CROSS JOIN cllmk l
+       |LEFT JOIN cld$ClRounds d ON d.node = n.node AND d.src = l.node
        |GROUP BY n.node ORDER BY node""".stripMargin) { (s, dir) =>
     import s.implicits._
     closeness(sharedUnd(s, dir))
@@ -1670,7 +1715,11 @@ object GraphOps {
   val grBetweenness = QueryDef(
     "gr_betweenness_approx",
     s"""WITH $eNumSql, $undSql,
-       |${bwChain(BwLandmarks, BwRounds)}
+       |${lmkSql("b", BwLandmarks)},
+       |${brandesChain("b", "und", "blmk", BwRounds)},
+       |bbc AS MATERIALIZED (SELECT node,
+       |  ${PS.dsum("delta", 9)} / CAST($BwLandmarks AS DOUBLE) AS b
+       |  FROM bdx GROUP BY node)
        |SELECT ${fmtNodeSql("n.node")} AS node, ${PS.prnd("COALESCE(b.b, CAST(0.0 AS DOUBLE))", 6)} AS betweenness
        |FROM bnodes n LEFT JOIN bbc b ON n.node = b.node
        |ORDER BY node""".stripMargin) { (s, dir) =>
@@ -1684,11 +1733,12 @@ object GraphOps {
   val grClosenessW = QueryDef(
     "gr_closeness_w",
     s"""WITH $eNumSql, $undSql,
-       |${cwChain(ClLandmarks, ClWRounds)}
+       |${lmkSql("cw", ClLandmarks)},
+       |${relaxChain("cw", "und", "cwlmk", ClWRounds)}
        |SELECT ${fmtNodeSql("n.node")} AS node,
        |  ${PS.prnd(s"CAST($ClLandmarks AS DOUBLE) / CAST(SUM(CASE WHEN d.d IS NULL OR d.d > $ClWCap THEN $ClWCap ELSE d.d END) AS DOUBLE)", 8)} AS closeness_w
        |FROM cwnodes n CROSS JOIN cwlmk l
-       |LEFT JOIN cw$ClWRounds d ON d.node = n.node AND d.lmk = l.lmk
+       |LEFT JOIN cw$ClWRounds d ON d.node = n.node AND d.src = l.node
        |GROUP BY n.node ORDER BY node""".stripMargin) { (s, dir) =>
     import s.implicits._
     closenessW(sharedUnd(s, dir))
@@ -1700,7 +1750,11 @@ object GraphOps {
   val grBetweennessW = QueryDef(
     "gr_betweenness_w",
     s"""WITH $eNumSql, $undSql,
-       |${bwwChain(BwLandmarks, BwWRounds, BwWDagIters)}
+       |${lmkSql("w", BwLandmarks)},
+       |${brandesWChain("w", "und", "wlmk", "wnodes", BwWRounds, BwWDagIters)},
+       |wbc AS MATERIALIZED (SELECT node,
+       |  (CAST(SUM(CAST(floor(delta * 1e9 + 0.5) AS BIGINT)) AS DOUBLE) / 1e9) / CAST($BwLandmarks AS DOUBLE) AS b
+       |  FROM wdx GROUP BY node)
        |SELECT ${fmtNodeSql("n.node")} AS node, ${PS.prnd("COALESCE(b.b, CAST(0.0 AS DOUBLE))", 6)} AS betweenness_w
        |FROM wnodes n LEFT JOIN wbc b ON n.node = b.node
        |ORDER BY node""".stripMargin) { (s, dir) =>
@@ -1718,7 +1772,7 @@ object GraphOps {
        |SELECT ${fmtNodeSql("node")} AS node, ${fmtNodeSql("lbl")} AS community
        |FROM lp$LpIters ORDER BY node""".stripMargin) { (s, dir) =>
     import s.implicits._
-    communities(sharedUnd(s, dir))
+    lpaM(s, dir, sharedUnd(s, dir))
       .select(fmtNode($"node").as("node"), fmtNode($"community").as("community"))
       .orderBy("node")
   }
@@ -1742,7 +1796,7 @@ object GraphOps {
     import s.implicits._
     // one materialization shared by label propagation and the degree agg
     val u = sharedUnd(s, dir)
-    communities(u).join(degrees(u), "node")
+    lpaM(s, dir, u).join(degrees(u), "node")
       .groupBy($"community")
       .agg(P.cnt.as("n_members"),
         sum($"degree").as("total_degree"),
@@ -1782,7 +1836,7 @@ object GraphOps {
     val u = sharedUnd(s, dir)
     val tier = when($"n_members" >= 25, "large")
       .when($"n_members" >= 15, "medium").otherwise("small")
-    communities(u).join(degrees(u), "node")
+    lpaM(s, dir, u).join(degrees(u), "node")
       .groupBy(fmtNode($"community").as("community"))
       .agg(P.cnt.as("n_members"), sum($"wdegree").as("engagement"))
       .select($"community", $"n_members", $"engagement", tier.as("tier"),
@@ -1811,26 +1865,15 @@ object GraphOps {
     s"""WITH $eNumSql, $undSql, $degSql,
        |${lpChain(LpIters)},
        |tw AS MATERIALIZED (SELECT CAST(SUM(weight) AS BIGINT) AS w2 FROM und),
-       |cin AS MATERIALIZED (SELECT ln.lbl AS community, CAST(SUM(u.weight) AS BIGINT) AS win
-       |  FROM und u
-       |  JOIN lp$LpIters ln ON u.node = ln.node
-       |  JOIN lp$LpIters lb ON u.nb = lb.node AND lb.lbl = ln.lbl
-       |  GROUP BY ln.lbl),
-       |ctot AS MATERIALIZED (SELECT l.lbl AS community, CAST(SUM(d.wdegree) AS BIGINT) AS wtot
-       |  FROM lp$LpIters l JOIN deg d USING (node) GROUP BY l.lbl),
-       |qc AS MATERIALIZED (SELECT t.community,
-       |    ${PS.prnd("COALESCE(i.win, 0) / CAST(w.w2 AS DOUBLE) - (t.wtot / CAST(w.w2 AS DOUBLE)) * (t.wtot / CAST(w.w2 AS DOUBLE))", 12)} AS q
-       |  FROM ctot t LEFT JOIN cin i ON i.community = t.community, tw w)
-       |SELECT CAST(COUNT(*) AS BIGINT) AS n_communities,
-       |  ${PS.prnd(PS.dsum("q", 12), 8)} AS modularity
-       |FROM qc""".stripMargin) { (s, dir) =>
+       |${qPanelSql("q", s"lp$LpIters", "lbl")}
+       |SELECT n_communities, modularity FROM qr""".stripMargin) { (s, dir) =>
     import s.implicits._
     // one materialization shared by LPA, the degree agg, and the two
     // label joins below
     val u = sharedUnd(s, dir)
-    val lbl = communities(u).ckpt
+    val lbl = lpaM(s, dir, u)
     // ONE deliberate driver action (same discipline as [[pagerank]]): it
-    // materializes the checkpointed labels in a job the first join pays
+    // materializes the session-shared labels in a job the first join pays
     // anyway, and |V| drives the broadcast-vs-shuffled-hash choice for
     // every label join below — labels are a DATA-SCALING relation, so an
     // unconditional broadcast would be a driver OOM at 100 TB.
@@ -1842,13 +1885,15 @@ object GraphOps {
     modularityOf(u, degrees(u), lbl, tw, bcast)
   }
 
-  /** Constrained local-move sweep chain to convergence over an arbitrary
-    * (und, deg) graph — the shared move phase of [[grLouvain]] (base
-    * graph) and [[grLouvainMl]] (base + coarse levels). Per sweep every
-    * node simultaneously evaluates moving to each NEIGHBORING community
-    * with the exact-BIGINT isolated-node gain and the move-down-only
-    * symmetry constraint (see [[grLouvain]]); sweeps stop at the first
-    * zero-move fixed point or `cap`. Self rows (`node = nb`) are
+  /** Louvain local-move sweeps over an arbitrary (und, deg) graph — the
+    * shared move phase of [[grLouvain]] (base graph), [[grLouvainMl]]
+    * (base + coarse levels) and the seeded-schedule labels of
+    * [[grLouvainAgree]]. Per sweep every node simultaneously evaluates
+    * moving to each NEIGHBORING community with the exact-BIGINT
+    * isolated-node gain; `rule` turns the argmax into the next label
+    * ([[DownOnly]] or [[SeededSchedule]]). Sweeps stop at `cap`, or at
+    * the first zero-move sweep when the rule makes that a fixed point.
+    * Self rows (`node = nb`) are
     * excluded from the neighbor-weight candidates — vacuous on the base
     * bipartite graph, load-bearing on COARSE graphs, where contraction
     * emits self-loop rows that are internal weight, not neighbor edges
@@ -1858,7 +1903,8 @@ object GraphOps {
     * (the pagerank discipline).
     */
   private def louvainSweepLoop(u: DataFrame, deg: DataFrame, lbl0: DataFrame,
-      w2df: DataFrame, bcast: Boolean, cap: Int): (DataFrame, Long, Long) = {
+      w2df: DataFrame, bcast: Boolean, cap: Int,
+      rule: MoveRule): (DataFrame, Long, Long) = {
     val s = u.sparkSession
     import s.implicits._
     var lbl = lbl0
@@ -1890,29 +1936,29 @@ object GraphOps {
         .groupBy($"node", $"a")
         .agg(min(struct((-$"score").as("ns"),
           when($"c" === $"a", 0).otherwise(1).as("t"), $"c".as("l"))).as("m"))
-        .select($"node", $"a",
-          when($"m.l" < $"a", $"m.l").otherwise($"a").as("c"))
+        .select($"node", $"a", rule.next(sweep, $"m.l").as("c"))
         .ckpt
       // the one driver action per sweep — materializes the checkpoint
-      // and decides convergence (a fixed point: zero moves ⇒ every
-      // later sweep is identical, matching the oracle's static unroll)
+      // and, under a fixed-point rule, decides convergence (zero moves ⇒
+      // every later sweep is identical, matching the oracle's static
+      // unroll)
       val moved = mv.filter($"c" =!= $"a").count()
       movedTotal += moved
-      if (moved > 0) sweepsWithMoves += 1 else converged = true
+      if (moved > 0) sweepsWithMoves += 1 else converged = rule.stopsAtFixedPoint
       lbl = mv.select($"node", $"c".as("community"))
     }
     (lbl, movedTotal, sweepsWithMoves)
   }
 
-  /** Session-shared LPA labels (node, community) — consumed by the lv1
-    * sweep seed, the seeded-schedule seed, and the quality panel's lpa
-    * row: one LpIters run per (session, corpus), not one per consumer
-    * (r17 review: the panel's cold path otherwise ran LPA twice
-    * back-to-back — once for its own row, once inside lvSeedM's build).
+  /** Session-shared LPA labels (node, community) — read by
+    * [[grCommunities]], [[grCommunityStats]], [[grCommunityNames]],
+    * [[grModularity]], the lv1 and seeded-schedule sweep seeds, and the
+    * quality panel's lpa row: one LpIters run per (session, corpus), not
+    * one per consumer. Built with the default size-driven state join,
+    * which is the choice every Louvain consumer's |V| hint makes too.
     */
-  private def lpaM(s: SparkSession, dir: String, u: DataFrame,
-      bcast: Boolean): DataFrame =
-    MatStore.of(s, s"gr_lpa:$dir")(communities(u, stateBroadcast = bcast))
+  private def lpaM(s: SparkSession, dir: String, u: DataFrame): DataFrame =
+    MatStore.of(s, s"gr_lpa:$dir")(communities(u))
 
   /** Session-shared LEVEL-1 sweep result — the LPA-seeded constrained
     * sweep chain to convergence, consumed by BOTH [[grLouvain]] (which
@@ -1927,9 +1973,8 @@ object GraphOps {
       deg: DataFrame, bcast: Boolean, w2df: DataFrame): DataFrame = {
     import s.implicits._
     MatStore.of(s, s"gr_lv1:$dir") {
-      val lbl0 = lpaM(s, dir, u, bcast)
       val (lbl, moved, sweeps) =
-        louvainSweepLoop(u, deg, lbl0, w2df, bcast, LvSweeps)
+        louvainSweepLoop(u, deg, lpaM(s, dir, u), w2df, bcast, LvSweeps, DownOnly)
       lbl.select($"node", $"community",
         lit(moved).as("n_moved"), lit(sweeps).as("n_sweeps"))
     }
@@ -1998,22 +2043,13 @@ object GraphOps {
     s"""WITH $eNumSql, $undSql, $degSql,
        |${lpChain(LpIters)},
        |tw AS MATERIALIZED (SELECT CAST(SUM(weight) AS BIGINT) AS w2 FROM und),
-       |${lvChain(LvSweeps)},
-       |cin2 AS MATERIALIZED (SELECT a1.c AS community, CAST(SUM(u.weight) AS BIGINT) AS win
-       |  FROM und u
-       |  JOIN lv$LvSweeps a1 ON u.node = a1.node
-       |  JOIN lv$LvSweeps a2 ON u.nb = a2.node AND a2.c = a1.c
-       |  GROUP BY a1.c),
-       |ctot2 AS MATERIALIZED (SELECT m.c AS community, CAST(SUM(d.wdegree) AS BIGINT) AS wtot
-       |  FROM lv$LvSweeps m JOIN deg d USING (node) GROUP BY m.c),
-       |qc2 AS MATERIALIZED (SELECT t.community,
-       |    ${PS.prnd("COALESCE(i.win, 0) / CAST(w.w2 AS DOUBLE) - (t.wtot / CAST(w.w2 AS DOUBLE)) * (t.wtot / CAST(w.w2 AS DOUBLE))", 12)} AS q
-       |  FROM ctot2 t LEFT JOIN cin2 i ON i.community = t.community, tw w)
-       |SELECT CAST(COUNT(*) AS BIGINT) AS n_communities,
+       |${lvChain("l", DownOnly)},
+       |${qPanelSql("q", s"lv$LvSweeps", "c")}
+       |SELECT n_communities,
        |  CAST(${(1 to LvSweeps).map(i => s"(SELECT n_moved FROM lmvd$i)").mkString(" + ")} AS BIGINT) AS n_moved,
        |  CAST(${(1 to LvSweeps).map(i => s"(CASE WHEN (SELECT n_moved FROM lmvd$i) > 0 THEN 1 ELSE 0 END)").mkString(" + ")} AS BIGINT) AS n_sweeps,
-       |  ${PS.prnd(PS.dsum("q", 12), 8)} AS modularity
-       |FROM qc2""".stripMargin) { (s, dir) =>
+       |  modularity
+       |FROM qr""".stripMargin) { (s, dir) =>
     import s.implicits._
     val u = sharedUnd(s, dir)
     val deg = degrees(u).ckpt
@@ -2028,104 +2064,9 @@ object GraphOps {
     val meta = lv1.select($"n_moved", $"n_sweeps").limit(1).collect()
     val movedTotal = if (meta.isEmpty) 0L else meta(0).getLong(0)
     val sweepsWithMoves = if (meta.isEmpty) 0L else meta(0).getLong(1)
-    val cin2 = u
-      .join(stateJoin(lbl.select($"node".as("m1"), $"community".as("c1")), bcast), $"node" === $"m1")
-      .join(stateJoin(lbl.select($"node".as("m2"), $"community".as("c2")), bcast),
-        $"nb" === $"m2" && $"c2" === $"c1")
-      .groupBy($"c1".as("community")).agg(sum($"weight").as("win"))
-    val ctot2 = lbl.join(deg, "node")
-      .groupBy($"community").agg(sum($"wdegree").as("wtot"))
-    ctot2.join(cin2, Seq("community"), "left")
-      .crossJoin(broadcast(w2df))
-      .select(P.prnd(
-        coalesce($"win", lit(0L)) / $"w2".cast("double")
-          - ($"wtot" / $"w2".cast("double")) * ($"wtot" / $"w2".cast("double")), 12).as("q"))
-      .agg(P.cnt.as("n_communities"), P.prnd(P.dsum($"q", 12), 8).as("modularity"))
+    modularityOf(u, deg, lbl, w2df, bcast)
       .select($"n_communities", lit(movedTotal).as("n_moved"),
         lit(sweepsWithMoves).as("n_sweeps"), $"modularity")
-  }
-
-  /** SEEDED-SCHEDULE Louvain sweep variant (r15 verdict item 6) — the
-    * deterministic, engine-portable stand-in for the reference's seeded
-    * node-visit ORDER (`louvain_communities(seed=42)` visits nodes in a
-    * seeded random sequence, each move visible to later nodes in the
-    * same sweep — inherently serial). The distributed analogue from the
-    * parallel-Louvain literature is a seeded random SCHEDULE: per sweep
-    * t only the nodes whose md5("42:node:t") is even are ACTIVE and may
-    * take their argmax move (up OR down — no symmetry constraint
-    * needed, the inactive half breaks the synchronous oscillation the
-    * down-only rule exists to prevent); the rest hold. Fixed
-    * [[LvSweeps]] sweeps, NO early exit: a zero-move sweep is not a
-    * fixed point here (the next sweep activates a different half), and
-    * the oracle unrolls the identical schedule. Same exact-BIGINT gain
-    * and argmax row as [[louvainSweepLoop]].
-    */
-  private def louvainSeededSweeps(u: DataFrame, deg: DataFrame,
-      lbl0: DataFrame, w2df: DataFrame, bcast: Boolean, sweeps: Int): DataFrame = {
-    val s = u.sparkSession
-    import s.implicits._
-    var lbl = lbl0
-    for (i <- 1 to sweeps) {
-      val ctot = lbl.join(deg, "node")
-        .groupBy($"community").agg(sum($"wdegree").as("wtot"))
-      val cand = u
-        .filter($"node" =!= $"nb")
-        .join(stateJoin(lbl.select($"node".as("nb2"), $"community".as("c")), bcast), $"nb" === $"nb2")
-        .select($"node", $"c", $"weight".as("wnc"))
-        .union(lbl.select($"node", $"community".as("c"), lit(0L).as("wnc")))
-        .groupBy($"node", $"c").agg(sum($"wnc").as("wnc"))
-      val active = P.hexToLong(
-        md5(concat(lit("42:"), $"node".cast("string"), lit(s":$i"))), 1, 15) % 2 === 0
-      lbl = cand
-        .join(stateJoin(lbl.select($"node".as("n0"), $"community".as("a")), bcast), $"node" === $"n0")
-        .join(stateJoin(ctot.select($"community".as("c"), $"wtot"), bcast), "c")
-        .join(stateJoin(deg.select($"node".as("n1"), $"wdegree".as("dn")), bcast), $"node" === $"n1")
-        .crossJoin(broadcast(w2df))
-        .select($"node", $"a", $"c",
-          ($"w2" * $"wnc" - $"dn" *
-            ($"wtot" - when($"c" === $"a", $"dn").otherwise(lit(0L)))).as("score"))
-        .groupBy($"node", $"a")
-        .agg(min(struct((-$"score").as("ns"),
-          when($"c" === $"a", 0).otherwise(1).as("t"), $"c".as("l"))).as("m"))
-        .select($"node", when(active, $"m.l").otherwise($"a").as("community"))
-        .ckpt
-      // one action per sweep: materializes the checkpoint so six sweeps
-      // never stack into one deep lazy plan (the pagerank discipline)
-      lbl.count()
-    }
-    lbl
-  }
-
-  /** sdv0..sdvN CTE chain — the SQL twin of [[louvainSeededSweeps]]:
-    * [[lvChainOver]]'s recurrence with the argmax UNCLAMPED and the
-    * move gated on the seeded per-sweep schedule.
-    */
-  private def lvSeedChain(sweeps: Int): String = {
-    val base = s"sdv0 AS MATERIALIZED (SELECT node, lbl AS c FROM lp$LpIters)"
-    val steps = (1 to sweeps).map { i =>
-      val act = PS.hexToLong(s"md5('42:' || CAST(node AS VARCHAR) || ':$i')", 1, 15)
-      s"""sdct$i AS MATERIALIZED (SELECT l.c AS community, CAST(SUM(d.wdegree) AS BIGINT) AS wtot
-         |  FROM sdv${i - 1} l JOIN deg d USING (node) GROUP BY l.c),
-         |sdcd$i AS MATERIALIZED (SELECT node, c, CAST(SUM(wnc) AS BIGINT) AS wnc FROM (
-         |    SELECT u.node, lb.c, u.weight AS wnc
-         |    FROM und u JOIN sdv${i - 1} lb ON u.nb = lb.node WHERE u.node <> u.nb
-         |    UNION ALL SELECT node, c, 0 AS wnc FROM sdv${i - 1}) t
-         |  GROUP BY node, c),
-         |sdv$i AS MATERIALIZED (SELECT node,
-         |    CASE WHEN ($act) % 2 = 0 THEN c ELSE a END AS c FROM (
-         |    SELECT cd.node, la.c AS a, cd.c,
-         |      row_number() OVER (PARTITION BY cd.node ORDER BY
-         |        (w.w2 * cd.wnc - d.wdegree *
-         |          (ct.wtot - CASE WHEN cd.c = la.c THEN d.wdegree ELSE 0 END)) DESC,
-         |        CASE WHEN cd.c = la.c THEN 0 ELSE 1 END,
-         |        cd.c) AS rn
-         |    FROM sdcd$i cd
-         |    JOIN sdv${i - 1} la ON la.node = cd.node
-         |    JOIN sdct$i ct ON ct.community = cd.c
-         |    JOIN deg d ON d.node = cd.node, tw w) x
-         |  WHERE rn = 1)""".stripMargin
-    }
-    (base +: steps).mkString(",\n")
   }
 
   /** Partition agreement between the down-only sweep rule and the
@@ -2150,8 +2091,8 @@ object GraphOps {
     s"""WITH $eNumSql, $undSql, $degSql,
        |${lpChain(LpIters)},
        |tw AS MATERIALIZED (SELECT CAST(SUM(weight) AS BIGINT) AS w2 FROM und),
-       |${lvChain(LvSweeps)},
-       |${lvSeedChain(LvSweeps)},
+       |${lvChain("l", DownOnly)},
+       |${lvChain("sd", SeededSchedule)},
        |ctab AS MATERIALIZED (SELECT a.c AS c1, b.c AS c2, CAST(COUNT(*) AS BIGINT) AS nij
        |  FROM lv$LvSweeps a JOIN sdv$LvSweeps b USING (node) GROUP BY a.c, b.c),
        |tot AS MATERIALIZED (SELECT CAST(SUM(nij) AS BIGINT) AS n,
@@ -2244,7 +2185,7 @@ object GraphOps {
          |  FROM $prevUnd u JOIN $prevLbl a ON u.node = a.node JOIN $prevLbl b ON u.nb = b.node
          |  GROUP BY a.c, b.c),
          |deg$l AS MATERIALIZED (SELECT node, CAST(SUM(weight) AS BIGINT) AS wdegree FROM und$l GROUP BY node),
-         |${lvChainOver(s"m$l", s"und$l", s"deg$l", s"SELECT node, node AS c FROM deg$l", ms)}""".stripMargin
+         |${lvChainOver(s"m$l", s"und$l", s"deg$l", s"SELECT node, node AS c FROM deg$l", ms, DownOnly)}""".stripMargin
     }.mkString(",\n")
     val finJoins = (2 to MlCoarseLevels + 1).map { l =>
       val prev = if (l == 2) "l1.c" else s"x${l - 1}.c"
@@ -2268,23 +2209,14 @@ object GraphOps {
       s"""WITH $eNumSql, $undSql, $degSql,
          |${lpChain(LpIters)},
          |tw AS MATERIALIZED (SELECT CAST(SUM(weight) AS BIGINT) AS w2 FROM und),
-         |${lvChain(LvSweeps)},
+         |${lvChain("l", DownOnly)},
          |$mlChainSql,
-         |cinm AS MATERIALIZED (SELECT a1.community, CAST(SUM(u.weight) AS BIGINT) AS win
-         |  FROM und u
-         |  JOIN fin a1 ON u.node = a1.node
-         |  JOIN fin a2 ON u.nb = a2.node AND a2.community = a1.community
-         |  GROUP BY a1.community),
-         |ctotm AS MATERIALIZED (SELECT m.community, CAST(SUM(d.wdegree) AS BIGINT) AS wtot
-         |  FROM fin m JOIN deg d USING (node) GROUP BY m.community),
-         |qcm AS MATERIALIZED (SELECT t.community,
-         |    ${PS.prnd("COALESCE(i.win, 0) / CAST(w.w2 AS DOUBLE) - (t.wtot / CAST(w.w2 AS DOUBLE)) * (t.wtot / CAST(w.w2 AS DOUBLE))", 12)} AS q
-         |  FROM ctotm t LEFT JOIN cinm i ON i.community = t.community, tw w)
-         |SELECT CAST(COUNT(*) AS BIGINT) AS n_communities,
+         |${qPanelSql("q", "fin", "community")}
+         |SELECT n_communities,
          |  CAST($movedSum AS BIGINT) AS n_moved,
          |  CAST(1 + $levels AS BIGINT) AS n_levels,
-         |  ${PS.prnd(PS.dsum("q", 12), 8)} AS modularity
-         |FROM qcm""".stripMargin
+         |  modularity
+         |FROM qr""".stripMargin
     }) { (s, dir) =>
     import s.implicits._
     val u = sharedUnd(s, dir)
@@ -2332,7 +2264,7 @@ object GraphOps {
         // and sizes the level's state joins (coarse |V| = community count)
         val cb = stateHint(cdeg.count())
         val init = cdeg.select($"node", $"node".as("community"))
-        val (clbl, mvd, _) = louvainSweepLoop(cund, cdeg, init, w2df, cb, MlCoarseSweeps)
+        val (clbl, mvd, _) = louvainSweepLoop(cund, cdeg, init, w2df, cb, MlCoarseSweeps, DownOnly)
         coarseMoved += mvd
         // zero moves = a fixed point: the next contraction reproduces this
         // coarse graph, so every later level is a no-op (the oracle's
@@ -2352,17 +2284,16 @@ object GraphOps {
     }
   }
 
-  /** Session-shared seeded-schedule sweep labels (see
-    * [[louvainSeededSweeps]]) — consumed by [[grLouvainAgree]] and the
-    * partition-quality panel.
+  /** Session-shared seeded-schedule sweep labels: [[LvSweeps]] sweeps
+    * of [[louvainSweepLoop]] under [[SeededSchedule]] from the LPA
+    * labels — consumed by [[grLouvainAgree]] and the partition-quality
+    * panel.
     */
   private def lvSeedM(s: SparkSession, dir: String, u: DataFrame,
-      deg: DataFrame, bcast: Boolean, w2df: DataFrame): DataFrame = {
-    import s.implicits._
+      deg: DataFrame, bcast: Boolean, w2df: DataFrame): DataFrame =
     MatStore.of(s, s"gr_lvseed:$dir")(
-      louvainSeededSweeps(u, deg,
-        lpaM(s, dir, u, bcast), w2df, bcast, LvSweeps))
-  }
+      louvainSweepLoop(u, deg, lpaM(s, dir, u), w2df, bcast, LvSweeps,
+        SeededSchedule)._1)
 
   /** One-row modularity report (n_communities, modularity) of a label
     * relation (node, community) on the base graph — [[grModularity]]'s
@@ -2389,9 +2320,11 @@ object GraphOps {
       .agg(P.cnt.as("n_communities"), P.prnd(P.dsum($"q", 12), 8).as("modularity"))
   }
 
-  /** Partition-quality CTE block: modularity of the label CTE `lblCte`
-    * (label column `lblCol`) on the base graph, result in `<pfx>r` —
-    * the SQL twin of [[modularityOf]]. Requires und/deg/tw in scope.
+  /** Modularity CTE block: (n_communities, modularity) of the label CTE
+    * `lblCte` (label column `lblCol`) on the base graph, result in
+    * `<pfx>r` — the SQL twin of [[modularityOf]], read by every
+    * modularity report (LPA, both Louvain variants, the quality panel).
+    * Requires und/deg/tw in scope.
     */
   private def qPanelSql(pfx: String, lblCte: String, lblCol: String): String =
     s"""${pfx}ci AS MATERIALIZED (SELECT a.$lblCol AS community, CAST(SUM(u.weight) AS BIGINT) AS win
@@ -2431,8 +2364,8 @@ object GraphOps {
     s"""WITH $eNumSql, $undSql, $degSql,
        |${lpChain(LpIters)},
        |tw AS MATERIALIZED (SELECT CAST(SUM(weight) AS BIGINT) AS w2 FROM und),
-       |${lvChain(LvSweeps)},
-       |${lvSeedChain(LvSweeps)},
+       |${lvChain("l", DownOnly)},
+       |${lvChain("sd", SeededSchedule)},
        |$mlChainSql,
        |${qPanelSql("qlp", s"lp$LpIters", "lbl")},
        |${qPanelSql("qdn", s"lv$LvSweeps", "c")},
@@ -2452,7 +2385,7 @@ object GraphOps {
     def row(method: String, lbl: DataFrame): DataFrame =
       modularityOf(u, deg, lbl, w2df, bcast)
         .select(lit(method).as("method"), $"n_communities", $"modularity")
-    row("lpa", lpaM(s, dir, u, bcast)
+    row("lpa", lpaM(s, dir, u)
         .select($"node", $"community"))
       .union(row("louvain_down", lv1M(s, dir, u, deg, bcast, w2df)
         .select($"node", $"community")))
@@ -3103,80 +3036,6 @@ object GraphOps {
     */
   private val ProbeN = 40
 
-  /** Unrolled row-based BFS chain from the sources CTE `srcCte`
-    * (column `node`) over the induced probe edges `pu`, CTE names
-    * `<pfx>0..<pfx>R` with rows (src, node, d). The exact twin of
-    * [[clChain]]'s landmark chain, parameterized on the source set.
-    */
-  private def ceBfsChain(pfx: String, srcCte: String, rounds: Int): String = {
-    val base = s"${pfx}0 AS (SELECT node AS src, node, 0 AS d FROM $srcCte)"
-    val steps = (1 to rounds).map { i =>
-      s"""$pfx$i AS (SELECT x.src, x.node, MIN(x.d) AS d FROM (
-         |    SELECT src, node, d FROM $pfx${i - 1}
-         |    UNION ALL
-         |    SELECT p.src, u.node, p.d + 1 FROM pu u JOIN $pfx${i - 1} p ON u.nb = p.node) x
-         |  GROUP BY x.src, x.node)""".stripMargin
-    }
-    (base +: steps).mkString(",\n")
-  }
-
-  /** Unrolled row-based Brandes chain (forward σ + backward δ levels)
-    * from the sources CTE over `pu` — the exact twin of [[bwChain]],
-    * parameterized on the source set. Emits `<pfx>i` per node:
-    * Σ_src floor(δ·1e9 + 0.5) as BIGINT (src ≠ node), the exact
-    * integer the ranking and the error report both read.
-    */
-  private def ceBwChain(pfx: String, srcCte: String, rounds: Int): String = {
-    val base =
-      s"""${pfx}f0 AS (SELECT node AS src, node, 0 AS d, CAST(1 AS BIGINT) AS sig FROM $srcCte)""".stripMargin
-    val fwd = (1 to rounds).map { i =>
-      s"""${pfx}f${i}c AS (SELECT p.src, u.node, CAST(SUM(p.sig) AS BIGINT) AS sig
-         |  FROM pu u JOIN ${pfx}f${i - 1} p ON u.nb = p.node AND p.d = ${i - 1}
-         |  GROUP BY p.src, u.node),
-         |${pfx}f$i AS (SELECT src, node, d, sig FROM ${pfx}f${i - 1}
-         |  UNION ALL
-         |  SELECT c.src, c.node, $i AS d, c.sig FROM ${pfx}f${i}c c
-         |  WHERE NOT EXISTS (SELECT 1 FROM ${pfx}f${i - 1} p
-         |    WHERE p.node = c.node AND p.src = c.src))""".stripMargin
-    }
-    val dag =
-      s"""${pfx}dag AS (SELECT v.src, v.node AS v, v.d AS dv, v.sig AS sv,
-         |    w.node AS w, w.sig AS sw
-         |  FROM pu u
-         |  JOIN ${pfx}f$rounds v ON u.node = v.node
-         |  JOIN ${pfx}f$rounds w ON u.nb = w.node AND w.src = v.src AND w.d = v.d + 1)""".stripMargin
-    val bwdBase =
-      s"""${pfx}d$rounds AS (SELECT node, src, CAST(0.0 AS DOUBLE) AS delta
-         |  FROM ${pfx}f$rounds WHERE d = $rounds)""".stripMargin
-    val bwd = ((rounds - 1) to 0 by -1).map { r =>
-      s"""${pfx}d$r AS (SELECT g.v AS node, g.src,
-         |  ${PS.dsum(PS.prnd("(CAST(g.sv AS DOUBLE) / CAST(g.sw AS DOUBLE)) * (CAST(1.0 AS DOUBLE) + COALESCE(d2.delta, CAST(0.0 AS DOUBLE)))", 9), 9)} AS delta
-         |  FROM ${pfx}dag g LEFT JOIN ${pfx}d${r + 1} d2 ON g.w = d2.node AND g.src = d2.src
-         |  WHERE g.dv = $r
-         |  GROUP BY g.v, g.src)""".stripMargin
-    }
-    val unionDl = (0 to rounds).map(r => s"SELECT node, src, delta FROM ${pfx}d$r").mkString(" UNION ALL ")
-    val fin =
-      s"""${pfx}dl AS MATERIALIZED (SELECT node, src, CAST(floor(delta * 1e9 + 0.5) AS BIGINT) AS di
-         |  FROM ($unionDl) WHERE node <> src)""".stripMargin
-    ((base +: fwd) ++ Seq(dag, bwdBase) ++ bwd :+ fin).mkString(",\n")
-  }
-
-  /** Per-node Σ floor(δ·1e9) over a SUBSET of the probe sources — the
-    * per-src deltas are independent, so both the exact (all probe
-    * sources) and the landmark (pivot subset) accumulations read the
-    * ONE Brandes detail relation `dlCte` instead of re-running the
-    * whole forward+backward chain per source set.
-    */
-  private def ceBwAggSql(name: String, dlCte: String, srcCte: Option[String]): String = {
-    val filt = srcCte.map(c => s" JOIN $c l ON x.src = l.node").getOrElse("")
-    s"""$name AS (SELECT n.node,
-       |  CAST(COALESCE(SUM(x.di), 0) AS BIGINT) AS ib
-       |  FROM pn n LEFT JOIN (SELECT x.node, x.di FROM $dlCte x$filt) x
-       |    ON x.node = n.node
-       |  GROUP BY n.node)""".stripMargin
-  }
-
   /** Probe prelude CTEs shared by the error gate and the tuning panel:
     * pn (the ProbeN smallest ids), pnn, pu (induced undirected edges).
     * The production landmark seeds live in [[ceSeedSql]] (error gate
@@ -3189,127 +3048,16 @@ object GraphOps {
        |pu AS MATERIALIZED (SELECT u.node, u.nb, u.weight FROM und u
        |  JOIN pn a ON u.node = a.node JOIN pn b ON u.nb = b.node)""".stripMargin
 
-  /** The production landmark rule applied to the probe, at the
-    * closeness and betweenness K — appended by the error gate only (the
-    * tuning panel derives its own per-config seeds).
+  /** `plmk<K>`: the production landmark rule applied to the probe, at
+    * the closeness and betweenness K — appended by the error gate only.
     */
   private def ceSeedSql: String =
-    s"""plmkc AS MATERIALIZED (SELECT node FROM ${lmkSeedSql("pu", ClLandmarks)}),
-       |plmkb AS MATERIALIZED (SELECT node FROM ${lmkSeedSql("pu", BwLandmarks)})""".stripMargin
-
-  /** Capped-distance closeness total over a SUBSET of the probe BFS
-    * detail `<pfx><rounds>` (rows (src, node, d)): per node,
-    * baseExpr − Σ over reached (src, node) pairs of (rounds+1 − d).
-    * `srcCte = None` is the exact all-sources total; `Some(cte)`
-    * restricts to the landmark set — per-src BFS rows are independent,
-    * so the landmark side is a membership filter of the SAME detail,
-    * never a second chain.
-    */
-  private def ceClosTotSql(pfx: String, srcCte: Option[String],
-      baseExpr: String, rounds: Int): String = {
-    val filt = srcCte.map(c => s" JOIN $c l ON x.src = l.node").getOrElse("")
-    s"""SELECT n.node,
-       |    $baseExpr - CAST(COALESCE(SUM(${rounds + 1} - d.d), 0) AS BIGINT) AS tot
-       |  FROM pn n LEFT JOIN (SELECT x.node, x.d FROM $pfx$rounds x$filt) d
-       |    ON d.node = n.node
-       |  GROUP BY n.node""".stripMargin
-  }
-
-  /** Unrolled row-based WEIGHTED-distance chain from the sources CTE
-    * `srcCte` (column `node`) over the induced probe edges `pu`, CTE
-    * names `<pfx>0..<pfx>R` with rows (src, node, d) where d is the
-    * exact BIGINT sum of edge weights along the lightest ≤R-relaxation
-    * path — the probe twin of [[cwChain]]'s recurrence, parameterized
-    * on the source set (r18: the weighted fidelity gate).
-    */
-  private def ceWdChain(pfx: String, srcCte: String, rounds: Int): String = {
-    val base = s"${pfx}0 AS MATERIALIZED (SELECT node AS src, node, CAST(0 AS BIGINT) AS d FROM $srcCte)"
-    val steps = (1 to rounds).map { i =>
-      s"""$pfx$i AS MATERIALIZED (SELECT x.src, x.node, MIN(x.d) AS d FROM (
-         |    SELECT src, node, d FROM $pfx${i - 1}
-         |    UNION ALL
-         |    SELECT p.src, u.node, p.d + u.weight FROM pu u JOIN $pfx${i - 1} p ON u.nb = p.node) x
-         |  GROUP BY x.src, x.node)""".stripMargin
-    }
-    (base +: steps).mkString(",\n")
-  }
-
-  /** Capped WEIGHTED closeness total over a SUBSET of the probe
-    * weighted-distance detail `<pfx><rounds>` (rows (src, node, d)):
-    * per node, baseExpr − Σ over reached pairs with d < [[ClWCap]] of
-    * (ClWCap − d) — i.e. Σ_src min(d, cap) with unreached → cap,
-    * exactly [[closenessW]]'s `when(d.isNull || d > cap, cap)` rule.
-    * Same membership-filter design as [[ceClosTotSql]]: the landmark
-    * side reads the SAME detail, never a second chain.
-    */
-  private def ceWClosTotSql(pfx: String, srcCte: Option[String],
-      baseExpr: String, rounds: Int): String = {
-    val filt = srcCte.map(c => s" JOIN $c l ON x.src = l.node").getOrElse("")
-    s"""SELECT n.node,
-       |    $baseExpr - CAST(COALESCE(SUM(CASE WHEN d.d < $ClWCap THEN $ClWCap - d.d ELSE 0 END), 0) AS BIGINT) AS tot
-       |  FROM pn n LEFT JOIN (SELECT x.node, x.d FROM $pfx$rounds x$filt) d
-       |    ON d.node = n.node
-       |  GROUP BY n.node""".stripMargin
-  }
-
-  /** Unrolled row-based WEIGHTED Brandes chain from the sources CTE
-    * over `pu` — the probe twin of [[bwwChain]]'s three passes
-    * (weighted relax rounds, σ forward relaxations over the weighted
-    * DAG, δ backward relaxations), parameterized on the source set.
-    * Emits `<pfx>dl` rows (node, src, di = floor(δ·1e9 + 0.5) BIGINT,
-    * node ≠ src) — per-src deltas are independent, so the exact and
-    * landmark accumulations are src-membership filters of this ONE
-    * relation ([[ceBwAggSql]]), exactly like the unweighted gate.
-    */
-  private def ceBwwChain(pfx: String, srcCte: String, rounds: Int,
-      dagIters: Int): String = {
-    val wd = ceWdChain(s"${pfx}w", srcCte, rounds)
-    // DAG edge v→w for source s iff d(w) = d(v) + weight(v,w); positive
-    // weights mean no DAG edge enters the source, so the pinned
-    // σ(src)=1 base row never collides with an aggregated row
-    val dag =
-      s"""${pfx}dag AS MATERIALIZED (SELECT v.src, v.node AS v, w.node AS w
-         |  FROM pu u
-         |  JOIN ${pfx}w$rounds v ON u.node = v.node
-         |  JOIN ${pfx}w$rounds w ON u.nb = w.node AND w.src = v.src AND w.d = v.d + u.weight)""".stripMargin
-    val sigBase =
-      s"""${pfx}s0 AS MATERIALIZED (SELECT node AS src, node, CAST(1 AS BIGINT) AS sig FROM $srcCte)""".stripMargin
-    val sig = (1 to dagIters).map { t =>
-      s"""${pfx}s$t AS MATERIALIZED (
-         |  SELECT node AS src, node, CAST(1 AS BIGINT) AS sig FROM $srcCte
-         |  UNION ALL
-         |  SELECT g.src, g.w AS node, CAST(SUM(p.sig) AS BIGINT) AS sig
-         |  FROM ${pfx}dag g JOIN ${pfx}s${t - 1} p ON g.v = p.node AND g.src = p.src
-         |  GROUP BY g.src, g.w)""".stripMargin
-    }
-    val dagR =
-      s"""${pfx}dag2 AS MATERIALIZED (SELECT g.src, g.v, g.w,
-         |    CAST(sv.sig AS DOUBLE) / CAST(sw.sig AS DOUBLE) AS rt
-         |  FROM ${pfx}dag g
-         |  JOIN ${pfx}s$dagIters sv ON g.v = sv.node AND g.src = sv.src
-         |  JOIN ${pfx}s$dagIters sw ON g.w = sw.node AND g.src = sw.src)""".stripMargin
-    val dltBase =
-      s"""${pfx}d0 AS MATERIALIZED (SELECT n.node, l.node AS src, CAST(0.0 AS DOUBLE) AS delta
-         |  FROM pn n CROSS JOIN $srcCte l)""".stripMargin
-    val dlt = (1 to dagIters).map { t =>
-      s"""${pfx}d$t AS MATERIALIZED (SELECT n.node, l.node AS src, COALESCE(a.delta, CAST(0.0 AS DOUBLE)) AS delta
-         |  FROM pn n CROSS JOIN $srcCte l
-         |  LEFT JOIN (
-         |    SELECT g.v AS node, g.src,
-         |      ${PS.dsum(PS.prnd("g.rt * (CAST(1.0 AS DOUBLE) + d.delta)", 9), 9)} AS delta
-         |    FROM ${pfx}dag2 g JOIN ${pfx}d${t - 1} d ON g.w = d.node AND g.src = d.src
-         |    GROUP BY g.v, g.src) a ON a.node = n.node AND a.src = l.node)""".stripMargin
-    }
-    val fin =
-      s"""${pfx}dl AS MATERIALIZED (SELECT node, src, CAST(floor(delta * 1e9 + 0.5) AS BIGINT) AS di
-         |  FROM ${pfx}d$dagIters WHERE node <> src)""".stripMargin
-    ((wd +: Seq(dag, sigBase)) ++ sig ++ Seq(dagR, dltBase) ++ dlt :+ fin)
-      .mkString(",\n")
-  }
+    Seq(ClLandmarks, BwLandmarks).map(k =>
+      s"plmk$k AS MATERIALIZED (SELECT node FROM ${lmkSeedSql("pu", k)})").mkString(",\n")
 
   /** Probe slice (pn, pu) — MatStore-memoized so the error gate and the
     * tuning panel share ONE materialization of the slice (and of the
-    * BFS / Brandes details below) per session.
+    * distance / Brandes details below) per session.
     */
   private def probeRel(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import s.implicits._
@@ -3338,33 +3086,44 @@ object GraphOps {
       .orderBy($"dg".desc, $"node".asc).limit(k).select($"node")
   }
 
-  /** Row-based BFS detail (src, node, d) from ALL probe nodes over the
-    * induced probe edges, [[ClRounds]] rounds — the oracle chain's
-    * recurrence, memoized once per session (both the error gate's exact
-    * AND landmark closeness totals and every tuning-panel config read
-    * this one relation).
+  /** Row-based distance detail (src, node, d) from ALL probe nodes over
+    * the induced probe edges: `rounds` synchronous naive relaxations,
+    * each the (src, node) minimum over the previous distances ∪ every
+    * neighbor's distance plus one step. The hop step (+1, INT d,
+    * [[ClRounds]] rounds) is [[bfsChain]]'s recurrence; the weighted
+    * step (+weight, exact BIGINT d) is [[relaxChain]]'s, memoized per
+    * round count (closeness_w reads [[ClWRounds]], betweenness_w
+    * [[BwWRounds]]). Once per session, bounded by ProbeN² rows: the
+    * error gate's exact AND landmark totals and every tuning-panel
+    * config read the same detail.
     */
-  private def probeBfsDetail(s: SparkSession, dir: String): DataFrame =
-    MatStore.of(s, s"ce_probe_bfs:$dir") {
-      import s.implicits._
+  private def probeDists(s: SparkSession, dir: String, weighted: Boolean,
+      rounds: Int): DataFrame = {
+    import s.implicits._
+    val (key, zero, step) =
+      if (weighted) (s"ce_probe_wd$rounds:$dir", lit(0L), $"d" + $"weight")
+      else (s"ce_probe_bfs:$dir", lit(0), $"d" + 1)
+    MatStore.of(s, key) {
       val (pn, pu) = probeRel(s, dir)
-      var d = pn.select($"node".as("src"), $"node", lit(0).as("d")).ckpt
-      for (_ <- 1 to ClRounds) {
+      var d = pn.select($"node".as("src"), $"node", zero.as("d")).ckpt
+      for (_ <- 1 to rounds) {
         d = d.union(
             pu.join(d.select($"src", $"node".as("pn2"), $"d"), $"nb" === $"pn2")
-              .select($"src", $"node", ($"d" + 1).as("d")))
+              .select($"src", $"node", step.as("d")))
           .groupBy($"src", $"node").agg(min($"d").as("d"))
           .ckpt
       }
       d
     }
+  }
 
   /** Row-based Brandes detail (node, src, di = floor(δ·1e9 + 0.5)) from
-    * ALL probe nodes, [[BwRounds]] rounds — exact BIGINT per (src, node),
-    * memoized once per session; exact and landmark accumulations are
-    * src-membership filters of this one relation.
+    * ALL probe nodes, [[BwRounds]] rounds — [[brandesChain]]'s
+    * recurrence, exact BIGINT per (src, node), memoized once per
+    * session; exact and landmark accumulations are src-membership
+    * filters of this one relation.
     */
-  private def probeBrandesDetail(s: SparkSession, dir: String): DataFrame =
+  private[graft] def probeBrandesDetail(s: SparkSession, dir: String): DataFrame =
     MatStore.of(s, s"ce_probe_brandes:$dir") {
       import s.implicits._
       val (pn, pu) = probeRel(s, dir)
@@ -3405,39 +3164,18 @@ object GraphOps {
           floor($"delta" * 1e9 + 0.5).cast("long").as("di"))
     }
 
-  /** Row-based WEIGHTED-distance detail (src, node, d) from ALL probe
-    * nodes over the induced weighted probe edges, `rounds` synchronous
-    * Bellman-Ford relaxations — [[ceWdChain]]'s recurrence, memoized
-    * per round count (closeness_w reads [[ClWRounds]], betweenness_w
-    * [[BwWRounds]]). Exact BIGINT distances; bounded by ProbeN² rows.
-    */
-  private def probeWdDetail(s: SparkSession, dir: String, rounds: Int): DataFrame =
-    MatStore.of(s, s"ce_probe_wd$rounds:$dir") {
-      import s.implicits._
-      val (pn, pu) = probeRel(s, dir)
-      var d = pn.select($"node".as("src"), $"node", lit(0L).as("d")).ckpt
-      for (_ <- 1 to rounds) {
-        d = d.union(
-            pu.join(d.select($"src", $"node".as("pn2"), $"d"), $"nb" === $"pn2")
-              .select($"src", $"node", ($"d" + $"weight").as("d")))
-          .groupBy($"src", $"node").agg(min($"d").as("d"))
-          .ckpt
-      }
-      d
-    }
-
   /** Row-based WEIGHTED Brandes detail (node, src, di = floor(δ·1e9+0.5))
-    * from ALL probe nodes — [[ceBwwChain]]'s three passes ([[BwWRounds]]
-    * weighted relax rounds, [[BwWDagIters]] σ forward and δ backward
-    * relaxations over the weighted shortest-path DAG), memoized once per
-    * session; exact and landmark accumulations are src-membership
-    * filters of this one relation ([[ceBwAgg]]).
+    * from ALL probe nodes — [[brandesWChain]]'s three passes
+    * ([[BwWRounds]] weighted relax rounds, [[BwWDagIters]] σ forward and
+    * δ backward relaxations over the weighted shortest-path DAG),
+    * memoized once per session; exact and landmark accumulations are
+    * src-membership filters of this one relation ([[ceTot]]).
     */
   private[graft] def probeBrandesWDetail(s: SparkSession, dir: String): DataFrame =
     MatStore.of(s, s"ce_probe_brandes_w:$dir") {
       import s.implicits._
       val (pn, pu) = probeRel(s, dir)
-      val dW = probeWdDetail(s, dir, BwWRounds)
+      val dW = probeDists(s, dir, weighted = true, BwWRounds)
       val sv = dW.select($"src", $"node".as("v"), $"d".as("dv"))
       val sw = dW.select($"src".as("src2"), $"node".as("w"), $"d".as("dw"))
       val dag = pu.join(sv, $"node" === $"v")
@@ -3478,53 +3216,105 @@ object GraphOps {
           floor($"delta" * 1e9 + 0.5).cast("long").as("di"))
     }
 
-  /** [[ceWClosTotSql]]'s Spark twin over the memoized weighted detail:
-    * per node, base − Σ over reached pairs with d < cap of (cap − d).
+  /** One row of the landmark error gate: a metric read off its
+    * all-sources probe detail — the SQL CTE `det` and its Spark twin
+    * `detail`. Closeness metrics carry `miss`, the capped distance an
+    * unreached (or too-far) pair contributes; betweenness metrics
+    * (`miss = None`) sum the detail's δ nanounits. `k` is the production
+    * landmark count.
     */
-  private def ceWClosTot(pn: DataFrame, d: DataFrame, srcs: Option[DataFrame],
-      base: Long): DataFrame = {
-    val s = pn.sparkSession
-    import s.implicits._
-    val det = srcs.map(l =>
-        d.join(broadcast(l.select($"node".as("lsrc"))), $"src" === $"lsrc"))
-      .getOrElse(d)
-    pn.join(det.select($"node", $"d"), Seq("node"), "left")
-      .groupBy($"node")
-      .agg((lit(base) - coalesce(
-        sum(when($"d" < ClWCap, lit(ClWCap) - $"d").otherwise(0L)),
-        lit(0L)).cast("long")).as("tot"))
+  private case class CeMetric(metric: String, det: String,
+      detail: (SparkSession, String) => DataFrame, miss: Option[Long], k: Int)
+
+  private val ceMetrics = Seq(
+    CeMetric("closeness", s"cex$ClRounds",
+      (s, dir) => probeDists(s, dir, weighted = false, ClRounds),
+      Some(ClRounds + 1L), ClLandmarks),
+    CeMetric("betweenness", "bexdl", probeBrandesDetail, None, BwLandmarks),
+    CeMetric("closeness_w", s"cwx$ClWRounds",
+      (s, dir) => probeDists(s, dir, weighted = true, ClWRounds),
+      Some(ClWCap), ClLandmarks),
+    CeMetric("betweenness_w", "bwxdl", probeBrandesWDetail, None, BwLandmarks))
+
+  /** `name`: per probe node, the metric's total over the rows of the
+    * detail `det` whose source is in `srcCte` (all probe sources when
+    * None; `n` is that source count). Closeness: Σ_src min(d, miss)
+    * with unreached → miss, spelled n·miss − Σ over reached pairs of
+    * (miss − d)⁺ — exactly [[closeness]]'s rounds+1 and [[closenessW]]'s
+    * cap rule. Betweenness: Σ_src di. Per-src rows are independent, so
+    * a landmark total is a membership filter of the SAME detail, never
+    * a second chain.
+    */
+  private def ceTotSql(name: String, det: String, srcCte: Option[String],
+      miss: Option[Long], n: String): String = {
+    val filt = srcCte.map(c => s" JOIN $c l ON x.src = l.node").getOrElse("")
+    val tot = miss match {
+      case Some(m) =>
+        s"$n * $m - CAST(COALESCE(SUM(CASE WHEN d.d < $m THEN $m - d.d ELSE 0 END), 0) AS BIGINT)"
+      case None => "CAST(COALESCE(SUM(d.di), 0) AS BIGINT)"
+    }
+    s"""$name AS MATERIALIZED (SELECT n.node, $tot AS tot
+       |  FROM pn n LEFT JOIN (SELECT x.* FROM $det x$filt) d ON d.node = n.node
+       |  GROUP BY n.node)""".stripMargin
   }
 
-  /** [[ceClosTotSql]]'s Spark twin over the memoized BFS detail. */
-  private def ceClosTot(pn: DataFrame, d: DataFrame, srcs: Option[DataFrame],
-      base: Long, rounds: Int): DataFrame = {
+  /** [[ceTotSql]]'s Spark twin over a memoized detail. */
+  private def ceTot(pn: DataFrame, det: DataFrame, srcs: Option[DataFrame],
+      miss: Option[Long], n: Long): DataFrame = {
     val s = pn.sparkSession
     import s.implicits._
-    val det = srcs.map(l =>
-        d.join(broadcast(l.select($"node".as("lsrc"))), $"src" === $"lsrc"))
-      .getOrElse(d)
-    pn.join(det.select($"node", $"d"), Seq("node"), "left")
-      .groupBy($"node")
-      .agg((lit(base) -
-        coalesce(sum(lit(rounds + 1) - $"d"), lit(0L)).cast("long")).as("tot"))
+    val kept = srcs.map(l =>
+        det.join(broadcast(l.select($"node".as("lsrc"))), $"src" === $"lsrc"))
+      .getOrElse(det)
+    val tot = miss match {
+      case Some(m) => lit(n * m) -
+        coalesce(sum(when($"d" < m, lit(m) - $"d").otherwise(0L)), lit(0L)).cast("long")
+      case None => coalesce(sum($"di"), lit(0L)).cast("long")
+    }
+    pn.join(kept.drop("src", "lsrc"), Seq("node"), "left")
+      .groupBy($"node").agg(tot.as("tot"))
   }
 
-  /** [[ceBwAggSql]]'s Spark twin over the memoized Brandes detail. */
-  private def ceBwAgg(pn: DataFrame, dl: DataFrame,
-      srcs: Option[DataFrame]): DataFrame = {
-    val s = pn.sparkSession
+  /** `name`: exact (`exact`, all probe sources) vs landmark (`approx`,
+    * `k` sources) ranks of one metric — integer rank keys (closeness
+    * total ASC, betweenness total DESC, node id ties) — plus the
+    * comparable per-source-averaged values `ve`/`va` the report reads.
+    */
+  private def ceRankSql(name: String, exact: String, approx: String,
+      miss: Option[Long], k: Int): String = {
+    val ord = if (miss.isDefined) "ASC" else "DESC"
+    def value(tot: String, n: String) =
+      if (miss.isDefined) s"CAST($n AS DOUBLE) / CAST($tot AS DOUBLE)"
+      else s"CAST($tot AS DOUBLE) / 1e9 / CAST($n AS DOUBLE)"
+    s"""$name AS MATERIALIZED (SELECT e.node,
+       |    ROW_NUMBER() OVER (ORDER BY e.tot $ord, e.node ASC) AS re,
+       |    ROW_NUMBER() OVER (ORDER BY l.tot $ord, l.node ASC) AS ra,
+       |    ${value("e.tot", "(SELECT np FROM pnn)")} AS ve,
+       |    ${value("l.tot", k.toString)} AS va
+       |  FROM $exact e JOIN $approx l ON e.node = l.node)""".stripMargin
+  }
+
+  /** [[ceRankSql]]'s Spark twin over two [[ceTot]] relations. */
+  private def ceRank(exact: DataFrame, approx: DataFrame, miss: Option[Long],
+      np: Long, k: Int): DataFrame = {
+    val s = exact.sparkSession
     import s.implicits._
-    val det = srcs.map(l =>
-        dl.join(broadcast(l.select($"node".as("lsrc"))), $"src" === $"lsrc"))
-      .getOrElse(dl)
-    pn.join(det.select($"node", $"di"), Seq("node"), "left")
-      .groupBy($"node")
-      .agg(coalesce(sum($"di"), lit(0L)).cast("long").as("ib"))
+    import org.apache.spark.sql.expressions.Window
+    def key(c: Column) = if (miss.isDefined) c.asc else c.desc
+    def value(tot: Column, n: Long) =
+      if (miss.isDefined) lit(n).cast("double") / tot.cast("double")
+      else tot.cast("double") / 1e9 / lit(n).cast("double")
+    exact.select($"node", $"tot".as("tot_e"))
+      .join(approx.select($"node".as("node2"), $"tot".as("tot_l")), $"node" === $"node2")
+      .select($"node",
+        row_number().over(Window.orderBy(key($"tot_e"), $"node".asc)).as("re"),
+        row_number().over(Window.orderBy(key($"tot_l"), $"node2".asc)).as("ra"),
+        value($"tot_e", np).as("ve"), value($"tot_l", k).as("va"))
   }
 
   /** One metric's report SELECT over a rank relation (re, ra, ve, va) —
-    * shared by both metrics so the rounding/overlap rules cannot
-    * desynchronize between them (the Scala side factors the same way).
+    * shared by every gate metric and every tuning-panel config so the
+    * rounding/overlap rules cannot desynchronize between them.
     */
   private def ceReportSql(metric: String, rel: String): String =
     s"""SELECT '$metric' AS metric, * FROM (
@@ -3534,6 +3324,27 @@ object GraphOps {
        |      ${PS.prnd(PS.dsum(PS.prnd("abs(va - ve)", 9), 9) + " / COUNT(*)", 6)} AS mean_abs_err,
        |      ${PS.prnd("MAX(" + PS.prnd("abs(va - ve)", 9) + ")", 6)} AS max_abs_err
        |    FROM $rel)""".stripMargin
+
+  /** [[ceReportSql]]'s Spark twin. */
+  private def ceReport(metric: String, ranked: DataFrame): DataFrame = {
+    val s = ranked.sparkSession
+    import s.implicits._
+    val n = $"n".cast("double")
+    ranked
+      .agg(P.cnt.as("n_probe"),
+        sum(($"re" - $"ra") * ($"re" - $"ra")).as("sd2"),
+        sum(when($"re" <= 10 && $"ra" <= 10, 1).otherwise(0)).as("ov"),
+        P.dsum(P.prnd(abs($"va" - $"ve"), 9), 9).as("sae"),
+        max(P.prnd(abs($"va" - $"ve"), 9)).as("mxe"),
+        P.cnt.as("n"))
+      .select(lit(metric).as("metric"), $"n_probe",
+        P.prnd(when($"n" > 1,
+          lit(1.0) - (lit(6.0) * $"sd2".cast("double")) / (n * (n * n - 1.0)))
+          .otherwise(lit(null).cast("double")), 6).as("spearman"),
+        ($"ov".cast("double") / 10.0).as("top10_overlap"),
+        P.prnd($"sae" / $"n_probe", 6).as("mean_abs_err"),
+        P.prnd($"mxe", 6).as("max_abs_err"))
+  }
 
   /** Landmark-centrality ERROR gate (r15 verdict item 3) — the graph
     * family's `dd_recall`/`sim_recall` twin: the landmark estimators
@@ -3550,8 +3361,8 @@ object GraphOps {
     *    as production so the measured gap isolates the LANDMARK
     *    sampling error (K sources vs all |P| sources), not the depth
     *    bound;
-    *  - APPROX: the production landmark rule (K smallest ids) applied
-    *    to the same subgraph;
+    *  - APPROX: the production landmark rule (K highest-degree nodes)
+    *    applied to the same subgraph;
     *  - report: Spearman rank correlation (ranks by exact integer
     *    keys — total capped distance ASC / Σ floor(δ·1e9) DESC, node
     *    id ties — so the correlation is exact integer arithmetic until
@@ -3561,12 +3372,13 @@ object GraphOps {
     * r18 adds the WEIGHTED rows (`closeness_w`, `betweenness_w`) — the
     * reference's `distance='weight'` semantics
     * (network_analysis.py:145-155), the last unmeasured estimators in
-    * the family: exact is all probe sources through [[probeWdDetail]] /
-    * [[probeBrandesWDetail]] (the production Bellman-Ford round caps
-    * and σ/δ DAG iteration bounds, so the gap isolates the K-source
-    * sampling error exactly as the unweighted rows do), landmark is the
-    * production max-degree K=[[ClLandmarks]]/[[BwLandmarks]] rule as a
-    * src-membership filter of the SAME weighted details.
+    * the family: exact is all probe sources through the weighted
+    * [[probeDists]] / [[probeBrandesWDetail]] (the production
+    * Bellman-Ford round caps and σ/δ DAG iteration bounds, so the gap
+    * isolates the K-source sampling error exactly as the unweighted rows
+    * do), landmark is the production max-degree
+    * K=[[ClLandmarks]]/[[BwLandmarks]] rule as a src-membership filter
+    * of the SAME weighted details.
     *
     * Scale shape: every relation after the probe slice is bounded by
     * the CONSTANT ProbeN (≤ ProbeN² BFS pairs), so the gate costs the
@@ -3575,135 +3387,42 @@ object GraphOps {
     * edge relation once with two broadcast semi-joins.
     */
   val grCentralityErr = QueryDef(
-    "gr_centrality_err",
-    s"""WITH $eNumSql, $undSql,
-       |$ceProbeSql,
-       |$ceSeedSql,
-       |${ceBfsChain("cex", "pn", ClRounds)},
-       |cet AS MATERIALIZED (${ceClosTotSql("cex", None, s"(SELECT np FROM pnn) * ${ClRounds + 1}", ClRounds)}),
-       |clt AS MATERIALIZED (${ceClosTotSql("cex", Some("plmkc"), s"${ClLandmarks * (ClRounds + 1)}", ClRounds)}),
-       |${ceBwChain("bex", "pn", BwRounds)},
-       |${ceBwAggSql("bibe", "bexdl", None)},
-       |${ceBwAggSql("bibl", "bexdl", Some("plmkb"))},
-       |${ceWdChain("cwx", "pn", ClWRounds)},
-       |cwt AS MATERIALIZED (${ceWClosTotSql("cwx", None, s"(SELECT np FROM pnn) * $ClWCap", ClWRounds)}),
-       |cwl AS MATERIALIZED (${ceWClosTotSql("cwx", Some("plmkc"), s"${ClLandmarks * ClWCap}", ClWRounds)}),
-       |${ceBwwChain("bwx", "pn", BwWRounds, BwWDagIters)},
-       |${ceBwAggSql("bwbe", "bwxdl", None)},
-       |${ceBwAggSql("bwbl", "bwxdl", Some("plmkb"))},
-       |crank AS MATERIALIZED (SELECT e.node,
-       |    ROW_NUMBER() OVER (ORDER BY e.tot ASC, e.node ASC) AS re,
-       |    ROW_NUMBER() OVER (ORDER BY l.tot ASC, l.node ASC) AS ra,
-       |    CAST((SELECT np FROM pnn) AS DOUBLE) / CAST(e.tot AS DOUBLE) AS ve,
-       |    CAST($ClLandmarks AS DOUBLE) / CAST(l.tot AS DOUBLE) AS va
-       |  FROM cet e JOIN clt l ON e.node = l.node),
-       |brank AS MATERIALIZED (SELECT e.node,
-       |    ROW_NUMBER() OVER (ORDER BY e.ib DESC, e.node ASC) AS re,
-       |    ROW_NUMBER() OVER (ORDER BY l.ib DESC, l.node ASC) AS ra,
-       |    CAST(e.ib AS DOUBLE) / 1e9 / CAST((SELECT np FROM pnn) AS DOUBLE) AS ve,
-       |    CAST(l.ib AS DOUBLE) / 1e9 / CAST($BwLandmarks AS DOUBLE) AS va
-       |  FROM bibe e JOIN bibl l ON e.node = l.node),
-       |cwrank AS MATERIALIZED (SELECT e.node,
-       |    ROW_NUMBER() OVER (ORDER BY e.tot ASC, e.node ASC) AS re,
-       |    ROW_NUMBER() OVER (ORDER BY l.tot ASC, l.node ASC) AS ra,
-       |    CAST((SELECT np FROM pnn) AS DOUBLE) / CAST(e.tot AS DOUBLE) AS ve,
-       |    CAST($ClLandmarks AS DOUBLE) / CAST(l.tot AS DOUBLE) AS va
-       |  FROM cwt e JOIN cwl l ON e.node = l.node),
-       |bwrank AS MATERIALIZED (SELECT e.node,
-       |    ROW_NUMBER() OVER (ORDER BY e.ib DESC, e.node ASC) AS re,
-       |    ROW_NUMBER() OVER (ORDER BY l.ib DESC, l.node ASC) AS ra,
-       |    CAST(e.ib AS DOUBLE) / 1e9 / CAST((SELECT np FROM pnn) AS DOUBLE) AS ve,
-       |    CAST(l.ib AS DOUBLE) / 1e9 / CAST($BwLandmarks AS DOUBLE) AS va
-       |  FROM bwbe e JOIN bwbl l ON e.node = l.node),
-       |rep AS MATERIALIZED (
-       |  ${ceReportSql("closeness", "crank")}
-       |  UNION ALL
-       |  ${ceReportSql("betweenness", "brank")}
-       |  UNION ALL
-       |  ${ceReportSql("closeness_w", "cwrank")}
-       |  UNION ALL
-       |  ${ceReportSql("betweenness_w", "bwrank")})
-       |SELECT metric, n_probe, spearman, top10_overlap, mean_abs_err, max_abs_err
-       |FROM rep ORDER BY metric""".stripMargin) { (s, dir) =>
+    "gr_centrality_err", {
+      val perMetric = ceMetrics.map { m =>
+        val p = m.metric
+        Seq(ceTotSql(s"${p}_e", m.det, None, m.miss, "(SELECT np FROM pnn)"),
+          ceTotSql(s"${p}_l", m.det, Some(s"plmk${m.k}"), m.miss, m.k.toString),
+          ceRankSql(s"${p}_r", s"${p}_e", s"${p}_l", m.miss, m.k)).mkString(",\n")
+      }
+      // each Brandes chain's final CTE: δ as the detail's BIGINT nanounits
+      val nanos = Seq("bex", "bwx").map(p =>
+        s"${p}dl AS MATERIALIZED (SELECT node, src, CAST(floor(delta * 1e9 + 0.5) AS BIGINT) AS di FROM ${p}dx)")
+      s"""WITH $eNumSql, $undSql,
+         |$ceProbeSql,
+         |$ceSeedSql,
+         |${bfsChain("cex", "pu", "pn", ClRounds)},
+         |${relaxChain("cwx", "pu", "pn", ClWRounds)},
+         |${brandesChain("bex", "pu", "pn", BwRounds)},
+         |${brandesWChain("bwx", "pu", "pn", "pn", BwWRounds, BwWDagIters)},
+         |${nanos.mkString(",\n")},
+         |${perMetric.mkString(",\n")},
+         |rep AS MATERIALIZED (
+         |  ${ceMetrics.map(m => ceReportSql(m.metric, s"${m.metric}_r")).mkString("\n  UNION ALL\n  ")})
+         |SELECT metric, n_probe, spearman, top10_overlap, mean_abs_err, max_abs_err
+         |FROM rep ORDER BY metric""".stripMargin
+    }) { (s, dir) =>
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val (pn, pu) = probeRel(s, dir)
     val np = pn.count() // bounded by the constant ProbeN
-    val lmkC = probeLmk(pu, ClLandmarks)
-    val lmkB = probeLmk(pu, BwLandmarks)
-    // per metric: exact/approx integer rank keys + comparable values
-    def report(metric: String, ranked: DataFrame): DataFrame = {
-      val n = $"n".cast("double")
-      ranked
-        .agg(P.cnt.as("n_probe"),
-          sum(($"re" - $"ra") * ($"re" - $"ra")).as("sd2"),
-          sum(when($"re" <= 10 && $"ra" <= 10, 1).otherwise(0)).as("ov"),
-          P.dsum(P.prnd(abs($"va" - $"ve"), 9), 9).as("sae"),
-          max(P.prnd(abs($"va" - $"ve"), 9)).as("mxe"),
-          P.cnt.as("n"))
-        .select(lit(metric).as("metric"), $"n_probe",
-          P.prnd(when($"n" > 1,
-            lit(1.0) - (lit(6.0) * $"sd2".cast("double")) / (n * (n * n - 1.0)))
-            .otherwise(lit(null).cast("double")), 6).as("spearman"),
-          ($"ov".cast("double") / 10.0).as("top10_overlap"),
-          P.prnd($"sae" / $"n_probe", 6).as("mean_abs_err"),
-          P.prnd($"mxe", 6).as("max_abs_err"))
-    }
-    // ONE all-sources BFS + ONE all-sources Brandes; the landmark sides
-    // are src-membership filters of the same details (per-src rows are
-    // independent), so the gate costs half what the two-chain version did
-    val d = probeBfsDetail(s, dir)
-    val ce = ceClosTot(pn, d, None, np * (ClRounds + 1), ClRounds)
-      .select($"node", $"tot".as("tot_e"))
-    val cl = ceClosTot(pn, d, Some(lmkC),
-        ClLandmarks.toLong * (ClRounds + 1), ClRounds)
-      .select($"node".as("node2"), $"tot".as("tot_l"))
-    val crank = ce.join(cl, $"node" === $"node2")
-      .select($"node",
-        row_number().over(Window.orderBy($"tot_e".asc, $"node".asc)).as("re"),
-        row_number().over(Window.orderBy($"tot_l".asc, $"node2".asc)).as("ra"),
-        (lit(np).cast("double") / $"tot_e".cast("double")).as("ve"),
-        (lit(ClLandmarks).cast("double") / $"tot_l".cast("double")).as("va"))
-      .ckpt
-    val dl = probeBrandesDetail(s, dir)
-    val be = ceBwAgg(pn, dl, None).select($"node", $"ib".as("ib_e"))
-    val bl = ceBwAgg(pn, dl, Some(lmkB)).select($"node".as("node2"), $"ib".as("ib_l"))
-    val brank = be.join(bl, $"node" === $"node2")
-      .select($"node",
-        row_number().over(Window.orderBy($"ib_e".desc, $"node".asc)).as("re"),
-        row_number().over(Window.orderBy($"ib_l".desc, $"node2".asc)).as("ra"),
-        ($"ib_e".cast("double") / 1e9 / lit(np).cast("double")).as("ve"),
-        ($"ib_l".cast("double") / 1e9 / lit(BwLandmarks).cast("double")).as("va"))
-      .ckpt
-    // r18: the WEIGHTED legs (the reference's distance='weight'
-    // semantics) — same one-detail/membership-filter design; exact is
-    // all probe sources through the production round caps, landmark is
-    // the production max-degree K rule on the same detail
-    val dw = probeWdDetail(s, dir, ClWRounds)
-    val cwe = ceWClosTot(pn, dw, None, np * ClWCap)
-      .select($"node", $"tot".as("tot_e"))
-    val cwl = ceWClosTot(pn, dw, Some(lmkC), ClLandmarks.toLong * ClWCap)
-      .select($"node".as("node2"), $"tot".as("tot_l"))
-    val cwrank = cwe.join(cwl, $"node" === $"node2")
-      .select($"node",
-        row_number().over(Window.orderBy($"tot_e".asc, $"node".asc)).as("re"),
-        row_number().over(Window.orderBy($"tot_l".asc, $"node2".asc)).as("ra"),
-        (lit(np).cast("double") / $"tot_e".cast("double")).as("ve"),
-        (lit(ClLandmarks).cast("double") / $"tot_l".cast("double")).as("va"))
-      .ckpt
-    val dlw = probeBrandesWDetail(s, dir)
-    val bwe = ceBwAgg(pn, dlw, None).select($"node", $"ib".as("ib_e"))
-    val bwl = ceBwAgg(pn, dlw, Some(lmkB)).select($"node".as("node2"), $"ib".as("ib_l"))
-    val bwrank = bwe.join(bwl, $"node" === $"node2")
-      .select($"node",
-        row_number().over(Window.orderBy($"ib_e".desc, $"node".asc)).as("re"),
-        row_number().over(Window.orderBy($"ib_l".desc, $"node2".asc)).as("ra"),
-        ($"ib_e".cast("double") / 1e9 / lit(np).cast("double")).as("ve"),
-        ($"ib_l".cast("double") / 1e9 / lit(BwLandmarks).cast("double")).as("va"))
-      .ckpt
-    report("closeness", crank).union(report("betweenness", brank))
-      .union(report("closeness_w", cwrank)).union(report("betweenness_w", bwrank))
-      .orderBy($"metric")
+    // ONE all-sources detail per metric; the landmark side is a
+    // src-membership filter of the same detail (per-src rows are
+    // independent), so no metric runs a second chain
+    ceMetrics.map { m =>
+      val det = m.detail(s, dir)
+      val ranked = ceRank(ceTot(pn, det, None, m.miss, np),
+        ceTot(pn, det, Some(probeLmk(pu, m.k)), m.miss, m.k), m.miss, np, m.k)
+      ceReport(m.metric, ranked.ckpt)
+    }.reduce(_ union _).orderBy($"metric")
   }
 
   /** Landmark-seed tuning curve (r16 verdict item 1, the `dd_lsh_tuning`
@@ -3724,10 +3443,12 @@ object GraphOps {
     * semantics. Every config reads the ONE memoized all-sources detail
     * of its metric (a landmark total is a src-membership filter), so
     * the 24-config panel costs one bounded ProbeN² BFS + one weighted
-    * Bellman-Ford detail plus 24 constant-size aggregations.
+    * Bellman-Ford detail plus 24 constant-size aggregations, each
+    * ranked and reported by the error gate's own definitions.
     */
   private val TuneKs = Seq(4, 8, 16, 24)
   private val TuneStrategies = Seq("max_degree", "max_wdegree", "smallest_id")
+  private def tuneMetrics = ceMetrics.filter(_.miss.isDefined)
 
   /** Top-K probe nodes by summed edge weight (weight DESC, node ASC) —
     * the distance-weighted pivot candidate of the tuning panel.
@@ -3745,87 +3466,50 @@ object GraphOps {
 
   val grCentralityTuning = QueryDef(
     "gr_centrality_tuning", {
-      val cfgs = for {
-        m <- Seq("closeness", "closeness_w"); st <- TuneStrategies; k <- TuneKs
-      } yield (m, st, k)
+      val cfgs = for (m <- tuneMetrics; st <- TuneStrategies; k <- TuneKs) yield (m, st, k)
       def seedSql(st: String, k: Int) = st match {
         case "smallest_id" => s"(SELECT node FROM pn ORDER BY node LIMIT $k)"
         case "max_degree"  => lmkSeedSql("pu", k)
         case "max_wdegree" => lmkSeedWSql("pu", k)
       }
+      val exact = tuneMetrics.map(m =>
+        ceTotSql(s"${m.metric}_e", m.det, None, m.miss, "(SELECT np FROM pnn)"))
       val cfgCtes = cfgs.map { case (m, st, k) =>
-        val a = s"tl_${m}_${st}_$k"
-        val tot = m match {
-          case "closeness" =>
-            ceClosTotSql("cex", Some(s"${a}s"), s"${k * (ClRounds + 1)}", ClRounds)
-          case "closeness_w" =>
-            ceWClosTotSql("cwx", Some(s"${a}s"), s"${k * ClWCap}", ClWRounds)
-        }
-        val exact = if (m == "closeness") "cet" else "cwt"
+        val a = s"tl_${m.metric}_${st}_$k"
         s"""${a}s AS MATERIALIZED (SELECT node FROM ${seedSql(st, k)}),
-           |${a}t AS MATERIALIZED ($tot),
-           |${a}r AS MATERIALIZED (SELECT e.node,
-           |    ROW_NUMBER() OVER (ORDER BY e.tot ASC, e.node ASC) AS re,
-           |    ROW_NUMBER() OVER (ORDER BY l.tot ASC, l.node ASC) AS ra
-           |  FROM $exact e JOIN ${a}t l ON e.node = l.node)""".stripMargin
-      }.mkString(",\n")
+           |${ceTotSql(s"${a}t", m.det, Some(s"${a}s"), m.miss, k.toString)},
+           |${ceRankSql(s"${a}r", s"${m.metric}_e", s"${a}t", m.miss, k)}""".stripMargin
+      }
       val reports = cfgs.map { case (m, st, k) =>
-        s"""SELECT '$m' AS metric, '$st' AS strategy, CAST($k AS BIGINT) AS k, * FROM (
-           |  SELECT ${PS.prnd("CASE WHEN COUNT(*) > 1 THEN 1.0 - (6.0 * CAST(SUM((re - ra) * (re - ra)) AS DOUBLE)) / (CAST(COUNT(*) AS DOUBLE) * (CAST(COUNT(*) AS DOUBLE) * CAST(COUNT(*) AS DOUBLE) - 1.0)) ELSE NULL END", 6)} AS spearman,
-           |    CAST(SUM(CASE WHEN re <= 10 AND ra <= 10 THEN 1 ELSE 0 END) AS DOUBLE) / 10.0 AS top10_overlap
-           |  FROM tl_${m}_${st}_${k}r)""".stripMargin
-      }.mkString("\nUNION ALL\n")
+        s"""SELECT metric, '$st' AS strategy, CAST($k AS BIGINT) AS k, spearman, top10_overlap FROM (
+           |  ${ceReportSql(m.metric, s"tl_${m.metric}_${st}_${k}r")})""".stripMargin
+      }
       s"""WITH $eNumSql, $undSql,
          |$ceProbeSql,
-         |${ceBfsChain("cex", "pn", ClRounds)},
-         |cet AS MATERIALIZED (${ceClosTotSql("cex", None, s"(SELECT np FROM pnn) * ${ClRounds + 1}", ClRounds)}),
-         |${ceWdChain("cwx", "pn", ClWRounds)},
-         |cwt AS MATERIALIZED (${ceWClosTotSql("cwx", None, s"(SELECT np FROM pnn) * $ClWCap", ClWRounds)}),
-         |$cfgCtes
+         |${bfsChain("cex", "pu", "pn", ClRounds)},
+         |${relaxChain("cwx", "pu", "pn", ClWRounds)},
+         |${(exact ++ cfgCtes).mkString(",\n")}
          |SELECT metric, strategy, k, spearman, top10_overlap FROM (
-         |$reports
+         |${reports.mkString("\nUNION ALL\n")}
          |) ORDER BY metric, strategy, k""".stripMargin
     }) { (s, dir) =>
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val (pn, pu) = probeRel(s, dir)
     val np = pn.count() // bounded by the constant ProbeN
-    val dHop = probeBfsDetail(s, dir)
-    val dW = probeWdDetail(s, dir, ClWRounds)
-    val ceHop = ceClosTot(pn, dHop, None, np * (ClRounds + 1), ClRounds)
-      .select($"node", $"tot".as("tot_e"))
-    val ceW = ceWClosTot(pn, dW, None, np * ClWCap)
-      .select($"node", $"tot".as("tot_e"))
-    val cfgs = for {
-      m <- Seq("closeness", "closeness_w"); st <- TuneStrategies; k <- TuneKs
-    } yield (m, st, k)
-    val reports = cfgs.map { case (m, st, k) =>
-      val seed = st match {
-        case "smallest_id" => pn.orderBy($"node").limit(k)
-        case "max_degree"  => probeLmk(pu, k)
-        case "max_wdegree" => probeLmkW(pu, k)
+    val reports = tuneMetrics.flatMap { m =>
+      val det = m.detail(s, dir)
+      val exact = ceTot(pn, det, None, m.miss, np)
+      for (st <- TuneStrategies; k <- TuneKs) yield {
+        val seed = st match {
+          case "smallest_id" => pn.orderBy($"node").limit(k)
+          case "max_degree"  => probeLmk(pu, k)
+          case "max_wdegree" => probeLmkW(pu, k)
+        }
+        ceReport(m.metric, ceRank(exact,
+            ceTot(pn, det, Some(seed), m.miss, k), m.miss, np, k))
+          .select($"metric", lit(st).as("strategy"), lit(k.toLong).as("k"),
+            $"spearman", $"top10_overlap")
       }
-      val (exact, tl) = m match {
-        case "closeness" => (ceHop,
-          ceClosTot(pn, dHop, Some(seed), k.toLong * (ClRounds + 1), ClRounds))
-        case "closeness_w" => (ceW,
-          ceWClosTot(pn, dW, Some(seed), k.toLong * ClWCap))
-      }
-      val ranked = exact.join(
-          tl.select($"node".as("node2"), $"tot".as("tot_l")), $"node" === $"node2")
-        .select(
-          row_number().over(Window.orderBy($"tot_e".asc, $"node".asc)).as("re"),
-          row_number().over(Window.orderBy($"tot_l".asc, $"node2".asc)).as("ra"))
-      val n = $"n".cast("double")
-      ranked
-        .agg(sum(($"re" - $"ra") * ($"re" - $"ra")).as("sd2"),
-          sum(when($"re" <= 10 && $"ra" <= 10, 1).otherwise(0)).as("ov"),
-          P.cnt.as("n"))
-        .select(lit(m).as("metric"), lit(st).as("strategy"), lit(k.toLong).as("k"),
-          P.prnd(when(n > 1,
-            lit(1.0) - (lit(6.0) * $"sd2".cast("double")) / (n * (n * n - 1.0)))
-            .otherwise(lit(null).cast("double")), 6).as("spearman"),
-          ($"ov".cast("double") / 10.0).as("top10_overlap"))
     }
     reports.reduce(_ union _).orderBy($"metric", $"strategy", $"k")
   }

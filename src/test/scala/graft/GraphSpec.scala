@@ -605,9 +605,9 @@ class GraphSpec extends GraftSuite {
     // 0.46)
     assert(c.getAs[Double]("spearman") >= 0.8,
       s"production landmark rule must rank closeness at rho >= 0.8: $c")
-    // betweenness row: bounded-sanity (its δ quantization discipline is
-    // oracle-verified; a rational-exact spec model would diverge in the
-    // low decimals by design)
+    // betweenness row: bounded-sanity here; the recurrence under it is
+    // checked against an independent model per (node, src) in "hop
+    // Brandes probe detail matches ..." below
     val b = rows("betweenness")
     assert(b.getAs[Long]("n_probe") === n.toLong)
     val rho = b.getAs[Double]("spearman")
@@ -722,6 +722,85 @@ class GraphSpec extends GraftSuite {
       assert(math.abs(got - m) <= 10000L,
         s"weighted Brandes recurrence diverged at $k: engine $got vs model $m")
     }
+  }
+
+  test("hop Brandes probe detail matches an independent BFS + sigma + delta model") {
+    // the SQL and Spark sides of the hop σ/δ recurrence are twins of ONE
+    // formulation, so the oracle compare cannot catch a shared
+    // conceptual error. Plain-Scala per-src recompute of the bounded
+    // recurrence on the 40-smallest-id probe subgraph: BFS levels to
+    // depth 4 (the production BwRounds) with σ(v) = Σ σ over neighbors
+    // one level up, then δ(v) = Σ over successors w of
+    // prnd9(σv/σw · (1 + δw)), level by level from the deepest. A node
+    // at depth 4 carries δ = 0; a shallower node without successors has
+    // no row.
+    import org.apache.spark.sql.functions.col
+    val e = operators.GraphOps.edgesNum(spark, sfDir)
+      .select(col("src"), col("dst")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val pn = e.flatMap(p => Seq(p._1, p._2)).distinct.sorted.take(40)
+    val pset = pn.toSet
+    val adj = e.filter(p => pset(p._1) && pset(p._2))
+      .flatMap(p => Seq(p._1 -> p._2, p._2 -> p._1))
+      .groupBy(_._1).view.mapValues(_.map(_._2).distinct.toSeq).toMap
+      .withDefaultValue(Seq.empty[Long])
+    val R = 4
+    def prnd9(x: Double) = math.floor(x * 1e9 + 0.5) / 1e9
+    val model = scala.collection.mutable.Map[(Long, Long), Long]()
+    for (src <- pn) {
+      val dist = scala.collection.mutable.Map(src -> 0)
+      val sig = scala.collection.mutable.Map(src -> 1L)
+      var frontier = Seq(src)
+      for (d <- 1 to R) {
+        frontier = frontier.flatMap(adj).distinct.filterNot(dist.contains)
+        frontier.foreach(v => dist(v) = d)
+        frontier.foreach(v =>
+          sig(v) = adj(v).filter(u => dist.get(u).contains(d - 1)).map(sig).sum)
+      }
+      val delta = scala.collection.mutable.Map[Long, Double]()
+      dist.foreach { case (v, d) => if (d == R) delta(v) = 0.0 }
+      for (r <- (R - 1) to 0 by -1; (v, d) <- dist.toSeq if d == r) {
+        val succ = adj(v).filter(w => dist.get(w).contains(r + 1))
+        if (succ.nonEmpty)
+          delta(v) = succ.map(w =>
+            prnd9(sig(v).toDouble / sig(w) * (1.0 + delta.getOrElse(w, 0.0)))).sum
+      }
+      delta.foreach { case (v, dl) =>
+        if (v != src) model((v, src)) = math.floor(dl * 1e9 + 0.5).toLong
+      }
+    }
+    val detail = operators.GraphOps.probeBrandesDetail(spark, sfDir).collect()
+      .map(r => (r.getAs[Long]("node"), r.getAs[Long]("src")) -> r.getAs[Long]("di"))
+      .toMap
+    assert(model.nonEmpty)
+    assert(detail.keySet === model.keySet)
+    model.foreach { case (k, m) =>
+      // 1e-5 in delta units: double-vs-decimal summation slack only — a
+      // wrong recurrence lands orders of magnitude outside it
+      assert(math.abs(detail(k) - m) <= 10000L,
+        s"hop Brandes recurrence diverged at $k: engine ${detail(k)} vs model $m")
+    }
+  }
+
+  test("graph gates return identical rows with AQE off and on") {
+    // each run starts from an empty MatStore, so every shared artifact
+    // (LPA, Louvain labels, probe details) is rebuilt under the setting
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key)
+    val names = Seq("gr_louvain_agree", "gr_community_quality", "gr_centrality_err")
+    def rowsUnder(aqe: Boolean): Map[String, Seq[Seq[Any]]] = {
+      spark.conf.set(key, aqe.toString)
+      MatStore.clear(spark)
+      names.map(n => n -> run(n).collect().toSeq.map(_.toSeq)).toMap
+    }
+    try {
+      val off = rowsUnder(aqe = false)
+      val on = rowsUnder(aqe = true)
+      names.foreach { n =>
+        assert(off(n).nonEmpty, s"$n returned no rows")
+        assert(off(n) === on(n), s"$n differs between AQE off and on")
+      }
+    } finally spark.conf.set(key, prev)
   }
 
   test("random walks: every step follows a real edge and the corpus is reproducible") {

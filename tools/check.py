@@ -7,8 +7,11 @@ Assumes `sbt "runMain graft.Verify <sfDir> <verifyOut>"` already ran.
 For each query in <verifyOut>/oracle_sql.json: run the SQL in DuckDB over
 views named after the parquet tables, load the Spark parquet result, sort
 columns by name, sort rows by all columns, compare schema + values exactly.
+Each line carries the oracle's DuckDB seconds, and the run ends with the
+five slowest oracles — an unrolled chain that lost a MATERIALIZED shows
+up here long before it would time out a bench worker.
 """
-import sys, json, glob
+import sys, json, glob, time
 import duckdb
 import pandas as pd
 
@@ -36,6 +39,7 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
     n_pass = n_fail = 0
+    secs = {}
     for name in sorted(oracle):
         if only and name not in only:
             continue
@@ -47,7 +51,9 @@ def main():
         try:
             sdf = con.execute(
                 f"SELECT * FROM read_parquet({files!r})").df()
+            t0 = time.perf_counter()
             ddf = con.execute(oracle[name]).df()
+            secs[name] = time.perf_counter() - t0
         except Exception as e:
             print(f"FAIL {name}: {e}")
             n_fail += 1
@@ -72,12 +78,14 @@ def main():
                             probs.append(
                                 f"val[{c}] row{i} spark={sdf[c][i]!r} duck={ddf[c][i]!r} ({int(bad.sum())} diffs)")
         if probs:
-            print(f"FAIL {name}: " + "; ".join(probs[:4]))
+            print(f"FAIL {name} [duck {secs[name]:.2f}s]: " + "; ".join(probs[:4]))
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(sdf)} rows)")
+            print(f"PASS {name} ({len(sdf)} rows) [duck {secs[name]:.2f}s]")
             n_pass += 1
     missing = [n for n in oracle if not glob.glob(f"{out}/{n}/*.parquet")]
+    slow = sorted(secs.items(), key=lambda kv: -kv[1])[:5]
+    print("== slowest oracles: " + ", ".join(f"{n} {t:.2f}s" for n, t in slow))
     print(f"== {n_pass} pass, {n_fail} fail")
     sys.exit(1 if n_fail else 0)
 
