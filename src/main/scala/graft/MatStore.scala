@@ -41,7 +41,7 @@ object MatStore {
     * DIFFERENT store (r16 review: the graph-ingest and lifecycle gates
     * each maintain their own store dir — compacting one must not cost
     * the other its published artifacts). Conservative in the safe
-    * direction: a key is tainted when ANY tryServe succeeded while its
+    * direction: a key is tainted when ANY serve succeeded while its
     * build was on this thread's stack, even if the serve's rows never
     * reached the returned plan.
     */
@@ -52,11 +52,11 @@ object MatStore {
     override def initialValue: List[(SparkSession, String)] = Nil
   }
 
-  /** Called by [[graft.sources.IndexStore.tryServe]] on every successful
-    * serve: taints every memo currently BUILDING on this thread (builds
-    * are constructed synchronously on the caller's thread, so the stack
-    * covers nested derivations like the lifecycle gate's post-compact
-    * serve) with the serving store's directory.
+  /** Called by [[graft.sources.IndexStore]] on every successful serve:
+    * taints every memo currently BUILDING on this thread (builds are
+    * constructed synchronously on the caller's thread, so the stack
+    * covers nested derivations like a memo built over a served scan)
+    * with the serving store's directory.
     */
   private[graft] def noteStoreServed(s: SparkSession, storeDir: String): Unit =
     buildStack.get().foreach { case k @ (ks, _) =>
@@ -101,9 +101,7 @@ object MatStore {
     * partitioning visible to the planner.
     */
   def of(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    lookup(s, key)(
-      graft.sources.IndexStore.tryServe(s, key)
-        .getOrElse(build.ckpt))
+    lookup(s, key)(build.ckpt)
 
   /** Like [[of]] but memoizes the lazy plan WITHOUT checkpointing it — for
     * a cheap narrow projection of another memo (the LSH band rows over
@@ -112,7 +110,7 @@ object MatStore {
     * serves, exactly as through [[of]].
     */
   def view(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    lookup(s, key)(graft.sources.IndexStore.tryServe(s, key).getOrElse(build))
+    lookup(s, key)(build)
 
   /** get-then-putIfAbsent instead of computeIfAbsent: store builds nest
     * (lshCandM → tokenizedM, kmAssign → kmCents), and a nested
@@ -150,7 +148,10 @@ object MatStore {
     if (existing != null) { propagateTaint(s, k); existing }
     else {
       buildStack.set(k :: buildStack.get())
-      val built = try build finally buildStack.set(buildStack.get().tail)
+      // a key published in the session's store serves instead of building
+      val built =
+        try graft.sources.IndexStore.tryServe(s, key).getOrElse(build)
+        finally buildStack.set(buildStack.get().tail)
       val prev = cache.putIfAbsent(k, built)
       if (prev != null) {
         // losing thread: discard the unused build. Memo-path builds
@@ -181,8 +182,7 @@ object MatStore {
     // a published key serves the bucketed table (already node-partitioned
     // on disk); the persist below then caches the scan with that
     // partitioning visible, exactly like the in-session repartition cache
-    val df = lookup(s, key)(
-      graft.sources.IndexStore.tryServe(s, key).getOrElse(build))
+    val df = lookup(s, key)(build)
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
       df.persist()
     df

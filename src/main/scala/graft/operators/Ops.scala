@@ -3,6 +3,7 @@ package graft.operators
 import graft.Ckpt._
 import graft.{QueryDef, Tables}
 import graft.functions.{Portable => P, PortableSql => PS}
+import graft.sources.{CorpusIO, IndexStore}
 import org.apache.spark.sql.functions._
 
 /** Pipeline-health / orchestration operators (SURVEY §2a tail).
@@ -270,51 +271,48 @@ object Ops {
     g.crossJoin(broadcast(a)).orderBy($"tbl")
   }
 
-  /** One (session, corpus)-keyed tmp location for the gates' mutable
-    * working state — shared by [[incGateCorpusDir]] and
-    * [[lifecycleStoreDir]] so the keying scheme cannot drift apart.
+  /** The working root of one ingest arc — its corpus tree, its durable
+    * store, or both. Keyed on the SESSION as well as the corpus: two
+    * sessions in one JVM (e.g. spec + bench) must not clobber each
+    * other's in-flight arc, since an arc mutates the filesystem and the
+    * 'benign race, loser discarded' contract of pure builds does not
+    * apply. DERIVED rather than random, so a spec finds exactly the
+    * root the arc wrote.
     */
-  private[operators] def sessionCorpusTmpDir(s: org.apache.spark.sql.SparkSession,
-      dir: String, prefix: String, leaf: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val sess = Integer.toHexString(System.identityHashCode(s))
-    s"${System.getProperty("java.io.tmpdir")}/${prefix}_${sess}_$digest/$leaf"
-  }
+  private[graft] def workspaceOf(s: org.apache.spark.sql.SparkSession,
+      dir: String, arc: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_${arc}_" +
+      s"${Integer.toHexString(System.identityHashCode(s))}_${IndexStore.md5Hex(dir).take(8)}"
 
-  /** The gate's working corpus location — keyed on the SESSION as well
-    * as the corpus (two sessions in one JVM, e.g. spec + bench, must
-    * not clobber each other's in-flight lifecycle: the gate mutates the
-    * filesystem, so the 'benign race, loser discarded' contract of pure
-    * builds does not apply), and DERIVED rather than
-    * random so the quiet-day spec can re-snapshot the same corpus the
-    * gate wrote. Shared with SourcesSpec through this one definition.
-    */
-  private[graft] def incGateCorpusDir(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = sessionCorpusTmpDir(s, dir, "graft_inc_gate", "corpus")
+  /** [[workspaceOf]], wiped: every run of an arc starts from nothing. */
+  private[operators] def workspace(s: org.apache.spark.sql.SparkSession,
+      dir: String, arc: String): String = {
+    val root = workspaceOf(s, dir, arc)
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    if (fs.exists(p)) fs.delete(p, true)
+    root
+  }
 
   /** End-to-end incremental-ingest gate — the 100 TB daily-operations
     * story proved as ONE oracled query (r13 verdict item 2): a day-0
     * base corpus snapshot lands as parquet files, the day-1 batch files
     * arrive, and the query processes ONLY the files
-    * [[graft.sources.CorpusIO.manifestDiff]] schedules — the base is
-    * never re-read for signatures — then emits the same per-batch-doc
-    * verdicts as `dd_incremental`. The ORACLE is the full-recompute
+    * [[CorpusIO.manifestDiff]] schedules — the base is never re-read for
+    * signatures — then emits the same per-batch-doc verdicts as
+    * `dd_incremental`. The ORACLE is the full-recompute
     * semantics (`dd_incremental`'s own SQL twin over the raw documents
     * table), so the hash match IS the proof that the file-level
     * incremental path equals the full recompute.
     *
     * In the order a daily pipeline runs them:
     *  1. day 0: base docs (doc_id < IncSplit) written to a working
-    *     corpus dir; [[graft.sources.CorpusIO.manifest]] snapshots it
-    *     (the file list is captured eagerly at snapshot time, so the
+    *     corpus dir; [[CorpusIO.manifest]] snapshots it (the file
+    *     list is captured eagerly at snapshot time, so the
     *     later append cannot leak into the old snapshot);
     *  2. day 1: the batch appended — new parquet files, same dir;
-    *  3. work list = manifestDiff added/changed files, collected on the
-    *     driver — a deliberate driver action of MANIFEST scale (a file
-    *     list, the artifact an orchestrator holds anyway; never data).
-    *     Guards assert the list is non-empty and that no unchanged
-    *     day-0 file was scheduled for reprocessing;
+    *  3. the work list ([[CorpusIO.workList]]: a driver action of
+    *     MANIFEST scale, with its guards) must be non-empty;
     *  4. batch signatures are computed from the work-list files alone
     *     ([[Dedup.bandsOfDocs]]) and probe the shared base signature
     *     store (MatStore `dd_bands`, base half) — batch×base, never
@@ -338,11 +336,7 @@ object Ops {
     // run pays (~6 driver jobs of scale-invariant latency at bench SF;
     // the paired oracle runs only the probe math).
     val batch = {
-      val corpus = incGateCorpusDir(s, dir)
-      val work = new java.io.File(corpus).getParent
-      val root = new org.apache.hadoop.fs.Path(work)
-      val hfs = root.getFileSystem(s.sessionState.newHadoopConf())
-      if (hfs.exists(root)) hfs.delete(root, true)
+      val corpus = s"${workspace(s, dir, "inc_gate")}/corpus"
       // file counts sized to the DATA, not the session parallelism: a
       // 32-thread session writing a day's corpus as 32 near-empty files
       // would make every later step (manifest footer reads, the
@@ -350,7 +344,7 @@ object Ops {
       // small-files anti-pattern compactFiles exists to repair
       docs.filter($"doc_id" < Dedup.IncSplit).coalesce(4)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(corpus)
-      val prev = graft.sources.CorpusIO.manifest(s, corpus)
+      val prev = CorpusIO.manifest(s, corpus)
       // the day-1 batch lands with an ADDED nullable column (r15 verdict
       // item 4) — the compatible schema evolution a real daily feed
       // eventually performs. The guard must ACCEPT the additive day
@@ -366,34 +360,16 @@ object Ops {
         .withColumn("ingest_day", when($"doc_id".isNotNull, lit("day1")))
         .coalesce(2)
         .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(corpus)
-      val cur = graft.sources.CorpusIO.manifest(s, corpus)
-      // ONE driver action materializes the whole diff (manifest-scale —
-      // a file list): the work list AND the base-integrity guard both
-      // read the same collected rows, so each snapshot's footer pass
-      // runs exactly once inside the diff join
-      val diff = graft.sources.CorpusIO.manifestDiff(prev, cur).collect()
-      val workList = diff.filter(r => Set("added", "changed")
-          .contains(r.getAs[String]("status")))
-        .map(_.getAs[String]("file")).sorted
+      // the schema-evolution guard (r14 verdict item 4) and the
+      // incremental guarantee (day 0's files all read back unchanged)
+      // run inside the work-list derivation, before bandsOfDocs would
+      // null-fill or fail late on a divergent file
+      val (_, workList) = CorpusIO.workList(s, corpus, prev, "documents")
       require(workList.nonEmpty, "batch day produced no work-list files")
-      // the schema-evolution guard (r14 verdict item 4): a batch file
-      // whose footer schema diverges from the base corpus — or a base
-      // file rewritten with a new schema — is refused HERE, before
-      // bandsOfDocs would null-fill or fail late on it
-      graft.sources.CorpusIO.schemaGuard(diff.toIndexedSeq)
-      // the incremental guarantee: day 0's files must all read back
-      // unchanged — a 'changed'/'removed'/'schema_changed'/
-      // 'schema_added_col' base file means something rewrote the
-      // immutable corpus under us (the additive class is a COMPATIBLE
-      // schema, but a rewritten base file is staleness regardless —
-      // schemaGuard deliberately leaves that refusal to this check)
-      require(!diff.exists(r => Set("changed", "removed", "schema_changed",
-          "schema_added_col").contains(r.getAs[String]("status"))),
-        "manifestDiff scheduled a base file for reprocessing")
       // the returned relation is the work-list read itself, checkpointed
       // because four consumers read it (signatures, verify tokens, the
       // exact-dup hash and the final id list all ride the same blocks)
-      s.read.parquet(workList.map(f => s"$corpus/$f").toIndexedSeq: _*).ckpt
+      s.read.parquet(workList: _*).ckpt
     }
     // batch signatures from the work-list files, read once by the probe
     val bandsB = Dedup.bandsOfDocs(batch)
@@ -421,15 +397,6 @@ object Ops {
         coalesce($"e_dup", $"n_dup").as("dup_of"))
   }
 
-  /** The lifecycle gate's working store location — session- and
-    * corpus-keyed like [[incGateCorpusDir]] (the build mutates the
-    * filesystem, so two sessions in one JVM must not clobber each
-    * other), and derived rather than random so the spec can inspect
-    * the exact store the query wrote.
-    */
-  private[graft] def lifecycleStoreDir(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = sessionCorpusTmpDir(s, dir, "graft_store_lc", "store")
-
   /** End-to-end STORE-LIFECYCLE gate (r14 verdict item 3) — the full
     * maintenance arc of a durable artifact proved as ONE oracled query,
     * the way [[incrementalGate]] proved the ingest arc: the base
@@ -443,11 +410,11 @@ object Ops {
     * lifecycle a 100 TB signature store actually lives through between
     * full rebuilds.
     *
-    * The store lives in a derived per-(session, corpus) directory; the
-    * store conf is swapped in for the build and restored after
-    * (serve-mode replicas keep their own store untouched — the
-    * lifecycle key is namespaced `lc_`). Like the ingest gate, every
-    * run re-executes publish + append + compact + serve — ~10
+    * The store is the arc's own [[workspace]], named to every
+    * maintenance call; the session's serve setting is never touched, so
+    * the shared signature build the arc reads is the one the session
+    * serves (the published store in serve mode). Like the ingest gate,
+    * every run re-executes publish + append + compact + serve — ~10
     * driver-scheduled jobs plus filesystem renames of scale-invariant
     * latency, while the paired oracle runs only the candidate SQL; the
     * 5× scale trend (1.52×, SCALETREND_r15) shows the cost is fixed
@@ -457,46 +424,24 @@ object Ops {
     "ops_store_lifecycle",
     Dedup.minhashLsh.oracle.get) { (s, dir) =>
     import s.implicits._
-    val served = {
-      val store = lifecycleStoreDir(s, dir)
-      val root = new org.apache.hadoop.fs.Path(
-        new java.io.File(store).getParent)
-      val hfs = root.getFileSystem(s.sessionState.newHadoopConf())
-      if (hfs.exists(root)) hfs.delete(root, true)
-      val prev = s.conf.get(graft.sources.IndexStore.DirConf, null)
-      s.conf.set(graft.sources.IndexStore.DirConf, store)
-      try {
-        val bands = Dedup.minhashBands(s, dir)
-        val key = s"lc_bands:$dir"
-        // day 0: the base half is the published store
-        graft.sources.IndexStore.publish(s, key,
-          bands.filter($"doc_id" < Dedup.IncSplit), "bkey")
-        // day 1: the batch half lands via the append path (one extra
-        // file set per bucket — the growth compact exists to repair)
-        graft.sources.IndexStore.append(s, key,
-          bands.filter($"doc_id" >= Dedup.IncSplit))
-        val (before, after) = graft.sources.IndexStore.compact(s, key)
-        require(after <= before,
-          s"compaction must not grow the file count ($before -> $after)")
-        graft.sources.IndexStore.tryServe(s, key).getOrElse(
-          throw new IllegalStateException(
-            "lifecycle store refused to serve post-compact"))
-      } finally {
-        if (prev == null) s.conf.unset(graft.sources.IndexStore.DirConf)
-        else s.conf.set(graft.sources.IndexStore.DirConf, prev)
-      }
-    }
+    val store = workspace(s, dir, "store_lc")
+    val bands = Dedup.minhashBands(s, dir)
+    val key = s"lc_bands:$dir"
+    // day 0: the base half is the published store
+    IndexStore.publish(s, store, key,
+      bands.filter($"doc_id" < Dedup.IncSplit), "bkey")
+    // day 1: the batch half lands via the append path (one extra file
+    // set per bucket — the growth compact exists to repair)
+    IndexStore.append(s, store, key, bands.filter($"doc_id" >= Dedup.IncSplit))
+    val (before, after) = IndexStore.compact(s, store, key)
+    require(after <= before,
+      s"compaction must not grow the file count ($before -> $after)")
     // candidate generation straight off the served table — the same
     // salted-cap path production probes, so base+batch through the
     // store must equal the fresh full-corpus signature build
-    Dedup.lshCandidates(served).orderBy($"doc_a", $"doc_b")
+    Dedup.lshCandidates(IndexStore.serve(s, store, key))
+      .orderBy($"doc_a", $"doc_b")
   }
-
-  /** The graph-ingest gate's working store location — keyed like
-    * [[lifecycleStoreDir]].
-    */
-  private[graft] def graphIngestStoreDir(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = sessionCorpusTmpDir(s, dir, "graft_graph_ing", "store")
 
   /** Incremental GRAPH maintenance gate (r15 verdict item 5) — the graph
     * family's [[incrementalGate]]/`dd_incremental` twin: every graph
@@ -506,7 +451,7 @@ object Ops {
     * This gate proves the daily-edge-ingest arc end to end as ONE
     * oracled query: the base edge relation (edges whose src key falls
     * outside the planted day-1 slice) is PUBLISHED to a bucketed store,
-    * the day-1 edge batch lands via [[graft.sources.IndexStore.append]]
+    * the day-1 edge batch lands via [[IndexStore.append]]
     * (the daily write — batch rows only pay the bucket shuffle), and
     * PageRank is recomputed from the SERVED base+batch relation. The
     * ORACLE is the full-rebuild semantics (`gr_pagerank`'s own SQL twin
@@ -517,42 +462,26 @@ object Ops {
     * community labels, and that the post-append probe join stays
     * exchange-free.)
     *
-    * Store/conf handling follows [[storeLifecycle]], and every run
-    * re-executes the publish/append arc; the served relation is
-    * wrapped in [[GraphOps.iterRelation]] so the 10 PageRank rounds
-    * iterate over the node-partitioned cache exactly like the
+    * The store is the arc's own [[workspace]], as in [[storeLifecycle]],
+    * and every run re-executes the publish/append arc; the served
+    * relation is wrapped in [[GraphOps.iterRelation]] so the 10 PageRank
+    * rounds iterate over the node-partitioned cache exactly like the
     * production path.
     */
   val graphIngest = QueryDef(
     "ops_graph_ingest",
     GraphOps.grPagerank.oracle.get) { (s, dir) =>
     import s.implicits._
-    val und = {
-      val store = graphIngestStoreDir(s, dir)
-      val root = new org.apache.hadoop.fs.Path(
-        new java.io.File(store).getParent)
-      val hfs = root.getFileSystem(s.sessionState.newHadoopConf())
-      if (hfs.exists(root)) hfs.delete(root, true)
-      val prev = s.conf.get(graft.sources.IndexStore.DirConf, null)
-      s.conf.set(graft.sources.IndexStore.DirConf, store)
-      try {
-        val e = GraphOps.edgesNum(s, dir)
-        val key = s"gi_edges:$dir"
-        // day 0: the base edge relation (≈3/4 of the customer keys)
-        val batchCond = $"src" % 8 === 0
-        graft.sources.IndexStore.publish(s, key, e.filter(!batchCond), "src")
-        // day 1: the arriving customers' edges land via the append path
-        graft.sources.IndexStore.append(s, key, e.filter(batchCond))
-        val served = graft.sources.IndexStore.tryServe(s, key).getOrElse(
-          throw new IllegalStateException(
-            "graph-ingest store refused to serve post-append"))
-        GraphOps.iterRelation(GraphOps.undirected(served))
-      } finally {
-        if (prev == null) s.conf.unset(graft.sources.IndexStore.DirConf)
-        else s.conf.set(graft.sources.IndexStore.DirConf, prev)
-      }
-    }
-    GraphOps.pagerank(und)
+    val store = workspace(s, dir, "graph_ing")
+    val e = GraphOps.edgesNum(s, dir)
+    val key = s"gi_edges:$dir"
+    // day 0: the base edge relation (≈3/4 of the customer keys)
+    val batchCond = $"src" % 8 === 0
+    IndexStore.publish(s, store, key, e.filter(!batchCond), "src")
+    // day 1: the arriving customers' edges land via the append path
+    IndexStore.append(s, store, key, e.filter(batchCond))
+    GraphOps.pagerank(GraphOps.iterRelation(GraphOps.undirected(
+        IndexStore.serve(s, store, key))))
       .select(GraphOps.fmtNode($"node").as("node"),
         P.prnd($"r", 8).as("pagerank"))
       .orderBy($"node")
@@ -695,45 +624,112 @@ object Ops {
     * centroids.
     */
   private[graft] def dayKmAction(s: org.apache.spark.sql.SparkSession,
-      retrain: Boolean, dayEmb: org.apache.spark.sql.DataFrame,
+      store: String, retrain: Boolean, dayEmb: org.apache.spark.sql.DataFrame,
       arrivals: org.apache.spark.sql.DataFrame,
       k0: String, kServe: String, kAf0: String, kAfRt: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    graft.sources.IndexStore.publish(s, kServe,
+    IndexStore.publish(s, store, kServe,
       if (retrain) Similarity.kmeansFitOver(dayEmb)
-      else graft.sources.IndexStore.tryServe(s, k0).getOrElse(
-        throw new IllegalStateException("day-0 centroid store refused to serve")),
+      else IndexStore.serve(s, store, k0),
       "cell")
-    val cents = graft.sources.IndexStore.tryServe(s, kServe).getOrElse(
-      throw new IllegalStateException("day k-means store refused to serve"))
+    val cents = IndexStore.serve(s, store, kServe)
     val assign =
       if (retrain) {
         // refit: the whole day corpus is reassigned to the NEW centroids
         // and published fresh (blue/green — the day-0 assignment store
         // stays intact for rollback)
-        graft.sources.IndexStore.publish(s, kAfRt,
-          Similarity.kmAssignRowsOf(dayEmb, cents), "cell")
-        graft.sources.IndexStore.tryServe(s, kAfRt).getOrElse(
-          throw new IllegalStateException(
-            "refit assignment store refused to serve"))
+        IndexStore.publish(s, store, kAfRt, Similarity.kmAssignRowsOf(dayEmb, cents), "cell")
+        IndexStore.serve(s, store, kAfRt)
       } else {
         // serve: arrivals enter the index under the FROZEN centroids —
         // the incremental append path, batch rows pay the bucket
         // shuffle only
-        graft.sources.IndexStore.append(s, kAf0,
-          Similarity.kmAssignRowsOf(arrivals, cents))
-        graft.sources.IndexStore.tryServe(s, kAf0).getOrElse(
-          throw new IllegalStateException(
-            "appended assignment store refused to serve"))
+        IndexStore.append(s, store, kAf0, Similarity.kmAssignRowsOf(arrivals, cents))
+        IndexStore.serve(s, store, kAf0)
       }
     (cents, assign)
   }
 
-  private[graft] def opsDayRootDir(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = sessionCorpusTmpDir(s, dir, "graft_ops_day", "day")
+  /** The four digests `ops_day` and `ops_week` share — candidate pairs,
+    * centroids, assignment and PageRank of the served stores — each
+    * keyed exactly like its oracle twin in [[storeDigestSql]].
+    */
+  private def storeDigests(pairs: org.apache.spark.sql.DataFrame,
+      cents: org.apache.spark.sql.DataFrame, assign: org.apache.spark.sql.DataFrame,
+      pr: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.DataFrame] = {
+    val s = pairs.sparkSession
+    import s.implicits._
+    Seq(
+      dig(pairs, concat($"doc_a".cast("string"), lit(":"),
+        $"doc_b".cast("string")), "dedup_pairs"),
+      dig(cents.select($"cell", posexplode($"c").as(Seq("j0", "x"))),
+        concat($"cell".cast("string"), lit(":"), ($"j0" + 1).cast("string"),
+          lit(":"), floor($"x" * 1e9 + 0.5).cast("long").cast("string")),
+        "kmeans_centroids"),
+      dig(assign,
+        concat($"vec_id".cast("string"), lit(":"), $"cell".cast("string"),
+          lit(":"), when(isnan($"cos"), lit("nan"))
+            .otherwise(floor($"cos" * 1e6 + 0.5).cast("long").cast("string"))),
+        "kmeans_assign"),
+      dig(pr, concat($"node".cast("string"), lit(":"),
+        floor($"r" * 1e8 + 0.5).cast("long").cast("string")), "pagerank"))
+  }
 
-  private[graft] def opsDayStoreDir(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = sessionCorpusTmpDir(s, dir, "graft_ops_day", "store")
+  /** [[storeDigests]]' oracle twin over the full-rebuild chains
+    * (`lsh_cand`, the exploded final centroids [[kcxCte]], `kaf` and
+    * the PageRank chain), UNION ALL-joined.
+    */
+  private def storeDigestSql: String = Seq(
+    digSql("dedup_pairs", "lsh_cand",
+      "CAST(doc_a AS VARCHAR) || ':' || CAST(doc_b AS VARCHAR)"),
+    digSql("kmeans_centroids", "kcx",
+      "CAST(cell AS VARCHAR) || ':' || CAST(j AS VARCHAR) || ':' || CAST(CAST(floor(x * 1e9 + 0.5) AS BIGINT) AS VARCHAR)"),
+    digSql("kmeans_assign", "kaf",
+      "CAST(vec_id AS VARCHAR) || ':' || CAST(cell AS VARCHAR) || ':' || " +
+        "CASE WHEN isnan(cos) THEN 'nan' ELSE CAST(CAST(floor(cos * 1e6 + 0.5) AS BIGINT) AS VARCHAR) END"),
+    digSql("pagerank", GraphOps.pagerankFinalCte,
+      "CAST(node AS VARCHAR) || ':' || CAST(CAST(floor(r * 1e8 + 0.5) AS BIGINT) AS VARCHAR)"))
+    .mkString("\n  UNION ALL\n  ")
+
+  /** The final centroids exploded per coordinate — the `kcx` relation
+    * [[storeDigestSql]] digests.
+    */
+  private def kcxCte: String =
+    s"""kcx AS MATERIALIZED (SELECT cell, generate_subscripts(c, 1) AS j, unnest(c) AS x
+       |  FROM kc${Similarity.KmIters})""".stripMargin
+
+  /** The input trees (documents, embeddings, edges) and the store of a
+    * day/week arc under its [[workspace]] `root`, with each tree's last
+    * manifest snapshot; [[work]] is the work list since then
+    * ([[CorpusIO.workList]]) and moves the snapshot forward.
+    */
+  private final class DayTrees(s: org.apache.spark.sql.SparkSession, root: String) {
+    val (docs, emb, edges, store) =
+      (s"$root/documents", s"$root/embeddings", s"$root/edges", s"$root/store")
+    private val snaps = scala.collection.mutable.Map
+      .empty[String, org.apache.spark.sql.DataFrame]
+    /** Snapshot every tree as it stands (after day 0 lands). */
+    def snapshot(): Unit =
+      Seq(docs, emb, edges).foreach(d => snaps(d) = CorpusIO.manifest(s, d))
+    def work(tree: String): IndexedSeq[String] = {
+      val (cur, files) = CorpusIO.workList(s, tree, snaps(tree), tree)
+      snaps(tree) = cur
+      files
+    }
+    /** The day's non-empty batch of `tree`: its work list, read once. */
+    def batch(tree: String): org.apache.spark.sql.DataFrame = {
+      val files = work(tree)
+      require(files.nonEmpty, s"$tree: the day produced no work-list files")
+      s.read.parquet(files: _*).ckpt
+    }
+  }
+
+  /** A day's landing write, as a thunk for [[inParallel]]: `df` appended
+    * under `tree` as `files` parquet files (sized to the DATA). */
+  private def land(df: org.apache.spark.sql.DataFrame, files: Int,
+      tree: String): () => Unit =
+    () => df.coalesce(files).write.mode(org.apache.spark.sql.SaveMode.Append)
+      .parquet(tree)
 
   /** ONE ingest day across ALL THREE durable stores (r17 verdict item 8,
     * the stretch) — the composed version of [[incrementalGate]] /
@@ -768,9 +764,10 @@ object Ops {
     *     hash match IS the proof that the one-work-list day loses and
     *     invents nothing in any of the three stores.
     *
-    * Store/conf handling follows [[storeLifecycle]], and every run
-    * re-executes the whole day; the decision read is a 1-row driver
-    * action (the `gr_louvain` meta-read class).
+    * The day tree and the store live in the arc's own [[workspace]], as
+    * in [[storeLifecycle]], and every run re-executes the whole day; the
+    * decision read is a 1-row driver action (the `gr_louvain` meta-read
+    * class).
     */
   val dayReport = QueryDef(
     "ops_day", {
@@ -778,23 +775,11 @@ object Ops {
       s"""WITH ${Dedup.lshSql},
          |${GraphOps.pagerankSqlChain},
          |${Similarity.kmSql},
-         |kcx AS MATERIALIZED (SELECT cell, generate_subscripts(c, 1) AS j, unnest(c) AS x
-         |  FROM kc${Similarity.KmIters}),
+         |$kcxCte,
          |${Similarity.centroidDriftSql},
          |$retrainSql,
          |dayrep AS MATERIALIZED (
-         |  ${digSql("dedup_pairs", "lsh_cand",
-              "CAST(doc_a AS VARCHAR) || ':' || CAST(doc_b AS VARCHAR)")}
-         |  UNION ALL
-         |  ${digSql("kmeans_centroids", "kcx",
-              "CAST(cell AS VARCHAR) || ':' || CAST(j AS VARCHAR) || ':' || CAST(CAST(floor(x * 1e9 + 0.5) AS BIGINT) AS VARCHAR)")}
-         |  UNION ALL
-         |  ${digSql("kmeans_assign", "kaf",
-              "CAST(vec_id AS VARCHAR) || ':' || CAST(cell AS VARCHAR) || ':' || " +
-                "CASE WHEN isnan(cos) THEN 'nan' ELSE CAST(CAST(floor(cos * 1e6 + 0.5) AS BIGINT) AS VARCHAR) END")}
-         |  UNION ALL
-         |  ${digSql("pagerank", GraphOps.pagerankFinalCte,
-              "CAST(node AS VARCHAR) || ':' || CAST(CAST(floor(r * 1e8 + 0.5) AS BIGINT) AS VARCHAR)")}
+         |  $storeDigestSql
          |  UNION ALL
          |  ${digSql("retrain_decision", decRel,
               "CAST(label AS VARCHAR) || ':' || reason || ':' || overall_decision")}
@@ -811,13 +796,7 @@ object Ops {
          |SELECT component, n_rows, checksum FROM dayrep ORDER BY component""".stripMargin
     }) { (s, dir) =>
     import s.implicits._
-    val root = opsDayRootDir(s, dir)
-    val rootPath = new org.apache.hadoop.fs.Path(
-      new java.io.File(root).getParent)
-    val hfs = rootPath.getFileSystem(s.sessionState.newHadoopConf())
-    if (hfs.exists(rootPath)) hfs.delete(rootPath, true)
-    val (docsDir, embDir, edgeDir) =
-      (s"$root/documents", s"$root/embeddings", s"$root/edges")
+    val t = new DayTrees(s, workspace(s, dir, "ops_day"))
     val docs = Tables.documents(s, dir)
     val emb = Tables.embeddings(s, dir)
     val e = GraphOps.edgesNum(s, dir)
@@ -825,129 +804,76 @@ object Ops {
     // ---- day 0: base slices land as files (three disjoint dirs —
     // written concurrently, see [[inParallel]]); manifests snapshot them
     inParallel(Seq(
-      () => docs.filter($"doc_id" < Dedup.IncSplit).coalesce(4)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(docsDir),
-      () => emb.filter($"vec_id" < Similarity.VecDriftSplit).coalesce(2)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(embDir),
-      () => e.filter(!edgeBatch).coalesce(2)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(edgeDir)))
-    val dirs = Seq("documents" -> docsDir, "embeddings" -> embDir,
-      "edges" -> edgeDir)
-    val m0 = dirs.map { case (n, d) =>
-      n -> graft.sources.CorpusIO.manifest(s, d) }.toMap
+      land(docs.filter($"doc_id" < Dedup.IncSplit), 4, t.docs),
+      land(emb.filter($"vec_id" < Similarity.VecDriftSplit), 2, t.emb),
+      land(e.filter(!edgeBatch), 2, t.edges)))
+    t.snapshot()
     // ---- day 1: the batch files land (independent writes, overlapped)
     inParallel(Seq(
-      () => docs.filter($"doc_id" >= Dedup.IncSplit).coalesce(2)
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(docsDir),
-      () => emb.filter($"vec_id" >= Similarity.VecDriftSplit).coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(embDir),
-      () => e.filter(edgeBatch).coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(edgeDir)))
+      land(docs.filter($"doc_id" >= Dedup.IncSplit), 2, t.docs),
+      land(emb.filter($"vec_id" >= Similarity.VecDriftSplit), 1, t.emb),
+      land(e.filter(edgeBatch), 1, t.edges)))
     // ---- ONE work list across the three inputs (driver action of
     // manifest scale), incremental-gate guards per input
-    val work = dirs.map { case (n, d) =>
-      val diff = graft.sources.CorpusIO.manifestDiff(m0(n),
-        graft.sources.CorpusIO.manifest(s, d)).collect()
-      graft.sources.CorpusIO.schemaGuard(diff.toIndexedSeq)
-      require(!diff.exists(r => Set("changed", "removed", "schema_changed",
-          "schema_added_col").contains(r.getAs[String]("status"))),
-        s"$n: manifestDiff scheduled a base file for reprocessing")
-      val files = diff.filter(r => Set("added", "changed")
-          .contains(r.getAs[String]("status")))
-        .map(r => s"$d/${r.getAs[String]("file")}").sorted.toIndexedSeq
-      require(files.nonEmpty, s"$n: batch day produced no work-list files")
-      n -> files
-    }.toMap
-    val workDocs = s.read.parquet(work("documents"): _*).ckpt
-    val workEmb = s.read.parquet(work("embeddings"): _*).ckpt
-    val workEdges = s.read.parquet(work("edges"): _*).ckpt
+    val Seq(workDocs, workEmb, workEdges) = Seq(t.docs, t.emb, t.edges).map(t.batch)
     // ---- publish day 0, ingest day 1 from the work list only, serve
-    val store = opsDayStoreDir(s, dir)
-    val prevConf = s.conf.get(graft.sources.IndexStore.DirConf, null)
-    s.conf.set(graft.sources.IndexStore.DirConf, store)
-    try {
-      val bands = Dedup.minhashBands(s, dir)
-      val kB = s"day_bands:$dir"
-      graft.sources.IndexStore.publish(s, kB,
-        bands.filter($"doc_id" < Dedup.IncSplit), "bkey")
-      graft.sources.IndexStore.append(s, kB, Dedup.bandsOfDocs(workDocs))
-      val (fb, fa) = graft.sources.IndexStore.compact(s, kB)
-      require(fa <= fb, s"compaction must not grow the file count ($fb -> $fa)")
-      val servedBands = graft.sources.IndexStore.tryServe(s, kB).getOrElse(
-        throw new IllegalStateException("day signature store refused to serve"))
-      val kG = s"day_edges:$dir"
-      graft.sources.IndexStore.publish(s, kG, e.filter(!edgeBatch), "src")
-      graft.sources.IndexStore.append(s, kG, workEdges)
-      val servedEdges = graft.sources.IndexStore.tryServe(s, kG).getOrElse(
-        throw new IllegalStateException("day graph store refused to serve"))
-      // k-means with the retrain gate in the loop: day-0 centroids are
-      // the base-only fit; the arriving batch decides the day's action
-      val dayEmb = s.read.parquet(embDir)
-      val k0 = s"day_km0:$dir"
-      graft.sources.IndexStore.publish(s, k0,
-        Similarity.kmeansFitOver(
-          dayEmb.filter($"vec_id" < Similarity.VecDriftSplit)), "cell")
-      // day-0 assignment store: base vectors under the day-0 centroids
-      // — the index the serve branch APPENDS arrivals into
-      val kAf0 = s"day_kmaf:$dir"
-      graft.sources.IndexStore.publish(s, kAf0,
-        Similarity.kmAssignRowsOf(
-          dayEmb.filter($"vec_id" < Similarity.VecDriftSplit),
-          graft.sources.IndexStore.tryServe(s, k0).getOrElse(
-            throw new IllegalStateException(
-              "day-0 centroid store refused to serve"))), "cell")
-      val decision = retrainDecision(Similarity.centroidDriftOver(
-        Similarity.explOf(dayEmb), dayEmb, Similarity.VecDriftSplit)).ckpt
-      val retrain = decision.select($"overall_decision").head()
-        .getString(0) == "retrain" // 1-row driver read (gr_louvain class)
-      val (servedCents, servedAssign) = dayKmAction(s, retrain, dayEmb,
-        dayEmb.filter($"vec_id" >= Similarity.VecDriftSplit),
-        k0, s"day_km:$dir", kAf0, s"day_kmrt:$dir")
-      // ---- the composed day report
-      val pr = GraphOps.pagerank(
-        GraphOps.iterRelation(GraphOps.undirected(servedEdges)))
-      val pairs = Dedup.lshCandidates(servedBands)
-      dig(pairs, concat($"doc_a".cast("string"), lit(":"),
-          $"doc_b".cast("string")), "dedup_pairs")
-        .union(dig(servedCents.select($"cell", posexplode($"c").as(Seq("j0", "x"))),
-          concat($"cell".cast("string"), lit(":"), ($"j0" + 1).cast("string"),
-            lit(":"), floor($"x" * 1e9 + 0.5).cast("long").cast("string")),
-          "kmeans_centroids"))
-        // the served ASSIGNMENT store vs the oracle's full-corpus kaf:
-        // on this corpus the gate retrains, so the store holds the
-        // refit reassignment — digest-equal to the fresh chain (the
-        // serve-branch append twin is spec-driven and oracled through
-        // sim_ivf_append / ops_week)
-        .union(dig(servedAssign,
-          concat($"vec_id".cast("string"), lit(":"), $"cell".cast("string"),
-            lit(":"), when(isnan($"cos"), lit("nan"))
-              .otherwise(floor($"cos" * 1e6 + 0.5).cast("long").cast("string"))),
-          "kmeans_assign"))
-        .union(dig(pr, concat($"node".cast("string"), lit(":"),
-          floor($"r" * 1e8 + 0.5).cast("long").cast("string")), "pagerank"))
-        .union(dig(decision, concat($"label".cast("string"), lit(":"),
-          $"reason", lit(":"), $"overall_decision"), "retrain_decision"))
-        .union(dig(workDocs, concat($"doc_id".cast("string"), lit(":"),
-          md5($"text")), "work_docs"))
-        .union(dig(workEdges, concat($"src".cast("string"), lit(":"),
-          $"dst".cast("string"), lit(":"), $"weight".cast("string")),
-          "work_edges"))
-        .union(dig(Similarity.explOf(workEmb),
-          concat($"vec_id".cast("string"), lit(":"), $"j".cast("string"),
-            lit(":"), floor($"x" * 1e9 + 0.5).cast("long").cast("string")),
-          "work_embeddings"))
-        .orderBy($"component")
-    } finally {
-      if (prevConf == null) s.conf.unset(graft.sources.IndexStore.DirConf)
-      else s.conf.set(graft.sources.IndexStore.DirConf, prevConf)
-    }
+    val store = t.store
+    val bands = Dedup.minhashBands(s, dir)
+    val kB = s"day_bands:$dir"
+    IndexStore.publish(s, store, kB,
+      bands.filter($"doc_id" < Dedup.IncSplit), "bkey")
+    IndexStore.append(s, store, kB, Dedup.bandsOfDocs(workDocs))
+    val (fb, fa) = IndexStore.compact(s, store, kB)
+    require(fa <= fb, s"compaction must not grow the file count ($fb -> $fa)")
+    val servedBands = IndexStore.serve(s, store, kB)
+    val kG = s"day_edges:$dir"
+    IndexStore.publish(s, store, kG, e.filter(!edgeBatch), "src")
+    IndexStore.append(s, store, kG, workEdges)
+    val servedEdges = IndexStore.serve(s, store, kG)
+    // k-means with the retrain gate in the loop: day-0 centroids are
+    // the base-only fit; the arriving batch decides the day's action
+    val dayEmb = s.read.parquet(t.emb)
+    val k0 = s"day_km0:$dir"
+    IndexStore.publish(s, store, k0,
+      Similarity.kmeansFitOver(
+        dayEmb.filter($"vec_id" < Similarity.VecDriftSplit)), "cell")
+    // day-0 assignment store: base vectors under the day-0 centroids
+    // — the index the serve branch APPENDS arrivals into
+    val kAf0 = s"day_kmaf:$dir"
+    IndexStore.publish(s, store, kAf0,
+      Similarity.kmAssignRowsOf(
+        dayEmb.filter($"vec_id" < Similarity.VecDriftSplit),
+        IndexStore.serve(s, store, k0)), "cell")
+    val decision = retrainDecision(Similarity.centroidDriftOver(
+      Similarity.explOf(dayEmb), dayEmb, Similarity.VecDriftSplit)).ckpt
+    val retrain = decision.select($"overall_decision").head()
+      .getString(0) == "retrain" // 1-row driver read (gr_louvain class)
+    // on this corpus the gate retrains, so the assignment store holds
+    // the refit reassignment — digest-equal to the oracle's fresh
+    // full-corpus kaf (the serve-branch append twin is spec-driven and
+    // oracled through sim_ivf_append / ops_week)
+    val (servedCents, servedAssign) = dayKmAction(s, store, retrain, dayEmb,
+      dayEmb.filter($"vec_id" >= Similarity.VecDriftSplit),
+      k0, s"day_km:$dir", kAf0, s"day_kmrt:$dir")
+    // ---- the composed day report
+    val pr = GraphOps.pagerank(
+      GraphOps.iterRelation(GraphOps.undirected(servedEdges)))
+    (storeDigests(Dedup.lshCandidates(servedBands), servedCents,
+        servedAssign, pr) ++ Seq(
+      dig(decision, concat($"label".cast("string"), lit(":"),
+        $"reason", lit(":"), $"overall_decision"), "retrain_decision"),
+      dig(workDocs, concat($"doc_id".cast("string"), lit(":"),
+        md5($"text")), "work_docs"),
+      dig(workEdges, concat($"src".cast("string"), lit(":"),
+        $"dst".cast("string"), lit(":"), $"weight".cast("string")),
+        "work_edges"),
+      dig(Similarity.explOf(workEmb),
+        concat($"vec_id".cast("string"), lit(":"), $"j".cast("string"),
+          lit(":"), floor($"x" * 1e9 + 0.5).cast("long").cast("string")),
+        "work_embeddings")))
+      .reduce(_ union _)
+      .orderBy($"component")
   }
-
-  private[graft] def opsWeekRootDir(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = sessionCorpusTmpDir(s, dir, "graft_ops_week", "week")
-
-  private[graft] def opsWeekStoreDir(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = sessionCorpusTmpDir(s, dir, "graft_ops_week", "store")
 
   /** First planted vec_id of the week's aligned embedding batch — far
     * above any corpus id, so day membership stays derivable from the id
@@ -1007,8 +933,9 @@ object Ops {
     *  that seven days of incremental maintenance — appends, two
     *  compactions, a schema-additive day, a gate flip with a serve-day
     *  append, and a retention purge — lose and invent nothing in any
-    *  store. Store/conf handling follows [[dayReport]], and every run
-    *  re-executes the seven days.
+    *  store. The day tree and the stores live in the arc's own
+    *  [[workspace]], as in [[dayReport]], and every run re-executes the
+    *  seven days.
     */
   val weekReport = QueryDef(
     "ops_week", {
@@ -1031,8 +958,7 @@ object Ops {
          |${Dedup.lshSql},
          |${GraphOps.pagerankSqlChain},
          |${Similarity.kmSql},
-         |kcx AS MATERIALIZED (SELECT cell, generate_subscripts(c, 1) AS j, unnest(c) AS x
-         |  FROM kc${Similarity.KmIters}),
+         |$kcxCte,
          |${Similarity.centroidDriftSqlPred("w1", "embeddings",
             s"e.vec_id < $V", s"e.vec_id >= $A")},
          |${retrainSqlPref("w1", "w1r")},
@@ -1046,21 +972,10 @@ object Ops {
          |  SELECT CAST(2 AS BIGINT), d.label, d.reason, o.overall_decision
          |  FROM w2rgd d CROSS JOIN w2rgo o),
          |weekrep AS MATERIALIZED (
-         |  ${digSql("dedup_pairs", "lsh_cand",
-              "CAST(doc_a AS VARCHAR) || ':' || CAST(doc_b AS VARCHAR)")}
+         |  $storeDigestSql
          |  UNION ALL
          |  ${digSql("decisions", "wdec",
               "CAST(day AS VARCHAR) || ':' || CAST(label AS VARCHAR) || ':' || reason || ':' || overall_decision")}
-         |  UNION ALL
-         |  ${digSql("kmeans_assign", "kaf",
-              "CAST(vec_id AS VARCHAR) || ':' || CAST(cell AS VARCHAR) || ':' || " +
-                "CASE WHEN isnan(cos) THEN 'nan' ELSE CAST(CAST(floor(cos * 1e6 + 0.5) AS BIGINT) AS VARCHAR) END")}
-         |  UNION ALL
-         |  ${digSql("kmeans_centroids", "kcx",
-              "CAST(cell AS VARCHAR) || ':' || CAST(j AS VARCHAR) || ':' || CAST(CAST(floor(x * 1e9 + 0.5) AS BIGINT) AS VARCHAR)")}
-         |  UNION ALL
-         |  ${digSql("pagerank", GraphOps.pagerankFinalCte,
-              "CAST(node AS VARCHAR) || ':' || CAST(CAST(floor(r * 1e8 + 0.5) AS BIGINT) AS VARCHAR)")}
          |  UNION ALL
          |  ${digSql("work_docs",
               s"(SELECT CAST(doc_id % 7 + 1 AS BIGINT) AS day, doc_id, text FROM main.documents WHERE doc_id >= $S)",
@@ -1080,13 +995,7 @@ object Ops {
          |SELECT component, n_rows, checksum FROM weekrep ORDER BY component""".stripMargin
     }) { (s, dir) =>
     import s.implicits._
-    val root = opsWeekRootDir(s, dir)
-    val rootPath = new org.apache.hadoop.fs.Path(
-      new java.io.File(root).getParent)
-    val hfs = rootPath.getFileSystem(s.sessionState.newHadoopConf())
-    if (hfs.exists(rootPath)) hfs.delete(rootPath, true)
-    val (docsDir, embDir, edgeDir) =
-      (s"$root/documents", s"$root/embeddings", s"$root/edges")
+    val t = new DayTrees(s, workspace(s, dir, "ops_week"))
     val docs = Tables.documents(s, dir)
     val emb = Tables.embeddings(s, dir)
     val e = GraphOps.edgesNum(s, dir)
@@ -1122,192 +1031,129 @@ object Ops {
     // ---- day 0: base slices land (three disjoint dirs — written
     // concurrently, see [[inParallel]]); manifests snapshot; stores publish
     inParallel(Seq(
-      () => docs.filter(docBase).coalesce(4)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(docsDir),
-      () => emb.filter($"vec_id" < V).coalesce(2)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(embDir),
-      () => e.filter(!edgeBatch).coalesce(2)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(edgeDir)))
-    val snaps = scala.collection.mutable.Map(
-      "documents" -> graft.sources.CorpusIO.manifest(s, docsDir),
-      "embeddings" -> graft.sources.CorpusIO.manifest(s, embDir),
-      "edges" -> graft.sources.CorpusIO.manifest(s, edgeDir))
-    val dirOf = Map("documents" -> docsDir, "embeddings" -> embDir,
-      "edges" -> edgeDir)
-    def workOf(name: String): IndexedSeq[String] = {
-      val cur = graft.sources.CorpusIO.manifest(s, dirOf(name))
-      val diff = graft.sources.CorpusIO.manifestDiff(snaps(name), cur).collect()
-      graft.sources.CorpusIO.schemaGuard(diff.toIndexedSeq)
-      require(!diff.exists(r => Set("changed", "removed", "schema_changed",
-          "schema_added_col").contains(r.getAs[String]("status"))),
-        s"$name: manifestDiff scheduled a base file for reprocessing")
-      snaps(name) = cur
-      diff.filter(r => Set("added", "changed")
-          .contains(r.getAs[String]("status")))
-        .map(r => s"${dirOf(name)}/${r.getAs[String]("file")}")
-        .sorted.toIndexedSeq
-    }
-    val store = opsWeekStoreDir(s, dir)
-    val prevConf = s.conf.get(graft.sources.IndexStore.DirConf, null)
-    s.conf.set(graft.sources.IndexStore.DirConf, store)
-    try {
-      val bands = Dedup.minhashBands(s, dir)
-      val kB = s"week_bands:$dir"
-      graft.sources.IndexStore.publish(s, kB, bands.filter(docBase), "bkey")
-      val kG = s"week_edges:$dir"
-      graft.sources.IndexStore.publish(s, kG, e.filter(!edgeBatch), "src")
-      val emb0 = s.read.parquet(embDir)
-      val k0 = s"week_km0:$dir"
-      graft.sources.IndexStore.publish(s, k0,
-        Similarity.kmeansFitOver(emb0), "cell")
-      val kAf0 = s"week_kmaf:$dir"
-      graft.sources.IndexStore.publish(s, kAf0,
-        Similarity.kmAssignRowsOf(emb0,
-          graft.sources.IndexStore.tryServe(s, k0).getOrElse(
-            throw new IllegalStateException(
-              "week day-0 centroid store refused to serve"))), "cell")
-      var servedCents = graft.sources.IndexStore.tryServe(s, k0).get
-      var servedAssign = graft.sources.IndexStore.tryServe(s, kAf0).get
-      val workDocsBuf = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.DataFrame]
-      val workEdgesBuf = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.DataFrame]
-      val workEmbBuf = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.DataFrame]
-      val decBuf = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.DataFrame]
-      for (d <- 1 to 7) {
-        // ---- day-d arrivals land (day 4 carries the additive column).
-        // The 2-3 landing writes hit disjoint directories — overlapped
-        // from the thread pool (r19 verdict item 7 / guide §2.6); the
-        // day loop itself stays sequential (manifest diffs and the
-        // gate flip read the previous day's state).
-        val dd0 = docs.filter(docDay(d))
-        val dd = if (d == 4)
-          dd0.withColumn("ingest_day", when($"doc_id".isNotNull, lit("day4")))
-        else dd0
-        inParallel(Seq(
-          () => dd.coalesce(1)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(docsDir),
-          () => e.filter(edgeDay(d)).coalesce(1)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(edgeDir)) ++
-          (if (d == 1) Seq(() => wal.coalesce(1)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(embDir))
-          else if (d == 2) Seq(() => emb.filter($"vec_id" >= V).coalesce(1)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(embDir))
-          else Nil))
-        // ---- work lists + guards, ingest into the stores
-        val wd = workOf("documents")
-        require(wd.nonEmpty, s"day $d produced no doc work-list files")
-        val we = workOf("edges")
-        require(we.nonEmpty, s"day $d produced no edge work-list files")
-        val workDocs = s.read.parquet(wd: _*).ckpt
-        val workEdges = s.read.parquet(we: _*).ckpt
-        graft.sources.IndexStore.append(s, kB, Dedup.bandsOfDocs(workDocs))
-        graft.sources.IndexStore.append(s, kG, workEdges)
-        // compaction CADENCE: days 3 and 6 only; each must restore the
-        // one-file-set-per-bucket layout (file-count telemetry)
-        if (d == 3 || d == 6) {
-          val (fb, fa) = graft.sources.IndexStore.compact(s, kB)
-          require(fa <= fb && fa <= WeekBuckets,
-            s"day $d compaction must restore ≤ $WeekBuckets data files ($fb -> $fa)")
-        }
-        workDocsBuf += workDocs.select(lit(d.toLong).as("day"),
-          $"doc_id", $"text")
-        workEdgesBuf += workEdges.select(lit(d.toLong).as("day"),
-          $"src", $"dst", $"weight")
-        if (d <= 2) {
-          val wv = workOf("embeddings")
-          require(wv.nonEmpty, s"day $d produced no embedding work-list files")
-          val workEmb = s.read.parquet(wv: _*).ckpt
-          workEmbBuf += Similarity.explOf(workEmb)
-            .select(lit(d.toLong).as("day"), $"vec_id", $"j", $"x")
-          // the gate compares the day's ARRIVALS against the CURRENT
-          // index content (day 1: base; day 2: base ∪ day-1's
-          // appended aligned batch)
-          val tree = s.read.parquet(embDir)
-          val (isBase, isBatch) =
-            if (d == 1)
-              ($"vec_id" < V, $"vec_id" >= WeekAlignedBase)
-            else
-              ($"vec_id" < V || $"vec_id" >= WeekAlignedBase,
-                $"vec_id" >= V && $"vec_id" < WeekAlignedBase)
-          val dec = retrainDecision(Similarity.centroidDriftOverPred(
-            Similarity.explOf(tree), tree, isBase, isBatch)).ckpt
-          decBuf += dec.select(lit(d.toLong).as("day"), $"label",
-            $"reason", $"overall_decision")
-          val retrain = dec.select($"overall_decision").head()
-            .getString(0) == "retrain" // 1-row driver read
-          // the planted flip, require-asserted: day 1 serves (aligned),
-          // day 2 retrains (drifted) — a broken plant fails loudly
-          require(if (d == 1) !retrain else retrain,
-            s"day $d gate read ${if (retrain) "retrain" else "serve"} — " +
-              "the planted week schedule is broken")
-          val (c2, a2) = dayKmAction(s, retrain, tree, workEmb,
-            k0, s"week_km_d$d:$dir", kAf0, s"week_kmaf_rt:$dir")
-          servedCents = c2
-          servedAssign = a2
-        } else {
-          // no vector arrivals scheduled: the diff must agree
-          require(workOf("embeddings").isEmpty,
-            s"day $d scheduled phantom embedding files")
-        }
+      land(docs.filter(docBase), 4, t.docs),
+      land(emb.filter($"vec_id" < V), 2, t.emb),
+      land(e.filter(!edgeBatch), 2, t.edges)))
+    t.snapshot()
+    val store = t.store
+    val bands = Dedup.minhashBands(s, dir)
+    val kB = s"week_bands:$dir"
+    IndexStore.publish(s, store, kB, bands.filter(docBase), "bkey")
+    val kG = s"week_edges:$dir"
+    IndexStore.publish(s, store, kG, e.filter(!edgeBatch), "src")
+    val emb0 = s.read.parquet(t.emb)
+    val k0 = s"week_km0:$dir"
+    IndexStore.publish(s, store, k0, Similarity.kmeansFitOver(emb0), "cell")
+    val kAf0 = s"week_kmaf:$dir"
+    IndexStore.publish(s, store, kAf0,
+      Similarity.kmAssignRowsOf(emb0, IndexStore.serve(s, store, k0)), "cell")
+    var servedCents = IndexStore.serve(s, store, k0)
+    var servedAssign = IndexStore.serve(s, store, kAf0)
+    val workDocsBuf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    val workEdgesBuf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    val workEmbBuf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    val decBuf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    for (d <- 1 to 7) {
+      // ---- day-d arrivals land (day 4 carries the additive column).
+      // The 2-3 landing writes hit disjoint directories — overlapped
+      // from the thread pool (r19 verdict item 7 / guide §2.6); the
+      // day loop itself stays sequential (manifest diffs and the
+      // gate flip read the previous day's state).
+      val dd0 = docs.filter(docDay(d))
+      val dd = if (d == 4)
+        dd0.withColumn("ingest_day", when($"doc_id".isNotNull, lit("day4")))
+      else dd0
+      inParallel(Seq(land(dd, 1, t.docs), land(e.filter(edgeDay(d)), 1, t.edges)) ++
+        (if (d == 1) Seq(land(wal, 1, t.emb))
+        else if (d == 2) Seq(land(emb.filter($"vec_id" >= V), 1, t.emb))
+        else Nil))
+      // ---- work lists + guards, ingest into the stores
+      val workDocs = t.batch(t.docs)
+      val workEdges = t.batch(t.edges)
+      IndexStore.append(s, store, kB, Dedup.bandsOfDocs(workDocs))
+      IndexStore.append(s, store, kG, workEdges)
+      // compaction CADENCE: days 3 and 6 only; each must restore the
+      // one-file-set-per-bucket layout (file-count telemetry)
+      if (d == 3 || d == 6) {
+        val (fb, fa) = IndexStore.compact(s, store, kB)
+        require(fa <= fb && fa <= WeekBuckets,
+          s"day $d compaction must restore ≤ $WeekBuckets data files ($fb -> $fa)")
       }
-      // ---- day-7 retention purge: the oldest batch day's docs exit —
-      // blue/green republish of the signature store on retained rows
-      val servedB = graft.sources.IndexStore.tryServe(s, kB).getOrElse(
-        throw new IllegalStateException("week signature store refused to serve"))
-      val kB2 = s"week_bands_r:$dir"
-      // repartitioned on the bucket-id expression (the compact
-      // discipline): the retention rewrite lands ONE file per bucket
-      // with the full per-bucket sort, not one file set per input task
-      graft.sources.IndexStore.publish(s, kB2,
-        servedB.filter(!($"doc_id" >= Dedup.IncSplit &&
-            pmod($"doc_id", lit(7L)) === 0L))
-          .repartition(WeekBuckets, pmod(hash($"bkey"), lit(WeekBuckets))),
-        "bkey")
-      val servedB2 = graft.sources.IndexStore.tryServe(s, kB2).getOrElse(
-        throw new IllegalStateException("purged signature store refused to serve"))
-      val servedG = graft.sources.IndexStore.tryServe(s, kG).getOrElse(
-        throw new IllegalStateException("week graph store refused to serve"))
-      // ---- the composed week report
-      val pr = GraphOps.pagerank(
-        GraphOps.iterRelation(GraphOps.undirected(servedG)))
-      val pairs = Dedup.lshCandidates(servedB2)
-      dig(pairs, concat($"doc_a".cast("string"), lit(":"),
-          $"doc_b".cast("string")), "dedup_pairs")
-        .union(dig(decBuf.reduce(_ unionAll _),
-          concat($"day".cast("string"), lit(":"), $"label".cast("string"),
-            lit(":"), $"reason", lit(":"), $"overall_decision"),
-          "decisions"))
-        .union(dig(servedAssign,
-          concat($"vec_id".cast("string"), lit(":"), $"cell".cast("string"),
-            lit(":"), when(isnan($"cos"), lit("nan"))
-              .otherwise(floor($"cos" * 1e6 + 0.5).cast("long").cast("string"))),
-          "kmeans_assign"))
-        .union(dig(servedCents.select($"cell", posexplode($"c").as(Seq("j0", "x"))),
-          concat($"cell".cast("string"), lit(":"), ($"j0" + 1).cast("string"),
-            lit(":"), floor($"x" * 1e9 + 0.5).cast("long").cast("string")),
-          "kmeans_centroids"))
-        .union(dig(pr, concat($"node".cast("string"), lit(":"),
-          floor($"r" * 1e8 + 0.5).cast("long").cast("string")), "pagerank"))
-        .union(dig(workDocsBuf.reduce(_ unionAll _),
-          concat($"day".cast("string"), lit(":"), $"doc_id".cast("string"),
-            lit(":"), md5($"text")), "work_docs"))
-        .union(dig(workEdgesBuf.reduce(_ unionAll _),
-          concat($"day".cast("string"), lit(":"), $"src".cast("string"),
-            lit(":"), $"dst".cast("string"), lit(":"),
-            $"weight".cast("string")), "work_edges"))
-        .union(dig(workEmbBuf.reduce(_ unionAll _),
-          concat($"day".cast("string"), lit(":"), $"vec_id".cast("string"),
-            lit(":"), $"j".cast("string"), lit(":"),
-            floor($"x" * 1e9 + 0.5).cast("long").cast("string")),
-          "work_embeddings"))
-        .orderBy($"component")
-    } finally {
-      if (prevConf == null) s.conf.unset(graft.sources.IndexStore.DirConf)
-      else s.conf.set(graft.sources.IndexStore.DirConf, prevConf)
+      workDocsBuf += workDocs.select(lit(d.toLong).as("day"),
+        $"doc_id", $"text")
+      workEdgesBuf += workEdges.select(lit(d.toLong).as("day"),
+        $"src", $"dst", $"weight")
+      if (d <= 2) {
+        val workEmb = t.batch(t.emb)
+        workEmbBuf += Similarity.explOf(workEmb)
+          .select(lit(d.toLong).as("day"), $"vec_id", $"j", $"x")
+        // the gate compares the day's ARRIVALS against the CURRENT
+        // index content (day 1: base; day 2: base ∪ day-1's
+        // appended aligned batch)
+        val tree = s.read.parquet(t.emb)
+        val (isBase, isBatch) =
+          if (d == 1)
+            ($"vec_id" < V, $"vec_id" >= WeekAlignedBase)
+          else
+            ($"vec_id" < V || $"vec_id" >= WeekAlignedBase,
+              $"vec_id" >= V && $"vec_id" < WeekAlignedBase)
+        val dec = retrainDecision(Similarity.centroidDriftOverPred(
+          Similarity.explOf(tree), tree, isBase, isBatch)).ckpt
+        decBuf += dec.select(lit(d.toLong).as("day"), $"label",
+          $"reason", $"overall_decision")
+        val retrain = dec.select($"overall_decision").head()
+          .getString(0) == "retrain" // 1-row driver read
+        // the planted flip, require-asserted: day 1 serves (aligned),
+        // day 2 retrains (drifted) — a broken plant fails loudly
+        require(if (d == 1) !retrain else retrain,
+          s"day $d gate read ${if (retrain) "retrain" else "serve"} — " +
+            "the planted week schedule is broken")
+        val (c2, a2) = dayKmAction(s, store, retrain, tree, workEmb,
+          k0, s"week_km_d$d:$dir", kAf0, s"week_kmaf_rt:$dir")
+        servedCents = c2
+        servedAssign = a2
+      } else {
+        // no vector arrivals scheduled: the diff must agree
+        require(t.work(t.emb).isEmpty,
+          s"day $d scheduled phantom embedding files")
+      }
     }
+    // ---- day-7 retention purge: the oldest batch day's docs exit —
+    // blue/green republish of the signature store on retained rows
+    val kB2 = s"week_bands_r:$dir"
+    // repartitioned on the bucket-id expression (the compact
+    // discipline): the retention rewrite lands ONE file per bucket
+    // with the full per-bucket sort, not one file set per input task
+    IndexStore.publish(s, store, kB2,
+      IndexStore.serve(s, store, kB).filter(!($"doc_id" >= Dedup.IncSplit &&
+          pmod($"doc_id", lit(7L)) === 0L))
+        .repartition(WeekBuckets, pmod(hash($"bkey"), lit(WeekBuckets))),
+      "bkey")
+    val servedB2 = IndexStore.serve(s, store, kB2)
+    val servedG = IndexStore.serve(s, store, kG)
+    // ---- the composed week report
+    val pr = GraphOps.pagerank(
+      GraphOps.iterRelation(GraphOps.undirected(servedG)))
+    (storeDigests(Dedup.lshCandidates(servedB2), servedCents, servedAssign,
+        pr) ++ Seq(
+      dig(decBuf.reduce(_ unionAll _),
+        concat($"day".cast("string"), lit(":"), $"label".cast("string"),
+          lit(":"), $"reason", lit(":"), $"overall_decision"),
+        "decisions"),
+      dig(workDocsBuf.reduce(_ unionAll _),
+        concat($"day".cast("string"), lit(":"), $"doc_id".cast("string"),
+          lit(":"), md5($"text")), "work_docs"),
+      dig(workEdgesBuf.reduce(_ unionAll _),
+        concat($"day".cast("string"), lit(":"), $"src".cast("string"),
+          lit(":"), $"dst".cast("string"), lit(":"),
+          $"weight".cast("string")), "work_edges"),
+      dig(workEmbBuf.reduce(_ unionAll _),
+        concat($"day".cast("string"), lit(":"), $"vec_id".cast("string"),
+          lit(":"), $"j".cast("string"), lit(":"),
+          floor($"x" * 1e9 + 0.5).cast("long").cast("string")),
+        "work_embeddings")))
+      .reduce(_ union _)
+      .orderBy($"component")
   }
 
   val defs: Seq[QueryDef] = Seq(pipelineReport, freshness, infraGate,

@@ -1623,10 +1623,6 @@ object Similarity {
        |      ORDER BY ${PS.prnd("cos", 6)} DESC, vec_id) AS BIGINT) AS rank
        |  FROM ${p}cand WHERE NOT isnan(cos))""".stripMargin
 
-  private[operators] def ivfAppendStoreDir(s: SparkSession,
-      dir: String): String =
-    Ops.sessionCorpusTmpDir(s, dir, "graft_ivf_app", "store")
-
   /** Frozen (base-fit) centroids — a train-once model, memoized so
     * every run of the append arc assigns under the same fit.
     */
@@ -1708,30 +1704,15 @@ object Similarity {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
     val cents = ivfAppendCents(s, dir)
-    // the publish/append/serve arc runs every time the query runs
-    val served = {
-      val store = ivfAppendStoreDir(s, dir)
-      val root = new org.apache.hadoop.fs.Path(
-        new java.io.File(store).getParent)
-      val hfs = root.getFileSystem(s.sessionState.newHadoopConf())
-      if (hfs.exists(root)) hfs.delete(root, true)
-      val prev = s.conf.get(graft.sources.IndexStore.DirConf, null)
-      s.conf.set(graft.sources.IndexStore.DirConf, store)
-      try {
-        val key = s"ivf_af:$dir"
-        graft.sources.IndexStore.publish(s, key,
-          kmAssignRowsOf(emb.filter($"vec_id" < VecDriftSplit), cents), "cell")
-        graft.sources.IndexStore.append(s, key,
-          kmAssignRowsOf(emb.filter($"vec_id" >= VecDriftSplit), cents))
-        graft.sources.IndexStore.tryServe(s, key).getOrElse(
-          throw new IllegalStateException(
-            "appended vector store refused to serve"))
-      } finally {
-        if (prev == null) s.conf.unset(graft.sources.IndexStore.DirConf)
-        else s.conf.set(graft.sources.IndexStore.DirConf, prev)
-      }
-    }
-    ivfProbeOver(emb, served, cents)
+    // the publish/append/serve arc runs every time the query runs, in
+    // the arc's own store
+    val store = Ops.workspace(s, dir, "ivf_app")
+    val key = s"ivf_af:$dir"
+    graft.sources.IndexStore.publish(s, store, key,
+      kmAssignRowsOf(emb.filter($"vec_id" < VecDriftSplit), cents), "cell")
+    graft.sources.IndexStore.append(s, store, key,
+      kmAssignRowsOf(emb.filter($"vec_id" >= VecDriftSplit), cents))
+    ivfProbeOver(emb, graft.sources.IndexStore.serve(s, store, key), cents)
   }
 
   val defs: Seq[QueryDef] = Seq(bruteforce, lshTopk, pairStats, pairHist,

@@ -336,7 +336,7 @@ object CorpusIO {
     * both schema classes are detected BEFORE the generic `changed`),
     * `changed` (same path, different bytes/mtime/rows), `unchanged`.
     * NOTE: for a BASE corpus both schema classes still mean an in-place
-    * rewrite — an incremental gate's base-integrity check must refuse
+    * rewrite — [[workList]]'s base-integrity check refuses
     * `schema_added_col` base files just like `changed` ones; the
     * additive class exists so ADDED batch files with a grown schema can
     * be accepted ([[schemaGuard]]) while rewrites stay refusals.
@@ -385,9 +385,8 @@ object CorpusIO {
     * additive day is accepted, distinct from retyped/dropped which
     * stay refusals). `schema_added_col` base-file rewrites are NOT
     * refused here (the schema is compatible); an in-place rewrite of a
-    * base file is a STALENESS failure, owned by the gate's
-    * base-integrity check — which must list `schema_added_col`
-    * alongside `changed`. Incompatible schema evolution remains an
+    * base file is a STALENESS failure, owned by [[workList]]'s
+    * base-integrity check. Incompatible schema evolution remains an
     * operator action — republish the corpus — never something an
     * unattended daily gate infers.
     */
@@ -408,6 +407,29 @@ object CorpusIO {
     }.map(_.getAs[String]("file"))
     require(badAdds.isEmpty,
       s"batch file(s) with a schema DIVERGENT from the base corpus refused: ${badAdds.sorted.mkString(", ")}")
+  }
+
+  /** Statuses a BASE file may never take between an incremental gate's
+    * snapshots: each means something rewrote the immutable corpus. */
+  private val BaseRewrites = Set("changed", "removed", "schema_changed",
+    "schema_added_col")
+
+  /** The incremental work list of the corpus at `path` since snapshot
+    * `prev`: re-snapshot, then ONE driver action of manifest scale
+    * collects the diff that the work list and both guards read — a
+    * divergent schema ([[schemaGuard]]) or any rewritten base file
+    * (refusal names `what`) fails. Returns the new snapshot and the
+    * sorted paths of the ADDED files.
+    */
+  def workList(spark: SparkSession, path: String, prev: DataFrame,
+      what: String): (DataFrame, IndexedSeq[String]) = {
+    val cur = manifest(spark, path)
+    val diff = manifestDiff(prev, cur).collect().toIndexedSeq
+    schemaGuard(diff)
+    require(!diff.exists(r => BaseRewrites.contains(r.getAs[String]("status"))),
+      s"$what: manifestDiff scheduled a base file for reprocessing")
+    (cur, diff.filter(_.getAs[String]("status") == "added")
+      .map(r => s"$path/${r.getAs[String]("file")}").sorted)
   }
 
   def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,

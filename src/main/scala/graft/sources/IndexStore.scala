@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Durable, cross-session store for the train-once artifacts the session
@@ -14,20 +15,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * key plans NO exchange, exactly like the in-session repartition cache,
   * but surviving the JVM.
   *
-  * Mechanics: [[publish]] writes the relation as a bucketed external
-  * table under `spark.graft.index.dir` plus a tiny `_`-prefixed
-  * properties sidecar (bucket column/count + schema DDL — everything a
-  * FRESH session needs; parquet readers ignore underscore files). A
-  * serving session sets the same conf, and [[graft.MatStore]] consults
-  * [[tryServe]] on every cache miss: a published key re-registers the
-  * external table from its sidecar (`CREATE TABLE … CLUSTERED BY …
-  * LOCATION …`) and is read instead of rebuilt — train once, serve many
-  * SESSIONS. With the conf unset (the default, and the driver gates'
-  * mode) the store is completely inert.
+  * Mechanics: producers NAME the store — [[publish]], [[append]],
+  * [[compact]] and [[serve]] take its directory as an argument.
+  * [[publish]] writes the relation there as a bucketed external table
+  * plus a tiny `_`-prefixed properties sidecar (bucket column/count +
+  * schema DDL — everything a FRESH session needs; parquet readers ignore
+  * underscore files). The session conf [[dir]] reads is only the
+  * CONSUMER's deployment setting: [[graft.MatStore]] consults
+  * [[tryServe]] on every cache miss, and a key published in that store
+  * re-registers its external table from the sidecar (`CREATE TABLE …
+  * CLUSTERED BY … LOCATION …`) and is read instead of rebuilt — train
+  * once, serve many SESSIONS. Nothing else reads or writes the conf;
+  * unset (the default, and the oracle gates' mode) the consumer path is
+  * completely inert.
   */
 object IndexStore {
 
-  /** Session conf carrying the durable store directory; unset = inert. */
+  /** Session conf carrying the consumers' store directory; unset = inert. */
   val DirConf = "spark.graft.index.dir"
 
   private val Meta = "_graft_index.properties"
@@ -40,35 +44,80 @@ object IndexStore {
     */
   private val SrcMeta = "_graft_source.snapshot"
 
+  /** The store directory consumers serve from (the deployment setting). */
   def dir(s: SparkSession): Option[String] =
     Option(s.conf.get(DirConf, null)).filter(_.nonEmpty)
 
-  /** Publish-generation token of `key`'s artifact, or None when the
-    * store is unconfigured/unpublished — the CHEAP republish signal
-    * (one tiny sidecar read; every publish/compact writes a FRESH
-    * `version` uuid). Long-lived consumers (the streaming enrichment
-    * leg) cache the served relation and revalidate on this instead of
-    * paying [[tryServe]]'s full source-staleness listing per use.
-    * A uuid, deliberately NOT the sidecar mtime: on filesystems with
-    * coarse (1s) mtime resolution a republish landing in the same
-    * second as the prior publish would read as 'unchanged' while the
-    * swap has already deleted the files the cached plan points at
-    * (r15 ADVICE). Older sidecars without the property fall back to
-    * mtime+length — still strictly stronger than mtime alone.
+  private def fsOf(s: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(s.sessionState.newHadoopConf())
+
+  /** `key`'s loaded sidecar under `store`; None when not published. */
+  private def sidecar(s: SparkSession, store: String, key: String)
+      : Option[(FileSystem, Path, java.util.Properties)] = {
+    val p = new Path(s"$store/${tableName(key)}/$Meta")
+    val fs = fsOf(s, p)
+    if (!fs.exists(p)) None
+    else {
+      val props = new java.util.Properties()
+      val in = fs.open(p)
+      try props.load(in) finally in.close()
+      Some((fs, p, props))
+    }
+  }
+
+  private def writeSidecar(fs: FileSystem, p: Path, props: java.util.Properties,
+      comment: String): Unit = {
+    val out = fs.create(p, true)
+    try props.store(out, comment) finally out.close()
+  }
+
+  /** The artifact's recorded source snapshot, if it carries one — the
+    * one reader of the file [[writeSnapshot]] writes.
+    */
+  private def recordedSnapshot(fs: FileSystem, path: String): Option[Vector[String]] = {
+    val sp = new Path(s"$path/$SrcMeta")
+    if (!fs.exists(sp)) None
+    else {
+      val in = fs.open(sp)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8")
+        .getLines().filter(_.nonEmpty).toVector)
+      finally in.close()
+    }
+  }
+
+  /** (Re)write the artifact's source snapshot via write-temp + delete +
+    * rename: a crash mid-write leaves the old snapshot or NO snapshot
+    * (which serving refuses), never a silently truncated one (r15 review).
+    */
+  private def writeSnapshot(fs: FileSystem, path: String, lines: Seq[String]): Unit = {
+    val sp = new Path(s"$path/$SrcMeta")
+    val tmp = new Path(s"$path/$SrcMeta.tmp")
+    val out = fs.create(tmp, true)
+    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8")) finally out.close()
+    fs.delete(sp, false)
+    if (!fs.rename(tmp, sp))
+      throw new IllegalStateException(s"failed to swap the source snapshot at $path")
+  }
+
+  /** Publish-generation token of `key`'s artifact in the consumers'
+    * store, or None when the store is unconfigured/unpublished — the
+    * CHEAP republish signal (one tiny sidecar read; every
+    * publish/append/compact writes a FRESH `version` uuid). Long-lived
+    * consumers (the streaming enrichment leg) cache the served relation
+    * and revalidate on this instead of paying [[tryServe]]'s full
+    * source-staleness listing per use. A uuid, deliberately NOT the
+    * sidecar mtime: on filesystems with coarse (1s) mtime resolution a
+    * republish landing in the same second as the prior publish would
+    * read as 'unchanged' while the swap has already deleted the files
+    * the cached plan points at (r15 ADVICE). Older sidecars without the
+    * property fall back to mtime+length — still strictly stronger than
+    * mtime alone.
     */
   def metaVersion(s: SparkSession, key: String): Option[String] =
-    dir(s).flatMap { base =>
-      val p = new org.apache.hadoop.fs.Path(s"$base/${tableName(key)}/$Meta")
-      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val props = new java.util.Properties()
-        val in = fs.open(p)
-        try props.load(in) finally in.close()
-        Option(props.getProperty("version")).orElse {
-          val st = fs.getFileStatus(p)
-          Some(s"mtime:${st.getModificationTime};len:${st.getLen}")
-        }
+    dir(s).flatMap(sidecar(s, _, key)).map { case (fs, p, props) =>
+      Option(props.getProperty("version")).getOrElse {
+        val st = fs.getFileStatus(p)
+        s"mtime:${st.getModificationTime};len:${st.getLen}"
       }
     }
 
@@ -76,32 +125,28 @@ object IndexStore {
     * readable sanitized form COLLAPSES distinct keys (`/data/sf0.1` and
     * `/data/sf0_1` both sanitize to `_data_sf0_1`), so a short digest of
     * the RAW key is suffixed — two different corpora can never alias to
-    * one table/dir (r13 ADVICE); [[tryServe]] additionally refuses a
-    * sidecar whose stored key disagrees (defense in depth for stores
-    * written by older layouts).
+    * one table/dir (r13 ADVICE); serving additionally refuses a sidecar
+    * whose stored key disagrees (defense in depth for stores written by
+    * older layouts).
     */
   def tableName(key: String): String =
     "graft_idx_" + key.toLowerCase.replaceAll("[^a-z0-9]+", "_")
       .stripPrefix("_").stripSuffix("_") + "_" + md5Hex(key).take(8)
 
-  private def md5Hex(s: String): String =
+  private[graft] def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** Listing-only digest of a corpus dir — relative path, byte size and
-    * mtime of every visible parquet file (the same visibility rule as
-    * [[CorpusIO.manifest]], minus the distributed footer job: staleness
-    * detection must stay a pure metadata pass). Recorded in the sidecar
-    * at [[publishCorpus]] time; [[tryServe]] recomputes it so a store
-    * whose SOURCE DATA was rewritten under the same path is refused
-    * (serve falls back to an in-session rebuild) instead of silently
-    * serving artifacts of the dead corpus (r13 ADVICE).
-    */
   /** One `rel\tbytes\tmtime` line per visible parquet file of a corpus
     * dir, sorted — the recorded source snapshot behind the staleness
-    * check. Shares [[CorpusIO.visibleParquetFiles]]'s visibility rule
-    * (the same rule [[CorpusIO.manifest]] applies), so a file the
-    * manifest would schedule can never be invisible to the check.
+    * check: recorded at [[publishCorpus]] time, recomputed on serve, so
+    * a store whose SOURCE DATA was rewritten under the same path is
+    * refused (serve falls back to an in-session rebuild) instead of
+    * silently serving artifacts of the dead corpus (r13 ADVICE). A pure
+    * metadata pass that shares [[CorpusIO.visibleParquetFiles]]'s
+    * visibility rule (the same rule [[CorpusIO.manifest]] applies), so a
+    * file the manifest would schedule can never be invisible to the
+    * check.
     *
     * Cost note: the recursive listing runs once per SERVED KEY per
     * session (MatStore memoizes the served relation, so tryServe fires
@@ -112,9 +157,8 @@ object IndexStore {
     * (spec-planted).
     */
   def sourceSnapshotLines(s: SparkSession, dataDir: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-    CorpusIO.visibleParquetFiles(fs, root)
+    val root = new Path(dataDir)
+    CorpusIO.visibleParquetFiles(fsOf(s, root), root)
       .map { case (rel, _, bytes, mtime) => s"$rel\t$bytes\t$mtime" }
       .sorted
   }
@@ -138,26 +182,27 @@ object IndexStore {
     } catch { case _: java.io.IOException => false }
 
   /** Publish a MatStore-shared relation under its MatStore `key` as a
-    * bucketed external table + sidecar in the configured store dir.
-    * The write pays the bucket shuffle ONCE; every serving session
-    * amortizes it. Returns the key (for publish-list bookkeeping).
+    * bucketed external table + sidecar in `store`. The write pays the
+    * bucket shuffle ONCE; every serving session amortizes it. Returns
+    * the key (for publish-list bookkeeping).
     */
-  def publish(s: SparkSession, key: String, df: DataFrame, bucketCol: String,
-      buckets: Int = 8, sourceDir: Option[String] = None): String = {
-    val base = dir(s).getOrElse(
-      throw new IllegalStateException(s"$DirConf is not set"))
+  def publish(s: SparkSession, store: String, key: String, df: DataFrame,
+      bucketCol: String, buckets: Int = 8,
+      sourceDir: Option[String] = None): String = {
     val name = tableName(key)
-    val path = s"$base/$name"
+    val path = s"$store/$name"
     // refuse a SELF-OVERWRITE: a serving session's MatStore hands every
     // consumer the published table, so "re-train and publish" executed
     // there would overwrite the table from a plan that READS it (the
     // overwrite deletes the input mid-job). Publishing must happen from
-    // a training session (conf unset, or a fresh store dir swapped in
-    // afterwards) — the standard blue/green index-rebuild discipline.
+    // a training session (one that does not serve this store), or to a
+    // fresh store dir swapped in afterwards — the standard blue/green
+    // index-rebuild discipline.
     if (df.inputFiles.exists(_.contains(s"/$name/")))
       throw new IllegalStateException(
         s"refusing to overwrite published '$key' from a plan that reads it; " +
-          s"retrain without $DirConf set, or publish to a fresh store dir and swap")
+          "retrain in a session that does not serve this store, or publish " +
+          "to a fresh store dir and swap")
     s.sql(s"DROP TABLE IF EXISTS $name")
     CorpusIO.writeBucketed(df, name, path, bucketCol, buckets)
     val props = new java.util.Properties()
@@ -168,100 +213,117 @@ object IndexStore {
     // monotone publish-generation token — the streaming enrichment
     // cache's cheap revalidation signal (see metaVersion)
     props.setProperty("version", java.util.UUID.randomUUID().toString)
-    // source-data snapshot: lets tryServe refuse the artifact after a
+    val meta = new Path(s"$path/$Meta")
+    val fs = fsOf(s, meta)
+    // source-data snapshot: lets serving refuse the artifact after a
     // file the artifact was trained ON is rewritten or removed in place
     // (additions are the append flow, not staleness)
     sourceDir.foreach { d =>
       props.setProperty("sourceDir", d)
-      val sp = new org.apache.hadoop.fs.Path(s"$path/$SrcMeta")
-      val sfs = sp.getFileSystem(s.sessionState.newHadoopConf())
-      val sout = sfs.create(sp, true)
-      try sout.write((sourceSnapshotLines(s, d).mkString("\n") + "\n")
-        .getBytes("UTF-8"))
-      finally sout.close()
+      writeSnapshot(fs, path, sourceSnapshotLines(s, d))
     }
-    val p = new org.apache.hadoop.fs.Path(s"$path/$Meta")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try props.store(out, "graft durable index artifact") finally out.close()
+    writeSidecar(fs, meta, props, "graft durable index artifact")
     key
   }
 
-  /** Serve `key` from the durable store: Some(bucketed table scan) when
-    * the conf is set AND the key is published there, else None (the
-    * consumer builds in-session as usual). A session that has never seen
-    * the table re-registers it in its own catalog from the sidecar — no
-    * shared metastore required, the filesystem IS the metadata.
+  /** `key` served from `store`: Right(bucketed table scan), or Left —
+    * None when the key is not published there, Some(why) when it is
+    * published but REFUSED (key-mismatched sidecar, stale or missing
+    * source snapshot). A session that has never seen the table
+    * re-registers it in its own catalog from the sidecar — no shared
+    * metastore required, the filesystem IS the metadata.
     */
-  def tryServe(s: SparkSession, key: String): Option[DataFrame] =
-    dir(s).flatMap { base =>
-      val name = tableName(key)
-      val path = s"$base/$name"
-      val p = new org.apache.hadoop.fs.Path(s"$path/$Meta")
-      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val props = new java.util.Properties()
-        val in = fs.open(p)
-        try props.load(in) finally in.close()
-        // the sidecar's stored key must be THE requested key — a store
-        // written under an older (digest-free) name layout, or any
-        // residual collision, must never serve another corpus's artifact
-        if (props.getProperty("key") != key) {
-          System.err.println(s"[IndexStore] '$name' holds key " +
-            s"'${props.getProperty("key")}', not '$key' — not serving")
-          None
-        } else if (Option(props.getProperty("sourceDir")).exists { d =>
-            val sp = new org.apache.hadoop.fs.Path(s"$path/$SrcMeta")
-            // a sourceDir-published store MUST carry its snapshot: a
-            // missing file means a crashed maintenance write (the
-            // append merge's delete+rename window) — refusing is safe
-            // (consumers rebuild in-session), serving without the
-            // staleness check is not (r15 review)
-            !fs.exists(sp) || {
-              val in2 = fs.open(sp)
-              val recorded =
-                try scala.io.Source.fromInputStream(in2, "UTF-8")
-                  .getLines().filter(_.nonEmpty).toVector
-                finally in2.close()
-              !sourceUnchanged(s, d, recorded)
+  private def resolve(s: SparkSession, store: String, key: String)
+      : Either[Option[String], DataFrame] =
+    sidecar(s, store, key) match {
+      case None => Left(None)
+      case Some((fs, _, props)) =>
+        val name = tableName(key)
+        val path = s"$store/$name"
+        val refusal =
+          // the sidecar's stored key must be THE requested key — a store
+          // written under an older (digest-free) name layout, or any
+          // residual collision, must never serve another corpus's artifact
+          if (props.getProperty("key") != key)
+            Some(s"'$name' holds key '${props.getProperty("key")}', not '$key'")
+          // a sourceDir-published store MUST carry its snapshot: a
+          // missing file means a crashed maintenance write (the append
+          // merge's delete+rename window) — refusing is safe (consumers
+          // rebuild in-session), serving without the staleness check is
+          // not (r15 review). A file the artifact was trained on that was
+          // rewritten or removed since publish makes it stale (blue/green:
+          // republish to a fresh store dir to restore serving).
+          else Option(props.getProperty("sourceDir")).filter { d =>
+            !recordedSnapshot(fs, path).exists(sourceUnchanged(s, d, _))
+          }.map(d => s"'$key' is STALE (source data at $d changed since publish)")
+        refusal match {
+          case Some(why) =>
+            System.err.println(s"[IndexStore] $why — not serving")
+            Left(Some(why))
+          case None =>
+            // the catalog name carries the key, not the store: a table
+            // registered from ANOTHER store (the same key published or
+            // served elsewhere in this session) is re-registered here, or
+            // this serve would read that store's files
+            val registeredAt = Option.when(s.catalog.tableExists(name))(
+              new Path(s.sessionState.catalog.getTableMetadata(
+                org.apache.spark.sql.catalyst.TableIdentifier(name)).location))
+            if (!registeredAt.contains(fs.makeQualified(new Path(path)))) {
+              val bCol = props.getProperty("bucketCol")
+              val n = props.getProperty("buckets").toInt
+              if (registeredAt.nonEmpty) s.sql(s"DROP TABLE $name")
+              s.sql(
+                s"""CREATE TABLE $name (${props.getProperty("schema")})
+                   |USING PARQUET
+                   |CLUSTERED BY ($bCol) SORTED BY ($bCol) INTO $n BUCKETS
+                   |LOCATION '$path'""".stripMargin)
             }
-          }) {
-          // a file the artifact was trained on was rewritten or removed
-          // since publish: the artifact is stale; fall back to the
-          // in-session rebuild (blue/green: republish to a fresh store
-          // dir to restore serving)
-          System.err.println(s"[IndexStore] '$key' is STALE (source data " +
-            s"at ${props.getProperty("sourceDir")} changed since publish) — not serving")
-          None
-        } else {
-          if (!s.catalog.tableExists(name)) {
-            val bCol = props.getProperty("bucketCol")
-            val n = props.getProperty("buckets").toInt
-            s.sql(
-              s"""CREATE TABLE $name (${props.getProperty("schema")})
-                 |USING PARQUET
-                 |CLUSTERED BY ($bCol) SORTED BY ($bCol) INTO $n BUCKETS
-                 |LOCATION '$path'""".stripMargin)
-          }
-          // taint any MatStore memo currently building on this thread:
-          // its plan reads this store's files, so a later compact's swap
-          // must invalidate it (scoped invalidation, r15 ADVICE)
-          graft.MatStore.noteStoreServed(s, base)
-          Some(s.table(name))
+            // taint any MatStore memo currently building on this thread:
+            // its plan reads this store's files, so a later compact's
+            // swap must invalidate it (scoped invalidation, r15 ADVICE)
+            graft.MatStore.noteStoreServed(s, store)
+            Right(s.table(name))
         }
-      }
     }
 
-  /** Append rows to an already-PUBLISHED artifact — the daily-ingest
-    * maintenance path: a crawl batch's signatures (or new edges) land in
-    * the durable store so the NEXT session's probe sees base + batch
-    * without anyone rebuilding the base. The append pays the bucket
-    * shuffle for the batch rows only. Each append adds one file set per
-    * bucket (Spark bucketed scans handle multi-file buckets; the
-    * per-bucket SORT guarantee weakens to per-file — run a compaction
-    * rewrite when merge-join sorts start to matter). The batch frame
-    * must carry the published schema.
+  /** Serve `key` from the consumers' store ([[dir]]), or None — the
+    * consumer then builds in-session. None deliberately conflates "not
+    * published" and "refused": for a consumer both mean "rebuild".
+    */
+  def tryServe(s: SparkSession, key: String): Option[DataFrame] =
+    dir(s).flatMap(resolve(s, _, key).toOption)
+
+  /** Serve `key` from the `store` a producer names. A key that will not
+    * serve is an error that says WHY: an absent artifact ("publish
+    * first") is a different operator mistake from a published-but-REFUSED
+    * one (stale source snapshot or key-mismatched sidecar), which needs a
+    * blue/green republish, not an append (r14 ADVICE).
+    */
+  def serve(s: SparkSession, store: String, key: String): DataFrame =
+    served(s, store, key, "serve")
+
+  private def served(s: SparkSession, store: String, key: String,
+      action: String): DataFrame =
+    resolve(s, store, key) match {
+      case Right(df) => df
+      case Left(None) =>
+        throw new IllegalStateException(
+          s"cannot $action '$key': not published under $store")
+      case Left(Some(why)) =>
+        throw new IllegalStateException(
+          s"cannot $action '$key': published under $store but REFUSED to serve " +
+            s"($why); republish to a fresh store dir instead")
+    }
+
+  /** Append rows to an already-PUBLISHED artifact in `store` — the
+    * daily-ingest maintenance path: a crawl batch's signatures (or new
+    * edges) land in the durable store so the NEXT session's probe sees
+    * base + batch without anyone rebuilding the base. The append pays
+    * the bucket shuffle for the batch rows only. Each append adds one
+    * file set per bucket (Spark bucketed scans handle multi-file
+    * buckets; the per-bucket SORT guarantee weakens to per-file — run a
+    * compaction rewrite when merge-join sorts start to matter). The
+    * batch frame must carry the published schema.
     *
     * `sourceFiles`: the batch's OWN source-data files (absolute paths or
     * paths relative to the published sourceDir), merged into the
@@ -274,18 +336,12 @@ object IndexStore {
     * sourceDir that resolves ZERO source files refuses loudly rather
     * than landing an untracked batch.
     */
-  def append(s: SparkSession, key: String, df: DataFrame,
+  def append(s: SparkSession, store: String, key: String, df: DataFrame,
       sourceFiles: Seq[String] = Nil): Unit = {
     val name = tableName(key)
-    val base = dir(s).getOrElse(
-      throw new IllegalStateException(s"$DirConf is not set"))
-    val served = requireServed(s, key, "append")
-    val path = s"$base/$name"
-    val p = new org.apache.hadoop.fs.Path(s"$path/$Meta")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val props = new java.util.Properties()
-    val in = fs.open(p)
-    try props.load(in) finally in.close()
+    val cur = served(s, store, key, "append")
+    val path = s"$store/$name"
+    val (fs, meta, props) = sidecar(s, store, key).get
     // extend the staleness snapshot with the batch's OWN source files
     // (those living under the recorded sourceDir) BEFORE the data lands:
     // without this, the snapshot covers only publish-time files, so an
@@ -296,19 +352,17 @@ object IndexStore {
     // after the merge but before the data append leaves EXTRA recorded
     // files, which can only cause a conservative refusal, never a stale
     // serve. The merge is manifest-scale (a file list), one listing per
-    // append, and lands via write-temp + delete + rename — a crash
-    // mid-write leaves the old snapshot or NO snapshot (which tryServe
-    // refuses), never a silently truncated one (r15 review).
+    // append, landed by [[writeSnapshot]].
     Option(props.getProperty("sourceDir")).foreach { d =>
-      val dRoot = new org.apache.hadoop.fs.Path(d)
-      val dfs = dRoot.getFileSystem(s.sessionState.newHadoopConf())
+      val dRoot = new Path(d)
+      val dfs = fsOf(s, dRoot)
       val dPrefix = dfs.makeQualified(dRoot).toString + "/"
       // inputFiles PLUS the caller's explicit list: a checkpointed
       // (LogicalRDD-backed) batch frame reports no inputFiles at all
       val batchRels = (df.inputFiles.toSeq ++ sourceFiles.map { f =>
           if (f.startsWith("/") || f.contains("://")) f else s"$dPrefix$f"
         })
-        .map(f => dfs.makeQualified(new org.apache.hadoop.fs.Path(f)).toString)
+        .map(f => dfs.makeQualified(new Path(f)).toString)
         .filter(_.startsWith(dPrefix))
         .map(_.stripPrefix(dPrefix))
         .distinct
@@ -341,29 +395,13 @@ object IndexStore {
             s"append to '$key': sourceFiles entr${if (uncovered.size == 1) "y" else "ies"} " +
               s"${uncovered.sorted.mkString(", ")} match NO visible parquet file under $d — " +
               "the staleness snapshot would not cover the appended batch")
-        val sp = new org.apache.hadoop.fs.Path(s"$path/$SrcMeta")
-        val recorded =
-          if (!fs.exists(sp)) Vector.empty[String]
-          else {
-            val in2 = fs.open(sp)
-            try scala.io.Source.fromInputStream(in2, "UTF-8")
-              .getLines().filter(_.nonEmpty).toVector
-            finally in2.close()
-          }
-        val merged = (recorded ++ covered).distinct.sorted
-        val tmp = new org.apache.hadoop.fs.Path(s"$path/$SrcMeta.tmp")
-        val sout = fs.create(tmp, true)
-        try sout.write((merged.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally sout.close()
-        fs.delete(sp, false)
-        if (!fs.rename(tmp, sp))
-          throw new IllegalStateException(
-            s"failed to swap the source snapshot for '$key'")
+        writeSnapshot(fs, path,
+          (recordedSnapshot(fs, path).getOrElse(Vector.empty) ++ covered).distinct.sorted)
       }
     }
     // column order must match the table; bucketing spec must match the
     // published one or the scan's co-location promise would be a lie
-    df.select(served.columns.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+    df.select(cur.columns.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .bucketBy(props.getProperty("buckets").toInt, props.getProperty("bucketCol"))
       .sortBy(props.getProperty("bucketCol"))
@@ -374,40 +412,12 @@ object IndexStore {
     // new files, so version-revalidating consumers (the streaming
     // enrichment leg) must re-serve to see the appended rows
     props.setProperty("version", java.util.UUID.randomUUID().toString)
-    val mOut = fs.create(p, true)
-    try props.store(mOut, "graft durable index artifact (appended)")
-    finally mOut.close()
+    writeSidecar(fs, meta, props, "graft durable index artifact (appended)")
   }
 
-  /** [[tryServe]] with maintenance-grade error reporting: a maintenance
-    * action (append/compact) on a key that will not serve must say WHY —
-    * an absent store ("publish first") is a different operator mistake
-    * from a published-but-REFUSED one (stale source snapshot or
-    * key-mismatched sidecar), which needs a blue/green republish, not an
-    * append. tryServe's None deliberately conflates them for CONSUMERS
-    * (both mean "rebuild in-session"); maintenance must not (r14 ADVICE).
-    */
-  private def requireServed(s: SparkSession, key: String,
-      action: String): DataFrame = {
-    val base = dir(s).getOrElse(
-      throw new IllegalStateException(s"$DirConf is not set"))
-    tryServe(s, key).getOrElse {
-      val p = new org.apache.hadoop.fs.Path(s"$base/${tableName(key)}/$Meta")
-      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-      if (!fs.exists(p))
-        throw new IllegalStateException(
-          s"cannot $action '$key': not published under $base")
-      else
-        throw new IllegalStateException(
-          s"cannot $action '$key': published under $base but REFUSED to serve " +
-            "(stale source snapshot or key-mismatched sidecar — see the " +
-            "[IndexStore] log line); republish to a fresh store dir instead")
-    }
-  }
-
-  /** Bucket-AWARE compaction of a published artifact — the repair for
-    * [[append]]'s file growth (each append adds one file set per bucket
-    * and weakens the per-bucket sort to per-file). A plain
+  /** Bucket-AWARE compaction of a published artifact in `store` — the
+    * repair for [[append]]'s file growth (each append adds one file set
+    * per bucket and weakens the per-bucket sort to per-file). A plain
     * [[CorpusIO.compactFiles]] coalesce would be WRONG here: it strips
     * the bucket file naming, so the rewritten table would silently stop
     * being bucketed and every serve join would re-grow an exchange.
@@ -429,36 +439,30 @@ object IndexStore {
     * the artifact. Returns the (before, after) visible data-file
     * counts.
     */
-  def compact(s: SparkSession, key: String): (Int, Int) = {
-    val base = dir(s).getOrElse(
-      throw new IllegalStateException(s"$DirConf is not set"))
+  def compact(s: SparkSession, store: String, key: String): (Int, Int) = {
     val name = tableName(key)
-    val path = s"$base/$name"
-    val served = requireServed(s, key, "compact")
-    val p = new org.apache.hadoop.fs.Path(s"$path/$Meta")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val props = new java.util.Properties()
-    val in = fs.open(p)
-    try props.load(in) finally in.close()
+    val path = s"$store/$name"
+    val cur = served(s, store, key, "compact")
+    val (fs, _, props) = sidecar(s, store, key).get
     val bCol = props.getProperty("bucketCol")
     val n = props.getProperty("buckets").toInt
     def dataFiles(d: String): Int =
-      fs.listStatus(new org.apache.hadoop.fs.Path(d))
+      fs.listStatus(new Path(d))
         .count(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith("."))
     val before = dataFiles(path)
     val tmpName = name + "_compacting"
-    val tmpPath = s"$base/$tmpName"
+    val tmpPath = s"$store/$tmpName"
     s.sql(s"DROP TABLE IF EXISTS $tmpName")
-    fs.delete(new org.apache.hadoop.fs.Path(tmpPath), true)
+    fs.delete(new Path(tmpPath), true)
     import org.apache.spark.sql.functions.{col, hash, lit, pmod}
     CorpusIO.writeBucketed(
-      served.repartition(n, pmod(hash(col(bCol)), lit(n))),
+      cur.repartition(n, pmod(hash(col(bCol)), lit(n))),
       tmpName, tmpPath, bCol, n)
     // swap: the compacted copy is completed on disk INCLUDING both
     // sidecars before anything moves, then a two-rename swap — never a
     // delete-before-rename: a crash between the renames leaves the
-    // store OFFLINE (tryServe → None, consumers rebuild in-session)
+    // store OFFLINE (serving refuses, consumers rebuild in-session)
     // with the original intact under `<name>_old`, recoverable by
     // renaming back; the artifact is never destroyed mid-compact
     s.sql(s"DROP TABLE IF EXISTS $tmpName")
@@ -466,72 +470,65 @@ object IndexStore {
     // fresh publish-generation token: cached consumers (the streaming
     // enrichment leg) revalidate on it and re-serve the compacted copy
     props.setProperty("version", java.util.UUID.randomUUID().toString)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$tmpPath/$Meta"), true)
-    try props.store(out, "graft durable index artifact (compacted)")
-    finally out.close()
-    val srcSnap = new org.apache.hadoop.fs.Path(s"$path/$SrcMeta")
+    writeSidecar(fs, new Path(s"$tmpPath/$Meta"), props,
+      "graft durable index artifact (compacted)")
+    val srcSnap = new Path(s"$path/$SrcMeta")
     if (fs.exists(srcSnap))
       org.apache.hadoop.fs.FileUtil.copy(fs, srcSnap, fs,
-        new org.apache.hadoop.fs.Path(s"$tmpPath/$SrcMeta"), false,
-        s.sessionState.newHadoopConf())
-    val oldPath = new org.apache.hadoop.fs.Path(s"$base/${name}_old")
+        new Path(s"$tmpPath/$SrcMeta"), false, s.sessionState.newHadoopConf())
+    val oldPath = new Path(s"$store/${name}_old")
     fs.delete(oldPath, true)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(path), oldPath))
+    if (!fs.rename(new Path(path), oldPath))
       throw new IllegalStateException(s"compaction swap failed for $key (retire)")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmpPath),
-        new org.apache.hadoop.fs.Path(path))) {
-      fs.rename(oldPath, new org.apache.hadoop.fs.Path(path)) // roll back
+    if (!fs.rename(new Path(tmpPath), new Path(path))) {
+      fs.rename(oldPath, new Path(path)) // roll back
       throw new IllegalStateException(s"compaction swap failed for $key (promote)")
     }
     fs.delete(oldPath, true)
     // same-session invalidation: a MatStore memo created by an earlier
-    // tryServe — or any memo whose lazy plan was BUILT from a served
-    // scan (the file index is captured at plan construction) — points at
-    // the pre-swap files, which the swap just deleted. Derivation is
+    // serve — or any memo whose lazy plan was BUILT from a served scan
+    // (the file index is captured at plan construction) — points at the
+    // pre-swap files, which the swap just deleted. Derivation is
     // tracked ([[graft.MatStore.noteStoreServed]] taints every memo
     // whose build a successful serve ran inside), so invalidation is
     // SCOPED to the store-derived memos: unrelated warm shared builds
     // (tokenized corpora, in-session edge relations) survive a
     // mid-session compact instead of silently re-paying their builds
     // (r15 ADVICE). The dropped TABLE is re-CREATEd with a fresh file
-    // index by the next tryServe. Plans already handed out to external
+    // index by the next serve. Plans already handed out to external
     // callers cannot be repaired from here — run compaction from a
     // maintenance session, not mid-serve.
-    graft.MatStore.clearStoreDerived(s, base)
+    graft.MatStore.clearStoreDerived(s, store)
     (before, dataFiles(path))
   }
 
-  /** Publish the declared train-once artifacts of a corpus: the trained
-    * k-means quantizer (centroids + assignment — the model
+  /** Publish the declared train-once artifacts of a corpus to `store`:
+    * the trained k-means quantizer (centroids + assignment — the model
     * sim_ivf_kmeans_topk / sim_filtered_topk serve from), the MinHash
     * band signature store (the relation dd_incremental probes per
     * ingest batch), and the graph edge relations (directed base + the
     * node-partitioned undirected iteration relation every gr_* query
-    * reads). Bucket keys are each relation's serve-join key.
+    * reads). Bucket keys are each relation's serve-join key. Run it
+    * from a training session — one that does not serve `store`.
     */
-  def publishCorpus(s: SparkSession, dataDir: String): Seq[String] = Seq(
-    publish(s, s"sim_km_cents:$dataDir",
-      graft.operators.Similarity.kmCents(s, dataDir), "cell",
-      sourceDir = Some(dataDir)),
-    publish(s, s"sim_km_af:$dataDir",
-      graft.operators.Similarity.kmAssign(s, dataDir), "vec_id",
-      sourceDir = Some(dataDir)),
-    // the signature store's serve join is the batch-probes-base band
-    // join on (band, bkey) — bucketing by bkey co-locates BOTH sides
-    // (subset clustering), so the per-ingest probe plans no exchange
-    publish(s, s"dd_bands:$dataDir",
-      graft.operators.Dedup.minhashBands(s, dataDir), "bkey",
-      sourceDir = Some(dataDir)),
-    publish(s, s"gr_edges_num:$dataDir",
-      graft.operators.GraphOps.edgesNum(s, dataDir), "src",
-      sourceDir = Some(dataDir)),
-    publish(s, s"gr_und_w:$dataDir",
-      graft.operators.GraphOps.sharedUnd(s, dataDir), "node",
-      sourceDir = Some(dataDir)),
-    // the converged level-1 Louvain sweep labels (r15) — the iterative
-    // artifact gr_louvain reports and gr_louvain_ml coarsens from; a
-    // serving session reads the labels instead of re-running the sweeps
-    publish(s, s"gr_lv1:$dataDir",
-      graft.operators.GraphOps.lv1Artifact(s, dataDir), "node",
-      sourceDir = Some(dataDir)))
+  def publishCorpus(s: SparkSession, store: String, dataDir: String): Seq[String] = {
+    import graft.operators.{Dedup, GraphOps, Similarity}
+    Seq[(String, (SparkSession, String) => DataFrame, String)](
+      ("sim_km_cents", Similarity.kmCents, "cell"),
+      ("sim_km_af", Similarity.kmAssign, "vec_id"),
+      // the signature store's serve join is the batch-probes-base band
+      // join on (band, bkey) — bucketing by bkey co-locates BOTH sides
+      // (subset clustering), so the per-ingest probe plans no exchange
+      ("dd_bands", Dedup.minhashBands, "bkey"),
+      ("gr_edges_num", GraphOps.edgesNum, "src"),
+      ("gr_und_w", GraphOps.sharedUnd, "node"),
+      // the converged level-1 Louvain sweep labels (r15) — the iterative
+      // artifact gr_louvain reports and gr_louvain_ml coarsens from; a
+      // serving session reads the labels instead of re-running the sweeps
+      ("gr_lv1", GraphOps.lv1Artifact, "node")
+    ).map { case (name, build, bucketCol) =>
+      publish(s, store, s"$name:$dataDir", build(s, dataDir), bucketCol,
+        sourceDir = Some(dataDir))
+    }
+  }
 }

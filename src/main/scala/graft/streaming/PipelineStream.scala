@@ -71,20 +71,21 @@ object PipelineStream {
     * [[graft.sources.IndexStore]]'s served table on its bucket key, so
     * the static side arrives pre-shuffled off disk (the same
     * exchange-free scan the batch twin gets) and the stream pays only
-    * its own keyed exchange. [[graft.sources.IndexStore.tryServe]] is
-    * consulted PER BATCH: a store republished mid-stream (the blue/green
-    * swap) is picked up on the next micro-batch without restarting the
-    * query, and an unpublished or serve-REFUSED store fails the batch
-    * loudly — an enrichment leg silently joining nothing would corrupt
-    * the sink. The enriched batch lands through `sink` (the reference's
-    * Mongo-write position).
+    * its own keyed exchange. The session's consumer store
+    * ([[graft.sources.IndexStore.dir]]) is consulted PER BATCH: a store
+    * republished mid-stream (the blue/green swap) is picked up on the
+    * next micro-batch without restarting the query, and an unpublished
+    * or serve-REFUSED store fails the batch loudly with
+    * [[graft.sources.IndexStore.serve]]'s reason — an enrichment leg
+    * silently joining nothing would corrupt the sink. The enriched batch
+    * lands through `sink` (the reference's Mongo-write position).
     */
   def enriched(wire: DataFrame, storeKey: String, joinCol: String,
       queryName: String, watermark: String,
       checkpoint: Option[String] = None)(sink: DataFrame => Unit): StreamingQuery = {
     val s = wire.sparkSession
     // the served relation is CACHED across micro-batches and revalidated
-    // by ONE tiny sidecar read per batch (a full tryServe re-lists the
+    // by ONE tiny sidecar read per batch (a full serve re-lists the
     // whole source corpus for the staleness check — per-batch that
     // would dominate small-batch latency at real file counts). The
     // revalidation token is the sidecar's publish-generation VERSION
@@ -105,10 +106,11 @@ object PipelineStream {
       val served = servedCache match {
         case Some((t, df)) if ver.contains(t) => df
         case _ =>
-          val df = graft.sources.IndexStore.tryServe(s, storeKey).getOrElse(
-            throw new IllegalStateException(
-              s"enrichment store '$storeKey' is not served — publish it " +
-                "(or republish after a refusal) before the leg's next batch"))
+          val df = graft.sources.IndexStore.dir(s)
+            .map(graft.sources.IndexStore.serve(s, _, storeKey))
+            .getOrElse(throw new IllegalStateException(
+              s"enrichment store '$storeKey' is not served: the session " +
+                "names no index store"))
           servedCache = ver.map((_, df))
           df
       }

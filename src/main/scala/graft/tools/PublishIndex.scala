@@ -16,8 +16,7 @@ object PublishIndex {
     val storeDir = args(1)
     val s = graft.GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     s.sparkContext.setLogLevel("ERROR")
-    s.conf.set(graft.sources.IndexStore.DirConf, storeDir)
-    graft.sources.IndexStore.publishCorpus(s, dataDir)
+    graft.sources.IndexStore.publishCorpus(s, storeDir, dataDir)
       .foreach(k => println(s"PUBLISHED $k -> ${graft.sources.IndexStore.tableName(k)}"))
     s.stop()
   }

@@ -20,107 +20,97 @@ class DurableIndexSpec extends GraftSuite {
 
   test("publish in one session, serve bit-identical and exchange-free in a fresh one") {
     val store = java.nio.file.Files.createTempDirectory("graft_idx").toString
-    spark.conf.set(sources.IndexStore.DirConf, store)
+    // in-session baselines (this session serves no store, so these BUILD)
+    val baseIvf = rowsOf(run("sim_ivf_kmeans_topk"))
+    val baseInc = rowsOf(run("dd_incremental"))
+    val basePr = rowsOf(run("gr_pagerank"))
+    val baseLv = rowsOf(run("gr_louvain"))
+    val baseLvMl = rowsOf(run("gr_louvain_ml"))
+
+    val keys = sources.IndexStore.publishCorpus(spark, store, sfDir)
+    assert(keys.size === 6)
+    // drop every catalog entry: the serving session must re-register
+    // from the filesystem sidecars alone (external tables — data stays)
+    keys.foreach(k =>
+      spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(k)}"))
+
+    val s2 = spark.newSession()
+    s2.conf.set(sources.IndexStore.DirConf, store)
     try {
-      // in-session baselines (nothing is published yet, so these BUILD)
-      val baseIvf = rowsOf(run("sim_ivf_kmeans_topk"))
-      val baseInc = rowsOf(run("dd_incremental"))
-      val basePr = rowsOf(run("gr_pagerank"))
-      val baseLv = rowsOf(run("gr_louvain"))
-      val baseLvMl = rowsOf(run("gr_louvain_ml"))
+      // the serve path is actually the bucketed table, not a rebuild
+      val af = operators.Similarity.kmAssign(s2, sfDir)
+      val afPlan = planOf(af)
+      assert(afPlan.contains("graft_idx_sim_km_af"),
+        s"kmAssign must serve from the published table:\n$afPlan")
+      // same-key aggregation over the served node-bucketed relation
+      // plans NO exchange — the bucketed layout replaces the
+      // in-session repartition cache
+      val und = operators.GraphOps.sharedUnd(s2, sfDir)
+      val aggPlan = planOf(und.groupBy("node").agg(sum("weight")))
+      assert(!aggPlan.contains("Exchange hashpartitioning"),
+        s"bucket-key aggregation over the served relation must not shuffle:\n$aggPlan")
+      // same-key self-join of the served relation: no exchange either side
+      val l = s2.table(sources.IndexStore.tableName(s"gr_und_w:$sfDir"))
+      val r = s2.table(sources.IndexStore.tableName(s"gr_und_w:$sfDir"))
+        .select(col("node"), col("weight").as("w2"))
+      val joinPlan = planOf(l.join(r, "node"))
+      assert(!joinPlan.contains("Exchange hashpartitioning"),
+        s"bucket-key self-join of the served relation must not shuffle:\n$joinPlan")
 
-      val keys = sources.IndexStore.publishCorpus(spark, sfDir)
-      assert(keys.size === 6)
-      // drop every catalog entry: the serving session must re-register
-      // from the filesystem sidecars alone (external tables — data stays)
-      keys.foreach(k =>
-        spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(k)}"))
-
-      val s2 = spark.newSession()
-      s2.conf.set(sources.IndexStore.DirConf, store)
-      try {
-        // the serve path is actually the bucketed table, not a rebuild
-        val af = operators.Similarity.kmAssign(s2, sfDir)
-        val afPlan = planOf(af)
-        assert(afPlan.contains("graft_idx_sim_km_af"),
-          s"kmAssign must serve from the published table:\n$afPlan")
-        // same-key aggregation over the served node-bucketed relation
-        // plans NO exchange — the bucketed layout replaces the
-        // in-session repartition cache
-        val und = operators.GraphOps.sharedUnd(s2, sfDir)
-        val aggPlan = planOf(und.groupBy("node").agg(sum("weight")))
-        assert(!aggPlan.contains("Exchange hashpartitioning"),
-          s"bucket-key aggregation over the served relation must not shuffle:\n$aggPlan")
-        // same-key self-join of the served relation: no exchange either side
-        val l = s2.table(sources.IndexStore.tableName(s"gr_und_w:$sfDir"))
-        val r = s2.table(sources.IndexStore.tableName(s"gr_und_w:$sfDir"))
-          .select(col("node"), col("weight").as("w2"))
-        val joinPlan = planOf(l.join(r, "node"))
-        assert(!joinPlan.contains("Exchange hashpartitioning"),
-          s"bucket-key self-join of the served relation must not shuffle:\n$joinPlan")
-
-        // served results hash-match the in-session path
-        assert(rowsOf(Registry.byName("sim_ivf_kmeans_topk").run(s2, sfDir)) === baseIvf)
-        assert(rowsOf(Registry.byName("dd_incremental").run(s2, sfDir)) === baseInc)
-        assert(rowsOf(Registry.byName("gr_pagerank").run(s2, sfDir)) === basePr)
-        // the r15 level-1 sweep artifact: the serving session reads the
-        // converged labels instead of re-running the sweeps, and both
-        // Louvain queries (telemetry included) hash-match the builder
-        assert(rowsOf(Registry.byName("gr_louvain").run(s2, sfDir)) === baseLv)
-        assert(rowsOf(Registry.byName("gr_louvain_ml").run(s2, sfDir)) === baseLvMl)
-      } finally {
-        MatStore.clear(s2)
-        keys.foreach(k =>
-          s2.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(k)}"))
-      }
+      // served results hash-match the in-session path
+      assert(rowsOf(Registry.byName("sim_ivf_kmeans_topk").run(s2, sfDir)) === baseIvf)
+      assert(rowsOf(Registry.byName("dd_incremental").run(s2, sfDir)) === baseInc)
+      assert(rowsOf(Registry.byName("gr_pagerank").run(s2, sfDir)) === basePr)
+      // the r15 level-1 sweep artifact: the serving session reads the
+      // converged labels instead of re-running the sweeps, and both
+      // Louvain queries (telemetry included) hash-match the building session
+      assert(rowsOf(Registry.byName("gr_louvain").run(s2, sfDir)) === baseLv)
+      assert(rowsOf(Registry.byName("gr_louvain_ml").run(s2, sfDir)) === baseLvMl)
     } finally {
-      spark.conf.unset(sources.IndexStore.DirConf)
+      MatStore.clear(s2)
+      keys.foreach(k =>
+        s2.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(k)}"))
     }
   }
 
   test("published store + batch APPEND: a fresh session probes base+batch signatures") {
     val store = java.nio.file.Files.createTempDirectory("graft_idx_app").toString
     val key = s"dd_bands:$sfDir"
-    spark.conf.set(sources.IndexStore.DirConf, store)
+    // baseline: the in-session full build (key not published yet)
+    val base = rowsOf(run("dd_incremental"))
+    // the daily-ingest maintenance path: the BASE corpus signatures are
+    // published once; the arriving batch's signatures are APPENDED —
+    // nobody ever rebuilds the base
+    val bands = operators.Dedup.minhashBands(spark, sfDir)
+    val split = operators.Dedup.IncSplit
+    sources.IndexStore.publish(spark, store, key,
+      bands.filter(col("doc_id") < split), "bkey")
+    sources.IndexStore.append(spark, store, key,
+      bands.filter(col("doc_id") >= split))
+    // force sidecar re-registration in the serving session
+    spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
+    val s2 = spark.newSession()
+    s2.conf.set(sources.IndexStore.DirConf, store)
     try {
-      // baseline: the in-session full build (key not published yet)
-      val base = rowsOf(run("dd_incremental"))
-      // the daily-ingest maintenance path: the BASE corpus signatures are
-      // published once; the arriving batch's signatures are APPENDED —
-      // nobody ever rebuilds the base
-      val bands = operators.Dedup.minhashBands(spark, sfDir)
-      val split = operators.Dedup.IncSplit
-      sources.IndexStore.publish(spark, key,
-        bands.filter(col("doc_id") < split), "bkey")
-      sources.IndexStore.append(spark, key,
-        bands.filter(col("doc_id") >= split))
-      // force sidecar re-registration in the serving session
-      spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
-      val s2 = spark.newSession()
-      s2.conf.set(sources.IndexStore.DirConf, store)
-      try {
-        assert(sources.IndexStore.tryServe(s2, key).isDefined,
-          "the appended artifact must serve in a fresh session")
-        // the per-ingest probe shape — batch signatures joined against
-        // base signatures on (band, bkey) — reads the bkey-bucketed
-        // store CO-LOCATED: no exchange on either side
-        val t = sources.IndexStore.tableName(key)
-        val bb = s2.table(t).filter(col("doc_id") >= split)
-          .select(col("doc_id").as("b_id"), col("band"), col("bkey"))
-        val ba = s2.table(t).filter(col("doc_id") < split)
-          .select(col("doc_id").as("base_id"), col("band"), col("bkey"))
-        val probePlan = planOf(bb.join(ba, Seq("band", "bkey")))
-        assert(!probePlan.contains("Exchange hashpartitioning"),
-          s"the served signature probe join must not shuffle:\n$probePlan")
-        val got = rowsOf(Registry.byName("dd_incremental").run(s2, sfDir))
-        assert(got === base,
-          "probing the published-base + appended-batch store must match the in-session build")
-      } finally {
-        MatStore.clear(s2)
-        s2.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
-      }
+      assert(sources.IndexStore.tryServe(s2, key).isDefined,
+        "the appended artifact must serve in a fresh session")
+      // the per-ingest probe shape — batch signatures joined against
+      // base signatures on (band, bkey) — reads the bkey-bucketed
+      // store CO-LOCATED: no exchange on either side
+      val t = sources.IndexStore.tableName(key)
+      val bb = s2.table(t).filter(col("doc_id") >= split)
+        .select(col("doc_id").as("b_id"), col("band"), col("bkey"))
+      val ba = s2.table(t).filter(col("doc_id") < split)
+        .select(col("doc_id").as("base_id"), col("band"), col("bkey"))
+      val probePlan = planOf(bb.join(ba, Seq("band", "bkey")))
+      assert(!probePlan.contains("Exchange hashpartitioning"),
+        s"the served signature probe join must not shuffle:\n$probePlan")
+      val got = rowsOf(Registry.byName("dd_incremental").run(s2, sfDir))
+      assert(got === base,
+        "probing the published-base + appended-batch store must match the in-session build")
     } finally {
-      spark.conf.unset(sources.IndexStore.DirConf)
+      MatStore.clear(s2)
+      s2.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
     }
   }
 
@@ -131,39 +121,34 @@ class DurableIndexSpec extends GraftSuite {
     // one-file-per-bucket WITHOUT losing the bucketed layout.
     val store = java.nio.file.Files.createTempDirectory("graft_idx_cmp").toString
     val key = s"gr_edges_num:$sfDir"
-    spark.conf.set(sources.IndexStore.DirConf, store)
+    val e = operators.GraphOps.edgesNum(spark, sfDir)
+    sources.IndexStore.publish(spark, store, key, e, "src")
+    // two appends (disjoint halves re-appended) → 3 file sets per bucket
+    sources.IndexStore.append(spark, store, key, e.filter(col("src") % 4 === 0))
+    sources.IndexStore.append(spark, store, key, e.filter(col("src") % 4 === 2))
+    spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
+    val s2 = spark.newSession()
+    s2.conf.set(sources.IndexStore.DirConf, store)
     try {
-      val e = operators.GraphOps.edgesNum(spark, sfDir)
-      sources.IndexStore.publish(spark, key, e, "src")
-      // two appends (disjoint halves re-appended) → 3 file sets per bucket
-      sources.IndexStore.append(spark, key, e.filter(col("src") % 4 === 0))
-      sources.IndexStore.append(spark, key, e.filter(col("src") % 4 === 2))
-      spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
-      val s2 = spark.newSession()
-      s2.conf.set(sources.IndexStore.DirConf, store)
-      try {
-        val t = sources.IndexStore.tableName(key)
-        val before = rowsOf(sources.IndexStore.tryServe(s2, key).get)
-        val (nBefore, nAfter) = sources.IndexStore.compact(s2, key)
-        assert(nBefore > 8, s"appends should leave multi-file buckets, saw $nBefore")
-        assert(nAfter === 8, s"compaction must leave exactly one file per bucket, saw $nAfter")
-        // rows bit-identical through the rewrite (duplicates from the
-        // re-appends included — compaction is I/O repair, never dedup)
-        val served = sources.IndexStore.tryServe(s2, key).get
-        assert(rowsOf(served) === before)
-        // the layout is still bucketed: a self-join on the bucket key
-        // plans no exchange
-        val l = s2.table(t).select(col("src"), col("weight").as("wl"))
-        val r = s2.table(t).select(col("src"), col("weight").as("wr"))
-        val plan = planOf(l.join(r, "src"))
-        assert(!plan.contains("Exchange hashpartitioning"),
-          s"compacted table lost its bucketed layout:\n$plan")
-      } finally {
-        MatStore.clear(s2)
-        s2.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
-      }
+      val t = sources.IndexStore.tableName(key)
+      val before = rowsOf(sources.IndexStore.tryServe(s2, key).get)
+      val (nBefore, nAfter) = sources.IndexStore.compact(s2, store, key)
+      assert(nBefore > 8, s"appends should leave multi-file buckets, saw $nBefore")
+      assert(nAfter === 8, s"compaction must leave exactly one file per bucket, saw $nAfter")
+      // rows bit-identical through the rewrite (duplicates from the
+      // re-appends included — compaction is I/O repair, never dedup)
+      val served = sources.IndexStore.tryServe(s2, key).get
+      assert(rowsOf(served) === before)
+      // the layout is still bucketed: a self-join on the bucket key
+      // plans no exchange
+      val l = s2.table(t).select(col("src"), col("weight").as("wl"))
+      val r = s2.table(t).select(col("src"), col("weight").as("wr"))
+      val plan = planOf(l.join(r, "src"))
+      assert(!plan.contains("Exchange hashpartitioning"),
+        s"compacted table lost its bucketed layout:\n$plan")
     } finally {
-      spark.conf.unset(sources.IndexStore.DirConf)
+      MatStore.clear(s2)
+      s2.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
     }
   }
 
@@ -177,7 +162,7 @@ class DurableIndexSpec extends GraftSuite {
     val out = rowsOf(run("ops_store_lifecycle"))
     val fresh = rowsOf(run("dd_minhash_lsh"))
     assert(out === fresh, "lifecycle store candidates must equal the fresh build")
-    val store = operators.Ops.lifecycleStoreDir(spark, sfDir)
+    val store = operators.Ops.workspaceOf(spark, sfDir, "store_lc")
     val root = new org.apache.hadoop.fs.Path(store)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val names = fs.listStatus(root).map(_.getPath.getName).toSeq
@@ -206,7 +191,8 @@ class DurableIndexSpec extends GraftSuite {
     // serves again: with the store deleted between two runs, the second
     // run must recreate it (a memoized result would leave it deleted)
     val first = rowsOf(run("ops_store_lifecycle"))
-    val store = new org.apache.hadoop.fs.Path(operators.Ops.lifecycleStoreDir(spark, sfDir))
+    val store = new org.apache.hadoop.fs.Path(
+      operators.Ops.workspaceOf(spark, sfDir, "store_lc"))
     val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
     assert(fs.delete(store, true), s"the first run left no store at $store")
     val second = rowsOf(run("ops_store_lifecycle"))
@@ -227,7 +213,7 @@ class DurableIndexSpec extends GraftSuite {
     try {
       Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.mode("overwrite")
         .parquet(s"$data/t.parquet")
-      sources.IndexStore.publish(spark, key,
+      sources.IndexStore.publish(spark, store, key,
         spark.read.parquet(s"$data/t.parquet"), "id", sourceDir = Some(data))
       spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
       // unchanged source: serves
@@ -285,6 +271,88 @@ class DurableIndexSpec extends GraftSuite {
     }
   }
 
+  test("serve mode: the ingest arcs leave the session serving its configured store") {
+    // an arc maintains its OWN store, named to every maintenance call;
+    // the shared builds it reads must come from the store the session
+    // serves, and must stay served for every later query
+    val store = java.nio.file.Files.createTempDirectory("graft_idx_arcs").toString
+    val keys = Seq(s"dd_bands:$sfDir", s"gr_edges_num:$sfDir")
+    // published from a training session: this one serves no store yet
+    sources.IndexStore.publish(spark, store, keys(0),
+      operators.Dedup.minhashBands(spark, sfDir), "bkey", sourceDir = Some(sfDir))
+    sources.IndexStore.publish(spark, store, keys(1),
+      operators.GraphOps.edgesNum(spark, sfDir), "src", sourceDir = Some(sfDir))
+    spark.conf.set(sources.IndexStore.DirConf, store)
+    MatStore.clear(spark)
+    try {
+      run("ops_store_lifecycle").collect()
+      run("ops_graph_ingest").collect()
+      assert(spark.conf.get(sources.IndexStore.DirConf) === store,
+        "an ingest arc changed the session's store setting")
+      def readsStore(df: org.apache.spark.sql.DataFrame, key: String): Boolean =
+        df.inputFiles.nonEmpty && df.inputFiles.forall(f =>
+          f.contains(s"$store/${sources.IndexStore.tableName(key)}/"))
+      assert(readsStore(operators.Dedup.minhashBands(spark, sfDir), keys(0)),
+        "the signature memo was built in-session instead of served")
+      assert(readsStore(operators.GraphOps.edgesNum(spark, sfDir), keys(1)),
+        "the edge memo was built in-session instead of served")
+    } finally {
+      MatStore.clear(spark)
+      spark.conf.unset(sources.IndexStore.DirConf)
+      keys.foreach(k =>
+        spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(k)}"))
+    }
+  }
+
+  test("maintenance diagnostics: serve, append and compact say whether a key is unpublished or REFUSED") {
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("graft_idx_diag").toString
+    val data = java.nio.file.Files.createTempDirectory("graft_idx_diag_data").toString
+    val key = s"diag_toy:$data"
+    val batch = Seq((3L, "c")).toDF("id", "v")
+    try {
+      def why(action: => Unit): String =
+        intercept[IllegalStateException](action).getMessage
+      for (msg <- Seq(why(sources.IndexStore.serve(spark, store, key)),
+          why(sources.IndexStore.append(spark, store, key, batch))))
+        assert(msg.contains(s"not published under $store"), msg)
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.mode("overwrite")
+        .parquet(s"$data/t.parquet")
+      sources.IndexStore.publish(spark, store, key,
+        spark.read.parquet(s"$data/t.parquet"), "id", sourceDir = Some(data))
+      assert(sources.IndexStore.serve(spark, store, key).count() === 2L)
+      // a file the artifact was trained on is rewritten in place: the
+      // key is published but stale, a different operator mistake
+      Seq((1L, "REWRITTEN"), (2L, "b")).toDF("id", "v").write.mode("overwrite")
+        .parquet(s"$data/t.parquet")
+      for (msg <- Seq(why(sources.IndexStore.serve(spark, store, key)),
+          why(sources.IndexStore.append(spark, store, key, batch)),
+          why(sources.IndexStore.compact(spark, store, key)))) {
+        assert(msg.contains("REFUSED") && msg.contains("STALE"), msg)
+        assert(!msg.contains("not published"), msg)
+      }
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
+    }
+  }
+
+  test("serve reads the store it names when another store holds the same key") {
+    import spark.implicits._
+    val a = java.nio.file.Files.createTempDirectory("graft_idx_alias_a").toString
+    val b = java.nio.file.Files.createTempDirectory("graft_idx_alias_b").toString
+    val key = "alias_toy"
+    try {
+      sources.IndexStore.publish(spark, a, key, Seq((1L, "a")).toDF("id", "v"), "id")
+      // the later publish registers the session's table for the key at b
+      sources.IndexStore.publish(spark, b, key,
+        Seq((2L, "b"), (3L, "b")).toDF("id", "v"), "id")
+      assert(rowsOf(sources.IndexStore.serve(spark, a, key)) === Seq("[1,a]"))
+      assert(rowsOf(sources.IndexStore.serve(spark, b, key)) === Seq("[2,b]", "[3,b]"))
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
+    }
+  }
+
   test("graph ingest gate: appended edge store equals the fresh build for pagerank AND communities") {
     // r16 (r15 verdict item 5): the daily edge-batch arc. The oracled
     // gate (ops_graph_ingest) proves publish→append→serve→PageRank
@@ -298,34 +366,29 @@ class DurableIndexSpec extends GraftSuite {
     assert(gatePr === freshPr,
       "pagerank over the appended store must equal the fresh build")
     // the served base+batch relation feeds label propagation too
-    val store = operators.Ops.graphIngestStoreDir(spark, sfDir)
-    spark.conf.set(sources.IndexStore.DirConf, store)
-    try {
-      val key = s"gi_edges:$sfDir"
-      val served = sources.IndexStore.tryServe(spark, key).get
-      val cm = operators.GraphOps.communities(
-          operators.GraphOps.iterRelation(operators.GraphOps.undirected(served)))
-        .select(operators.GraphOps.fmtNode(col("node")).as("node"),
-          operators.GraphOps.fmtNode(col("community")).as("community"))
-        .orderBy("node")
-      assert(rowsOf(cm) === freshCm,
-        "communities over the appended store must equal the fresh build")
-      // the appended store kept its bucketed layout: a self-join on the
-      // bucket key plans no exchange
-      val t = sources.IndexStore.tableName(key)
-      val l = spark.table(t).select(col("src"), col("weight").as("wl"))
-      val r = spark.table(t).select(col("src"), col("weight").as("wr"))
-      val plan = planOf(l.join(r, "src"))
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"appended edge store lost its bucketed layout:\n$plan")
-      // base + batch really are both in the store (the append landed)
-      val srcs = served.select(col("src")).distinct().collect()
-        .map(_.getLong(0))
-      assert(srcs.exists(_ % 8 == 0) && srcs.exists(_ % 8 != 0),
-        "the served relation must carry base AND appended batch edges")
-    } finally {
-      spark.conf.unset(sources.IndexStore.DirConf)
-    }
+    val store = operators.Ops.workspaceOf(spark, sfDir, "graph_ing")
+    val key = s"gi_edges:$sfDir"
+    val served = sources.IndexStore.serve(spark, store, key)
+    val cm = operators.GraphOps.communities(
+        operators.GraphOps.iterRelation(operators.GraphOps.undirected(served)))
+      .select(operators.GraphOps.fmtNode(col("node")).as("node"),
+        operators.GraphOps.fmtNode(col("community")).as("community"))
+      .orderBy("node")
+    assert(rowsOf(cm) === freshCm,
+      "communities over the appended store must equal the fresh build")
+    // the appended store kept its bucketed layout: a self-join on the
+    // bucket key plans no exchange
+    val t = sources.IndexStore.tableName(key)
+    val l = spark.table(t).select(col("src"), col("weight").as("wl"))
+    val r = spark.table(t).select(col("src"), col("weight").as("wr"))
+    val plan = planOf(l.join(r, "src"))
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"appended edge store lost its bucketed layout:\n$plan")
+    // base + batch really are both in the store (the append landed)
+    val srcs = served.select(col("src")).distinct().collect()
+      .map(_.getLong(0))
+    assert(srcs.exists(_ % 8 == 0) && srcs.exists(_ % 8 != 0),
+      "the served relation must carry base AND appended batch edges")
   }
 
   test("append: a checkpoint-backed batch must pass sourceFiles explicitly; the snapshot then covers the appended day") {
@@ -338,7 +401,7 @@ class DurableIndexSpec extends GraftSuite {
     try {
       Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.mode("overwrite")
         .parquet(s"$data/day0.parquet")
-      sources.IndexStore.publish(spark, key,
+      sources.IndexStore.publish(spark, store, key,
         spark.read.parquet(s"$data/day0.parquet"), "id", sourceDir = Some(data))
       // day 1 arrives, but the batch frame is CHECKPOINT-backed (the
       // MatStore .ckpt shape — e.g. the bands relation the lifecycle
@@ -352,20 +415,20 @@ class DurableIndexSpec extends GraftSuite {
       batch.count() // materialize: inputFiles of a LogicalRDD is empty
       assert(batch.inputFiles.isEmpty, "precondition: ckpt frames report no inputFiles")
       val e = intercept[IllegalStateException] {
-        sources.IndexStore.append(spark, key, batch)
+        sources.IndexStore.append(spark, store, key, batch)
       }
       assert(e.getMessage.contains("sourceFiles"))
       // a TYPO'D sourceFiles entry (resolves under the sourceDir but
       // matches no visible file) must also refuse — it would land the
       // batch with zero staleness coverage (r16 review)
       val e2 = intercept[IllegalStateException] {
-        sources.IndexStore.append(spark, key, batch,
+        sources.IndexStore.append(spark, store, key, batch,
           sourceFiles = Seq("day1.parqet"))
       }
       assert(e2.getMessage.contains("NO visible parquet file"))
       // with the batch's source paths passed explicitly, the append
       // lands AND the snapshot covers the new day
-      sources.IndexStore.append(spark, key, batch,
+      sources.IndexStore.append(spark, store, key, batch,
         sourceFiles = Seq("day1.parquet"))
       spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
       assert(sources.IndexStore.tryServe(spark, key).get.count() === 3)
@@ -386,9 +449,8 @@ class DurableIndexSpec extends GraftSuite {
     import spark.implicits._
     val store = java.nio.file.Files.createTempDirectory("graft_idx_scope").toString
     val key = s"scope_toy:$store"
-    spark.conf.set(sources.IndexStore.DirConf, store)
     try {
-      sources.IndexStore.publish(spark, key,
+      sources.IndexStore.publish(spark, store, key,
         Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), "id")
       // an UNRELATED memo (no serve in its build) and a store-DERIVED
       // one (its build reads the served table)
@@ -400,7 +462,7 @@ class DurableIndexSpec extends GraftSuite {
       }
       def derived = MatStore.of(spark, s"scope_derived") {
         derivedBuilds += 1
-        sources.IndexStore.tryServe(spark, key).get.filter(col("id") > 0)
+        sources.IndexStore.serve(spark, store, key).filter(col("id") > 0)
       }
       unrelated.count(); derived.count()
       assert(unrelatedBuilds === 1 && derivedBuilds === 1)
@@ -412,32 +474,28 @@ class DurableIndexSpec extends GraftSuite {
       val store2 = java.nio.file.Files.createTempDirectory("graft_idx_scope2").toString
       val key2 = s"scope_toy2:$store2"
       var otherStoreBuilds = 0
-      spark.conf.set(sources.IndexStore.DirConf, store2)
-      sources.IndexStore.publish(spark, key2,
+      sources.IndexStore.publish(spark, store2, key2,
         Seq((7L, 70L)).toDF("id", "v"), "id")
       def otherStore = MatStore.of(spark, "scope_other_store") {
         otherStoreBuilds += 1
-        sources.IndexStore.tryServe(spark, key2).get.filter(col("id") > 0)
+        sources.IndexStore.serve(spark, store2, key2).filter(col("id") > 0)
       }
       otherStore.count()
       assert(otherStoreBuilds === 1)
-      spark.conf.set(sources.IndexStore.DirConf, store)
       // compact runs mid-session (the lifecycle gate's shape): scoped
       // invalidation (r15 ADVICE) must drop ONLY the derived memo
-      sources.IndexStore.compact(spark, key)
+      sources.IndexStore.compact(spark, store, key)
       unrelated.count(); derived.count()
       assert(unrelatedBuilds === 1,
         "compact must not discard unrelated warm builds")
       assert(derivedBuilds === 2,
         "compact must invalidate memos whose plans read the swapped store files")
-      spark.conf.set(sources.IndexStore.DirConf, store2)
       otherStore.count()
       assert(otherStoreBuilds === 1,
         "compacting one store must not invalidate memos served from another")
       spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key2)}")
     } finally {
       MatStore.clear(spark)
-      spark.conf.unset(sources.IndexStore.DirConf)
       spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
     }
   }
@@ -449,23 +507,22 @@ class DurableIndexSpec extends GraftSuite {
     spark.conf.set(sources.IndexStore.DirConf, store)
     try {
       assert(sources.IndexStore.metaVersion(spark, key).isEmpty)
-      sources.IndexStore.publish(spark, key, Seq((1L, "a")).toDF("id", "v"), "id")
+      sources.IndexStore.publish(spark, store, key, Seq((1L, "a")).toDF("id", "v"), "id")
       val v1 = sources.IndexStore.metaVersion(spark, key)
       assert(v1.nonEmpty)
       // append and compact must each write a FRESH token: cached
       // consumers (the streaming enrichment leg) revalidate on it, and
       // an mtime comparison would miss a maintenance action landing in
       // the same filesystem-timestamp second (r15 ADVICE)
-      sources.IndexStore.append(spark, key, Seq((2L, "b")).toDF("id", "v"))
+      sources.IndexStore.append(spark, store, key, Seq((2L, "b")).toDF("id", "v"))
       val v2 = sources.IndexStore.metaVersion(spark, key)
       assert(v2.nonEmpty && v2 != v1, "append must bump the version")
-      sources.IndexStore.compact(spark, key)
+      sources.IndexStore.compact(spark, store, key)
       val v3 = sources.IndexStore.metaVersion(spark, key)
       assert(v3.nonEmpty && v3 != v2, "compact must bump the version")
-      // republish in a maintenance session (conf unset) then swap back:
       // same-second republish still reads as changed
       spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
-      sources.IndexStore.publish(spark, key, Seq((9L, "z")).toDF("id", "v"), "id")
+      sources.IndexStore.publish(spark, store, key, Seq((9L, "z")).toDF("id", "v"), "id")
       val v4 = sources.IndexStore.metaVersion(spark, key)
       assert(v4.nonEmpty && v4 != v3, "republish must bump the version")
     } finally {
@@ -478,30 +535,25 @@ class DurableIndexSpec extends GraftSuite {
   test("publish refuses a self-overwrite from a serving session") {
     val store = java.nio.file.Files.createTempDirectory("graft_idx_guard").toString
     val key = s"gr_edges_num:$sfDir"
-    spark.conf.set(sources.IndexStore.DirConf, store)
+    sources.IndexStore.publish(spark, store, key,
+      operators.GraphOps.edgesNum(spark, sfDir), "src")
+    spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
+    // a SERVING session re-publishing the key would overwrite the
+    // table from a plan that reads it — must refuse loudly, not
+    // corrupt the store
+    val s3 = spark.newSession()
+    s3.conf.set(sources.IndexStore.DirConf, store)
     try {
-      sources.IndexStore.publish(spark, key,
-        operators.GraphOps.edgesNum(spark, sfDir), "src")
-      spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
-      // a SERVING session re-publishing the key would overwrite the
-      // table from a plan that reads it — must refuse loudly, not
-      // corrupt the store
-      val s3 = spark.newSession()
-      s3.conf.set(sources.IndexStore.DirConf, store)
-      try {
-        val served = sources.IndexStore.tryServe(s3, key).get
-        val e = intercept[IllegalStateException] {
-          sources.IndexStore.publish(s3, key, served, "src")
-        }
-        assert(e.getMessage.contains("refusing to overwrite"))
-        // the store survived the refusal intact
-        assert(sources.IndexStore.tryServe(s3, key).get.count() > 0)
-      } finally {
-        MatStore.clear(s3)
-        s3.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
+      val served = sources.IndexStore.tryServe(s3, key).get
+      val e = intercept[IllegalStateException] {
+        sources.IndexStore.publish(s3, store, key, served, "src")
       }
+      assert(e.getMessage.contains("refusing to overwrite"))
+      // the store survived the refusal intact
+      assert(sources.IndexStore.tryServe(s3, key).get.count() > 0)
     } finally {
-      spark.conf.unset(sources.IndexStore.DirConf)
+      MatStore.clear(s3)
+      s3.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
     }
   }
 
@@ -547,71 +599,65 @@ class DurableIndexSpec extends GraftSuite {
     // and an untested dead branch in a composed gate is where a latent
     // wiring bug hides): serve republishes the day-0 artifact under the
     // serving key byte-equal; retrain serves the full refit
-    locally {
-      val store = java.nio.file.Files.createTempDirectory("graft_daykm").toString
-      val prevConf = spark.conf.get(sources.IndexStore.DirConf, null)
-      spark.conf.set(sources.IndexStore.DirConf, store)
-      val keys = Seq("spec_day_km0", "spec_day_kmaf0", "spec_day_km_serve",
-        "spec_day_km_rt", "spec_day_kmaf_rt")
-      try {
-        val emb = (rows(0 until 40, i => vec(1.0 + i % 3, 0.1 * (i % 5)), 1) ++
-          rows(40 until 60, i => vec(0.2, 1.0 + i % 2), 1))
-          .toDF("vec_id", "label", "embedding")
-        val base = emb.filter($"vec_id" < 40)
-        val arrivals = emb.filter($"vec_id" >= 40)
-        sources.IndexStore.publish(spark, "spec_day_km0",
-          Similarity.kmeansFitOver(base), "cell")
-        val cents0 = sources.IndexStore.tryServe(spark, "spec_day_km0").get
-        sources.IndexStore.publish(spark, "spec_day_kmaf0",
-          Similarity.kmAssignRowsOf(base, cents0), "cell")
-        def cents(df: org.apache.spark.sql.DataFrame) = df.collect()
-          .map(r => r.getAs[Long]("cell") -> r.getAs[Seq[Double]]("c"))
-          .sortBy(_._1).toSeq
-        def assignOf(df: org.apache.spark.sql.DataFrame) = df.collect()
-          .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cell"))
-          .sortBy(_._1).toSeq
-        def probeOf(assign: org.apache.spark.sql.DataFrame,
-            cs: org.apache.spark.sql.DataFrame) =
-          Similarity.ivfProbeOver(emb, assign, cs).collect()
-            .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank"),
-              r.getAs[Long]("vec_id"), r.getAs[Double]("cosine"))).toSeq
-        val (served0, assign0) = Ops.dayKmAction(spark, retrain = false,
-          emb, arrivals, "spec_day_km0", "spec_day_km_serve",
-          "spec_day_kmaf0", "spec_day_kmaf_rt")
-        assert(cents(served0) === cents(Similarity.kmeansFitOver(base)),
-          "serve must republish the day-0 centroids unchanged")
-        // the serve branch must APPEND the arrivals under the frozen
-        // centroids (pre-r19 it dropped the day's vectors): the served
-        // assignment equals a full rebuild with frozen centroids...
-        assert(assignOf(assign0) ===
-          assignOf(Similarity.kmAssignRowsOf(emb, served0)),
-          "serve must land base + arrivals in the assignment store")
-        // ...and the ANN probe over the appended store is row-identical
-        // to the probe over that rebuild (the sim_ivf_append equality,
-        // driven through the composed day action)
-        assert(probeOf(assign0, served0) ===
-          probeOf(Similarity.kmAssignRowsOf(emb, served0), served0),
-          "appended-store probe must equal the frozen-centroid rebuild")
-        val (served1, assign1) = Ops.dayKmAction(spark, retrain = true,
-          emb, arrivals, "spec_day_km0", "spec_day_km_rt",
-          "spec_day_kmaf0", "spec_day_kmaf_rt")
-        assert(cents(served1) === cents(Similarity.kmeansFitOver(emb)),
-          "retrain must serve the full refit")
-        assert(cents(served1) != cents(served0),
-          "the planted batch must move the centroids")
-        assert(assignOf(assign1) ===
-          assignOf(Similarity.kmAssignRowsOf(emb, served1)),
-          "retrain must publish the full reassignment")
-        // blue/green: the retrain wrote its OWN assignment table; the
-        // day-0+append store is intact for rollback
-        assert(assignOf(sources.IndexStore.tryServe(spark, "spec_day_kmaf0").get)
-          === assignOf(assign0))
-      } finally {
-        keys.foreach(k =>
-          spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(k)}"))
-        if (prevConf == null) spark.conf.unset(sources.IndexStore.DirConf)
-        else spark.conf.set(sources.IndexStore.DirConf, prevConf)
-      }
+    val store = java.nio.file.Files.createTempDirectory("graft_daykm").toString
+    val keys = Seq("spec_day_km0", "spec_day_kmaf0", "spec_day_km_serve",
+      "spec_day_km_rt", "spec_day_kmaf_rt")
+    try {
+      val emb = (rows(0 until 40, i => vec(1.0 + i % 3, 0.1 * (i % 5)), 1) ++
+        rows(40 until 60, i => vec(0.2, 1.0 + i % 2), 1))
+        .toDF("vec_id", "label", "embedding")
+      val base = emb.filter($"vec_id" < 40)
+      val arrivals = emb.filter($"vec_id" >= 40)
+      sources.IndexStore.publish(spark, store, "spec_day_km0",
+        Similarity.kmeansFitOver(base), "cell")
+      val cents0 = sources.IndexStore.serve(spark, store, "spec_day_km0")
+      sources.IndexStore.publish(spark, store, "spec_day_kmaf0",
+        Similarity.kmAssignRowsOf(base, cents0), "cell")
+      def cents(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => r.getAs[Long]("cell") -> r.getAs[Seq[Double]]("c"))
+        .sortBy(_._1).toSeq
+      def assignOf(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cell"))
+        .sortBy(_._1).toSeq
+      def probeOf(assign: org.apache.spark.sql.DataFrame,
+          cs: org.apache.spark.sql.DataFrame) =
+        Similarity.ivfProbeOver(emb, assign, cs).collect()
+          .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank"),
+            r.getAs[Long]("vec_id"), r.getAs[Double]("cosine"))).toSeq
+      val (served0, assign0) = Ops.dayKmAction(spark, store, retrain = false,
+        emb, arrivals, "spec_day_km0", "spec_day_km_serve",
+        "spec_day_kmaf0", "spec_day_kmaf_rt")
+      assert(cents(served0) === cents(Similarity.kmeansFitOver(base)),
+        "serve must republish the day-0 centroids unchanged")
+      // the serve branch must APPEND the arrivals under the frozen
+      // centroids (pre-r19 it dropped the day's vectors): the served
+      // assignment equals a full rebuild with frozen centroids...
+      assert(assignOf(assign0) ===
+        assignOf(Similarity.kmAssignRowsOf(emb, served0)),
+        "serve must land base + arrivals in the assignment store")
+      // ...and the ANN probe over the appended store is row-identical
+      // to the probe over that rebuild (the sim_ivf_append equality,
+      // driven through the composed day action)
+      assert(probeOf(assign0, served0) ===
+        probeOf(Similarity.kmAssignRowsOf(emb, served0), served0),
+        "appended-store probe must equal the frozen-centroid rebuild")
+      val (served1, assign1) = Ops.dayKmAction(spark, store, retrain = true,
+        emb, arrivals, "spec_day_km0", "spec_day_km_rt",
+        "spec_day_kmaf0", "spec_day_kmaf_rt")
+      assert(cents(served1) === cents(Similarity.kmeansFitOver(emb)),
+        "retrain must serve the full refit")
+      assert(cents(served1) != cents(served0),
+        "the planted batch must move the centroids")
+      assert(assignOf(assign1) ===
+        assignOf(Similarity.kmAssignRowsOf(emb, served1)),
+        "retrain must publish the full reassignment")
+      // blue/green: the retrain wrote its OWN assignment table; the
+      // day-0+append store is intact for rollback
+      assert(assignOf(sources.IndexStore.serve(spark, store, "spec_day_kmaf0"))
+        === assignOf(assign0))
+    } finally {
+      keys.foreach(k =>
+        spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(k)}"))
     }
     // corpus gate: every label drifts on this corpus (measured cos ~ 0,
     // the synthetic batch is uncorrelated with the base) -> overall
@@ -635,7 +681,7 @@ class DurableIndexSpec extends GraftSuite {
     assert(byComp("decisions").getAs[Long]("n_rows") >= 2L)
     // ---- file-count / store-size telemetry: compaction (days 3 and 6)
     // and the day-7 blue/green purge hold the layout flat
-    val store = Ops.opsWeekStoreDir(spark, sfDir)
+    val store = s"${Ops.workspaceOf(spark, sfDir, "ops_week")}/store"
     def dataFiles(key: String): Seq[java.io.File] = {
       val d = new java.io.File(s"$store/${sources.IndexStore.tableName(key)}")
       assert(d.isDirectory, s"store dir missing for $key")

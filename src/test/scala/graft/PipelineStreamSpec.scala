@@ -194,7 +194,7 @@ class PipelineStreamSpec extends GraftSuite {
     try {
       val dim = Seq((1L, "free"), (2L, "pro"), (9L, "unseen"))
         .toDF("user_id", "tier")
-      sources.IndexStore.publish(spark, key, dim, "user_id", buckets = 4)
+      sources.IndexStore.publish(spark, store, key, dim, "user_id", buckets = 4)
       EnrichedRows.rows.clear()
       val mem = MemoryStream[Array[Byte]]
       val q = PipelineStream.enriched(mem.toDF().toDF("value"), key,

@@ -606,7 +606,7 @@ class SourcesSpec extends GraftSuite {
     // the quiet-day property: snapshotting the UNCHANGED corpus again
     // schedules nothing — a daily pipeline that reprocesses anything on
     // a no-op day is broken at 100 TB
-    val corpus = operators.Ops.incGateCorpusDir(spark, sfDir)
+    val corpus = s"${operators.Ops.workspaceOf(spark, sfDir, "inc_gate")}/corpus"
     val snapA = CorpusIO.manifest(spark, corpus)
     val snapB = CorpusIO.manifest(spark, corpus)
     val statuses = CorpusIO.manifestDiff(snapA, snapB).collect()
@@ -678,6 +678,12 @@ class SourcesSpec extends GraftSuite {
     assert(boom.getMessage === "landing failed")
     assert(sec < 10, f"inParallel returned after $sec%.1f s: the sibling's job ran to its end")
     assert(boom.getSuppressed.length === 1, "the cancelled sibling's failure is attached")
+    // the status store is fed by Spark's asynchronous listener bus, so
+    // the cancelled job's end can land just after the call returns:
+    // allow it a few seconds, far less than the job's natural 30 s
+    val settle = System.nanoTime() + 5000000000L
+    while (sc.statusTracker.getActiveJobIds().nonEmpty && System.nanoTime() < settle)
+      Thread.sleep(20)
     assert(sc.statusTracker.getActiveJobIds().isEmpty, "no job of the call outlives it")
   }
 }
