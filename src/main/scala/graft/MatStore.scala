@@ -19,9 +19,20 @@ import graft.Ckpt._
   * (`dd_lsh_cand`) read the bands, so dd_minhash_lsh, dd_incremental,
   * dd_lsh_tuning, dd_est_quality, ops_incremental_gate and
   * ops_store_lifecycle share it, and dd_ngram_jaccard and dd_clusters
-  * reuse the candidates; sim_recall reuses sim_lsh_topk's build. Keyed on
-  * the session so a stopped session's plans are never reused (same
-  * discipline as [[Tables]]); `spark.catalog.clearCache()`
+  * reuse the candidates; sim_recall reuses sim_lsh_topk's build. The BPE
+  * vocabulary (`tx_bpe_vf`) feeds the learner of tx_bpe_encode,
+  * etl_pack_bpe and tx_bpe_tuning, and the per-doc subword mass
+  * (`tx_bpe_mass`) is shared by the first two.
+  *
+  * Grain rule: a memo holds document, vocabulary or model rows, never a
+  * per-token stream. A token stream is several times the corpus in rows;
+  * a consumer re-derives it from the scan, as the oracle does, and
+  * memoizes only what it aggregates to. The embedding explosions
+  * `sim_expl` and `sim_pq_expl` (vector × dimension rows) are the open
+  * exceptions.
+  *
+  * Keyed on the session so a stopped session's plans are never reused
+  * (same discipline as [[Tables]]); `spark.catalog.clearCache()`
   * does NOT drop these blocks — they are checkpoint RDDs, freed by the
   * ContextCleaner when the store entry (and thus the plan) is released.
   */

@@ -284,15 +284,50 @@ object Ops {
     s"${System.getProperty("java.io.tmpdir")}/graft_${arc}_" +
       s"${Integer.toHexString(System.identityHashCode(s))}_${IndexStore.md5Hex(dir).take(8)}"
 
-  /** [[workspaceOf]], wiped: every run of an arc starts from nothing. */
+  /** [[workspaceOf]], wiped: every run of an arc starts from nothing.
+    * The root is registered with the session's context, so
+    * [[releaseWorkspaces]] removes it when that context stops.
+    */
   private[operators] def workspace(s: org.apache.spark.sql.SparkSession,
       dir: String, arc: String): String = {
     val root = workspaceOf(s, dir, arc)
+    workspaceRoots(s.sparkContext).add(root)
     val p = new org.apache.hadoop.fs.Path(root)
     val fs = p.getFileSystem(s.sessionState.newHadoopConf())
     if (fs.exists(p)) fs.delete(p, true)
     root
   }
+
+  /** Workspace roots created per context. An entry installs ONE
+    * `onApplicationEnd` listener that releases the context's roots and
+    * drops the entry, so no root outlives the context that made it.
+    */
+  private val roots = new java.util.concurrent.ConcurrentHashMap[
+    org.apache.spark.SparkContext, java.util.Set[String]]()
+
+  private def workspaceRoots(sc: org.apache.spark.SparkContext): java.util.Set[String] =
+    roots.computeIfAbsent(sc, { _ =>
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+          releaseWorkspaces(sc)
+          roots.remove(sc)
+        }
+      })
+      java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    })
+
+  /** Delete every workspace root `sc`'s sessions created. A later arc
+    * run registers its root again.
+    */
+  private[graft] def releaseWorkspaces(sc: org.apache.spark.SparkContext): Unit =
+    Option(roots.get(sc)).foreach { rs =>
+      rs.forEach { root =>
+        val p = new org.apache.hadoop.fs.Path(root)
+        p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+        rs.remove(root)
+      }
+    }
 
   /** End-to-end incremental-ingest gate — the 100 TB daily-operations
     * story proved as ONE oracled query (r13 verdict item 2): a day-0

@@ -1100,52 +1100,44 @@ object TextAnalysis {
 
   /** Learn up to `rounds` merges (fewer when the vocabulary runs out of
     * adjacent pairs: every later round would be a no-op, as in the
-    * oracle's LEFT JOIN of an empty `bbst`). The state is a word-
-    * partitioned RDD of (word, freq, syms); each round is ONE small job —
-    * the pair counts (every adjacent position, × freq) in a
-    * `reduceByKey`, folded to the single best (cnt, s1, s2) the driver
-    * receives — then the state is merged with [[bpeMerge]] and persisted;
-    * the previous state is unpersisted once the next round's job has
-    * materialized its successor. No round goes through Catalyst, so
-    * a round pays only its data work; the driver holds one 3-tuple per
-    * round at any vocabulary size, and no block outlives the call.
+    * oracle's LEFT JOIN of an empty `bbst`). The vocabulary is collected
+    * ONCE as (word, freq) rows — one job over the vocabulary memo, the
+    * `CountVectorizer`/`Word2Vec` split: the cluster counts words, the
+    * driver keeps only the vocabulary, and `spark.driver.maxResultSize`
+    * fails an oversized one loudly. Every round then runs in driver
+    * memory: the adjacent-pair counts (every position, × freq), the
+    * best pair by [[bpePick]], and its application by [[bpeMerge]]. The
+    * round count is a declared constant, so recounting every pair per
+    * round costs `rounds` passes over the vocabulary and no job.
     */
   private def bpeLearn(vf: org.apache.spark.sql.DataFrame,
       rounds: Int): Seq[(String, String)] = {
     val s = vf.sparkSession
     import s.implicits._
+    val words = vf.select($"word", $"freq".cast("long")).as[(String, Long)]
+      .collect().filter(_._1 != null)
+      .map { case (w, f) => (f, bpeSymbols(w)) }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var state = vf.select($"word", $"freq".cast("long")).as[(String, Long)].rdd
-      .map { case (w, f) => (w, f, bpeSymbols(w)) }
-      .persist()
-    var stale: Option[org.apache.spark.rdd.RDD[(String, Long, Array[String])]] = None
-    try {
-      var more = rounds > 0
-      while (more) {
-        val best = state
-          .flatMap { case (_, f, syms) =>
-            if (syms == null) Iterator.empty
-            else (0 until syms.length - 1).iterator.map(i => ((syms(i), syms(i + 1)), f))
-          }
-          .reduceByKey(_ + _)
-          .map { case ((a, b), c) => Option((c, a, b)) }
-          .fold(None)(bpePick)
-        stale.foreach(_.unpersist(blocking = false))
-        stale = None
-        best match {
-          case Some((_, a, b)) =>
-            merges += a -> b
-            more = merges.size < rounds
-            if (more) {
-              stale = Some(state)
-              state = state.map { case (w, f, syms) => (w, f, bpeMerge(syms, a, b)) }
-                .persist()
-            }
-          case None => more = false
+    var more = rounds > 0
+    while (more) {
+      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      words.foreach { case (f, syms) =>
+        var i = 0
+        while (i + 1 < syms.length) {
+          val k = (syms(i), syms(i + 1))
+          counts(k) = counts.getOrElse(k, 0L) + f
+          i += 1
         }
       }
-    } finally {
-      (state +: stale.toSeq).foreach(_.unpersist(blocking = false))
+      counts.iterator.map { case ((a, b), c) => Option((c, a, b)) }
+        .foldLeft(Option.empty[(Long, String, String)])(bpePick) match {
+        case Some((_, a, b)) =>
+          merges += a -> b
+          more = merges.size < rounds
+          if (more)
+            words.mapInPlace { case (f, syms) => (f, bpeMerge(syms, a, b)) }
+        case None => more = false
+      }
     }
     merges.toSeq
   }
@@ -1168,7 +1160,8 @@ object TextAnalysis {
 
   /** The merge chain on ARRAY state: (word, freq, syms array) at each
     * requested tap round. ONE learner run to `taps.max`
-    * ([[bpeLearn]]); each tap replays that run's merge prefix
+    * ([[bpeLearn]]: one vocabulary collect, then driver rounds); each
+    * tap replays that run's merge prefix
     * ([[bpeReplay]]) — merges are strictly incremental, so round 2's
     * segmentation is a prefix state of round 32's chain and refitting
     * per depth would re-pay every shared round.
@@ -1192,23 +1185,6 @@ object TextAnalysis {
     }
   }
 
-  /** Deterministic corpus-learned BPE (r17 verdict item 3): every token
-    * economy in the engine priced sequences in whitespace tokens;
-    * real pipelines pack/mix/sample in SUBWORD tokens. Learn
-    * [[BpeMerges]] merges from corpus pair counts (exact integers, ties
-    * by lexicographic pair — fully deterministic, so the DuckDB oracle
-    * replays the identical merge sequence through [[bpeRoundSql]]'s
-    * statically-unrolled rounds), segment the vocabulary, and report
-    * per doc the whitespace token count, the subword token count under
-    * the learned merges, and their ratio — the corpus-calibrated twin
-    * of `tx_token_count`'s chars/4 `bpe_est`.
-    *
-    * No end-of-word marker: merges act within words (token boundaries
-    * are already whitespace), declared rather than modeled. Pair counts
-    * count every adjacent position (runs of 'aa' in "aaa" count twice)
-    * — the ranking statistic, not the merge result, which applies
-    * greedily left-to-right as in the reference BPE.
-    */
   /** Oracle CTE chain `bdt`..`bag` — doc tokens, vocab, the
     * [[BpeMerges]] unrolled merge rounds, per-word subword counts, and
     * the per-doc mass aggregate bag(doc_id, n_tokens, n_subwords).
@@ -1233,24 +1209,25 @@ object TextAnalysis {
        |  FROM bdt t JOIN bns n ON n.word = t.w GROUP BY t.doc_id)""".stripMargin
   }
 
-  /** Per-doc BPE token mass (doc_id, n_tokens, n_subwords; zero for
-    * token-less docs) — MatStore-memoized so `tx_bpe_encode` and
-    * `etl_pack_bpe` share ONE learner run per session (the sharedUnd
-    * discipline).
-    */
-  /** Corpus (doc_id, w) token stream and its (word, freq) vocabulary —
-    * MatStore-shared so the encode report, the packing and the depth
-    * panel tokenize the corpus ONCE per session.
+  /** Corpus (doc_id, w) token stream — a PLAN over the `documents`
+    * scan, never a memo: it is the one relation at token grain, several
+    * times the corpus in rows, so [[bpeVf]] and [[bpeDocMass]] each
+    * re-derive it from the scan (as the oracle reads `bdt` twice) and
+    * the session holds only their vocabulary- and document-grain
+    * results.
     */
   private def bpeToks(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    graft.MatStore.of(s, s"tx_bpe_toks:$dir") {
-      import s.implicits._
-      Tables.documents(s, dir)
-        .select($"doc_id", explode(split($"text", " ")).as("w"))
-        .filter($"w" =!= "")
-    }
+      dir: String): org.apache.spark.sql.DataFrame = {
+    import s.implicits._
+    Tables.documents(s, dir)
+      .select($"doc_id", explode(split($"text", " ")).as("w"))
+      .filter($"w" =!= "")
+  }
 
+  /** The corpus (word, freq) vocabulary — MatStore-shared so the encode
+    * report, the packing and the depth panel count the corpus ONCE per
+    * session; the learner collects it and the taps replay over it.
+    */
   private def bpeVf(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     graft.MatStore.of(s, s"tx_bpe_vf:$dir") {
@@ -1259,6 +1236,12 @@ object TextAnalysis {
         .select($"w".as("word"), $"freq")
     }
 
+  /** Per-doc BPE token mass (doc_id, n_tokens, n_subwords; zero for
+    * token-less docs) — MatStore-memoized so `tx_bpe_encode` and
+    * `etl_pack_bpe` share ONE learner run per session (the sharedUnd
+    * discipline). The token stream meets the learned segmentation in
+    * one token-keyed join against the per-word symbol counts.
+    */
   private[operators] def bpeDocMass(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     graft.MatStore.of(s, s"tx_bpe_mass:$dir") {
@@ -1279,6 +1262,23 @@ object TextAnalysis {
           coalesce($"n_subwords", lit(0L)).as("n_subwords"))
     }
 
+  /** Deterministic corpus-learned BPE (r17 verdict item 3): every token
+    * economy in the engine priced sequences in whitespace tokens;
+    * real pipelines pack/mix/sample in SUBWORD tokens. Learn
+    * [[BpeMerges]] merges from corpus pair counts (exact integers, ties
+    * by lexicographic pair — fully deterministic, so the DuckDB oracle
+    * replays the identical merge sequence through [[bpeRoundSql]]'s
+    * statically-unrolled rounds), segment the vocabulary, and report
+    * per doc the whitespace token count, the subword token count under
+    * the learned merges, and their ratio — the corpus-calibrated twin
+    * of `tx_token_count`'s chars/4 `bpe_est`.
+    *
+    * No end-of-word marker: merges act within words (token boundaries
+    * are already whitespace), declared rather than modeled. Pair counts
+    * count every adjacent position (runs of 'aa' in "aaa" count twice)
+    * — the ranking statistic, not the merge result, which applies
+    * greedily left-to-right as in the reference BPE.
+    */
   val bpeEncode = QueryDef(
     "tx_bpe_encode",
     s"""WITH $bpeMassSql
@@ -1312,7 +1312,8 @@ object TextAnalysis {
     * — merges are strictly incremental, so each tap is a prefix state
     * of the next), and totals aggregate at VOCABULARY grain
     * (Σ freq · n_sub), so the corpus pays nothing beyond the shared
-    * tokenize — the panel's cost is the 32 vocab-sized merge rounds.
+    * vocabulary count — the panel's cost is one collect of that memo,
+    * 32 merge rounds in driver memory, and the five tap aggregates.
     *
     * Measured curve (sf0.1, exact): subword_ratio 4.239 → 4.039 →
     * 3.737 → 3.400 → 2.860 across 2→32 merges while n_symbols grows
@@ -1323,9 +1324,10 @@ object TextAnalysis {
     * real-corpus vocab flattens when pair mass fragments across a long
     * tail this corpus does not have). [[BpeMerges]] therefore stays 8
     * as the priced default — the depth dial is now measured, and
-    * bumping it would 4× the learner latency of `tx_bpe_encode` /
+    * bumping it would 4× the unrolled oracle chain of `tx_bpe_encode` /
     * `etl_pack_bpe` without changing what the packing economy tests
-    * prove. SURVEY §5b.r19 records the curve.
+    * prove (the learner's rounds run in driver memory and add no job).
+    * SURVEY §5b.r19 records the curve.
     */
   val bpeTuning = QueryDef(
     "tx_bpe_tuning", {

@@ -186,6 +186,23 @@ class DurableIndexSpec extends GraftSuite {
       s"post-lifecycle table lost its bucketed layout:\n$plan")
   }
 
+  test("workspace release: a stopped context's arc roots are deleted, and the arc runs again") {
+    // every Ops.workspace root is registered with its context, and the
+    // context's onApplicationEnd listener releases them; the release is
+    // called directly here, since stopping the suite's context would end
+    // the suite
+    val first = rowsOf(run("ops_store_lifecycle"))
+    val root = new org.apache.hadoop.fs.Path(
+      operators.Ops.workspaceOf(spark, sfDir, "store_lc"))
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.exists(root), s"the arc left no workspace at $root")
+    operators.Ops.releaseWorkspaces(spark.sparkContext)
+    assert(!fs.exists(root), s"the release left $root behind")
+    assert(rowsOf(run("ops_store_lifecycle")) === first,
+      "the arc must run again after its workspace was released")
+    assert(fs.exists(root), s"the re-run recreated no workspace at $root")
+  }
+
   test("a lifecycle gate re-run in the same session re-executes its arc") {
     // every run of ops_store_lifecycle publishes, appends, compacts and
     // serves again: with the store deleted between two runs, the second

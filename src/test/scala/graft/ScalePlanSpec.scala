@@ -103,8 +103,8 @@ class ScalePlanSpec extends GraftSuite {
         "an_explorer_page" -> 1, // the 1-row page-1 cursor
         // r18 additions
         "mm_phash_dup" -> 0, // banded candidate + signature joins, all size-driven
-        "tx_bpe_encode" -> 8, // one 1-row argmax-pair broadcast per merge round
-        "etl_pack_bpe" -> 8, // same learner rounds; pack joins size-driven
+        "tx_bpe_encode" -> 0, // reads the per-doc mass memo; merge rounds run in the driver
+        "etl_pack_bpe" -> 0, // same memo; pack joins size-driven
         "ops_retrain_gate" -> 1 // the 1-row overall-decision broadcast
       )
       allowed.foreach { case (name, maxB) =>

@@ -583,4 +583,66 @@ class TextSentimentSpec extends GraftSuite {
       assert(segMap(taps(r)) === segMap(bpeSeg(vf, r)), s"tap $r")
     assert(segMap(taps(2)) !== segMap(taps(8)))
   }
+
+  test("BPE learner: BpeTaps.max merges start at most two Spark jobs") {
+    import spark.implicits._
+    import operators.TextAnalysis.{BpeTaps, bpeSegTaps}
+    // the vocabulary is collected once and every merge round runs in
+    // driver memory, so the job count does not grow with the rounds.
+    // Jobs are counted by job group; a marker job in another group
+    // flushes the listener queue (it delivers events in order).
+    val sc = spark.sparkContext
+    val (group, marker) = ("bpe-learn-jobs", "bpe-learn-marker")
+    val learnJobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => learnJobs.incrementAndGet()
+          case Some(`marker`) => markerSeen.countDown()
+          case _ => ()
+        }
+    }
+    val vf = Tables.documents(spark, sfDir)
+      .select(explode(split($"text", " ")).as("word"))
+      .filter($"word" =!= "")
+      .groupBy($"word").agg(count(lit(1)).as("freq"))
+    sc.addSparkListener(listener)
+    val taps = try {
+      sc.setJobGroup(group, "BPE learner")
+      val t = bpeSegTaps(vf, Seq(BpeTaps.max - 1, BpeTaps.max))
+      sc.setJobGroup(marker, "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      t
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(learnJobs.get() >= 1 && learnJobs.get() <= 2,
+      s"learning ${BpeTaps.max} merges started ${learnJobs.get()} jobs")
+    // the last round really merged: the corpus has pairs left at depth 32
+    assert(segMap(taps(BpeTaps.max - 1)) !== segMap(taps(BpeTaps.max)))
+  }
+
+  test("tx_bpe_encode: no persisted RDD outgrows the document count") {
+    // BPE state stays at vocabulary or document grain: after a forced
+    // tx_bpe_encode every RDD it left persisted (the vocabulary and the
+    // per-doc mass memos) holds at most one row per document — a
+    // checkpointed corpus token stream would hold tens of rows per doc
+    val dir = s"${new java.io.File(sfDir).getParent}/sf0.01"
+    val sc = spark.sparkContext
+    MatStore.clear(spark)
+    val before = sc.getPersistentRDDs.keySet
+    try {
+      Registry.byName("tx_bpe_encode").run(spark, dir).collect()
+      val nDocs = Tables.documents(spark, dir).count()
+      val held = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      assert(held.nonEmpty, "the BPE memos left no persisted RDD")
+      held.foreach { case (id, rdd) =>
+        val n = rdd.count()
+        assert(n <= nDocs, s"persisted RDD $id holds $n rows > $nDocs documents")
+      }
+    } finally MatStore.clear(spark)
+  }
 }
