@@ -23,8 +23,8 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
   *     shutdown hook snapshots a consistent line, and a committed
   *     BENCH_SELF.json sidecar survives stdout truncation. Pass 2 spends
   *     what is left on extra samples (min-of-N smooths throttle spikes),
-  *     in rounds, cheapest first by pass 1's own numbers, so a short
-  *     budget costs queries extra samples, never a row.
+  *     in rounds, cheapest first by each query's fastest sample so far,
+  *     so a short budget costs queries extra samples, never a row.
   *  2. Spark and DuckDB-oracle samples for the SAME query are taken
   *     back-to-back (one long-lived DuckDB worker, interleaved with the
   *     Spark sweep) so both sides of every ratio land in the same
@@ -246,20 +246,24 @@ object Bench {
 
     // Pass 2: the rest of the budget buys extra samples up to each
     // query's [[maxSamples]] tier (cold mode: none), in rounds — every
-    // query gets its second sample before any gets its third — and
-    // within a round cheapest first by pass 1's numbers. The second
-    // sample matters most: a query's pass-1 sample may pay a shared
-    // build it happened to consume first, or a throttle window. A query
-    // whose extra sample fails gets no more.
-    val byCost = ordered.filter { case (name, _) => first.contains(name) }
-      .sortBy { case (name, _) => (first(name), name) }
+    // query gets its second sample before any gets its third. Within a
+    // round a sample is priced by the query's fastest sample so far,
+    // cheapest first, and taken only while the budget covers that
+    // price: pass 1's number may pay a shared build the query happened
+    // to consume first, or a throttle window, and pricing by it would
+    // starve exactly the queries whose second sample matters most. A
+    // query whose extra sample fails gets no more.
+    def best(name: String): Double = lock.synchronized(timings(name))
     val failed = scala.collection.mutable.Set.empty[String]
     if (!coldStore)
-      for (k <- 2 to maxSamples(Double.MaxValue); (name, fn) <- byCost
-           if k <= maxSamples(first(name)) && !failed(name) &&
-             remaining > 25 + 2 * first(name)) {
-        reclaim()
-        if (runOne(name, fn, perQueryCap).isEmpty) failed += name
+      for (k <- 2 to maxSamples(Double.MaxValue)) {
+        val round = ordered
+          .filter { case (name, _) => first.contains(name) && k <= maxSamples(first(name)) }
+          .sortBy { case (name, _) => (best(name), name) }
+        for ((name, fn) <- round if !failed(name) && remaining > 25 + 2 * best(name)) {
+          reclaim()
+          if (runOne(name, fn, perQueryCap).isEmpty) failed += name
+        }
       }
     // One retry for a query whose only sample was watchdog-cancelled: on
     // a host with documented 10-20x throttling spikes a single

@@ -24,12 +24,18 @@ import graft.Ckpt._
   * etl_pack_bpe and tx_bpe_tuning, and the per-doc subword mass
   * (`tx_bpe_mass`) is shared by the first two.
   *
-  * Grain rule: a memo holds document, vocabulary or model rows, never a
-  * per-token stream. A token stream is several times the corpus in rows;
-  * a consumer re-derives it from the scan, as the oracle does, and
-  * memoizes only what it aggregates to. The embedding explosions
-  * `sim_expl` and `sim_pq_expl` (vector × dimension rows) are the open
-  * exceptions.
+  * Grain rule: a memo holds document, vector, vocabulary or model rows,
+  * never a per-token or per-coordinate stream. A stream is several times
+  * the corpus in rows; a consumer re-derives it, as the oracle does, and
+  * memoizes only what it aggregates to. The corpus token arrays are a
+  * plan over the scan, read by the `dd_mh_sigs` build and the Jaccard
+  * verifies; the embedding coordinates are exploded per read from
+  * vector-grain memos (`sim_expl`, one row per vector, kept because
+  * re-reading the parquet arrays measured slower than its blocks;
+  * `sim_pq_sub`, one row per vector and subspace). Reader filter: a memo
+  * keeps only rows some reader reads — a scored-pair memo is cut at the
+  * lowest threshold its readers apply before it is checkpointed
+  * (`dd_emb_scored`).
   *
   * Keyed on the session so a stopped session's plans are never reused
   * (same discipline as [[Tables]]); `spark.catalog.clearCache()`
@@ -124,7 +130,7 @@ object MatStore {
     lookup(s, key)(build)
 
   /** get-then-putIfAbsent instead of computeIfAbsent: store builds nest
-    * (lshCandM → tokenizedM, kmAssign → kmCents), and a nested
+    * (lshCandM → dd_mh_sigs, kmAssign → kmCents), and a nested
     * computeIfAbsent on the same ConcurrentHashMap throws "Recursive
     * update" whenever the inner insert lands in the bin the outer call
     * holds. The benign race (two threads building the same lazy plan,
@@ -197,6 +203,15 @@ object MatStore {
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
       df.persist()
     df
+  }
+
+  /** The (key, relation) entries stored for `s`, in key order — for
+    * footprint reports ([[graft.tools.MemoFootprint]]).
+    */
+  private[graft] def entries(s: SparkSession): Seq[(String, DataFrame)] = {
+    import scala.jdk.CollectionConverters._
+    cache.asScala.toSeq.collect { case ((ks, key), df) if ks eq s => (key, df) }
+      .sortBy(_._1)
   }
 
   /** Drop every stored relation for `s`, unpersisting as it goes — the

@@ -109,16 +109,16 @@ object Dedup {
       .filter(size($"w") >= ShingleK)
   }
 
+  /** (doc_id, w) token arrays of the corpus — a plan, not a memo: the
+    * `documents` scan and one split per document, re-derived by each
+    * reader (the signature build behind [[mhSigsM]], the Jaccard
+    * verifies, the recall probe sample). A checkpoint of it would hold a
+    * second copy of the corpus text for the session, while a reader's
+    * id filter (`doc_id < IncSplit`, the probe sample) pushes through
+    * this projection into the parquet read.
+    */
   def tokenized(s: SparkSession, dir: String): DataFrame =
     tokenizedOf(Tables.documents(s, dir))
-
-  /** Materialized (doc_id, w) token arrays — the shared corpus scan of the
-    * dd_* family (see [[graft.MatStore]]): minhash signatures, the 3-gram
-    * verify, and cluster assignment all consume the SAME tokenization
-    * instead of re-splitting the corpus per consumer.
-    */
-  def tokenizedM(s: SparkSession, dir: String): DataFrame =
-    graft.MatStore.of(s, s"dd_toks:$dir")(tokenized(s, dir))
 
   /** Materialized capped LSH candidate pairs over the shared band memo
     * ([[minhashBands]]) — the signature-store output every minhash
@@ -148,7 +148,7 @@ object Dedup {
     * ([[estQuality]]) are projections over it.
     */
   private def mhSigsM(s: SparkSession, dir: String): DataFrame =
-    graft.MatStore.of(s, s"dd_mh_sigs:$dir")(minhashSigsOf(tokenizedM(s, dir)))
+    graft.MatStore.of(s, s"dd_mh_sigs:$dir")(minhashSigsOf(tokenized(s, dir)))
 
   /** (doc_id, band, bkey) rows of `nb` bands of `r` signature columns
     * each — band b's key is mh(b·r)..mh(b·r+r−1) joined with ','.
@@ -447,7 +447,7 @@ object Dedup {
   }
 
   /** Pre-checkpoint scored build behind [[jaccardScoredM]]: every LSH
-    * candidate pair verified against the shared token memo. The pair
+    * candidate pair verified against the corpus token arrays. The pair
     * and token joins are NOT hinted: on this synthetic near-dup-free
     * corpus the candidate set is tiny and AQE will broadcast it at
     * runtime, but on a real web crawl (30-50% dup rates) it is a
@@ -458,7 +458,7 @@ object Dedup {
     * truncates it to a LogicalRDD).
     */
   private[graft] def jaccardScoredBuild(s: SparkSession, dir: String): DataFrame = {
-    val toks = tokenizedM(s, dir)
+    val toks = tokenized(s, dir)
     jaccardVerify(lshCandM(s, dir), toks, toks)
   }
 
@@ -734,10 +734,24 @@ object Dedup {
       .orderBy("vec_a", "vec_b")
   }
 
-  /** MatStore-shared scored embedding candidate pairs (every SRP bucket
-    * mate with its exact cosine, UNFILTERED) — the keep decision
-    * ([[embedding]]) and the threshold sweep ([[embeddingSweep]]) read
-    * the same scored relation, the jaccardScoredM pattern.
+  /** Thresholds the embedding sweep reports — exact dyadic/decimal
+    * doubles, the same literals in the Spark plan and the SQL text.
+    */
+  private val SweepThresholds: Seq[Double] = (8 to 19).map(_ / 20.0)
+
+  /** The lowest cosine any reader of [[embScoredM]] counts: the keep
+    * threshold or the sweep's lowest. A pair below it changes no row of
+    * either query.
+    */
+  private val ScoredFloor: Double = math.min(CosineThreshold, SweepThresholds.min)
+
+  /** MatStore-shared scored embedding candidate pairs (SRP bucket mates
+    * with their exact cosine) — the keep decision ([[embedding]]) and
+    * the threshold sweep ([[embeddingSweep]]) read the same scored
+    * relation, the jaccardScoredM pattern. Every bucket mate is scored,
+    * but only pairs at or above [[ScoredFloor]] are checkpointed: the
+    * bucket-mate set is quadratic in bucket size (273,014 pairs at
+    * sf0.1, of which 324 reach the floor) and no reader counts the rest.
     */
   private def embScoredM(s: SparkSession, dir: String): DataFrame =
     graft.MatStore.of(s, s"dd_emb_scored:$dir") {
@@ -752,12 +766,8 @@ object Dedup {
         .join(emb.select($"vec_id".as("vec_a"), $"embedding".as("ea")), "vec_a")
         .join(emb.select($"vec_id".as("vec_b"), $"embedding".as("eb")), "vec_b")
         .select($"vec_a", $"vec_b", expr("graft_cosine(ea, eb)").as("cos"))
+        .filter($"cos" >= ScoredFloor)
     }
-
-  /** Thresholds the embedding sweep reports — exact dyadic/decimal
-    * doubles, the same literals in the Spark plan and the SQL text.
-    */
-  private val SweepThresholds: Seq[Double] = (8 to 19).map(_ / 20.0)
 
   /** Embedding-threshold qualification sweep — [[lshTuning]]'s twin for
     * the EMBEDDING near-dup stage: for every candidate cosine threshold,
@@ -794,8 +804,11 @@ object Dedup {
     }) { (s, dir) =>
     import s.implicits._
     val scored = embScoredM(s, dir)
+    // the memo holds only pairs at or above ScoredFloor, so it can be
+    // empty where the oracle's scored CTE is not: count 0 there, not the
+    // NULL a SUM over no rows gives
     val aggs = SweepThresholds.zipWithIndex.map { case (t, i) =>
-      sum(when($"cos" >= t, 1L).otherwise(0L)).as(s"c$i")
+      coalesce(sum(when($"cos" >= t, 1L).otherwise(0L)), lit(0L)).as(s"c$i")
     }
     val nv = Tables.embeddings(s, dir).agg(P.cnt.as("n"))
     scored.agg(aggs.head, aggs.tail: _*)
@@ -963,7 +976,7 @@ object Dedup {
       .select($"doc_id".as("base_id"), $"band", $"bkey")
     val pairs = bb.join(ba, Seq("band", "bkey"))
       .select($"b_id", $"base_id").distinct()
-    val toks = tokenizedM(s, dir)
+    val toks = tokenized(s, dir)
     val nearp = jaccardVerify(pairs, toks, toks)
       .filter($"jac" >= JaccardThreshold)
     val docs = Tables.documents(s, dir)
@@ -1200,7 +1213,7 @@ object Dedup {
        |  ${PS.prnd("CASE WHEN (SELECT COUNT(*) FROM scand) = 0 THEN 0.0 ELSE CAST((SELECT COUNT(*) FROM caught) AS DOUBLE) / (SELECT COUNT(*) FROM scand) END", 6)} AS cand_efficiency
        |""".stripMargin) { (s, dir) =>
     import s.implicits._
-    val st = tokenizedM(s, dir).filter(inSample($"doc_id"))
+    val st = tokenized(s, dir).filter(inSample($"doc_id"))
     val g3 = st
       .select($"doc_id", explode(array_distinct(
         call_function("graft_shingles", $"w", lit(3)))).as("s"))

@@ -357,8 +357,9 @@ object Ops {
     *     the serve-mode CORRECTNESS replica executes;
     *  5. candidates verify by exact 3-gram Jaccard per pair
     *     ([[Dedup.jaccardVerify]]: batch tokens from the work-list read,
-    *     base tokens from the shared token memo); exact dups by md5
-    *     against the base corpus.
+    *     base tokens re-derived from the corpus scan, its
+    *     `doc_id < IncSplit` filter pushed into the parquet read); exact
+    *     dups by md5 against the base corpus.
     */
   val incrementalGate = QueryDef(
     "ops_incremental_gate",
@@ -368,8 +369,9 @@ object Ops {
     // The INGEST-DAY lifecycle — write day 0, snapshot, append day 1,
     // snapshot, derive the work list, read ONLY those files — runs every
     // time the query runs: the gate proves the arc, so the arc is what a
-    // run pays (~6 driver jobs of scale-invariant latency at bench SF;
-    // the paired oracle runs only the probe math).
+    // run pays (17 Spark jobs per warm run at sf0.1, most of them
+    // scale-invariant file writes, footer reads and the probe; the paired
+    // oracle runs only the probe math).
     val batch = {
       val corpus = s"${workspace(s, dir, "inc_gate")}/corpus"
       // file counts sized to the DATA, not the session parallelism: a
@@ -415,7 +417,7 @@ object Ops {
     val pairs = bandsB.join(baseBands, Seq("band", "bkey"))
       .select($"b_id", $"base_id").distinct()
     val nearp = Dedup.jaccardVerify(pairs, Dedup.tokenizedOf(batch),
-        Dedup.tokenizedM(s, dir).filter($"doc_id" < Dedup.IncSplit))
+        Dedup.tokenized(s, dir).filter($"doc_id" < Dedup.IncSplit))
       .filter($"jac" >= Dedup.JaccardThreshold)
     val bex = batch.select($"doc_id".as("b_id"), md5($"text").as("h"))
       .join(docs.filter($"doc_id" < Dedup.IncSplit)

@@ -188,7 +188,7 @@ object Similarity {
       |ORDER BY label""".stripMargin) { (s, dir) =>
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
-    val expl = explM(s, dir)
+    val expl = coords(s, dir)
     val cn = emb.groupBy($"label").agg(P.cnt.as("n"))
     val cent = centM(s, dir)
     val parts = expl.join(cent, Seq("label", "j"))
@@ -208,28 +208,37 @@ object Similarity {
       .orderBy($"label")
   }
 
-  /** Session-shared exploded embedding coordinates (vec_id, label, j, x)
-    * — the (doc, dim)-grain scan the centroid/norm math runs on, built
-    * once per (session, dir) via [[graft.MatStore]] (checkpoint blocks:
-    * self-cleaning when the store entry is released, unlike a bare
-    * per-call persist(), which leaks a CacheManager entry per
-    * invocation for the session lifetime).
+  /** Session-shared corpus vectors (vec_id, label, embedding), one row
+    * per vector — what every coordinate reader explodes ([[coords]]).
+    * Vector grain, not coordinate grain: a checkpoint of the exploded
+    * stream would hold 64 rows per vector for the session, and
+    * re-exploding these rows costs a reader no more than reading such a
+    * stream, while re-reading the parquet scan pays a nested-array
+    * decode per read (both measured at sf0.1).
     */
-  private def explM(s: SparkSession, dir: String): DataFrame = {
+  private def vecsM(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.MatStore.of(s, s"sim_expl:$dir")(
-      Tables.embeddings(s, dir)
-        .select($"vec_id", $"label", posexplode($"embedding").as(Seq("j0", "x0")))
-        .select($"vec_id", $"label", ($"j0" + 1).as("j"), $"x0".cast("double").as("x")))
+      Tables.embeddings(s, dir).select($"vec_id", $"label", $"embedding"))
   }
 
-  /** Session-shared per-label centroids over [[explM]] — the IVF index
+  /** Exploded embedding coordinates (vec_id, label, j, x) of the corpus
+    * — the (vector, dim)-grain rows the centroid/norm math runs on. A
+    * plan over [[vecsM]], not a memo: each read is one narrow generator,
+    * a reader's vec_id filter applies before the explode, and what stays
+    * in [[graft.MatStore]] is what the readers aggregate to (the label
+    * centroids [[centM]], the k-means model [[kmCents]]).
+    */
+  private def coords(s: SparkSession, dir: String): DataFrame =
+    explOf(vecsM(s, dir))
+
+  /** Session-shared per-label centroids over [[coords]] — the IVF index
     * posture: built once, served by every probe query and sample.
     */
   private def centM(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.MatStore.of(s, s"sim_cent:$dir")(
-      explM(s, dir).groupBy($"label", $"j")
+      coords(s, dir).groupBy($"label", $"j")
         .agg((P.davg($"x", 9)).as("c")))
   }
 
@@ -284,12 +293,12 @@ object Similarity {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
     // grouped-explode centroid build (the oracle CTE's shape), via the
-    // session-shared explM/centM store. A 64x element_at + per-position
-    // decimal-sum pivot (no explode) was re-measured WORSE here
+    // coords stream and the session-shared centM memo. A 64x element_at
+    // + per-position decimal-sum pivot (no explode) was re-measured WORSE here
     // (1.5-1.9s vs ~1.0s at sf0.1): the wide inline decimal casts defeat
     // the hash-agg's codegen win, while the exploded rows stay narrow
     // and the aggregate is map-side partial.
-    val expl = explM(s, dir)
+    val expl = coords(s, dir)
     val cent = centM(s, dir)
     val cnorm = cent.groupBy($"label")
       .agg(P.dsum($"c" * $"c", 12).as("ny"))
@@ -518,7 +527,7 @@ object Similarity {
 
   /** [[kmeansFitCore]] over the session-shared corpus relations. */
   private[graft] def kmeansFit(s: SparkSession, dir: String): DataFrame =
-    kmeansFitCore(Tables.embeddings(s, dir), explM(s, dir))
+    kmeansFitCore(Tables.embeddings(s, dir), coords(s, dir))
 
   /** [[kmeansFitCore]] over an ARBITRARY embeddings relation (vec_id,
     * label, embedding) — `ops_day`'s retrain action refits from the
@@ -769,7 +778,7 @@ object Similarity {
   /** The drift rows over an ARBITRARY exploded-coordinate relation
     * (vec_id, label, j, x) and its embeddings source — the Spark twin
     * of [[centroidDriftSql]], factored (r18) so the corpus gate reads
-    * the session-shared [[explM]] while the planted retrain-gate spec
+    * the corpus [[coords]] while the planted retrain-gate spec
     * feeds constructed batches through the identical arithmetic.
     * The label frame is a FULL OUTER join of the base and batch count
     * relations (r18 review): a label that exists on only ONE side still
@@ -817,9 +826,9 @@ object Similarity {
         P.prnd($"dot" / sqrt($"na" * $"nb"), 6).as("centroid_cos"))
   }
 
-  /** [[explM]]'s shape over an arbitrary embeddings relation — for
-    * planted-batch specs (1-based j, matching the oracle's
-    * generate_subscripts).
+  /** (vec_id, label, j, x) coordinate rows of an arbitrary embeddings
+    * relation — [[coords]] over the corpus, and planted batches in specs
+    * (1-based j, matching the oracle's generate_subscripts).
     */
   private[graft] def explOf(emb: DataFrame): DataFrame = {
     val s = emb.sparkSession
@@ -828,11 +837,11 @@ object Similarity {
       .select($"vec_id", $"label", ($"j0" + 1).as("j"), $"x0".cast("double").as("x"))
   }
 
-  /** Corpus drift rows over the session-shared exploded coordinates —
+  /** Corpus drift rows over the corpus coordinates ([[coords]]) —
     * read by both `sim_centroid_drift` and `ops_retrain_gate`.
     */
   private[operators] def centroidDriftRows(s: SparkSession, dir: String): DataFrame =
-    centroidDriftOver(explM(s, dir), Tables.embeddings(s, dir), VecDriftSplit)
+    centroidDriftOver(coords(s, dir), Tables.embeddings(s, dir), VecDriftSplit)
 
   /** Embedding drift per label between the base corpus and the arriving
     * batch — tx_term_drift's vector-space twin: if a label's batch
@@ -1164,35 +1173,45 @@ object Similarity {
       ).mkString(",\n")
   }
 
-  /** Normalized per-coordinate rows (vec_id, m, jj, x) — session-shared
-    * (training rounds, encoding, and the per-query tables all read it).
-    */
-  private def pqExplM(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.MatStore.of(s, s"sim_pq_expl:$dir") {
-      val pex = Tables.embeddings(s, dir)
-        .select($"vec_id", posexplode($"embedding").as(Seq("j0", "xf")))
-        .select($"vec_id", ($"j0" + 1).as("j"), $"xf".cast("double").as("x"))
-      val pnrm = pex.groupBy($"vec_id").agg(sqrt(P.dsum($"x" * $"x", 12)).as("nrm"))
-      pex.join(pnrm, "vec_id")
-        .select($"vec_id", expr(s"(j - 1) div $PqSubDim").as("m"),
-          expr(s"(j - 1) % $PqSubDim + 1").as("jj"), ($"x" / $"nrm").as("x"))
-    }
-  }
-
   /** Normalized per-(vector, subspace) coordinate ARRAYS (vec_id, m,
-    * xs[PqSubDim]) — the row shape every dot product reads. Built once
-    * from [[pqExplM]] and session-shared: collapsing the coordinates
-    * into arrays turns each scaled-decimal dot from an explode + join +
-    * |N|·d·codes-row hash aggregate into ONE codegen'd `graft_sdot`
-    * loop per (vector, subspace, code) row — the PQ hot-path shape.
+    * xs[PqSubDim]) — the row shape every dot product reads, and the PQ
+    * family's one session-shared vector memo ([[PqM]] rows per vector).
+    * Built straight from the embeddings: the norm is one `graft_sdot`
+    * per vector (the same per-term rounding and exact sum as the
+    * oracle's pnrm dsum), the vector is divided through, and its
+    * [[PqSubDim]]-wide slices leave through one generator. Arrays turn
+    * each scaled-decimal dot from an explode + join + |N|·d·codes-row
+    * hash aggregate into ONE codegen'd `graft_sdot` loop per (vector,
+    * subspace, code) row — the PQ hot-path shape.
     */
   private def pqSubM(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.MatStore.of(s, s"sim_pq_sub:$dir")(
-      pqExplM(s, dir).groupBy($"vec_id", $"m")
-        .agg(transform(array_sort(collect_list(struct($"jj", $"x"))),
-          e => e.getField("x")).as("xs")))
+    graft.MatStore.of(s, s"sim_pq_sub:$dir") {
+      val nrm = sqrt(expr("graft_sdot(embedding, embedding, 12)"))
+      Tables.embeddings(s, dir)
+        .select($"vec_id", $"embedding", nrm.as("nrm"))
+        .select($"vec_id", explode(array((0 until PqM).map { m =>
+          struct(lit(m.toLong).as("m"),
+            transform(slice($"embedding", m * PqSubDim + 1, PqSubDim),
+              x => x.cast("double") / $"nrm").as("xs"))
+        }: _*)).as("sub"))
+        .select($"vec_id", $"sub.m".as("m"), $"sub.xs".as("xs"))
+        // a subspace past the end of a short (or null) embedding gets no
+        // row, as in the oracle's pexpl
+        .filter(size($"xs") > 0)
+    }
+  }
+
+  /** Coordinate rows (vec_id, m, jj, x) of [[pqSubM]] — a plan, not a
+    * memo: the codebook's Lloyd rounds average per (m, code, jj), and
+    * each round re-explodes the subspace arrays rather than reading a
+    * checkpointed copy of every normalized coordinate.
+    */
+  private def pqCoords(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    pqSubM(s, dir)
+      .select($"vec_id", $"m", posexplode($"xs").as(Seq("jj0", "x")))
+      .select($"vec_id", $"m", ($"jj0" + 1).as("jj"), $"x")
   }
 
   /** Coordinate codebook → broadcast-shaped array codebook (m, code,
@@ -1233,7 +1252,7 @@ object Similarity {
   private def pqCodebook(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.MatStore.of(s, s"sim_pq_cb:$dir") {
-      val expl = pqExplM(s, dir)
+      val expl = pqCoords(s, dir)
       var cb = expl.filter($"vec_id" < PqCodes)
         .select($"m", $"vec_id".as("code"), $"jj", $"x".as("c"))
       for (_ <- 1 to PqIters)

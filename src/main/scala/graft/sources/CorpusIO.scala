@@ -219,24 +219,6 @@ object CorpusIO {
     expired.map(_.getName.stripPrefix(prefix)).sorted
   }
 
-  /** Snapshot manifest of a parquet corpus version: one row per data
-    * file with its size, modification time, and EXACT row count read
-    * from the parquet FOOTER — never a data scan (a footer is a few KB
-    * at the file tail; Delta/Iceberg persist the same stats at commit
-    * time, this derives them after the fact for a plain layout).
-    * [[manifestDiff]] of two snapshots is the incremental-processing
-    * primitive: a daily pipeline re-processes added/changed files only,
-    * instead of re-reading 100 TB to discover that 1 TB arrived.
-    *
-    * Scale shape: the file LISTING runs on the driver (the same
-    * metadata pass every scan's file index pays), but the footer reads
-    * are DISTRIBUTED — the file list parallelizes across executors and
-    * each task opens only its own files' footers, so a million-file
-    * corpus reads a million footers at cluster width, not in a driver
-    * loop. Paths are stored relative to the corpus root so two
-    * snapshots of the same logical corpus diff cleanly across physical
-    * locations (a copy, a rename, a bucket migration).
-    */
   /** Recursive listing of the VISIBLE parquet data files under `root`:
     * (relative path, qualified path, bytes, mtime). THE single
     * definition of snapshot visibility, shared by [[manifest]] and
@@ -267,6 +249,24 @@ object CorpusIO {
     files.toSeq
   }
 
+  /** Snapshot manifest of a parquet corpus version: one row per data
+    * file with its size, modification time, and EXACT row count read
+    * from the parquet FOOTER — never a data scan (a footer is a few KB
+    * at the file tail; Delta/Iceberg persist the same stats at commit
+    * time, this derives them after the fact for a plain layout).
+    * [[manifestDiff]] of two snapshots is the incremental-processing
+    * primitive: a daily pipeline re-processes added/changed files only,
+    * instead of re-reading 100 TB to discover that 1 TB arrived.
+    *
+    * Scale shape: the file LISTING runs on the driver (the same
+    * metadata pass every scan's file index pays), but the footer reads
+    * are DISTRIBUTED — the file list parallelizes across executors and
+    * each task opens only its own files' footers, so a million-file
+    * corpus reads a million footers at cluster width, not in a driver
+    * loop. Paths are stored relative to the corpus root so two
+    * snapshots of the same logical corpus diff cleanly across physical
+    * locations (a copy, a rename, a bucket migration).
+    */
   def manifest(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
@@ -274,8 +274,10 @@ object CorpusIO {
     val fs = root.getFileSystem(conf)
     val files = visibleParquetFiles(fs, root)
     val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-    files.toDS()
-      .repartition(math.max(1, math.min(files.size, 64)))
+    // the file list is spread over the footer-read tasks as it is
+    // parallelized: a repartition of the local list would be a shuffle
+    // job of its own on every snapshot
+    spark.sparkContext.parallelize(files, math.max(1, math.min(files.size, 64)))
       .mapPartitions { part =>
         val hconf = serConf.value
         part.map { case (rel, full, bytes, mtime) =>

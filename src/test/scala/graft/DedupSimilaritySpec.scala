@@ -521,9 +521,9 @@ class DedupSimilaritySpec extends GraftSuite {
         assert(keep === Set((1L, 2L), (3L, 4L), (10L, 11L)),
           "J = 0.5 is kept, 3/7 is not")
 
-        // the corpus's own LSH candidates over the shared token memo
+        // the corpus's own LSH candidates over the corpus token arrays
         val cand = operators.Dedup.lshCandM(spark, sfDir)
-        val ctoks = operators.Dedup.tokenizedM(spark, sfDir)
+        val ctoks = operators.Dedup.tokenized(spark, sfDir)
         val corpus = jacMap(operators.Dedup.jaccardVerify(cand, ctoks, ctoks))
         assert(corpus.nonEmpty)
         assert(corpus === jacMap(joinJaccard(cand, ctoks)))
@@ -543,5 +543,59 @@ class DedupSimilaritySpec extends GraftSuite {
     val out = operators.Dedup.jaccardVerify(pairs, batch, base)
     assert(out.columns.toSeq === Seq("b_id", "base_id", "jac"))
     assert(jacMap(out) === Map((500L, 5L) -> 4.0 / 5))
+  }
+
+  /** Runs `queries` on sf0.01 after [[MatStore.clear]] and hands `check`
+    * the RDDs they left persisted; the store is cleared again after.
+    */
+  private def heldAfter(queries: String*)(
+      check: (String, Map[Int, org.apache.spark.rdd.RDD[_]]) => Unit): Unit = {
+    val dir = s"${new java.io.File(sfDir).getParent}/sf0.01"
+    val sc = spark.sparkContext
+    MatStore.clear(spark)
+    val before = sc.getPersistentRDDs.keySet
+    try {
+      queries.foreach(q => Registry.byName(q).run(spark, dir).collect())
+      check(dir, sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.toMap)
+    } finally MatStore.clear(spark)
+  }
+
+  test("embedding dedup: the scored memo holds only pairs a reader counts") {
+    heldAfter("dd_embedding_sweep") { (dir, _) =>
+      val scored = MatStore.of(spark, s"dd_emb_scored:$dir")(
+        sys.error("dd_embedding_sweep left no scored memo"))
+      assert(scored.count() > 0)
+      // the keep threshold is the lowest one either reader applies
+      val below = scored.filter(col("cos") < operators.Dedup.CosineThreshold).count()
+      assert(below === 0, s"$below scored pairs below every reader's threshold")
+    }
+  }
+
+  test("sim_* readers persist nothing finer than PqM rows per vector") {
+    heldAfter("sim_pair_stats", "sim_ivf_topk", "sim_kmeans_train",
+        "sim_centroid_drift", "sim_pq_topk") { (dir, held) =>
+      val cap = Tables.embeddings(spark, dir).count() * operators.Similarity.PqM
+      assert(held.nonEmpty, "the sim_* memos left no persisted RDD")
+      // an exploded coordinate memo holds vectors x 64 rows
+      held.foreach { case (id, rdd) =>
+        val n = rdd.count()
+        assert(n <= cap, s"persisted RDD $id holds $n rows > $cap (vectors x PqM)")
+      }
+    }
+  }
+
+  test("dd_minhash_lsh and dd_incremental persist no corpus token arrays") {
+    heldAfter("dd_minhash_lsh", "dd_incremental") { (dir, held) =>
+      // the (doc_id, w) rows exactly as the tokenization plan emits them:
+      // a checkpoint of that plan holds byte-identical UnsafeRows
+      val toks = operators.Dedup.tokenized(spark, dir)
+        .queryExecution.toRdd.map(_.copy()).collect().toSet[Any]
+      assert(toks.nonEmpty)
+      assert(held.nonEmpty, "the dd_* memos left no persisted RDD")
+      held.foreach { case (id, rdd) =>
+        val hits = rdd.asInstanceOf[org.apache.spark.rdd.RDD[Any]].collect().count(toks.contains)
+        assert(hits === 0, s"persisted RDD $id holds $hits corpus token-array rows")
+      }
+    }
   }
 }
