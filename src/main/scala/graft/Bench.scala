@@ -35,14 +35,10 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 object Bench {
 
   /** Samples a query gets in a warm sweep, from its first sample's
-    * seconds. Multi-second queries get five: a single sample sits
-    * entirely inside one throttle window, while five span sub-windows
-    * of the sweep and the min approaches the clean-window floor. The
-    * 0.6-1.5 s band is the weak-rule boundary class: a query whose
-    * clean floor is ~0.7 s reads >1 s inside one throttle spike, and
-    * with only two samples both can land in the same window (r16:
-    * q5_region_revenue recorded 1.05 s in the driver sweep vs 0.62 s
-    * committed, same code); three samples span windows.
+    * seconds. Multi-second queries get five: one sample sits inside one
+    * throttle window, five span sub-windows and their min approaches the
+    * clean floor. A ~0.7 s query reads >1 s inside one spike, and two
+    * samples can both land in the same window; three span windows.
     */
   private def maxSamples(first: Double): Int =
     if (first > 1.5) 5 else if (first > 0.6) 3 else 2
@@ -70,39 +66,35 @@ object Bench {
     // tail window — silence everything below ERROR.
     sc.setLogLevel("ERROR")
 
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    }
     // all four collections are guarded by `lock`: the SIGTERM shutdown
-    // hook snapshots them while the main thread may still be mutating
+    // hook snapshots them while the main thread may still be mutating.
+    // `best` holds each query's fastest sample's run record.
     val lock = new Object
-    val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val best = scala.collection.mutable.LinkedHashMap.empty[String, RunRecord]
     val oracleT = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
     val printed = new AtomicBoolean(false)
     val lastJson = new java.util.concurrent.atomic.AtomicReference[String]("")
 
-    // `slim` drops the paired-oracle dict: the driver parses the LAST
-    // stdout line, and the full line overflowed its capture for six
-    // rounds ("parsed": null until r19; the r19 slim line parsed
-    // cleanly). The slim line carries the whole driver contract
-    // (metric/value/unit/queries/errors/skipped/partial/sf); the oracle
-    // timings stay in the full first print and the committed
-    // BENCH_SELF.json sidecar.
+    // `slim` keeps only the contract fields (metric/value/unit/queries/
+    // errors/skipped/partial/sf): the consumer parses the LAST stdout
+    // line, and a full line overflowed its capture. The oracle timings and each
+    // query's best-sample jobs and tasks stay in the full first print and
+    // the committed BENCH_SELF.json sidecar.
     def buildJson(partial: Boolean, slim: Boolean = false): String = {
-      val (ts, os, es, sk) = lock.synchronized {
-        (timings.toSeq, oracleT.toSeq, errors.toSeq, skipped.toSeq)
+      val (rs, os, es, sk) = lock.synchronized {
+        (best.toSeq, oracleT.toSeq, errors.toSeq, skipped.toSeq)
       }
-      def secs(kv: Seq[(String, Double)]): String =
-        kv.map { case (k, v) => "\"" + esc(k) + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-      val er = es.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }.mkString("{", ",", "}")
-      val skj = sk.map("\"" + esc(_) + "\"").mkString("[", ",", "]")
-      val total = ts.map(_._2).sum
-      val oracleField = if (slim) "" else s""""oracle":${secs(os)},"""
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${secs(ts)},$oracleField"errors":$er,"skipped":$skj,"partial":$partial,"sf":"${esc(sfDir)}"}"""
+      def secs(kv: Seq[(String, Double)]) = Json.obj(kv.map { case (k, v) => k -> f"$v%.3f" })
+      def counts(f: RunRecord => Int) = Json.obj(rs.map { case (k, r) => k -> f(r).toString })
+      val full =
+        if (slim) Nil else Seq("oracle" -> secs(os), "jobs" -> counts(_.jobs), "tasks" -> counts(_.tasks))
+      Json.obj(Seq("metric" -> Json.str("total"), "value" -> rs.map(_._2.wallS).sum.toString,
+        "unit" -> Json.str("sec"), "queries" -> secs(rs.map { case (k, r) => k -> r.wallS })) ++
+        full ++ Seq("errors" -> Json.obj(es.map { case (k, v) => k -> Json.str(v) }),
+        "skipped" -> sk.map(Json.str).mkString("[", ",", "]"),
+        "partial" -> partial.toString, "sf" -> Json.str(sfDir)))
     }
     def emit(partial: Boolean): Unit = if (printed.compareAndSet(false, true)) {
       val line = buildJson(partial)
@@ -134,12 +126,26 @@ object Bench {
     // pathological query costs one slot, not the rest of the sweep
     def perQueryCap: Double = math.min(remaining - 15, budgetSec / 8)
 
+    // Reclaim before every sample: a query's internal persists otherwise
+    // pile up in CacheManager (strong refs, never freed without
+    // unpersist), and localCheckpoint blocks are freed by the
+    // ContextCleaner only after the owning plan is GC'd; left alone they
+    // slowed late queries into the watchdog. clearCache also unregisters
+    // the persisted [[MatStore.memo]] relations, which re-materialize on
+    // their next read; [[MatStore.of]] checkpoints survive it.
+    def reclaim(): Unit = {
+      spark.catalog.clearCache()
+      if (coldStore) MatStore.clear(spark)
+      System.gc()
+    }
+
     val sampleSeq = new AtomicInteger(0)
     // Run one evaluation under a cancellable, per-sample-unique job group:
     // if the query alone would exhaust its cap, its jobs get cancelled and
     // the query is reported as an error instead of hanging the whole bench.
-    def runOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-        limitSec: Double): Option[Double] = {
+    def runOne(q: QueryDef, limitSec: Double): Option[RunRecord] = {
+      reclaim()
+      val name = q.name
       val group = s"$name#${sampleSeq.incrementAndGet()}"
       val done = new AtomicBoolean(false)
       sc.setJobGroup(group, name, interruptOnCancel = true)
@@ -151,25 +157,13 @@ object Bench {
       })
       watchdog.setDaemon(true)
       watchdog.start()
-      val t0 = System.nanoTime()
-      val res = try {
-        // Force with a noop WRITE, not count(): count() plans
-        // Aggregate(count(1)) and Catalyst then prunes the final sort
-        // and every derived output column (EliminateSorts +
-        // ColumnPruning), so narrow-map queries (regex chains, hashing,
-        // scoring) were partly never executed while the DuckDB worker
-        // fetchall()s the full result. The noop sink materializes every
-        // output column of every row — what the oracle is timed doing —
-        // and discards them without I/O.
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch {
+      val res = try Some(q.execute(spark, sfDir)) catch {
         case e: Throwable =>
           val msg = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
           lock.synchronized {
             // a successful sample supersedes a watchdog cancellation, but
             // a genuine intermittent failure stays visible
-            if (!(timings.contains(name) && msg.contains("SPARK_JOB_CANCELLED")))
+            if (!(best.contains(name) && msg.contains("SPARK_JOB_CANCELLED")))
               errors(name) = msg
           }
           None
@@ -178,39 +172,23 @@ object Bench {
         watchdog.interrupt()
         sc.clearJobGroup()
       }
-      res.foreach { sec =>
+      res.foreach { rec =>
         lock.synchronized {
-          timings(name) = timings.get(name).fold(sec)(math.min(_, sec))
+          if (best.get(name).forall(rec.wallS < _.wallS)) best(name) = rec
           if (errors.get(name).exists(_.contains("SPARK_JOB_CANCELLED"))) errors.remove(name)
         }
       }
       res
     }
 
-    // Reclaim before every query's sample: a query's internal per-sample
-    // persists otherwise pile up in CacheManager (strong refs, never
-    // freed without unpersist) and localCheckpoint blocks are freed by
-    // the ContextCleaner only after the owning plan is GC'd — ~90
-    // samples of graph/LSH checkpoints inflated late queries in r5
-    // (gr_closeness watchdog-cancelled three rounds running while
-    // seconds-fast in isolation). clearCache also unregisters the
-    // persisted [[MatStore.memo]] relations, which re-materialize on
-    // their next read; [[MatStore.of]] checkpoints survive it.
-    def reclaim(): Unit = {
-      spark.catalog.clearCache()
-      if (coldStore) MatStore.clear(spark)
-      System.gc()
-    }
-
     // warm the JVM/codegen once with the cheapest query so the first timed
     // query doesn't pay one-time session setup.
-    try SparkEntry.queries.get("q1_pricing_summary")
-      .foreach(_(spark, sfDir).write.format("noop").mode("overwrite").save())
+    try Registry.byName.get("q1_pricing_summary").foreach(_.execute(spark, sfDir))
     catch { case _: Throwable => () }
 
-    val ordered = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.isEmpty || only.exists(name.contains) }
-      .sortBy(_._1)
+    val ordered = Registry.all
+      .filter(q => only.isEmpty || only.exists(q.name.contains))
+      .sortBy(_.name)
 
     // one long-lived DuckDB worker for paired oracle samples; None when
     // the driver-side python3+duckdb toolchain is absent (silent skip,
@@ -223,7 +201,8 @@ object Bench {
           case Left(err) => errors(s"oracle:$name") = err.take(200)
         }
       }
-    def timeOraclePaired(name: String): Unit = if (SparkEntry.oracleSql.contains(name)) {
+    def timeOraclePaired(q: QueryDef): Unit = if (q.oracle.nonEmpty) {
+      val name = q.name
       // min-of-2 for the multi-second iterative CTEs (a single throttle
       // spike costs whole seconds there); the sub-second majority gets one
       // sample — its spike exposure is bounded by its own duration
@@ -235,12 +214,11 @@ object Bench {
     // Pass 1: one sample of every query, with its PAIRED oracle sample(s)
     // (same query, same throttle window), in name order.
     val first = scala.collection.mutable.Map.empty[String, Double]
-    ordered.foreach { case (name, fn) =>
-      if (remaining <= 20) lock.synchronized { skipped += name }
+    ordered.foreach { q =>
+      if (remaining <= 20) lock.synchronized { skipped += q.name }
       else {
-        reclaim()
-        runOne(name, fn, perQueryCap).foreach(first(name) = _)
-        timeOraclePaired(name)
+        runOne(q, perQueryCap).foreach(r => first(q.name) = r.wallS)
+        timeOraclePaired(q)
       }
     }
 
@@ -253,40 +231,32 @@ object Bench {
     // to consume first, or a throttle window, and pricing by it would
     // starve exactly the queries whose second sample matters most. A
     // query whose extra sample fails gets no more.
-    def best(name: String): Double = lock.synchronized(timings(name))
+    def fastest(name: String): Double = lock.synchronized(best(name).wallS)
     val failed = scala.collection.mutable.Set.empty[String]
     if (!coldStore)
       for (k <- 2 to maxSamples(Double.MaxValue)) {
         val round = ordered
-          .filter { case (name, _) => first.contains(name) && k <= maxSamples(first(name)) }
-          .sortBy { case (name, _) => (best(name), name) }
-        for ((name, fn) <- round if !failed(name) && remaining > 25 + 2 * best(name)) {
-          reclaim()
-          if (runOne(name, fn, perQueryCap).isEmpty) failed += name
-        }
+          .filter(q => first.contains(q.name) && k <= maxSamples(first(q.name)))
+          .sortBy(q => (fastest(q.name), q.name))
+        for (q <- round if !failed(q.name) && remaining > 25 + 2 * fastest(q.name))
+          if (runOne(q, perQueryCap).isEmpty) failed += q.name
       }
     // One retry for a query whose only sample was watchdog-cancelled: on
-    // a host with documented 10-20x throttling spikes a single
-    // cancellation is usually a spike artifact (r4: dd_minhash_lsh
-    // cancelled at 112 s while its strict superset dd_ngram_jaccard
-    // finished in 4.7 s in the same sweep).
-    ordered.foreach { case (name, fn) =>
+    // a host with 10-20x throttling spikes a single cancellation is
+    // usually a spike artifact.
+    ordered.foreach { q =>
       val cancelled = lock.synchronized(
-        !timings.contains(name) && errors.get(name).exists(_.contains("SPARK_JOB_CANCELLED")))
-      if (cancelled && remaining > 20) {
-        reclaim()
-        runOne(name, fn, perQueryCap)
-      }
+        !best.contains(q.name) && errors.get(q.name).exists(_.contains("SPARK_JOB_CANCELLED")))
+      if (cancelled && remaining > 20) runOne(q, perQueryCap)
     }
 
     // catch-up pass: any oracle sample still missing (e.g. its paired
     // slot hit the budget guard) gets one attempt with what's left
-    ordered.foreach { case (name, _) =>
+    ordered.foreach { q =>
       val missing = lock.synchronized(
-        SparkEntry.oracleSql.contains(name) && !oracleT.contains(name) &&
-          !errors.contains(s"oracle:$name"))
+        q.oracle.nonEmpty && !oracleT.contains(q.name) && !errors.contains(s"oracle:${q.name}"))
       if (missing && remaining > 15)
-        worker.foreach(w => reportOracle(name, w.time(name, 1, math.min(40.0, remaining - 10))))
+        worker.foreach(w => reportOracle(q.name, w.time(q.name, 1, math.min(40.0, remaining - 10))))
     }
     worker.foreach(_.close())
 
@@ -320,18 +290,12 @@ private final class OracleWorker(proc: Process,
       writer.flush()
       // the child's own per-rep interrupt bounds its response time; the
       // poll deadline is a backstop for a hard-hung child
-      val deadline = System.nanoTime() + ((reps * perRepSec + 20) * 1e9).toLong
-      var line: String = null
-      while (line == null && System.nanoTime() < deadline) {
-        if (reader.ready()) line = reader.readLine()
-        else Thread.sleep(20)
-      }
-      line match {
-        case null =>
+      OracleWorker.lineWithin(reader, reps * perRepSec + 20) match {
+        case None =>
           alive = false
           proc.destroyForcibly()
           Left("oracle worker timed out")
-        case l => l.split('\t') match {
+        case Some(l) => l.split('\t') match {
           case Array(_, s) if s != "ERR" => Right(s.toDouble)
           case Array(_, _, why) => Left(why)
           case _ => Left("oracle query failed")
@@ -353,16 +317,22 @@ private final class OracleWorker(proc: Process,
 }
 
 private object OracleWorker {
+  /** The child's next stdout line; None when it closed stdout or sent
+    * nothing within `sec`.
+    */
+  def lineWithin(reader: java.io.BufferedReader, sec: Double): Option[String] = {
+    val deadline = System.nanoTime() + (sec * 1e9).toLong
+    while (System.nanoTime() < deadline) {
+      if (reader.ready()) return Option(reader.readLine())
+      Thread.sleep(20)
+    }
+    None
+  }
+
   def start(sfDir: String, sqls: Seq[(String, String)]): Option[OracleWorker] = {
     if (sqls.isEmpty) return None
     try {
-      def jq(s: String): String = "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case '\r' => "\\r"; case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-      val sqlJson = sqls.map { case (k, v) => s"[${jq(k)},${jq(v)}]" }.mkString("[", ",", "]")
+      val sqlJson = Json.obj(sqls.map { case (k, v) => k -> Json.str(v) })
       val sqlFile = java.io.File.createTempFile("graft_oracle_", ".json")
       val pyFile = java.io.File.createTempFile("graft_oracle_", ".py")
       sqlFile.deleteOnExit(); pyFile.deleteOnExit()
@@ -375,7 +345,7 @@ private object OracleWorker {
           |for t in ["region", "nation", "customer", "supplier", "part",
           |          "orders", "lineitem", "events", "documents", "embeddings"]:
           |    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-          |sqls = dict(json.load(open(path)))
+          |sqls = json.load(open(path))
           |print("READY", flush=True)
           |for line in sys.stdin:
           |    parts = line.rstrip("\n").split("\t")
@@ -419,18 +389,9 @@ private object OracleWorker {
       val reader = new java.io.BufferedReader(new java.io.InputStreamReader(proc.getInputStream))
       val writer = new java.io.BufferedWriter(new java.io.OutputStreamWriter(proc.getOutputStream))
       // wait for READY (view creation) with a hard deadline
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      var ready = false
-      var line: String = null
-      while (!ready && System.nanoTime() < deadline) {
-        if (reader.ready()) {
-          line = reader.readLine()
-          ready = line != null && line.startsWith("READY")
-          if (line == null) throw new RuntimeException("oracle worker closed stdout")
-        } else Thread.sleep(20)
-      }
-      if (!ready) { proc.destroyForcibly(); None }
-      else Some(new OracleWorker(proc, writer, reader))
+      if (lineWithin(reader, 60).exists(_.startsWith("READY")))
+        Some(new OracleWorker(proc, writer, reader))
+      else { proc.destroyForcibly(); None }
     } catch { case _: Throwable => None }
   }
 }

@@ -129,13 +129,6 @@ object MatStore {
   def view(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     lookup(s, key)(build)
 
-  /** get-then-putIfAbsent instead of computeIfAbsent: store builds nest
-    * (lshCandM → dd_mh_sigs, kmAssign → kmCents), and a nested
-    * computeIfAbsent on the same ConcurrentHashMap throws "Recursive
-    * update" whenever the inner insert lands in the bin the outer call
-    * holds. The benign race (two threads building the same lazy plan,
-    * loser discarded un-materialized) costs nothing.
-    */
   /** Union `from`'s store-taint set into every memo currently building on
     * this thread — taint propagation through memo COMPOSITION. A memo
     * built from an already-cached store-served memo never fires its own
@@ -157,6 +150,13 @@ object MatStore {
     }
   }
 
+  /** get-then-putIfAbsent instead of computeIfAbsent: store builds nest
+    * (lshCandM → dd_mh_sigs, kmAssign → kmCents), and a nested
+    * computeIfAbsent on the same ConcurrentHashMap throws "Recursive
+    * update" whenever the inner insert lands in the bin the outer call
+    * holds. The benign race (two threads building the same lazy plan,
+    * loser discarded un-materialized) costs nothing.
+    */
   private def lookup(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     if (!cache.isEmpty)
       cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
@@ -206,7 +206,7 @@ object MatStore {
   }
 
   /** The (key, relation) entries stored for `s`, in key order — for
-    * footprint reports ([[graft.tools.MemoFootprint]]).
+    * footprint reports ([[graft.tools.Measure]]).
     */
   private[graft] def entries(s: SparkSession): Seq[(String, DataFrame)] = {
     import scala.jdk.CollectionConverters._

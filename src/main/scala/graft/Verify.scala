@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+/** Correctness dump: each registered query's result → parquet (forced
+  * through [[QueryDef.execute]]), plus oracle_sql.json, for the DuckDB
+  * compare.
   *
   * A query that throws does not stop the dump: every other query's
   * output and oracle_sql.json are still written, then the failed query
@@ -23,31 +24,17 @@ object Verify {
     val spark = GraftSession.get(cpus)
     new java.io.File(outDir).mkdirs()
     val failed = Seq.newBuilder[String]
-    SparkEntry.queries
+    Registry.byName
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
+      .foreach { case (name, q) =>
       spark.catalog.clearCache()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try q.execute(spark, sfDir, QueryDef.parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed += name
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = Json.obj(SparkEntry.oracleSql.map { case (k, v) => k -> Json.str(v) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     val names = failed.result()

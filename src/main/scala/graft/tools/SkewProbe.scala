@@ -1,25 +1,17 @@
 package graft.tools
 
 import graft._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Dev-only: ADVERSARIAL-SKEW probe for the LSH bucket cap (r13 verdict
-  * item 6). The 5× scale replica is uniform, so the designed defense —
-  * md5-hash-chunked salted sub-buckets + AQE skew splitting — was never
-  * exercised against the load it exists for: a near-identical SPAM
-  * cluster whose members all share every LSH band bucket (a 10k-doc
-  * bucket is 50M candidate pairs uncapped).
-  *
-  * The probe builds a replica corpus = the base documents + `N` planted
-  * near-identical spam docs (a fixed 60-word body, one varying tail
-  * token — signatures collide on every band), then runs dd_minhash_lsh
-  * and dd_ngram_jaccard on the clean and the spammed replica, recording
-  * wall time, scheduler counters, MAX vs P50 task time (the straggler
-  * signal), the capped candidate count, and the closed-form UNCAPPED
-  * pair volume Σ_buckets C(cnt,2) the cap prevented (derived from
-  * bucket stats — never materialized).
+/** Dev-only: adversarial-skew probe for the LSH bucket cap (md5-chunked
+  * salted sub-buckets + AQE skew splits), which the uniform 5× replica
+  * never loads. Builds the base documents plus `N` planted near-identical
+  * spam docs (one 60-word body, a varying tail token: they collide on
+  * every band; 10k of them make 50M candidate pairs uncapped), then runs
+  * dd_minhash_lsh and dd_ngram_jaccard on the clean and the spammed
+  * replica, printing each [[RunRecord]] (longest task against the mean
+  * task: the straggler signal) and the closed-form uncapped pair volume
+  * Σ_buckets C(cnt,2) the cap prevented, from bucket stats only.
   */
 object SkewProbe {
   def main(args: Array[String]): Unit = {
@@ -28,21 +20,6 @@ object SkewProbe {
     val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-
-    val tasks = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val shufW = new AtomicLong(0L)
-    val durs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        shufW.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        if (t.taskInfo != null) durs.add(t.taskInfo.duration)
-      }
-    })
 
     // ---- build the two replicas (documents-only dirs) -----------------
     val work = java.nio.file.Files.createTempDirectory("graft_skew").toString
@@ -58,25 +35,6 @@ object SkewProbe {
       (length(lit(body)) + 10).cast("long").as("n_chars"))
     docs.unionByName(spamDocs).write.parquet(s"$spam/documents.parquet")
 
-    def timed(label: String)(f: => Long): Unit = {
-      spark.catalog.clearCache(); MatStore.clear(spark); System.gc()
-      Thread.sleep(300)
-      tasks.set(0); stages.set(0); shufW.set(0L); durs.clear()
-      val t0 = System.nanoTime()
-      val rows = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      val ds = {
-        import scala.jdk.CollectionConverters._
-        durs.asScala.toSeq.sorted
-      }
-      val p50 = if (ds.nonEmpty) ds(ds.size / 2) else 0L
-      val mx = if (ds.nonEmpty) ds.last else 0L
-      println(f"SKEWPROBE $label%-34s ${sec}%7.2f s  rows=$rows%-9d " +
-        f"stages=${stages.get()}%-4d tasks=${tasks.get()}%-5d " +
-        f"shufMB=${shufW.get() / 1e6}%8.1f  taskP50=${p50}%5d ms  taskMax=${mx}%6d ms")
-    }
-
     for (round <- 1 to 2; (name, dir) <- Seq(
         ("clean", clean), ("spam", spam))) {
       println(s"SKEWPROBE -- round $round / $name replica " +
@@ -87,10 +45,11 @@ object SkewProbe {
       val uncapped = bands.groupBy($"band", $"bkey").agg(count(lit(1)).as("c"))
         .agg(sum(($"c" * ($"c" - 1) / 2).cast("long")).as("p")).head().getLong(0)
       println(s"SKEWPROBE $name uncapped pair volume (closed form): $uncapped")
-      timed(s"$name dd_minhash_lsh")(
-        Registry.byName("dd_minhash_lsh").run(spark, dir).count())
-      timed(s"$name dd_ngram_jaccard")(
-        Registry.byName("dd_ngram_jaccard").run(spark, dir).count())
+      for (q <- Seq("dd_minhash_lsh", "dd_ngram_jaccard")) {
+        spark.catalog.clearCache(); MatStore.clear(spark); System.gc()
+        val r = Registry.byName(q).execute(spark, dir)
+        println(f"SKEWPROBE $name%-5s $q%-16s ${r.line} taskMean=${r.runS / r.tasks.max(1)}%5.2f s")
+      }
     }
     spark.stop()
   }

@@ -589,38 +589,14 @@ class TextSentimentSpec extends GraftSuite {
     import operators.TextAnalysis.{BpeTaps, bpeSegTaps}
     // the vocabulary is collected once and every merge round runs in
     // driver memory, so the job count does not grow with the rounds.
-    // Jobs are counted by job group; a marker job in another group
-    // flushes the listener queue (it delivers events in order).
-    val sc = spark.sparkContext
-    val (group, marker) = ("bpe-learn-jobs", "bpe-learn-marker")
-    val learnJobs = new java.util.concurrent.atomic.AtomicInteger
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => learnJobs.incrementAndGet()
-          case Some(`marker`) => markerSeen.countDown()
-          case _ => ()
-        }
-    }
     val vf = Tables.documents(spark, sfDir)
       .select(explode(split($"text", " ")).as("word"))
       .filter($"word" =!= "")
       .groupBy($"word").agg(count(lit(1)).as("freq"))
-    sc.addSparkListener(listener)
-    val taps = try {
-      sc.setJobGroup(group, "BPE learner")
-      val t = bpeSegTaps(vf, Seq(BpeTaps.max - 1, BpeTaps.max))
-      sc.setJobGroup(marker, "listener flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      t
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    assert(learnJobs.get() >= 1 && learnJobs.get() <= 2,
-      s"learning ${BpeTaps.max} merges started ${learnJobs.get()} jobs")
+    val (taps, rec) =
+      Run.measure(spark)(bpeSegTaps(vf, Seq(BpeTaps.max - 1, BpeTaps.max)))(identity)
+    assert(rec.jobs >= 1 && rec.jobs <= 2,
+      s"learning ${BpeTaps.max} merges started ${rec.jobs} jobs")
     // the last round really merged: the corpus has pairs left at depth 32
     assert(segMap(taps(BpeTaps.max - 1)) !== segMap(taps(BpeTaps.max)))
   }
