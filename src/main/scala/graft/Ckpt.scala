@@ -36,7 +36,10 @@ object Ckpt {
 
   implicit class CkptOps(private val df: DataFrame) extends AnyVal {
     /** Truncate lineage here: lazy local checkpoint, or lazy reliable
-      * checkpoint under the [[Ckpt.Conf]] knob.
+      * checkpoint under the [[Ckpt.Conf]] knob. The truncated plan no
+      * longer names its inputs, so its input roots are recorded against
+      * the checkpoint ([[org.apache.spark.sql.GraftRunAccess.inputRoots]]
+      * reads them back).
       *
       * The checkpoint forwards the origin plan's Statistics; a round
       * plan that references the previous round's checkpoint ≥ 2 times
@@ -46,9 +49,12 @@ object Ckpt {
       * inherited stats on their first implausible crossing — see
       * [[org.apache.spark.sql.GraftStatsBarrier]].
       */
-    def ckpt: DataFrame =
-      org.apache.spark.sql.GraftStatsBarrier.clampOriginStats(
+    def ckpt: DataFrame = {
+      val c = org.apache.spark.sql.GraftStatsBarrier.clampOriginStats(
         if (reliable(df.sparkSession)) df.checkpoint(false)
         else df.localCheckpoint(false))
+      org.apache.spark.sql.GraftRunAccess.noteCheckpoint(c, df)
+      c
+    }
   }
 }

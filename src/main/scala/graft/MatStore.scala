@@ -41,68 +41,36 @@ import graft.Ckpt._
   * (same discipline as [[Tables]]); `spark.catalog.clearCache()`
   * does NOT drop these blocks — they are checkpoint RDDs, freed by the
   * ContextCleaner when the store entry (and thus the plan) is released.
+  *
+  * The durable twin is [[graft.sources.IndexStore]]: a key published in
+  * the session's configured store is served from it instead of built,
+  * and a memo may be built over any store's served scan. What a memo
+  * depends on is read from its plan alone — file roots, and through
+  * [[Ckpt]]'s record the roots behind each checkpoint — so when a
+  * store's files are swapped [[clearStoreDerived]] drops exactly the
+  * memos that read them, whichever thread built them.
   */
 object MatStore {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
 
-  /** Memo keys whose PLAN reads a durable store's files — the served
-    * scans themselves plus any memo whose build consumed one (the file
-    * index is captured at plan construction, so a post-compact swap
-    * leaves those plans pointing at deleted files). Tracked PER STORE
-    * DIRECTORY so [[graft.sources.IndexStore.compact]] can invalidate
-    * exactly the memos reading the store it is swapping — not the whole
-    * session store (r15 ADVICE: the lifecycle gate runs compact inside a
-    * normal query pass, and a blanket clear discarded every unrelated
-    * warm shared build mid-bench), and not memos served from a
-    * DIFFERENT store (r16 review: the graph-ingest and lifecycle gates
-    * each maintain their own store dir — compacting one must not cost
-    * the other its published artifacts). Conservative in the safe
-    * direction: a key is tainted when ANY serve succeeded while its
-    * build was on this thread's stack, even if the serve's rows never
-    * reached the returned plan.
-    */
-  private val storeTainted =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      java.util.Set[String]]()
-  private val buildStack = new ThreadLocal[List[(SparkSession, String)]] {
-    override def initialValue: List[(SparkSession, String)] = Nil
-  }
-
-  /** Called by [[graft.sources.IndexStore]] on every successful serve:
-    * taints every memo currently BUILDING on this thread (builds are
-    * constructed synchronously on the caller's thread, so the stack
-    * covers nested derivations like a memo built over a served scan)
-    * with the serving store's directory.
-    */
-  private[graft] def noteStoreServed(s: SparkSession, storeDir: String): Unit =
-    buildStack.get().foreach { case k @ (ks, _) =>
-      if (ks eq s)
-        storeTainted.computeIfAbsent(k, _ =>
-          java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
-          .add(storeDir)
-    }
-
-  /** Drop only the memos whose plans read `storeDir` ([[noteStoreServed]]
-    * taint) — compact's scoped invalidation. Unrelated warm builds
-    * (tokenized corpora, in-session edge relations, memos served from
-    * OTHER stores) survive the maintenance action. A tainted key whose
-    * build is still IN FLIGHT (taint recorded, memo not yet cached)
-    * keeps its taint: the plan cached after this swap must stay
-    * invalidatable by the next clear (r16 review).
+  /** Drop the session's memos whose plans read a file under `storeDir`
+    * ([[org.apache.spark.sql.GraftRunAccess.inputRoots]]) — what
+    * [[graft.sources.IndexStore.compact]] calls after it swaps that
+    * store's files: a plan captures its file index when it is built, so
+    * such a memo would read deleted files. Memos over other inputs,
+    * another store's included, stay warm.
     */
   def clearStoreDerived(s: SparkSession, storeDir: String): Unit = {
-    val it = storeTainted.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val k = e.getKey
-      if ((k._1 eq s) && e.getValue.contains(storeDir)) {
-        val df = cache.remove(k)
-        if (df != null) {
-          try df.unpersist(blocking = false) catch { case _: Throwable => () }
-          it.remove()
-        }
-      }
+    val root = new org.apache.hadoop.fs.Path(storeDir)
+    val under = root.getFileSystem(s.sessionState.newHadoopConf())
+      .makeQualified(root).toString.stripSuffix("/") + "/"
+    cache.forEach { (k, df) =>
+      if ((k._1 eq s) &&
+          org.apache.spark.sql.GraftRunAccess.inputRoots(df)
+            .exists(r => (r + "/").startsWith(under)) &&
+          cache.remove(k, df))
+        try df.unpersist(blocking = false) catch { case _: Throwable => () }
     }
   }
 
@@ -129,27 +97,6 @@ object MatStore {
   def view(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     lookup(s, key)(build)
 
-  /** Union `from`'s store-taint set into every memo currently building on
-    * this thread — taint propagation through memo COMPOSITION. A memo
-    * built from an already-cached store-served memo never fires its own
-    * tryServe (the serve happened in the original build), so without this
-    * hop the derived memo's plan would survive [[clearStoreDerived]] and
-    * dangle over the files compact just deleted (r16 ADVICE).
-    */
-  private def propagateTaint(s: SparkSession, from: (SparkSession, String)): Unit = {
-    val stack = buildStack.get()
-    if (stack.nonEmpty) {
-      val taints = storeTainted.get(from)
-      if (taints != null && !taints.isEmpty)
-        stack.foreach { case sk @ (ks, _) =>
-          if (ks eq s)
-            storeTainted.computeIfAbsent(sk, _ =>
-              java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
-              .addAll(taints)
-        }
-    }
-  }
-
   /** get-then-putIfAbsent instead of computeIfAbsent: store builds nest
     * (lshCandM → dd_mh_sigs, kmAssign → kmCents), and a nested
     * computeIfAbsent on the same ConcurrentHashMap throws "Recursive
@@ -162,13 +109,10 @@ object MatStore {
       cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     val k = (s, key)
     val existing = cache.get(k)
-    if (existing != null) { propagateTaint(s, k); existing }
+    if (existing != null) existing
     else {
-      buildStack.set(k :: buildStack.get())
       // a key published in the session's store serves instead of building
-      val built =
-        try graft.sources.IndexStore.tryServe(s, key).getOrElse(build)
-        finally buildStack.set(buildStack.get().tail)
+      val built = graft.sources.IndexStore.tryServe(s, key).getOrElse(build)
       val prev = cache.putIfAbsent(k, built)
       if (prev != null) {
         // losing thread: discard the unused build. Memo-path builds
@@ -176,8 +120,6 @@ object MatStore {
         // loser has already registered a CacheManager entry that would
         // otherwise leak until the next clearCache.
         try built.unpersist(blocking = false) catch { case _: Throwable => () }
-        // the winner's build may carry taints ours did not re-fire
-        propagateTaint(s, k)
         prev
       } else built
     }
@@ -228,7 +170,6 @@ object MatStore {
       if (k._1 eq s) {
         try cache.get(k).unpersist(blocking = false) catch { case _: Throwable => () }
         it.remove()
-        storeTainted.remove(k)
       }
     }
   }

@@ -961,13 +961,13 @@ object MinHashSig {
   val MaxN = 2048
 
   private val Sep = ' '.toByte
-  private val digest = ThreadLocal.withInitial[java.security.MessageDigest](
-    () => java.security.MessageDigest.getInstance("MD5"))
+  /** Never updated: each call digests with its own clone of it. */
+  private val md5 = java.security.MessageDigest.getInstance("MD5")
 
   def build(arr: ArrayData, k: Int, n: Int): ArrayData = {
     val m = arr.numElements() - k + 1
     if (m <= 0) return null
-    val md = digest.get()
+    val md = md5.clone().asInstanceOf[java.security.MessageDigest]
     val mins = Array.fill(n)(Long.MaxValue)
     var i = 0
     while (i < m) {

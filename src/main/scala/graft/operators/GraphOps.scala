@@ -294,8 +294,7 @@ object GraphOps {
     *
     * `u` must be an [[iterRelation]] (materialized, node-partitioned).
     */
-  def pagerank(u: DataFrame, iters: Int = PrIters,
-      stateBroadcast: Boolean = true): DataFrame = {
+  def pagerank(u: DataFrame, iters: Int = PrIters): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     // one partition-local aggregation doubles as the node list (every
@@ -311,7 +310,9 @@ object GraphOps {
     // broadcast decision below — folding it into the plan as a scalar
     // aggregate would instead re-broadcast a 1-row relation every round.
     val n = wdeg.count()
-    val bcast = stateBroadcast && stateHint(n)
+    // the conf is read here, not only in stateJoin: it also picks norm's
+    // partitioning key below
+    val bcast = stateHint(n) && stateBroadcastAllowed(s)
     // wdeg is |V| rows: broadcast it explicitly — size estimation over a
     // checkpoint+agg is too conservative to trigger the auto-broadcast,
     // and the sort-merge fallback shuffles the full |E| relation once per
@@ -353,7 +354,7 @@ object GraphOps {
       // edge relation streams through a broadcast-hash join each round
       // instead of re-shuffling — the map-side partial sum then shrinks
       // the shuffle to |V| rows. At 100 TB scale |V| may outgrow a
-      // broadcast; pass stateBroadcast = false to keep both sides
+      // broadcast; spark.graft.stateBroadcast=false keeps both sides
       // hash-partitioned on the node key instead (see [[stateJoin]]).
       val contribs = norm.join(stateJoin(ranks.withColumnRenamed("node", "src0"), bcast), $"src" === $"src0")
         .groupBy($"dst").agg(sum($"r" * $"p").as("contrib"))
@@ -410,14 +411,13 @@ object GraphOps {
     * beyond λ ≈ 2.4e6, normalize every round (EvNormEvery = 1 bounds
     * terms at (1+λ)² → λ ≈ 1.5e13).
     */
-  def eigenvector(u: DataFrame, iters: Int = PrIters,
-      stateBroadcast: Boolean = true): DataFrame = {
+  def eigenvector(u: DataFrame, iters: Int = PrIters): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     import org.apache.spark.sql.types.DecimalType
     val nodes = u.select($"node").distinct().ckpt
     val n = nodes.count()
-    val bcast = stateBroadcast && stateHint(n) // see pagerank
+    val bcast = stateHint(n) // see pagerank
     var x = nodes.select($"node", (lit(1.0) / n).as("x")).ckpt
     for (i <- 1 to iters) {
       // ONE renamed copy of x feeds BOTH joins this round: the two
@@ -476,8 +476,7 @@ object GraphOps {
     * dd_clusters' near-dup chains) still get the exact fixpoint.
     */
   def components(u: DataFrame, maxIters: Int = 20,
-      uncheckedRounds: Int = CcUncheckedRounds,
-      stateBroadcast: Boolean = true): DataFrame = {
+      uncheckedRounds: Int = CcUncheckedRounds): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     // lazy localCheckpoint per round truncates lineage (see pagerank)
@@ -493,9 +492,9 @@ object GraphOps {
     // the undirected relation, so the neighbor aggregate covers all nodes.
     def step(l: DataFrame): DataFrame = {
       val l2 = l.withColumnRenamed("node", "nb0")
-      u.join(stateJoin(l2, stateBroadcast), $"nb" === $"nb0")
+      u.join(stateJoin(l2, bcast = true), $"nb" === $"nb0")
         .groupBy($"node").agg(min($"lbl").as("nl"))
-        .join(stateJoin(l2, stateBroadcast), $"node" === $"nb0")
+        .join(stateJoin(l2, bcast = true), $"node" === $"nb0")
         .select($"node", least($"nl", $"lbl").as("lbl"))
         .ckpt
     }
@@ -507,9 +506,9 @@ object GraphOps {
     // checked round (its own job-scheduling barrier) is gone.
     def stepChecked(l: DataFrame): (DataFrame, Long) = {
       val l2 = l.withColumnRenamed("node", "nb0")
-      val nw = u.join(stateJoin(l2, stateBroadcast), $"nb" === $"nb0")
+      val nw = u.join(stateJoin(l2, bcast = true), $"nb" === $"nb0")
         .groupBy($"node").agg(min($"lbl").as("nl"))
-        .join(stateJoin(l2, stateBroadcast), $"node" === $"nb0")
+        .join(stateJoin(l2, bcast = true), $"node" === $"nb0")
         .select($"node", least($"nl", $"lbl").as("lbl"), $"lbl".as("old"))
         .ckpt
       (nw.select($"node", $"lbl"), nw.filter($"lbl" =!= $"old").count())
@@ -518,7 +517,7 @@ object GraphOps {
     // routed through the same size knob as the state joins (at 100 TB a
     // |V|-row broadcast build would OOM the driver here too)
     def diff(a: DataFrame, b: DataFrame): Long =
-      a.join(stateJoin(b.withColumnRenamed("lbl", "old"), stateBroadcast), "node")
+      a.join(stateJoin(b.withColumnRenamed("lbl", "old"), bcast = true), "node")
         .filter($"lbl" =!= $"old").count()
     var prev: DataFrame = null
     var i = 0
@@ -662,13 +661,12 @@ object GraphOps {
     * broadcast the size-driven [[stateJoin]] knob shifts every state join
     * to a shuffled hash join against the node-partitioned edge relation.
     */
-  def closeness(u: DataFrame, k: Int = ClLandmarks, rounds: Int = ClRounds,
-      stateBroadcast: Boolean = true): DataFrame = {
+  def closeness(u: DataFrame, k: Int = ClLandmarks, rounds: Int = ClRounds): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     // lazy: materializes under the count() (see betweenness)
     val nodes = u.select($"node").distinct().ckpt
-    val bcast = stateBroadcast && stateHint(nodes.count())
+    val bcast = stateHint(nodes.count())
     val lmkIds = landmarkSeed(u, k)
     val state = landmarkBfs(u, nodes, lmkIds, rounds, sigma = false, bcast)
     // closeness(v) = K / Σ_i min(dist(v, lmk_i), rounds+1): exact integer
@@ -704,15 +702,14 @@ object GraphOps {
     * δ aggregation routes through decimal casts (Portable.dsum) so the
     * DuckDB oracle twin hash-matches despite double non-associativity.
     */
-  def betweenness(u: DataFrame, k: Int = BwLandmarks, rounds: Int = BwRounds,
-      stateBroadcast: Boolean = true): DataFrame = {
+  def betweenness(u: DataFrame, k: Int = BwLandmarks, rounds: Int = BwRounds): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     import org.apache.spark.sql.types.DecimalType
     // lazy: materializes under the count() below; the landmark top-K and
     // every later reader then ride the blocks
     val nodes = u.select($"node").distinct().ckpt
-    val bcast = stateBroadcast && stateHint(nodes.count())
+    val bcast = stateHint(nodes.count())
     val lmkIds = landmarkSeed(u, k)
     val ks = lmkIds.indices
     // forward: columnar BFS with exact BIGINT σ path counts per landmark
@@ -867,12 +864,11 @@ object GraphOps {
     * division is double.
     */
   def closenessW(u: DataFrame, k: Int = ClLandmarks, rounds: Int = ClWRounds,
-      stateBroadcast: Boolean = true,
       probe: (String, Int) => Unit = (_, _) => ()): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     val nodes = u.select($"node").distinct().ckpt
-    val bcast = stateBroadcast && stateHint(nodes.count())
+    val bcast = stateHint(nodes.count())
     val lmkIds = landmarkSeed(u, k)
     val state = weightedDists(u, nodes, lmkIds, rounds, bcast,
       probe("relax", _))
@@ -911,12 +907,12 @@ object GraphOps {
     * broadcasts throughout.
     */
   def betweennessW(u: DataFrame, k: Int = BwLandmarks, rounds: Int = BwWRounds,
-      dagIters: Int = BwWDagIters, stateBroadcast: Boolean = true,
+      dagIters: Int = BwWDagIters,
       probe: (String, Int) => Unit = (_, _) => ()): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     val nodes = u.select($"node").distinct().ckpt
-    val bcast = stateBroadcast && stateHint(nodes.count())
+    val bcast = stateHint(nodes.count())
     val lmkIds = landmarkSeed(u, k)
     val ks = lmkIds.indices
     val state = weightedDists(u, nodes, lmkIds, rounds, bcast,
@@ -1100,8 +1096,7 @@ object GraphOps {
     * two-level aggregation ((node,label) then node) is map-side partial,
     * so each round's shuffle carries candidate-label rows, not edges.
     */
-  def communities(u: DataFrame, iters: Int = LpIters,
-      stateBroadcast: Boolean = true): DataFrame = {
+  def communities(u: DataFrame, iters: Int = LpIters): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     var lbls = u.select($"node").distinct()
@@ -1109,7 +1104,7 @@ object GraphOps {
     // same size discipline as [[pagerank]]: the count materializes the
     // checkpointed seed labels (a job round 1 pays anyway) and |V|
     // decides broadcast vs shuffled-hash for every round's state join
-    val bcast = stateBroadcast && stateHint(lbls.count())
+    val bcast = stateHint(lbls.count())
     for (_ <- 1 to iters) {
       val votes = u
         .join(stateJoin(lbls.select($"node".as("nb0"), $"lbl".as("nlbl")), bcast), $"nb" === $"nb0")

@@ -197,8 +197,10 @@ object IndexStore {
     // overwrite deletes the input mid-job). Publishing must happen from
     // a training session (one that does not serve this store), or to a
     // fresh store dir swapped in afterwards — the standard blue/green
-    // index-rebuild discipline.
-    if (df.inputFiles.exists(_.contains(s"/$name/")))
+    // index-rebuild discipline. The plan's input roots see through
+    // checkpoints, whose plans list no input files.
+    if (org.apache.spark.sql.GraftRunAccess.inputRoots(df)
+        .exists(r => s"$r/".contains(s"/$name/")))
       throw new IllegalStateException(
         s"refusing to overwrite published '$key' from a plan that reads it; " +
           "retrain in a session that does not serve this store, or publish " +
@@ -278,10 +280,8 @@ object IndexStore {
                    |CLUSTERED BY ($bCol) SORTED BY ($bCol) INTO $n BUCKETS
                    |LOCATION '$path'""".stripMargin)
             }
-            // taint any MatStore memo currently building on this thread:
-            // its plan reads this store's files, so a later compact's
-            // swap must invalidate it (scoped invalidation, r15 ADVICE)
-            graft.MatStore.noteStoreServed(s, store)
+            // the scan's plan names the store's files; compact finds the
+            // memos that read them from their plans
             Right(s.table(name))
         }
     }
@@ -485,19 +485,11 @@ object IndexStore {
       throw new IllegalStateException(s"compaction swap failed for $key (promote)")
     }
     fs.delete(oldPath, true)
-    // same-session invalidation: a MatStore memo created by an earlier
-    // serve — or any memo whose lazy plan was BUILT from a served scan
-    // (the file index is captured at plan construction) — points at the
-    // pre-swap files, which the swap just deleted. Derivation is
-    // tracked ([[graft.MatStore.noteStoreServed]] taints every memo
-    // whose build a successful serve ran inside), so invalidation is
-    // SCOPED to the store-derived memos: unrelated warm shared builds
-    // (tokenized corpora, in-session edge relations) survive a
-    // mid-session compact instead of silently re-paying their builds
-    // (r15 ADVICE). The dropped TABLE is re-CREATEd with a fresh file
-    // index by the next serve. Plans already handed out to external
-    // callers cannot be repaired from here — run compaction from a
-    // maintenance session, not mid-serve.
+    // same-session invalidation: every memo whose plan reads this
+    // store's pre-swap files goes; memos over other inputs stay warm.
+    // The next serve re-CREATEs the dropped table with a fresh file
+    // index. Plans already handed out to callers cannot be repaired
+    // from here — run compaction from a maintenance session.
     graft.MatStore.clearStoreDerived(s, store)
     (before, dataFiles(path))
   }

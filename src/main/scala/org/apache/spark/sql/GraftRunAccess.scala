@@ -3,12 +3,16 @@ package org.apache.spark.sql
 import java.util.Properties
 
 import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
-/** The Spark internals [[graft.Run]] and the memo footprint report read.
-  * Spark keeps them `private[spark]` or `private[sql]`, so this accessor
-  * lives in Spark's package, like [[GraftStatsBarrier]]. It only reads.
+/** The Spark internals [[graft.Run]], the memo footprint report and the
+  * store invalidation read. Spark keeps them `private[spark]` or
+  * `private[sql]`, so this accessor lives in Spark's package, like
+  * [[GraftStatsBarrier]]. It only reads, apart from the checkpoint
+  * record [[noteCheckpoint]] keeps.
   */
 object GraftRunAccess {
 
@@ -47,4 +51,34 @@ object GraftRunAccess {
           .map(_.cachedColumnBuffers.id)
     }
   }
+
+  /** The input roots of each checkpoint's plan, keyed by the checkpoint
+    * RDD. Weak keys: the record never keeps an RDD reachable, so the
+    * ContextCleaner still frees a released checkpoint's blocks.
+    */
+  private val ckptRoots = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[RDD[_], Set[String]]())
+
+  /** Record that checkpoint `ckpt` truncates `origin`'s plan: its
+    * LogicalRDD leaf then reads what `origin` reads ([[inputRoots]]).
+    */
+  def noteCheckpoint(ckpt: DataFrame, origin: DataFrame): Unit =
+    ckpt.asInstanceOf[classic.Dataset[Row]].queryExecution.logical match {
+      case l: LogicalRDD => ckptRoots.put(l.rdd, inputRoots(origin))
+      case _ => ()
+    }
+
+  /** The qualified root paths `df`'s plan reads: its file relations'
+    * roots, plus, for each checkpoint leaf, the roots recorded when it
+    * was taken — so the answer sees through any chain of checkpoints, on
+    * whatever thread they were built. A leaf made from a bare RDD reads
+    * no roots.
+    */
+  def inputRoots(df: DataFrame): Set[String] =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
+      .collectWithSubqueries {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+          r.location.rootPaths.map(_.toString).toSet
+        case l: LogicalRDD => Option(ckptRoots.get(l.rdd)).getOrElse(Set.empty[String])
+      }.flatten.toSet
 }

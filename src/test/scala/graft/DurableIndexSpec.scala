@@ -517,6 +517,69 @@ class DurableIndexSpec extends GraftSuite {
     }
   }
 
+  test("compact drops a memo whose build served the store on another thread") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val store = java.nio.file.Files.createTempDirectory("graft_idx_thread").toString
+    val store2 = java.nio.file.Files.createTempDirectory("graft_idx_thread2").toString
+    val key = s"thread_toy:$store"
+    val key2 = s"thread_toy2:$store2"
+    try {
+      sources.IndexStore.publish(spark, store, key,
+        Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), "id")
+      sources.IndexStore.publish(spark, store2, key2, Seq((7L, 70L)).toDF("id", "v"), "id")
+      // each serve runs on a pool thread; only the plan links the memo
+      // built on this thread to its store
+      val builds = scala.collection.mutable.Map("derived" -> 0, "other" -> 0)
+      def servedElsewhere(name: String, st: String, k: String) = MatStore.of(spark, name) {
+        builds(name) += 1
+        Await.result(Future(sources.IndexStore.serve(spark, st, k)), 1.minute)
+          .filter(col("id") > 0)
+      }
+      def derived = servedElsewhere("derived", store, key)
+      def other = servedElsewhere("other", store2, key2)
+      assert(derived.count() === 2 && other.count() === 1)
+      sources.IndexStore.compact(spark, store, key)
+      assert(derived.count() === 2 && other.count() === 1)
+      assert(builds("derived") === 2,
+        "compact must invalidate a memo whose plan reads the store, whatever thread served it")
+      assert(builds("other") === 1, "a memo over another store must survive")
+    } finally {
+      MatStore.clear(spark)
+      Seq(key, key2).foreach(k =>
+        spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(k)}"))
+    }
+  }
+
+  test("compact drops a memo derived from a query-local checkpoint of a served scan") {
+    import spark.implicits._
+    import Ckpt._
+    val store = java.nio.file.Files.createTempDirectory("graft_idx_ckpt").toString
+    val key = s"ckpt_toy:$store"
+    try {
+      sources.IndexStore.publish(spark, store, key,
+        Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "v"), "id")
+      // the memo's plan is a checkpoint of a plan over another
+      // checkpoint: neither names a file, both records do
+      var builds = 0
+      def derived = MatStore.of(spark, "ckpt_derived") {
+        builds += 1
+        sources.IndexStore.serve(spark, store, key).filter(col("id") > 1).ckpt
+          .groupBy().agg(sum(col("v")).as("v"))
+      }
+      assert(derived.head().getLong(0) === 50L && builds === 1)
+      sources.IndexStore.compact(spark, store, key)
+      assert(derived.head().getLong(0) === 50L)
+      assert(builds === 2,
+        "compact must invalidate a memo that reads the store through a checkpoint")
+    } finally {
+      MatStore.clear(spark)
+      spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
+    }
+  }
+
   test("every maintenance action bumps the publish-generation version token") {
     import spark.implicits._
     val store = java.nio.file.Files.createTempDirectory("graft_idx_ver").toString
@@ -571,6 +634,30 @@ class DurableIndexSpec extends GraftSuite {
     } finally {
       MatStore.clear(s3)
       s3.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
+    }
+  }
+
+  test("publish refuses a self-overwrite from a checkpoint of the served table") {
+    import spark.implicits._
+    import Ckpt._
+    val store = java.nio.file.Files.createTempDirectory("graft_idx_guard_ckpt").toString
+    val key = s"guard_toy:$store"
+    try {
+      sources.IndexStore.publish(spark, store, key,
+        Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), "id")
+      // a lazy checkpoint lists no input files, yet the write would
+      // still read the table it overwrites
+      val retrained = sources.IndexStore.serve(spark, store, key)
+        .select(col("id"), (col("v") + 1).as("v")).ckpt
+      assert(retrained.inputFiles.isEmpty)
+      val e = intercept[IllegalStateException] {
+        sources.IndexStore.publish(spark, store, key, retrained, "id")
+      }
+      assert(e.getMessage.contains("refusing to overwrite"))
+      assert(rowsOf(sources.IndexStore.serve(spark, store, key)) === Seq("[1,10]", "[2,20]"))
+    } finally {
+      MatStore.clear(spark)
+      spark.sql(s"DROP TABLE IF EXISTS ${sources.IndexStore.tableName(key)}")
     }
   }
 

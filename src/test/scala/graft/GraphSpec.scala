@@ -365,15 +365,23 @@ class GraphSpec extends GraftSuite {
       val worst = a.map { case (k, v) => math.abs(v - b(k)) }.max
       assert(worst < 1e-9, s"max path divergence $worst")
     }
-    close(byNode(GraphOps.pagerank(u, iters = 3, stateBroadcast = false), "r"),
-      byNode(GraphOps.pagerank(u, iters = 3, stateBroadcast = true), "r"))
-    close(byNode(GraphOps.eigenvector(u, iters = 2, stateBroadcast = false), "x"),
-      byNode(GraphOps.eigenvector(u, iters = 2, stateBroadcast = true), "x"))
     def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("node").collect().toSeq
-    assert(rows(GraphOps.components(u, uncheckedRounds = 2, stateBroadcast = false)) ===
-      rows(GraphOps.components(u, uncheckedRounds = 2, stateBroadcast = true)))
-    assert(rows(GraphOps.communities(u, iters = 2, stateBroadcast = false)) ===
-      rows(GraphOps.communities(u, iters = 2, stateBroadcast = true)))
+    // each kernel's state joins are planned, and its results collected,
+    // under the session's spark.graft.stateBroadcast setting
+    def results(): (Map[Long, Double], Map[Long, Double],
+        Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) =
+      (byNode(GraphOps.pagerank(u, iters = 3), "r"),
+        byNode(GraphOps.eigenvector(u, iters = 2), "x"),
+        rows(GraphOps.components(u, uncheckedRounds = 2)),
+        rows(GraphOps.communities(u, iters = 2)))
+    val (pr, ev, cc, lp) = results()
+    spark.conf.set("spark.graft.stateBroadcast", "false")
+    val (prOff, evOff, ccOff, lpOff) =
+      try results() finally spark.conf.unset("spark.graft.stateBroadcast")
+    close(prOff, pr)
+    close(evOff, ev)
+    assert(ccOff === cc)
+    assert(lpOff === lp)
   }
 
   test("graph stats: density in (0,1], clustering in [0,1], bounded sample") {
