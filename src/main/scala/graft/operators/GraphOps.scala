@@ -567,112 +567,263 @@ object GraphOps {
   def fmtNode(c: Column): Column =
     concat(when(c % 2 === 0, "c").otherwise("s"), shiftright(c, 1).cast("string"))
 
-  /** Columnar landmark-BFS state: ONE row per node with per-landmark
-    * distance columns d0..d{K-1} (null = unreached) and, when `sigma`,
-    * shortest-path-count columns s0..s{K-1} (exact BIGINT). Pivoting the
-    * K landmarks into columns instead of |V|·K (node, lmk) rows is what
-    * makes the landmark suite cheap: state stays |V| rows for the whole
-    * run (no growing union, no per-round anti-join), every broadcast and
-    * shuffle carries K× fewer rows, and each round is ONE frontier join +
-    * ONE merge join with constant-size plans (the row-based variant's
-    * union-of-levels plans grew every round and their re-analysis came to
-    * dominate the wall time). The landmark ids arrive as literals
-    * (`lmkIds`, a K-row driver seed — same class as pagerank's scalar N
-    * seed), so the per-column masks are codegen'd constants.
+  /** Where a shortest-path kernel's sources live — the one parameter
+    * separating the landmark centralities from the error gate's
+    * all-sources probe details, which run the SAME four kernels
+    * ([[bfsKernel]], [[brandesKernel]], [[relaxKernel]],
+    * [[brandesWKernel]]). A kernel reads four things off its layout:
+    * the key columns ([[keys]]), the column holding source i's value
+    * ([[c]]), source i's mask ([[mask]]) and the dense key domain
+    * ([[dense]]) for outputs that must cover every key. The case follows
+    * from how the sources arrive, not from a flag:
+    *
+    *  - [[Landmarks]]: K ids the caller already collected. ONE row per
+    *    node with one column per source (d0..d{K-1}); the masks
+    *    `node === id_i` are codegen'd literals. Pivoting the K sources
+    *    into columns instead of |V|·K (node, lmk) rows is what makes the
+    *    landmark suite cheap: state stays |V| rows for the whole run,
+    *    every broadcast and shuffle carries K× fewer rows, and each round
+    *    is ONE frontier join + ONE merge join with constant-size plans.
+    *  - [[All]]: the sources as a relation (the probe slice). One row
+    *    per (src, node) with a single value column; the mask is
+    *    `node === src`. Every probe node as a landmark column was
+    *    measured slower (ROADMAP "Measured and rejected").
     */
-  private def landmarkBfs(u: DataFrame, nodes: DataFrame, lmkIds: Array[Long],
-      rounds: Int, sigma: Boolean, bcast: Boolean): DataFrame = {
-    val s = u.sparkSession
-    import s.implicits._
-    val ks = lmkIds.indices
-    def d(i: Int) = col(s"d$i")
-    def sg(i: Int) = col(s"s$i")
-    // `fr` marks this round's frontier as ONE precomputed boolean (node
-    // newly reached by ANY landmark last round). Filtering on a K-wide
-    // OR instead made Catalyst's constraint propagation enumerate
-    // combinations of the K disjuncts per round: measured 15s at K=16,
-    // 277s + 5 GB driver heap at K=20, OOM at K=24 on a 1597-node
-    // graph; with the single-attribute filter (constraint set size 1)
-    // K=24 runs in 2.8s. The flag is recomputed in the same merge
-    // projection that sets the distances, so it costs nothing extra.
-    val init = nodes.select($"node" +:
-      (ks.map(i => when($"node" === lmkIds(i), 0).cast("int").as(s"d$i")) ++
-        (if (sigma) ks.map(i => when($"node" === lmkIds(i), 1L).as(s"s$i")) else Nil) :+
-        ks.map(i => $"node" === lmkIds(i)).reduce(_ || _).as("fr")): _*)
-    var state = init.ckpt
-    for (r <- 1 to rounds) {
-      // only the previous round's frontier joins the edge relation: a
-      // node's min distance is final the round it is first reached
-      val frontier = state.filter($"fr")
-        .select($"node".as("nb0") +:
-          (ks.map(i => d(i).as(s"fd$i")) ++
-            (if (sigma) ks.map(i => sg(i).as(s"fs$i")) else Nil)): _*)
-      // per-landmark candidate aggregate over the frontier's neighbors:
-      // σ(v at r) = Σ σ(neighbors at r-1); without sigma just reach
-      val aggs =
-        if (sigma) ks.map(i => sum(when(col(s"fd$i") === r - 1, col(s"fs$i"))).as(s"c$i"))
-        else ks.map(i => max(when(col(s"fd$i") === r - 1, lit(r))).as(s"c$i"))
-      val cand = u.join(stateJoin(frontier, bcast), $"nb" === $"nb0")
-        .groupBy($"node").agg(aggs.head, aggs.tail: _*)
-      // merge: already-reached distances are final; newly reached get d=r
-      state = state.join(stateJoin(cand, bcast), Seq("node"), "left")
-        .select($"node" +:
-          (ks.map(i => coalesce(d(i), when(col(s"c$i").isNotNull, r)).as(s"d$i")) ++
-            (if (sigma) ks.map(i => coalesce(sg(i), col(s"c$i")).as(s"s$i")) else Nil) :+
-            ks.map(i => d(i).isNull && col(s"c$i").isNotNull).reduce(_ || _).as("fr")): _*)
-        .ckpt
+  private[graft] sealed trait Layout {
+    /** Key columns before `node`: none, or `src`. */
+    def extra: Seq[String]
+    /** Per-source value columns: K, or 1. */
+    def k: Int
+    /** Name of source `i`'s `base` column. */
+    def c(base: String, i: Int): String
+    /** True where the node is source `i`. */
+    def mask(i: Int): Column
+    /** Every key: the nodes, or sources × nodes. */
+    def dense: DataFrame
+    /** One row per source at its own node, key columns only. */
+    def seeds: DataFrame
+    /** The size-driven [[stateJoin]] choice for |dense|-row state. */
+    def bcast: Boolean
+    def keyNames: Seq[String] = extra :+ "node"
+    def keys: Seq[Column] = keyNames.map(col)
+    /** The extra keys, to carry through a select. */
+    def carry: Seq[Column] = extra.map(col)
+    /** The extra keys renamed `<key>_<t>`, for the other side of a join. */
+    def tag(t: String): Seq[Column] = extra.map(e => col(e).as(s"${e}_$t"))
+    /** `cond` and equality of each extra key with its `t`-tagged copy. */
+    def on(cond: Column, t: String): Column =
+      (cond +: extra.map(e => col(e) === col(s"${e}_$t"))).reduce(_ && _)
+  }
+
+  private[graft] final case class Landmarks(ids: Array[Long], dense: DataFrame,
+      bcast: Boolean) extends Layout {
+    val extra: Seq[String] = Nil
+    def k: Int = ids.length
+    def c(base: String, i: Int): String = s"$base$i"
+    def mask(i: Int): Column = col("node") === ids(i)
+    lazy val seeds: DataFrame = {
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      val s = dense.sparkSession
+      s.createDataFrame(s.sparkContext.parallelize(ids.toSeq.map(Row(_)), 1),
+        StructType(Seq(StructField("node", LongType, nullable = false))))
     }
-    state.drop("fr")
   }
 
-  /** The max-degree landmark seed: the K highest-degree nodes (degree
-    * DESC, node id ASC on ties) — a K-row top-K collect over the degree
-    * aggregate, the deliberate driver action of the landmark suite (it
-    * pins the per-column landmark masks as codegen literals; K is a
-    * constant, so the collect stays K rows at any data scale, and the
-    * degree relation is the same one-aggregation shape as [[degrees]]).
-    * Hub landmarks measured ρ=0.90 vs exact closeness on the probe
-    * subgraph where the old smallest-id slice read 0.46 (see
-    * [[ClLandmarks]]); the rule is exact integer arithmetic (COUNT,
-    * BIGINT ids) so the DuckDB oracle computes the identical K ids.
+  private[graft] final case class All(dense: DataFrame, bcast: Boolean) extends Layout {
+    val extra: Seq[String] = Seq("src")
+    val k = 1
+    def c(base: String, i: Int): String = base
+    def mask(i: Int): Column = col("node") === col("src")
+    lazy val seeds: DataFrame = dense.filter(mask(0))
+  }
+
+  /** The landmark layout over `u`: the node set (checkpointed — the
+    * count materializes it and sizes every state join) and the
+    * [[maxDegreeSeed]] ids, collected — a K-row top-K, the deliberate
+    * driver action of the landmark suite (it pins the per-column masks
+    * as codegen literals; K is a constant, so the collect stays K rows
+    * at any data scale).
     */
-  private def landmarkSeed(u: DataFrame, k: Int): Array[Long] = {
+  private[graft] def landmarks(u: DataFrame, k: Int): Landmarks = {
     val s = u.sparkSession
     import s.implicits._
-    degrees(u).orderBy($"degree".desc, $"node".asc)
-      .select($"node").limit(k).as[Long].collect()
+    val nodes = u.select($"node").distinct().ckpt
+    val bcast = stateHint(nodes.count())
+    Landmarks(maxDegreeSeed(u, k).as[Long].collect(), nodes, bcast)
   }
 
-  /** [[landmarkSeed]]'s SQL twin: top-K nodes by (COUNT(*) DESC, node)
+  /** The all-sources layout over `nodes` (one column, `node`): every
+    * node a source; the dense domain is the (src, node) cross product,
+    * checkpointed and counted like [[landmarks]]' node set.
+    */
+  private[graft] def allSources(nodes: DataFrame): All = {
+    val dense = nodes.select(col("node").as("src")).crossJoin(nodes).ckpt
+    All(dense, stateHint(dense.count()))
+  }
+
+  /** The max-degree landmark rule: the K highest-degree nodes of `u`
+    * (degree DESC, node id ASC on ties). Hub landmarks measured ρ=0.90
+    * vs exact closeness on the probe subgraph where the old
+    * smallest-id slice read 0.46 (see [[ClLandmarks]]); the rule is
+    * exact integer arithmetic (COUNT, BIGINT ids) so the DuckDB oracle
+    * ([[lmkSeedSql]]) computes the identical K ids.
+    */
+  private def maxDegreeSeed(u: DataFrame, k: Int): DataFrame = {
+    val s = u.sparkSession
+    import s.implicits._
+    u.groupBy($"node").agg(count(lit(1)).as("dg"))
+      .orderBy($"dg".desc, $"node".asc).limit(k).select($"node")
+  }
+
+  /** [[maxDegreeSeed]]'s SQL twin: top-K nodes by (COUNT(*) DESC, node)
     * over the undirected CTE `undCte`.
     */
   private def lmkSeedSql(undCte: String, k: Int): String =
     s"""(SELECT node FROM (SELECT node, COUNT(*) AS dg FROM $undCte
        |  GROUP BY node ORDER BY dg DESC, node LIMIT $k))""".stripMargin
 
+  /** Hop BFS from every source of `L`, `rounds` synchronous rounds: L's
+    * dense domain with distance d (INT, null = unreached) and, when
+    * `sigma`, the exact BIGINT shortest-path count s per source — the
+    * recurrence of [[bfsChain]] (and, with σ, the forward half of
+    * [[brandesChain]]). Only the previous round's frontier joins the
+    * edge relation: a hop distance is final the round it is first set.
+    */
+  private[graft] def bfsKernel(u: DataFrame, L: Layout, rounds: Int,
+      sigma: Boolean): DataFrame = {
+    val s = u.sparkSession
+    import s.implicits._
+    val ks = 0 until L.k
+    def d(i: Int) = col(L.c("d", i))
+    def sg(i: Int) = col(L.c("s", i))
+    def c(i: Int) = col(L.c("c", i))
+    // `fr` marks this round's frontier as ONE precomputed boolean (key
+    // newly reached by ANY source last round). Filtering on a K-wide
+    // OR instead made Catalyst's constraint propagation enumerate
+    // combinations of the K disjuncts per round: measured 15s at K=16,
+    // 277s + 5 GB driver heap at K=20, OOM at K=24 on a 1597-node
+    // graph; with the single-attribute filter (constraint set size 1)
+    // K=24 runs in 2.8s. The flag is recomputed in the same merge
+    // projection that sets the distances, so it costs nothing extra.
+    val init = L.dense.select(L.keys ++
+      (ks.map(i => when(L.mask(i), 0).cast("int").as(L.c("d", i))) ++
+        (if (sigma) ks.map(i => when(L.mask(i), 1L).as(L.c("s", i))) else Nil) :+
+        ks.map(L.mask).reduce(_ || _).as("fr")): _*)
+    var state = init.ckpt
+    for (r <- 1 to rounds) {
+      val frontier = state.filter($"fr")
+        .select(L.carry ++ ($"node".as("nb0") +:
+          (ks.map(i => d(i).as(L.c("fd", i))) ++
+            (if (sigma) ks.map(i => sg(i).as(L.c("fs", i))) else Nil))): _*)
+      // per-source candidate aggregate over the frontier's neighbors:
+      // σ(v at r) = Σ σ(neighbors at r-1); without sigma just reach
+      val aggs =
+        if (sigma) ks.map(i => sum(when(col(L.c("fd", i)) === r - 1,
+          col(L.c("fs", i)))).as(L.c("c", i)))
+        else ks.map(i => max(when(col(L.c("fd", i)) === r - 1, lit(r))).as(L.c("c", i)))
+      val cand = u.join(stateJoin(frontier, L.bcast), $"nb" === $"nb0")
+        .groupBy(L.keys: _*).agg(aggs.head, aggs.tail: _*)
+      // merge: already-reached distances are final; newly reached get d=r
+      state = state.join(stateJoin(cand, L.bcast), L.keyNames, "left")
+        .select(L.keys ++
+          (ks.map(i => coalesce(d(i), when(c(i).isNotNull, r)).as(L.c("d", i))) ++
+            (if (sigma) ks.map(i => coalesce(sg(i), c(i)).as(L.c("s", i))) else Nil) :+
+            ks.map(i => d(i).isNull && c(i).isNotNull).reduce(_ || _).as("fr")): _*)
+        .ckpt
+    }
+    state.drop("fr")
+  }
+
+  /** Hop Brandes δ over a [[bfsKernel]] σ `state` — [[brandesChain]]'s
+    * backward half: the shortest-path DAG (one row per edge v → w that
+    * is a DAG edge for ANY source: lv = dist(v) when dist(w) = dist(v)+1,
+    * rt = σv/σw), then one level at a time from the deepest frontier
+    * (δ = 0 at depth `rounds`), δ(v) = Σ_{w: successor} rt·(1 + δ(w)).
+    * Each level joins ONLY the level above it. Returns the union of the
+    * levels: keys and per-source pd (null = no dependency at that
+    * level); a key carries source i's δ at exactly one level.
+    */
+  private[graft] def brandesKernel(u: DataFrame, L: Layout, state: DataFrame,
+      rounds: Int): DataFrame = {
+    val s = u.sparkSession
+    import s.implicits._
+    val ks = 0 until L.k
+    def d(i: Int) = col(L.c("d", i))
+    def sg(i: Int) = col(L.c("s", i))
+    def lv(i: Int) = col(L.c("lv", i))
+    def rt(i: Int) = col(L.c("rt", i))
+    val reached = state.filter(ks.map(i => d(i).isNotNull).reduce(_ || _))
+    val sv = reached.select(L.carry ++ ($"node".as("v") +:
+      ks.flatMap(i => Seq(d(i).as(L.c("dv", i)), sg(i).as(L.c("sv", i))))): _*)
+    val sw = reached.select(L.tag("w") ++ ($"node".as("w") +:
+      ks.flatMap(i => Seq(d(i).as(L.c("dw", i)), sg(i).as(L.c("sw", i))))): _*)
+    def dv(i: Int) = col(L.c("dv", i))
+    val onDag = (i: Int) => col(L.c("dw", i)) === dv(i) + 1
+    val dag = u.join(stateJoin(sv, L.bcast), $"node" === $"v")
+      .join(stateJoin(sw, L.bcast), L.on($"nb" === $"w", "w"))
+      .select(L.carry ++ ($"v" +: $"w" +: ks.flatMap(i => Seq(
+        when(onDag(i), dv(i)).as(L.c("lv", i)),
+        when(onDag(i), col(L.c("sv", i)).cast("double") /
+          col(L.c("sw", i)).cast("double")).as(L.c("rt", i))))): _*)
+      .filter(ks.map(i => lv(i).isNotNull).reduce(_ || _))
+      // plain lazy checkpoint: a repartition($"v").persist() here (to make
+      // the backward level aggregations exchange-free like iterRelation)
+      // was measured WORSE — shuffling the wide 2+2K-column DAG rows cost
+      // 80 MB vs 18 MB total and +0.9s, far more than the four |V|-row
+      // level exchanges it saved
+      .ckpt
+    var prev = state.filter(ks.map(i => d(i) === rounds).reduce(_ || _))
+      .select(L.keys ++ ks.map(i =>
+        when(d(i) === rounds, lit(0.0)).as(L.c("pd", i))): _*)
+      .ckpt
+    val levels = scala.collection.mutable.ArrayBuffer(prev)
+    for (r <- (rounds - 1) to 0 by -1) {
+      // the per-edge term is pre-rounded with the portable prnd before
+      // the exact decimal sum: casting a RAW double to decimal(·,9)
+      // rounds by shortest-decimal-repr in Spark but by binary value in
+      // DuckDB, and a term whose repr ends in an exact 5 at digit 9
+      // diverges by 1e-9 (observed once in ~1600 rows); after prnd the
+      // value sits ~0.5e-9 away from any decimal tie, so both engines
+      // cast to the same decimal.
+      val aggs = ks.map(i => P.dsum(when(lv(i) === r,
+        P.prnd(rt(i) * (lit(1.0) + coalesce(col(L.c("w_pd", i)), lit(0.0))), 9)), 9)
+        .as(L.c("pd", i)))
+      val lvl = dag.filter(ks.map(i => lv(i) === r).reduce(_ || _))
+        .join(stateJoin(prev.select(L.tag("w2") ++ ($"node".as("w2") +:
+          ks.map(i => col(L.c("pd", i)).as(L.c("w_pd", i)))): _*), L.bcast),
+          L.on($"w" === $"w2", "w2"), "left")
+        .groupBy(L.carry :+ $"v": _*)
+        .agg(aggs.head, aggs.tail: _*)
+        .withColumnRenamed("v", "node")
+        .ckpt
+      levels += lvl
+      prev = lvl
+    }
+    levels.reduce(_ union _)
+  }
+
   /** Landmark-based closeness centrality — the scalable stand-in for the
     * reference's exact NetworkX closeness (network_analysis.py:123-178),
     * whose all-pairs BFS cannot survive 100 TB. K landmark sources (the K
-    * highest-degree nodes — see [[landmarkSeed]]), synchronous BFS distance
-    * relaxation for a fixed number of rounds via [[landmarkBfs]], then
-    * closeness(v) = K / Σ_l min(dist(v,l), rounds+1). Published pattern:
-    * landmark/pivot centrality estimation (Brandes & Pich 2007). State is
-    * |V| rows (distances columnar per landmark); when |V| outgrows a
-    * broadcast the size-driven [[stateJoin]] knob shifts every state join
-    * to a shuffled hash join against the node-partitioned edge relation.
+    * highest-degree nodes — see [[maxDegreeSeed]]), synchronous BFS
+    * distance relaxation for a fixed number of rounds via [[bfsKernel]],
+    * then closeness(v) = K / Σ_l min(dist(v,l), rounds+1). Published
+    * pattern: landmark/pivot centrality estimation (Brandes & Pich 2007).
+    * State is |V| rows (distances columnar per landmark); when |V|
+    * outgrows a broadcast the size-driven [[stateJoin]] knob shifts every
+    * state join to a shuffled hash join against the node-partitioned
+    * edge relation.
     */
   def closeness(u: DataFrame, k: Int = ClLandmarks, rounds: Int = ClRounds): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
-    // lazy: materializes under the count() (see betweenness)
-    val nodes = u.select($"node").distinct().ckpt
-    val bcast = stateHint(nodes.count())
-    val lmkIds = landmarkSeed(u, k)
-    val state = landmarkBfs(u, nodes, lmkIds, rounds, sigma = false, bcast)
+    val L = landmarks(u, k)
+    val state = bfsKernel(u, L, rounds, sigma = false)
     // closeness(v) = K / Σ_i min(dist(v, lmk_i), rounds+1): exact integer
     // sum over the K distance columns, cast once — identical to the
     // oracle's SUM(COALESCE(d, rounds+1)) over K rows
-    val tot = lmkIds.indices.map(i => coalesce(col(s"d$i"), lit(rounds + 1)))
+    val tot = (0 until L.k).map(i => coalesce(col(L.c("d", i)), lit(rounds + 1)))
       .reduce(_ + _)
     // numerator is the CONSTANT k (the oracle's CAST(k AS DOUBLE)), even
     // if the graph has fewer than k nodes
@@ -685,179 +836,109 @@ object GraphOps {
     * Brandes & Pich 2007, "Centrality Estimation in Large Networks"),
     * the scalable stand-in for the reference's exact NetworkX betweenness
     * (network_analysis.py:145-148), whose all-pairs shortest paths cannot
-    * survive 100 TB. Two level-synchronous passes over the edge relation:
+    * survive 100 TB. Two level-synchronous passes over the edge relation,
+    * both on COLUMNAR per-landmark state:
     *
-    *  - forward: BFS keeping (distance d, shortest-path count σ) per
-    *    (node, landmark); σ stays exact BIGINT (sums of path counts).
-    *  - backward: walk the shortest-path DAG one level at a time from the
-    *    deepest frontier, accumulating Brandes' dependency
-    *    δ(v) = Σ_{w: successor} (σ_v/σ_w)·(1 + δ(w)).
+    *  - forward: [[bfsKernel]] keeping (distance d, shortest-path count
+    *    σ) per (node, landmark); σ stays exact BIGINT.
+    *  - backward: [[brandesKernel]] walks the shortest-path DAG one level
+    *    at a time from the deepest frontier, accumulating Brandes'
+    *    dependency δ(v) = Σ_{w: successor} (σ_v/σ_w)·(1 + δ(w)).
     *
-    * Score(v) = Σ_l δ_l(v) / K (the pivot-sample estimator). Both passes
-    * run on COLUMNAR per-landmark state (see [[landmarkBfs]]): |V|-row
-    * state, |E|-row DAG, K× fewer rows than a (node, lmk) expansion at
-    * every join and shuffle. The size-driven [[stateJoin]] knob shifts
-    * every state join to a shuffled hash join when |V| outgrows a
-    * broadcast (100 TB posture, same as [[pagerank]]).
-    * δ aggregation routes through decimal casts (Portable.dsum) so the
+    * Score(v) = Σ_l δ_l(v) / K (the pivot-sample estimator). δ
+    * aggregation routes through decimal casts (Portable.dsum) so the
     * DuckDB oracle twin hash-matches despite double non-associativity.
     */
   def betweenness(u: DataFrame, k: Int = BwLandmarks, rounds: Int = BwRounds): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
     import org.apache.spark.sql.types.DecimalType
-    // lazy: materializes under the count() below; the landmark top-K and
-    // every later reader then ride the blocks
-    val nodes = u.select($"node").distinct().ckpt
-    val bcast = stateHint(nodes.count())
-    val lmkIds = landmarkSeed(u, k)
-    val ks = lmkIds.indices
-    // forward: columnar BFS with exact BIGINT σ path counts per landmark
-    val state = landmarkBfs(u, nodes, lmkIds, rounds, sigma = true, bcast)
-    // shortest-path DAG, one row per edge (v → w) that is a DAG edge for
-    // ANY landmark: lv_i = dist(v) when dist(w) = dist(v)+1 under landmark
-    // i (null otherwise), rt_i = σ_v/σ_w for the same mask. K× fewer rows
-    // than the row-based (lmk, v, w) expansion.
-    val reached = state.filter(ks.map(i => col(s"d$i").isNotNull).reduce(_ || _))
-    val sv = reached.select($"node".as("v") +:
-      ks.flatMap(i => Seq(col(s"d$i").as(s"dv$i"), col(s"s$i").as(s"sv$i"))): _*)
-    val sw = reached.select($"node".as("w") +:
-      ks.flatMap(i => Seq(col(s"d$i").as(s"dw$i"), col(s"s$i").as(s"sw$i"))): _*)
-    val dag = u.join(stateJoin(sv, bcast), $"node" === $"v")
-      .join(stateJoin(sw, bcast), $"nb" === $"w")
-      .select($"v" +: $"w" +: ks.flatMap(i => Seq(
-        when(col(s"dw$i") === col(s"dv$i") + 1, col(s"dv$i")).as(s"lv$i"),
-        when(col(s"dw$i") === col(s"dv$i") + 1,
-          col(s"sv$i").cast("double") / col(s"sw$i").cast("double")).as(s"rt$i"))): _*)
-      .filter(ks.map(i => col(s"lv$i").isNotNull).reduce(_ || _))
-      // plain lazy checkpoint: a repartition($"v").persist() here (to make
-      // the backward level aggregations exchange-free like iterRelation)
-      // was measured WORSE — shuffling the wide 2+2K-column DAG rows cost
-      // 80 MB vs 18 MB total and +0.9s, far more than the four |V|-row
-      // level exchanges it saved
-      .ckpt
-    // backward: deepest level seeds δ = 0; each earlier level joins ONLY
-    // the level above it (DAG edges cross adjacent levels), with δ per
-    // landmark in columns pd0..pd{K-1} (null = no dependency at this level)
-    var prev = state.filter(ks.map(i => col(s"d$i") === rounds).reduce(_ || _))
-      .select($"node" +: ks.map(i =>
-        when(col(s"d$i") === rounds, lit(0.0)).as(s"pd$i")): _*)
-      .ckpt
-    val levels = scala.collection.mutable.ArrayBuffer(prev)
-    for (r <- (rounds - 1) to 0 by -1) {
-      // the per-edge term is pre-rounded with the portable prnd before
-      // the exact decimal sum: casting a RAW double to decimal(·,9)
-      // rounds by shortest-decimal-repr in Spark but by binary value in
-      // DuckDB, and a term whose repr ends in an exact 5 at digit 9
-      // diverges by 1e-9 (observed once in ~1600 rows); after prnd the
-      // value sits ~0.5e-9 away from any decimal tie, so both engines
-      // cast to the same decimal.
-      val aggs = ks.map(i => P.dsum(when(col(s"lv$i") === r,
-        P.prnd(col(s"rt$i") * (lit(1.0) + coalesce(col(s"w_pd$i"), lit(0.0))), 9)), 9)
-        .as(s"pd$i"))
-      val lvl = dag.filter(ks.map(i => col(s"lv$i") === r).reduce(_ || _))
-        .join(stateJoin(prev.select($"node".as("w2") +:
-          ks.map(i => col(s"pd$i").as(s"w_pd$i")): _*), bcast), $"w" === $"w2", "left")
-        .groupBy($"v")
-        .agg(aggs.head, aggs.tail: _*)
-        .withColumnRenamed("v", "node")
-        .ckpt
-      levels += lvl
-      prev = lvl
-    }
-    val delta = levels.reduce(_ union _)
+    val L = landmarks(u, k)
+    val delta = brandesKernel(u, L, bfsKernel(u, L, rounds, sigma = true), rounds)
     // final per-node score: Σ over landmarks and levels of δ, through the
     // SAME exact decimal(18,9) arithmetic as the row-based multiset sum
     // (per-column decimal sums added as decimals, ONE final cast to
     // double), with the Brandes v ≠ source mask applied per column — the
     // landmark ids are literals, so the masks are codegen'd constants
     val zero = lit(0).cast(DecimalType(18, 9))
-    val colSums = ks.map(i => coalesce(
-      sum(when($"node" =!= lmkIds(i), col(s"pd$i")).cast(DecimalType(18, 9))), zero))
+    val colSums = (0 until L.k).map(i => coalesce(
+      sum(when(!L.mask(i), col(L.c("pd", i))).cast(DecimalType(18, 9))), zero))
     val bc = delta.groupBy($"node")
       .agg((colSums.reduce(_ + _).cast("double") / lit(k).cast("double")).as("b"))
-    nodes.join(bc, Seq("node"), "left")
+    L.dense.join(bc, Seq("node"), "left")
       .select($"node", coalesce($"b", lit(0.0)).as("b"))
   }
 
-  /** Columnar landmark WEIGHTED-distance state: one row per node with
-    * per-landmark distance columns d0..d{K-1} (BIGINT sum of edge
-    * weights; null = unreached within the hop bound), computed by
-    * `rounds` synchronous Bellman-Ford relaxations. Unlike BFS a
-    * weighted distance is NOT final the round it is first set — a later
-    * lighter path may undercut it — so the frontier is the CHANGED set
-    * (per-landmark change flags g0..g{K-1}): a node re-propagates only
-    * in the round after one of its distances improved, which is the
-    * standard delta relaxation and produces the same per-round state as
+  /** WEIGHTED distance from every source of `L`: L's dense domain with
+    * d the BIGINT sum of edge weights (null = unreached within the hop
+    * bound) after `rounds` synchronous Bellman-Ford relaxations — the
+    * recurrence of [[relaxChain]]. Unlike BFS a weighted distance is NOT
+    * final the round it is first set — a later lighter path may undercut
+    * it — so the frontier is the CHANGED set (per-source change flags
+    * g): a key re-propagates only in the round after one of its
+    * distances improved, which produces the same per-round state as
     * relaxing every edge (a skipped edge was already relaxed with the
-    * identical source distance). State stays |V| rows with 2K columns;
-    * every join is the same frontier-into-edges shape as [[landmarkBfs]]
-    * and the size-driven [[stateJoin]] knob applies unchanged.
+    * identical source distance). `probe` receives the rounds run.
     */
-  private def weightedDists(u: DataFrame, nodes: DataFrame, lmkIds: Array[Long],
-      rounds: Int, bcast: Boolean, probe: Int => Unit = _ => ()): DataFrame = {
+  private[graft] def relaxKernel(u: DataFrame, L: Layout, rounds: Int,
+      probe: Int => Unit = _ => ()): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
-    val ks = lmkIds.indices
-    def d(i: Int) = col(s"d$i")
-    def g(i: Int) = col(s"g$i")
-    // `ga` = any per-landmark change flag, ONE precomputed boolean: the
-    // same constraint-propagation guard as [[landmarkBfs]]'s `fr` (a
-    // K-wide OR filter made the optimizer enumerate disjunct
-    // combinations — OOM at K=24)
-    val init = nodes.select($"node" +:
-      (ks.map(i => when($"node" === lmkIds(i), 0L).as(s"d$i")) ++
-        ks.map(i => ($"node" === lmkIds(i)).as(s"g$i")) :+
-        ks.map(i => $"node" === lmkIds(i)).reduce(_ || _).as("ga")): _*)
+    val ks = 0 until L.k
+    def d(i: Int) = col(L.c("d", i))
+    def g(i: Int) = col(L.c("g", i))
+    def c(i: Int) = col(L.c("c", i))
+    // `ga` = any per-source change flag, ONE precomputed boolean: the
+    // same constraint-propagation guard as [[bfsKernel]]'s `fr`
+    val init = L.dense.select(L.keys ++
+      (ks.map(i => when(L.mask(i), 0L).as(L.c("d", i))) ++
+        ks.map(i => L.mask(i).as(L.c("g", i))) :+
+        ks.map(L.mask).reduce(_ || _).as("ga")): _*)
     var state = init.ckpt
-    // convergence short-circuit (r14 verdict item 6): an empty frontier
-    // is a FIXED POINT — no distance improved this round, so every later
-    // round relaxes nothing and the oracle's statically-unrolled
-    // trailing rounds are no-ops. The count per round is one cheap
-    // aggregate on state the next round's join would materialize anyway
-    // (the components fixpoint-probe discipline).
+    // convergence short-circuit: an empty frontier is a FIXED POINT — no
+    // distance improved this round, so every later round relaxes nothing
+    // and the oracle's statically-unrolled trailing rounds are no-ops.
+    // The count per round is one cheap aggregate on state the next
+    // round's join would materialize anyway.
     var round = 0
     var active = 1L
     while (round < rounds && active > 0) {
       round += 1
       val frontier = state.filter($"ga")
-        .select($"node".as("nb0") +:
-          ks.flatMap(i => Seq(d(i).as(s"fd$i"), g(i).as(s"fg$i"))): _*)
+        .select(L.carry ++ ($"node".as("nb0") +:
+          ks.flatMap(i => Seq(d(i).as(L.c("fd", i)), g(i).as(L.c("fg", i))))): _*)
       val aggs = ks.map(i =>
-        min(when(col(s"fg$i"), col(s"fd$i") + $"weight")).as(s"c$i"))
-      val cand = u.join(stateJoin(frontier, bcast), $"nb" === $"nb0")
-        .groupBy($"node").agg(aggs.head, aggs.tail: _*)
+        min(when(col(L.c("fg", i)), col(L.c("fd", i)) + $"weight")).as(L.c("c", i)))
+      val cand = u.join(stateJoin(frontier, L.bcast), $"nb" === $"nb0")
+        .groupBy(L.keys: _*).agg(aggs.head, aggs.tail: _*)
       // merge: keep the smaller of current and candidate; the change
       // flag marks a strict improvement (drives the next frontier)
-      state = state.join(stateJoin(cand, bcast), Seq("node"), "left")
-        .select($"node" +:
-          (ks.map(i => when(d(i).isNull, col(s"c$i"))
-            .when(col(s"c$i").isNull, d(i))
-            .when(col(s"c$i") < d(i), col(s"c$i"))
-            .otherwise(d(i)).as(s"d$i")) ++
-            ks.map(i => (col(s"c$i").isNotNull &&
-              (d(i).isNull || col(s"c$i") < d(i))).as(s"g$i")) :+
-            ks.map(i => col(s"c$i").isNotNull &&
-              (d(i).isNull || col(s"c$i") < d(i))).reduce(_ || _).as("ga")): _*)
+      val better = (i: Int) => c(i).isNotNull && (d(i).isNull || c(i) < d(i))
+      state = state.join(stateJoin(cand, L.bcast), L.keyNames, "left")
+        .select(L.keys ++
+          (ks.map(i => when(d(i).isNull, c(i))
+            .when(c(i).isNull, d(i))
+            .when(c(i) < d(i), c(i))
+            .otherwise(d(i)).as(L.c("d", i))) ++
+            ks.map(i => better(i).as(L.c("g", i))) :+
+            ks.map(better).reduce(_ || _).as("ga")): _*)
         .ckpt
       // the frontier count is the convergence short-circuit AND the
       // round's materializing action — but at round == rounds the loop
-      // exits regardless, so that last count was a pure job barrier
-      // (r19 verdict item 3): skip it and let the final state's lazy
-      // checkpoint materialize inside the first downstream consumer's
-      // job (closeness_w's output scan / betweenness_w's sv broadcast
-      // build — later consumers read the same blocks).
+      // exits regardless, so that last count would be a pure job
+      // barrier: skip it and let the final state's lazy checkpoint
+      // materialize inside the first downstream consumer's job
       active = if (round < rounds) state.filter($"ga").count() else 0L
     }
     probe(round)
-    state.select($"node" +: ks.map(i => d(i)): _*)
+    state.select(L.keys ++ ks.map(d): _*)
   }
 
   /** Landmark closeness over WEIGHTED distance — the reference-parity
     * twin of [[closeness]] (`nx.closeness_centrality(distance='weight')`,
     * network_analysis.py:154): distance is the sum of edge weights along
     * the lightest path, not the hop count. K landmark sources, `rounds`
-    * Bellman-Ford relax rounds via [[weightedDists]], then
+    * Bellman-Ford relax rounds via [[relaxKernel]], then
     * closeness_w(v) = K / Σ_l min(dist_w(v,l), [[ClWCap]]) — the same
     * Brandes & Pich pivot estimator with the cap standing in for
     * rounds+1. All distance arithmetic is exact BIGINT; only the final
@@ -867,102 +948,78 @@ object GraphOps {
       probe: (String, Int) => Unit = (_, _) => ()): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
-    val nodes = u.select($"node").distinct().ckpt
-    val bcast = stateHint(nodes.count())
-    val lmkIds = landmarkSeed(u, k)
-    val state = weightedDists(u, nodes, lmkIds, rounds, bcast,
-      probe("relax", _))
-    val tot = lmkIds.indices.map(i =>
-      when(col(s"d$i").isNull || col(s"d$i") > ClWCap, ClWCap)
-        .otherwise(col(s"d$i"))).reduce(_ + _)
+    val L = landmarks(u, k)
+    val state = relaxKernel(u, L, rounds, probe("relax", _))
+    val tot = (0 until L.k).map { i =>
+      val d = col(L.c("d", i))
+      when(d.isNull || d > ClWCap, ClWCap).otherwise(d)
+    }.reduce(_ + _)
     state.select($"node",
       (lit(k).cast("double") / tot.cast("double")).as("c"))
   }
 
-  /** Landmark (pivot-sampled) betweenness over WEIGHTED distance — the
-    * reference-parity twin of [[betweenness]]
-    * (`nx.betweenness_centrality(weight='weight')`,
-    * network_analysis.py:145): shortest paths measured in summed edge
-    * weight. Three bounded synchronous passes, all on the columnar
-    * landmark state:
+  /** Weighted Brandes σ and δ over the [[relaxKernel]] distances `dists`
+    * — [[brandesWChain]]'s recurrence after its relax rounds:
     *
-    *  - distances: [[weightedDists]] Bellman-Ford rounds (exact BIGINT);
-    *  - σ path counts: the weighted shortest-path DAG has an edge v→w
-    *    per landmark exactly when d(w) = d(v) + weight(v,w); a weighted
-    *    DAG is leveled by distance, not hops, so σ (σ(lmk)=1,
-    *    σ(v)=Σ_pred σ(u)) runs as [[BwWDagIters]] synchronous forward
-    *    relaxations — after t rounds σ counts the DAG paths of ≤ t hops,
-    *    the fixpoint once t reaches the DAG depth;
-    *  - δ dependencies: Brandes' δ(v) = Σ_{w:succ} σv/σw·(1+δ(w)) as
-    *    [[BwWDagIters]] synchronous backward relaxations from δ≡0 —
-    *    after t rounds δ carries dependency mass from descendants ≤ t
-    *    levels deep, the same bounded-depth estimator, with the r12
-    *    prnd-before-dsum decimal discipline at every round so the
+    *  - the weighted shortest-path DAG has an edge v→w per source
+    *    exactly when d(w) = d(v) + weight(v,w); a weighted DAG is leveled
+    *    by distance, not hops, so σ (σ(src)=1, σ(v)=Σ_pred σ(u)) runs as
+    *    `dagIters` synchronous forward relaxations — after t rounds σ
+    *    counts the DAG paths of ≤ t hops, the fixpoint once t reaches
+    *    the DAG depth;
+    *  - δ: Brandes' δ(v) = Σ_{w:succ} σv/σw·(1+δ(w)) as `dagIters`
+    *    synchronous backward relaxations from δ≡0 — after t rounds δ
+    *    carries dependency mass from descendants ≤ t levels deep, with
+    *    the prnd-before-dsum decimal discipline at every round so the
     *    DuckDB twin hash-matches despite double non-associativity.
     *
-    * Score(v) = Σ_l δ_l(v)/K with the Brandes v ≠ source mask. Every
-    * pass is a keyed join of |V|-row (or DAG-row) state against the
-    * materialized edge relation — the [[pagerank]] iteration shape, K×
-    * fewer rows than a (node, landmark) expansion, size-driven
-    * broadcasts throughout.
+    * Returns L's dense domain with per-source δ `p` (null = 0). `probe`
+    * receives the σ and δ rounds run.
     */
-  def betweennessW(u: DataFrame, k: Int = BwLandmarks, rounds: Int = BwWRounds,
-      dagIters: Int = BwWDagIters,
-      probe: (String, Int) => Unit = (_, _) => ()): DataFrame = {
+  private[graft] def brandesWKernel(u: DataFrame, L: Layout, dists: DataFrame,
+      dagIters: Int, probe: (String, Int) => Unit = (_, _) => ()): DataFrame = {
     val s = u.sparkSession
     import s.implicits._
-    val nodes = u.select($"node").distinct().ckpt
-    val bcast = stateHint(nodes.count())
-    val lmkIds = landmarkSeed(u, k)
-    val ks = lmkIds.indices
-    val state = weightedDists(u, nodes, lmkIds, rounds, bcast,
-      probe("relax", _))
-    // weighted shortest-path DAG, columnar: one row per edge that is a
-    // DAG edge for ANY landmark, with per-landmark membership masks
-    val sv = state.select($"node".as("v") +: ks.map(i => col(s"d$i").as(s"dv$i")): _*)
-    val sw = state.select($"node".as("w") +: ks.map(i => col(s"d$i").as(s"dw$i")): _*)
-    val dag = u.join(stateJoin(sv, bcast), $"node" === $"v")
-      .join(stateJoin(sw, bcast), $"nb" === $"w")
-      .select($"v" +: $"w" +: ks.map(i =>
-        (col(s"dw$i") === col(s"dv$i") + $"weight").as(s"e$i")): _*)
-      .filter(ks.map(i => coalesce(col(s"e$i"), lit(false))).reduce(_ || _))
+    val ks = 0 until L.k
+    def e(i: Int) = col(L.c("e", i))
+    def p(i: Int) = col(L.c("p", i))
+    // weighted shortest-path DAG: one row per edge that is a DAG edge for
+    // ANY source, with per-source membership masks
+    val sv = dists.select(L.carry ++ ($"node".as("v") +:
+      ks.map(i => col(L.c("d", i)).as(L.c("dv", i)))): _*)
+    val sw = dists.select(L.tag("w") ++ ($"node".as("w") +:
+      ks.map(i => col(L.c("d", i)).as(L.c("dw", i)))): _*)
+    val dag = u.join(stateJoin(sv, L.bcast), $"node" === $"v")
+      .join(stateJoin(sw, L.bcast), L.on($"nb" === $"w", "w"))
+      .select(L.carry ++ ($"v" +: $"w" +: ks.map(i =>
+        (col(L.c("dw", i)) === col(L.c("dv", i)) + $"weight").as(L.c("e", i)))): _*)
+      .filter(ks.map(i => coalesce(e(i), lit(false))).reduce(_ || _))
       .ckpt
-    // forward σ: pinned σ(lmk)=1, else Σ over DAG predecessors of the
+    // forward σ: pinned σ(src)=1, else Σ over DAG predecessors of the
     // previous round's σ (exact BIGINT). State is SPARSE — one row per
-    // node with any σ so far; an absent row means all-null σ, which is
-    // exactly what the dense formulation carried for unreached nodes,
-    // so no per-round |V|-row re-densify join is paid (a |V|-row
-    // shuffle per round on the non-broadcast path). The landmarks ride
-    // an 8-row frame: a landmark node can accumulate σ for OTHER
-    // landmarks' DAGs, so pinning is per-column over the candidate rows
-    // plus an 8-row anti-join for landmarks no candidate row covers.
-    val lmkFrame = s.createDataFrame(
-      s.sparkContext.parallelize(lmkIds.toSeq.map(org.apache.spark.sql.Row(_)), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+    // key with any σ so far; an absent row means all-null σ, which is
+    // exactly what a dense formulation carries for unreached keys, so no
+    // per-round re-densify join is paid. A source node can accumulate σ
+    // for OTHER landmarks' DAGs, so pinning is per column, and the seed
+    // rows ride into every round's aggregate so each source has a row.
+    //
     // σ is pointwise MONOTONE non-decreasing across rounds (each round
     // counts DAG paths of one more hop; terms are non-negative), so the
     // per-column sums are a complete fixpoint probe: unchanged sums ⇒
     // no σ changed and no null became non-null ⇒ every later round is a
     // no-op (matching the oracle's trailing statically-unrolled rounds).
-    // One cheap aggregate per round on the just-checkpointed state
-    // (r14 verdict item 6).
-    //
-    // Soundness guard (r15 ADVICE): monotonicity — and with it the
-    // probe's completeness — silently breaks if a Long σ wraps (path
-    // counts grow exponentially on dense DAGs; Spark wraps negative
-    // where DuckDB BIGINT errors), and wrapped positives and negatives
-    // can cancel inside a sum, faking an unchanged metric. The same
-    // aggregate therefore also reads each column's MIN (a wrap is
-    // negative at the row level) and the loop watches for any
-    // per-column sum DECREASE; either signal marks the probe unsound
-    // and the loop falls through to the full statically-unrolled
-    // dagIters — never an early exit on a corrupted metric.
+    // Soundness guard: monotonicity — and with it the probe's
+    // completeness — silently breaks if a Long σ wraps (path counts grow
+    // exponentially on dense DAGs; Spark wraps negative where DuckDB
+    // BIGINT errors), and wrapped positives and negatives can cancel
+    // inside a sum. The same aggregate therefore also reads each
+    // column's MIN and the loop watches for any per-column sum DECREASE;
+    // either signal disables the early exit and the loop runs the full
+    // statically-unrolled dagIters.
     def sigMetric(df: DataFrame): (Seq[java.math.BigDecimal], Boolean) = {
       val aggs = ks.map(i =>
-        sum(col(s"s$i").cast("decimal(38,0)")).as(s"m$i")) ++
-        ks.map(i => min(col(s"s$i")).as(s"mn$i"))
+        sum(col(L.c("s", i)).cast("decimal(38,0)")).as(L.c("m", i))) ++
+        ks.map(i => min(col(L.c("s", i))).as(L.c("mn", i)))
       val r = df.agg(aggs.head, aggs.tail: _*).head()
       val sums = ks.map(i =>
         Option(r.getDecimal(i)).getOrElse(java.math.BigDecimal.ZERO))
@@ -970,41 +1027,33 @@ object GraphOps {
         r.isNullAt(ks.length + i) || r.getLong(ks.length + i) >= 0L)
       (sums, nonNeg)
     }
-    var sig = lmkFrame.select($"node" +:
-      ks.map(i => when($"node" === lmkIds(i), 1L).as(s"s$i")): _*).ckpt
+    var sig = L.seeds.select(L.keys ++
+      ks.map(i => when(L.mask(i), 1L).as(L.c("s", i))): _*).ckpt
     var (sigPrev, sigSound) = sigMetric(sig)
     var sigIt = 0
     var sigFixed = false
     while (sigIt < dagIters && !sigFixed) {
       sigIt += 1
-      val prevS = sig.select($"node".as("v0") +: ks.map(i => col(s"s$i").as(s"ps$i")): _*)
-      // the K pinned marker rows (all-null contributions) ride INTO the
-      // aggregate input, so a landmark node always has an output row to
-      // pin — one hash aggregate, no re-densify join, no second read of
-      // the aggregated relation
-      val contrib = dag.join(stateJoin(prevS, bcast), $"v" === $"v0")
-        .select($"w".as("node") +: ks.map(i =>
-          when(col(s"e$i"), col(s"ps$i")).as(s"c$i")): _*)
-        .union(lmkFrame.select($"node" +: ks.map(i =>
-          lit(null).cast("long").as(s"c$i")): _*))
-      val sAggs = ks.map(i => sum(col(s"c$i")).as(s"cs$i"))
-      sig = contrib.groupBy($"node")
+      val prevS = sig.select(L.tag("v0") ++ ($"node".as("v0") +:
+        ks.map(i => col(L.c("s", i)).as(L.c("ps", i)))): _*)
+      val contrib = dag.join(stateJoin(prevS, L.bcast), L.on($"v" === $"v0", "v0"))
+        .select((L.carry :+ $"w".as("node")) ++ ks.map(i =>
+          when(e(i), col(L.c("ps", i))).as(L.c("c", i))): _*)
+        .union(L.seeds.select(L.keys ++ ks.map(i =>
+          lit(null).cast("long").as(L.c("c", i))): _*))
+      val sAggs = ks.map(i => sum(col(L.c("c", i))).as(L.c("cs", i)))
+      sig = contrib.groupBy(L.keys: _*)
         .agg(sAggs.head, sAggs.tail: _*)
-        .select($"node" +: ks.map(i =>
-          when($"node" === lmkIds(i), 1L).otherwise(col(s"cs$i")).as(s"s$i")): _*)
+        .select(L.keys ++ ks.map(i =>
+          when(L.mask(i), 1L).otherwise(col(L.c("cs", i))).as(L.c("s", i))): _*)
         .ckpt
-      // fixpoint/wrap metric at every round EXCEPT the bound (r19
-      // verdict item 3): at sigIt == dagIters the loop exits regardless
-      // and nothing after it reads the metric, so that round's action
-      // was a pure job barrier — skipping it folds the final σ
-      // materialization into the first downstream broadcast build
-      // (sv2's), which reads the lazy checkpoint once and leaves blocks
-      // for sw2. Per-round guard granularity on every exit-RELEVANT
-      // round is unchanged. (A gap-2 batching of the metric — the
-      // pagerank pattern — was A/B-measured a wash here: when the
-      // fixpoint lands on an unchecked round the loop runs one extra
-      // full round, 62→62 jobs with tasks 287→307 and +5 MB shuffle;
-      // rejected, r20.)
+      // the metric runs at every round EXCEPT the bound: at sigIt ==
+      // dagIters the loop exits regardless and nothing reads the metric,
+      // so that action would be a pure job barrier — skipping it folds
+      // the final σ materialization into the first downstream broadcast
+      // build. (A gap-2 batching of the metric was measured a wash: when
+      // the fixpoint lands on an unchecked round the loop runs one extra
+      // full round.)
       if (sigIt < dagIters) {
         val (m, nonNeg) = sigMetric(sig)
         if (!nonNeg || ks.exists(i => m(i).compareTo(sigPrev(i)) < 0))
@@ -1013,61 +1062,52 @@ object GraphOps {
       }
     }
     probe("sigma", sigIt)
-    // per-edge dependency ratio σv/σw per landmark (null when the edge is
-    // not on landmark i's DAG or either σ is outside the σ bound)
-    val sv2 = sig.select($"node".as("v2") +: ks.map(i => col(s"s$i").as(s"sv$i")): _*)
-    val sw2 = sig.select($"node".as("w2") +: ks.map(i => col(s"s$i").as(s"sw$i")): _*)
-    val dagR = dag.join(stateJoin(sv2, bcast), $"v" === $"v2")
-      .join(stateJoin(sw2, bcast), $"w" === $"w2")
-      .select($"v" +: $"w" +: ks.map(i =>
-        when(col(s"e$i") && col(s"sv$i").isNotNull && col(s"sw$i").isNotNull,
-          col(s"sv$i").cast("double") / col(s"sw$i").cast("double")).as(s"rt$i")): _*)
-      .filter(ks.map(i => col(s"rt$i").isNotNull).reduce(_ || _))
+    // per-edge dependency ratio σv/σw per source (null when the edge is
+    // not on source i's DAG or either σ is outside the σ bound)
+    val sv2 = sig.select(L.tag("v2") ++ ($"node".as("v2") +:
+      ks.map(i => col(L.c("s", i)).as(L.c("sv", i)))): _*)
+    val sw2 = sig.select(L.tag("w2") ++ ($"node".as("w2") +:
+      ks.map(i => col(L.c("s", i)).as(L.c("sw", i)))): _*)
+    val dagR = dag.join(stateJoin(sv2, L.bcast), L.on($"v" === $"v2", "v2"))
+      .join(stateJoin(sw2, L.bcast), L.on($"w" === $"w2", "w2"))
+      .select(L.carry ++ ($"v" +: $"w" +: ks.map { i =>
+        val (a, b) = (col(L.c("sv", i)), col(L.c("sw", i)))
+        when(e(i) && a.isNotNull && b.isNotNull,
+          a.cast("double") / b.cast("double")).as(L.c("rt", i))
+      }): _*)
+      .filter(ks.map(i => col(L.c("rt", i)).isNotNull).reduce(_ || _))
       .ckpt
     // backward δ: bounded synchronous relaxation from δ≡0, re-derived in
-    // full each round (not accumulated) — the fixpoint recurrence on a
-    // DAG, correct to dagIters levels of descendants. State is SPARSE
-    // like σ's: an absent (or null-column) row means δ = 0, coalesced at
-    // every use, so no round pays the |V|-row re-densify join of the
-    // first cut (one |V|-row LEFT join at the very end emits the full
-    // node set instead of ten mid-round ones).
-    // δ shares σ's monotone-fixpoint probe: δ_t is a monotone function
-    // of δ_{t-1} ≥ 0 (non-negative ratio terms), each round's values are
-    // prnd-quantized to 1e-9, and the metric compares the exact
-    // floor(·1e9) integers — unchanged sums ⇒ the quantized state is
-    // identical ⇒ every later round (and the output, which reads δ
-    // through the same quantization) is unchanged.
+    // full each round (not accumulated). State is SPARSE like σ's: an
+    // absent (or null-column) row means δ = 0, coalesced at every use;
+    // one dense LEFT join at the very end covers every key. δ shares
+    // σ's monotone-fixpoint probe and decrease guard: δ_t is a monotone
+    // function of δ_{t-1} ≥ 0, each round's values are prnd-quantized
+    // to 1e-9, and the metric compares the exact floor(·1e9) integers —
+    // unchanged sums ⇒ the quantized state is identical ⇒ every later
+    // round (and the output) is unchanged.
     def dltMetric(df: DataFrame): Seq[java.math.BigDecimal] = {
-      val aggs = ks.map(i =>
-        sum(floor(coalesce(col(s"p$i"), lit(0.0)) * lit(1e9) + lit(0.5))
-          .cast("decimal(38,0)")).as(s"m$i"))
+      val aggs = ks.map(i => sum(nanoFloor(p(i)).cast("decimal(38,0)")).as(L.c("m", i)))
       val r = df.agg(aggs.head, aggs.tail: _*).head()
       ks.map(i => Option(r.getDecimal(i)).getOrElse(java.math.BigDecimal.ZERO))
     }
-    var dlt = lmkFrame.select($"node" +: ks.map(i => lit(0.0).as(s"p$i")): _*).ckpt
+    var dlt = L.seeds.select(L.keys ++ ks.map(i => lit(0.0).as(L.c("p", i))): _*).ckpt
     var dltPrev = dltMetric(dlt)
-    // δ shares σ's decrease guard: its quantized per-column sums are
-    // monotone non-decreasing (non-negative ratio terms), so any
-    // decrease is corruption evidence (e.g. a divergent upstream σ) —
-    // disable the short-circuit and run the full unroll (r15 ADVICE)
     var dltSound = true
     var dltIt = 0
     var dltFixed = false
     while (dltIt < dagIters && !dltFixed) {
       dltIt += 1
-      val prevD = dlt.select($"node".as("w3") +: ks.map(i => col(s"p$i").as(s"wp$i")): _*)
-      val aggs = ks.map(i => P.dsum(P.prnd(
-        col(s"rt$i") * (lit(1.0) + coalesce(col(s"wp$i"), lit(0.0))), 9), 9).as(s"cd$i"))
-      dlt = dagR.join(stateJoin(prevD, bcast), $"w" === $"w3", "left")
-        .groupBy($"v").agg(aggs.head, aggs.tail: _*)
-        .select($"v".as("node") +: ks.map(i => col(s"cd$i").as(s"p$i")): _*)
+      val prevD = dlt.select(L.tag("w3") ++ ($"node".as("w3") +:
+        ks.map(i => p(i).as(L.c("wp", i)))): _*)
+      val aggs = ks.map(i => P.dsum(P.prnd(col(L.c("rt", i)) *
+        (lit(1.0) + coalesce(col(L.c("wp", i)), lit(0.0))), 9), 9).as(L.c("cd", i)))
+      dlt = dagR.join(stateJoin(prevD, L.bcast), L.on($"w" === $"w3", "w3"), "left")
+        .groupBy(L.carry :+ $"v": _*).agg(aggs.head, aggs.tail: _*)
+        .select((L.carry :+ $"v".as("node")) ++
+          ks.map(i => col(L.c("cd", i)).as(L.c("p", i))): _*)
         .ckpt
-      // bound-round metric skip, same argument as the σ loop above: the
-      // dagIters-th check can never trigger an exit and is read by
-      // nothing afterwards, so the final δ state materializes inside
-      // the output join's broadcast build instead of paying its own
-      // job barrier. Every exit-relevant round keeps its per-round
-      // decrease guard.
+      // bound-round metric skip, same argument as the σ loop above
       if (dltIt < dagIters) {
         val m = dltMetric(dlt)
         if (ks.exists(i => m(i).compareTo(dltPrev(i)) < 0)) dltSound = false
@@ -1075,14 +1115,40 @@ object GraphOps {
       }
     }
     probe("delta", dltIt)
+    L.dense.join(stateJoin(dlt, L.bcast), L.keyNames, "left")
+  }
+
+  /** floor(δ·1e9 + 0.5) of a δ column, null read as 0: the exact
+    * integer hop every weighted-δ sum and metric goes through.
+    */
+  private def nanoFloor(c: Column): Column =
+    floor(coalesce(c, lit(0.0)) * lit(1e9) + lit(0.5))
+
+  /** Landmark (pivot-sampled) betweenness over WEIGHTED distance — the
+    * reference-parity twin of [[betweenness]]
+    * (`nx.betweenness_centrality(weight='weight')`,
+    * network_analysis.py:145): shortest paths measured in summed edge
+    * weight. Three bounded synchronous passes, all on the columnar
+    * landmark state: [[relaxKernel]]'s Bellman-Ford distances, then
+    * [[brandesWKernel]]'s σ and δ relaxations over the weighted
+    * shortest-path DAG. Score(v) = Σ_l δ_l(v)/K with the Brandes
+    * v ≠ source mask.
+    */
+  def betweennessW(u: DataFrame, k: Int = BwLandmarks, rounds: Int = BwWRounds,
+      dagIters: Int = BwWDagIters,
+      probe: (String, Int) => Unit = (_, _) => ()): DataFrame = {
+    val s = u.sparkSession
+    import s.implicits._
+    val L = landmarks(u, k)
+    val dlt = brandesWKernel(u, L, relaxKernel(u, L, rounds, probe("relax", _)),
+      dagIters, probe)
     // score: Σ over landmarks of δ through the exact floor(·1e9) integer
     // hop (row-wise long adds — associative), v ≠ source masked per
     // column; the oracle sums the identical BIGINT terms over its K rows
-    val masked = ks.map(i => when($"node" === lmkIds(i), lit(0L))
-      .otherwise(floor(coalesce(col(s"p$i"), lit(0.0)) * lit(1e9) + lit(0.5)).cast("long")))
-    nodes.join(stateJoin(dlt, bcast), Seq("node"), "left")
-      .select($"node",
-        (masked.reduce(_ + _).cast("double") / lit(1e9) / lit(k).cast("double")).as("b"))
+    val masked = (0 until L.k).map(i => when(L.mask(i), lit(0L))
+      .otherwise(nanoFloor(col(L.c("p", i))).cast("long")))
+    dlt.select($"node",
+      (masked.reduce(_ + _).cast("double") / lit(1e9) / lit(k).cast("double")).as("b"))
   }
 
   /** Synchronous weighted label propagation — the scalable stand-in for
@@ -1205,8 +1271,8 @@ object GraphOps {
 
   /** `<pfx>0..<pfx>R`: unrolled synchronous hop-BFS rounds from the
     * sources CTE `srcCte` (column `node`) over the edge CTE `und`, rows
-    * (src, node, d) — the SQL twin of [[landmarkBfs]] (production
-    * landmarks) and of the probe's hop detail ([[probeDists]]).
+    * (src, node, d) — the SQL twin of [[bfsKernel]] (landmark columns
+    * and the probe's all-sources rows alike).
     */
   private def bfsChain(pfx: String, und: String, srcCte: String, rounds: Int): String = {
     val base = s"${pfx}0 AS MATERIALIZED (SELECT node AS src, node, 0 AS d FROM $srcCte)"
@@ -1232,9 +1298,9 @@ object GraphOps {
     * CTE `und`: forward BFS levels with σ path counts (`<pfx>f0..R`),
     * the shortest-path DAG (`<pfx>dag`), backward δ levels
     * (`<pfx>dR..0`), and `<pfx>dx` (node, src, delta) over node ≠ src —
-    * the SQL twin of [[betweenness]] (production landmarks) and of
-    * [[probeBrandesDetail]] (all probe sources). Each caller reduces
-    * `<pfx>dx` to its own final CTE.
+    * the SQL twin of [[bfsKernel]] with σ and [[brandesKernel]] (landmark
+    * columns and all-sources rows alike). Each caller reduces `<pfx>dx`
+    * to its own final CTE.
     */
   private def brandesChain(pfx: String, und: String, srcCte: String, rounds: Int): String = {
     val base =
@@ -1273,23 +1339,29 @@ object GraphOps {
 
   /** `<pfx>0..<pfx>R`: unrolled synchronous WEIGHTED (Bellman-Ford)
     * relax rounds from the sources CTE `srcCte` over the edge CTE
-    * `und`, rows (src, node, d) with d the exact BIGINT weight sum — per
-    * round the (src, node) minimum over (previous distances ∪ every
-    * neighbor's distance + edge weight). The SQL twin of
-    * [[weightedDists]] (production landmarks) and of the probe's
-    * weighted detail ([[probeDists]]); the Spark landmark side's
-    * changed-frontier delta relaxation produces the identical per-round
-    * state (a skipped edge was already relaxed with the same source
-    * distance).
+    * `und`, rows (src, node, d, ch) with d the exact BIGINT weight sum —
+    * per round the (src, node) minimum over (previous distances ∪ every
+    * changed neighbor's distance + edge weight). The SQL twin of
+    * [[relaxKernel]] (landmark columns and all-sources rows alike).
+    * Semi-naive: `ch` marks the rows the round changed, and only those
+    * join the edges next round — a row unchanged since its last
+    * propagation would only re-derive candidates the MIN already holds,
+    * so the per-round state equals the naive re-join of every row (the
+    * same argument as [[relaxKernel]]'s changed frontier).
     */
   private def relaxChain(pfx: String, und: String, srcCte: String, rounds: Int): String = {
-    val base = s"${pfx}0 AS MATERIALIZED (SELECT node AS src, node, CAST(0 AS BIGINT) AS d FROM $srcCte)"
+    val base =
+      s"${pfx}0 AS MATERIALIZED (SELECT node AS src, node, CAST(0 AS BIGINT) AS d, TRUE AS ch FROM $srcCte)"
     val steps = (1 to rounds).map { i =>
-      s"""$pfx$i AS MATERIALIZED (SELECT x.src, x.node, MIN(x.d) AS d FROM (
-         |    SELECT src, node, d FROM $pfx${i - 1}
-         |    UNION ALL
-         |    SELECT p.src, u.node, p.d + u.weight FROM $und u JOIN $pfx${i - 1} p ON u.nb = p.node) x
-         |  GROUP BY x.src, x.node)""".stripMargin
+      val p = s"$pfx${i - 1}"
+      s"""$pfx$i AS MATERIALIZED (SELECT COALESCE(p.src, c.src) AS src,
+         |    COALESCE(p.node, c.node) AS node,
+         |    CASE WHEN p.d IS NULL OR c.d < p.d THEN c.d ELSE p.d END AS d,
+         |    c.d IS NOT NULL AND (p.d IS NULL OR c.d < p.d) AS ch
+         |  FROM $p p FULL OUTER JOIN (
+         |    SELECT q.src, u.node, MIN(q.d + u.weight) AS d FROM $und u
+         |    JOIN $p q ON u.nb = q.node AND q.ch
+         |    GROUP BY q.src, u.node) c ON p.src = c.src AND p.node = c.node)""".stripMargin
     }
     (base +: steps).mkString(",\n")
   }
@@ -1299,9 +1371,8 @@ object GraphOps {
     * rounds (`<pfx>w0..R`), the weighted shortest-path DAG
     * (`<pfx>dag`), forward σ relaxations (`<pfx>s0..T`), and backward δ
     * relaxations (`<pfx>d0..T`), ending in `<pfx>dx` (node, src, delta)
-    * over node ≠ src — the SQL twin of [[betweennessW]] (production
-    * landmarks; its columnar state is the same recurrence) and of
-    * [[probeBrandesWDetail]] (all probe sources).
+    * over node ≠ src — the SQL twin of [[relaxKernel]] and
+    * [[brandesWKernel]] (landmark columns and all-sources rows alike).
     */
   private def brandesWChain(pfx: String, und: String, srcCte: String,
       nodeCte: String, rounds: Int, dagIters: Int): String = {
@@ -3069,146 +3140,50 @@ object GraphOps {
     (pn, pu)
   }
 
-  /** The production landmark rule applied to the probe subgraph: top-K
-    * of `pu`'s degree aggregate (degree DESC, node ASC) — the probe
-    * twin of [[landmarkSeed]], kept as a relation (not a collect) so
-    * both consumers stay fully declarative.
+  /** Distance detail (src, node, d) from ALL probe nodes over the
+    * induced probe edges, reached pairs only: [[bfsKernel]] (INT d) or
+    * [[relaxKernel]] (exact BIGINT weight sums) on the [[All]] layout,
+    * memoized per metric ([[ClRounds]] hop and [[ClWRounds]] weighted
+    * rounds). Once per session, bounded by ProbeN² rows: the error
+    * gate's exact AND landmark totals and every tuning-panel config read
+    * the same detail.
     */
-  private def probeLmk(pu: DataFrame, k: Int): DataFrame = {
-    val s = pu.sparkSession
-    import s.implicits._
-    pu.groupBy($"node").agg(count(lit(1)).as("dg"))
-      .orderBy($"dg".desc, $"node".asc).limit(k).select($"node")
-  }
-
-  /** Row-based distance detail (src, node, d) from ALL probe nodes over
-    * the induced probe edges: `rounds` synchronous naive relaxations,
-    * each the (src, node) minimum over the previous distances ∪ every
-    * neighbor's distance plus one step. The hop step (+1, INT d,
-    * [[ClRounds]] rounds) is [[bfsChain]]'s recurrence; the weighted
-    * step (+weight, exact BIGINT d) is [[relaxChain]]'s, memoized per
-    * round count (closeness_w reads [[ClWRounds]], betweenness_w
-    * [[BwWRounds]]). Once per session, bounded by ProbeN² rows: the
-    * error gate's exact AND landmark totals and every tuning-panel
-    * config read the same detail.
-    */
-  private def probeDists(s: SparkSession, dir: String, weighted: Boolean,
-      rounds: Int): DataFrame = {
-    import s.implicits._
-    val (key, zero, step) =
-      if (weighted) (s"ce_probe_wd$rounds:$dir", lit(0L), $"d" + $"weight")
-      else (s"ce_probe_bfs:$dir", lit(0), $"d" + 1)
-    MatStore.of(s, key) {
+  private def probeDists(s: SparkSession, dir: String, weighted: Boolean): DataFrame =
+    MatStore.of(s, if (weighted) s"ce_probe_wd$ClWRounds:$dir" else s"ce_probe_bfs:$dir") {
       val (pn, pu) = probeRel(s, dir)
-      var d = pn.select($"node".as("src"), $"node", zero.as("d")).ckpt
-      for (_ <- 1 to rounds) {
-        d = d.union(
-            pu.join(d.select($"src", $"node".as("pn2"), $"d"), $"nb" === $"pn2")
-              .select($"src", $"node", step.as("d")))
-          .groupBy($"src", $"node").agg(min($"d").as("d"))
-          .ckpt
-      }
-      d
+      val L = allSources(pn)
+      val d = if (weighted) relaxKernel(pu, L, ClWRounds) else bfsKernel(pu, L, ClRounds, sigma = false)
+      d.filter(col("d").isNotNull)
     }
-  }
 
-  /** Row-based Brandes detail (node, src, di = floor(δ·1e9 + 0.5)) from
-    * ALL probe nodes, [[BwRounds]] rounds — [[brandesChain]]'s
-    * recurrence, exact BIGINT per (src, node), memoized once per
-    * session; exact and landmark accumulations are src-membership
-    * filters of this one relation.
+  /** Hop Brandes detail (node, src, di = floor(δ·1e9 + 0.5)) from ALL
+    * probe nodes, [[BwRounds]] rounds — [[bfsKernel]] with σ and
+    * [[brandesKernel]] on the [[All]] layout, one row per (node ≠ src)
+    * with a δ, memoized once per session; exact and landmark
+    * accumulations are src-membership filters of this one relation.
     */
   private[graft] def probeBrandesDetail(s: SparkSession, dir: String): DataFrame =
     MatStore.of(s, s"ce_probe_brandes:$dir") {
-      import s.implicits._
       val (pn, pu) = probeRel(s, dir)
-      val rounds = BwRounds
-      var bf = pn.select($"node".as("src"), $"node", lit(0).as("d"),
-        lit(1L).as("sig")).ckpt
-      for (i <- 1 to rounds) {
-        val c = pu.join(
-            bf.filter($"d" === i - 1).select($"src", $"node".as("pn2"), $"sig"),
-            $"nb" === $"pn2")
-          .groupBy($"src", $"node").agg(sum($"sig").cast("long").as("sig"))
-        bf = bf.union(
-            c.join(bf.select($"src", $"node"), Seq("src", "node"), "left_anti")
-              .select($"src", $"node", lit(i).as("d"), $"sig"))
-          .ckpt
-      }
-      val sv = bf.select($"src", $"node".as("v"), $"d".as("dv"), $"sig".as("sv"))
-      val sw = bf.select($"src".as("src2"), $"node".as("w"), $"d".as("dw"), $"sig".as("sw"))
-      val dag = pu.join(sv, $"node" === $"v")
-        .join(sw, $"nb" === $"w" && $"src" === $"src2" && $"dw" === $"dv" + 1)
-        .select($"src", $"v", $"dv", $"sv", $"w", $"sw").ckpt
-      var dl = bf.filter($"d" === rounds)
-        .select($"node", $"src", lit(0.0).as("delta")).ckpt
-      val levels = scala.collection.mutable.ArrayBuffer(dl)
-      for (r <- (rounds - 1) to 0 by -1) {
-        dl = dag.filter($"dv" === r)
-          .join(dl.select($"node".as("w2"), $"src".as("src3"), $"delta"),
-            $"w" === $"w2" && $"src" === $"src3", "left")
-          .groupBy($"v", $"src")
-          .agg(P.dsum(P.prnd(($"sv".cast("double") / $"sw".cast("double")) *
-            (lit(1.0) + coalesce($"delta", lit(0.0))), 9), 9).as("delta"))
-          .select($"v".as("node"), $"src", $"delta")
-          .ckpt
-        levels += dl
-      }
-      levels.reduce(_ union _).filter($"node" =!= $"src")
-        .select($"node", $"src",
-          floor($"delta" * 1e9 + 0.5).cast("long").as("di"))
+      val L = allSources(pn)
+      brandesKernel(pu, L, bfsKernel(pu, L, BwRounds, sigma = true), BwRounds)
+        .filter(!L.mask(0))
+        .select(col("node"), col("src"), nanoFloor(col("pd")).cast("long").as("di"))
     }
 
-  /** Row-based WEIGHTED Brandes detail (node, src, di = floor(δ·1e9+0.5))
-    * from ALL probe nodes — [[brandesWChain]]'s three passes
-    * ([[BwWRounds]] weighted relax rounds, [[BwWDagIters]] σ forward and
-    * δ backward relaxations over the weighted shortest-path DAG),
+  /** WEIGHTED Brandes detail (node, src, di = floor(δ·1e9+0.5)) from ALL
+    * probe nodes, dense over (node ≠ src) — [[relaxKernel]]
+    * ([[BwWRounds]]) and [[brandesWKernel]] on the [[All]] layout,
     * memoized once per session; exact and landmark accumulations are
     * src-membership filters of this one relation ([[ceTot]]).
     */
   private[graft] def probeBrandesWDetail(s: SparkSession, dir: String): DataFrame =
     MatStore.of(s, s"ce_probe_brandes_w:$dir") {
-      import s.implicits._
       val (pn, pu) = probeRel(s, dir)
-      val dW = probeDists(s, dir, weighted = true, BwWRounds)
-      val sv = dW.select($"src", $"node".as("v"), $"d".as("dv"))
-      val sw = dW.select($"src".as("src2"), $"node".as("w"), $"d".as("dw"))
-      val dag = pu.join(sv, $"node" === $"v")
-        .join(sw, $"nb" === $"w" && $"src" === $"src2" && $"dw" === $"dv" + $"weight")
-        .select($"src", $"v", $"w").ckpt
-      val pinned = pn.select($"node".as("src"), $"node", lit(1L).as("sig"))
-      var sig = pinned.ckpt
-      for (_ <- 1 to BwWDagIters) {
-        sig = pinned.union(
-            dag.join(sig.select($"src".as("src3"), $"node".as("v2"), $"sig"),
-                $"src" === $"src3" && $"v" === $"v2")
-              .groupBy($"src", $"w").agg(sum($"sig").cast("long").as("sig"))
-              .select($"src", $"w".as("node"), $"sig"))
-          .ckpt
-      }
-      val sv2 = sig.select($"src".as("sa"), $"node".as("v2"), $"sig".as("sv"))
-      val sw2 = sig.select($"src".as("sb"), $"node".as("w2"), $"sig".as("sw"))
-      val dagR = dag.join(sv2, $"src" === $"sa" && $"v" === $"v2")
-        .join(sw2, $"src" === $"sb" && $"w" === $"w2")
-        .select($"src", $"v", $"w",
-          ($"sv".cast("double") / $"sw".cast("double")).as("rt"))
-        .ckpt
-      val dense = pn.select($"node").crossJoin(pn.select($"node".as("src2")))
-      var dlt = dense.select($"node", $"src2".as("src"), lit(0.0).as("delta")).ckpt
-      for (_ <- 1 to BwWDagIters) {
-        val agg = dagR.join(dlt.select($"node".as("w3"), $"src".as("src4"), $"delta"),
-            $"w" === $"w3" && $"src" === $"src4")
-          .groupBy($"v", $"src")
-          .agg(P.dsum(P.prnd($"rt" * (lit(1.0) + $"delta"), 9), 9).as("adelta"))
-          .select($"v".as("n2"), $"src".as("s2"), $"adelta")
-        dlt = dense.join(agg, $"node" === $"n2" && $"src2" === $"s2", "left")
-          .select($"node", $"src2".as("src"),
-            coalesce($"adelta", lit(0.0)).as("delta"))
-          .ckpt
-      }
-      dlt.filter($"node" =!= $"src")
-        .select($"node", $"src",
-          floor($"delta" * 1e9 + 0.5).cast("long").as("di"))
+      val L = allSources(pn)
+      brandesWKernel(pu, L, relaxKernel(pu, L, BwWRounds), BwWDagIters)
+        .filter(!L.mask(0))
+        .select(col("node"), col("src"), nanoFloor(col("p")).cast("long").as("di"))
     }
 
   /** One row of the landmark error gate: a metric read off its
@@ -3223,11 +3198,11 @@ object GraphOps {
 
   private val ceMetrics = Seq(
     CeMetric("closeness", s"cex$ClRounds",
-      (s, dir) => probeDists(s, dir, weighted = false, ClRounds),
+      (s, dir) => probeDists(s, dir, weighted = false),
       Some(ClRounds + 1L), ClLandmarks),
     CeMetric("betweenness", "bexdl", probeBrandesDetail, None, BwLandmarks),
     CeMetric("closeness_w", s"cwx$ClWRounds",
-      (s, dir) => probeDists(s, dir, weighted = true, ClWRounds),
+      (s, dir) => probeDists(s, dir, weighted = true),
       Some(ClWCap), ClLandmarks),
     CeMetric("betweenness_w", "bwxdl", probeBrandesWDetail, None, BwLandmarks))
 
@@ -3351,11 +3326,11 @@ object GraphOps {
     * exact centralities over its whole — small — graph,
     * network_analysis.py:145-155). Per metric:
     *
-    *  - EXACT: all-sources BFS (closeness) / all-sources Brandes
-    *    (betweenness) within the probe subgraph, the same round caps
-    *    as production so the measured gap isolates the LANDMARK
-    *    sampling error (K sources vs all |P| sources), not the depth
-    *    bound;
+    *  - EXACT: the production kernels ([[bfsKernel]],
+    *    [[brandesKernel]]) on the [[All]] layout — every probe node a
+    *    source within the probe subgraph, the same round caps as
+    *    production so the measured gap isolates the LANDMARK sampling
+    *    error (K sources vs all |P| sources), not the depth bound;
     *  - APPROX: the production landmark rule (K highest-degree nodes)
     *    applied to the same subgraph;
     *  - report: Spearman rank correlation (ranks by exact integer
@@ -3367,13 +3342,14 @@ object GraphOps {
     * r18 adds the WEIGHTED rows (`closeness_w`, `betweenness_w`) — the
     * reference's `distance='weight'` semantics
     * (network_analysis.py:145-155), the last unmeasured estimators in
-    * the family: exact is all probe sources through the weighted
-    * [[probeDists]] / [[probeBrandesWDetail]] (the production
-    * Bellman-Ford round caps and σ/δ DAG iteration bounds, so the gap
-    * isolates the K-source sampling error exactly as the unweighted rows
-    * do), landmark is the production max-degree
+    * the family: exact is all probe sources through the same
+    * [[relaxKernel]] / [[brandesWKernel]] the landmark queries run (the
+    * production Bellman-Ford round caps and σ/δ DAG iteration bounds, so
+    * the gap isolates the K-source sampling error exactly as the
+    * unweighted rows do), landmark is the production max-degree
     * K=[[ClLandmarks]]/[[BwLandmarks]] rule as a src-membership filter
-    * of the SAME weighted details.
+    * of the SAME weighted details — a kernel's per-source values do not
+    * depend on the layout (GraphSpec's layout-agreement case).
     *
     * Scale shape: every relation after the probe slice is bounded by
     * the CONSTANT ProbeN (≤ ProbeN² BFS pairs), so the gate costs the
@@ -3415,7 +3391,7 @@ object GraphOps {
     ceMetrics.map { m =>
       val det = m.detail(s, dir)
       val ranked = ceRank(ceTot(pn, det, None, m.miss, np),
-        ceTot(pn, det, Some(probeLmk(pu, m.k)), m.miss, m.k), m.miss, np, m.k)
+        ceTot(pn, det, Some(maxDegreeSeed(pu, m.k)), m.miss, m.k), m.miss, np, m.k)
       ceReport(m.metric, ranked.ckpt)
     }.reduce(_ union _).orderBy($"metric")
   }
@@ -3497,7 +3473,7 @@ object GraphOps {
       for (st <- TuneStrategies; k <- TuneKs) yield {
         val seed = st match {
           case "smallest_id" => pn.orderBy($"node").limit(k)
-          case "max_degree"  => probeLmk(pu, k)
+          case "max_degree"  => maxDegreeSeed(pu, k)
           case "max_wdegree" => probeLmkW(pu, k)
         }
         ceReport(m.metric, ceRank(exact,

@@ -6,8 +6,9 @@ import org.apache.spark.sql.{GraftRunAccess, SparkSession}
 /** Dev-only: `graft.tools.Measure <sfDir> <nameRegex> [passes]` runs
   * every registered query matching the regex, in name order, once per
   * pass (default 2), and prints each run's [[RunRecord]] and a total per
-  * pass; then what [[MatStore]] holds. Each pass starts with
-  * `MatStore.clear` and `clearCache`, so it pays every shared build once,
+  * pass (jobs, stages, tasks, executions, shuffle read and write MB);
+  * then what [[MatStore]] holds. Each pass starts with `MatStore.clear`
+  * and `clearCache`, so it pays every shared build once,
   * in whichever query consumes it first, like a perfbench pass. Pass 1
   * also warms the JIT and codegen cache; compare code states by a later
   * pass's counters, not by walls (the host throttles intermittently).
@@ -31,9 +32,11 @@ object Measure {
         r.toOption
       }
       def sum(f: RunRecord => Int): Int = recs.map(f).sum
+      def mb(f: RunRecord => Long): Double = recs.map(f).sum / 1048576.0
       println(f"MEASURE $p total over ${recs.size} queries: wall=${recs.map(_.wallS).sum}%6.2f s " +
         s"jobs=${sum(_.jobs)} (construct ${sum(_.constructJobs)}) stages=${sum(_.stages)} " +
-        s"tasks=${sum(_.tasks)} execs=${sum(_.executions)}")
+        s"tasks=${sum(_.tasks)} execs=${sum(_.executions)} " +
+        f"shufR=${mb(_.shuffleReadBytes)}%.2f shufW=${mb(_.shuffleWriteBytes)}%.2f MB")
     }
     footprint(spark)
     spark.stop()

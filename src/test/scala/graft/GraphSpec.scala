@@ -231,7 +231,7 @@ class GraphSpec extends GraftSuite {
       }
       dist.toMap
     }
-    // landmarkSeed (r17) = k highest-degree nodes, ties by smallest id:
+    // maxDegreeSeed (r17) = k highest-degree nodes, ties by smallest id:
     // deg(2)=deg(4)=4, deg(1)=3 on this toy graph
     val pivots = Seq(2L, 4L, 1L)
     // closeness_w(v) = k / Σ_l min(dist_w(v, l), 100): exact integer sum,
@@ -307,6 +307,60 @@ class GraphSpec extends GraftSuite {
     val refC = GraphOps.closenessW(und, k = 3).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(gotC === refC, "closeness_w must be cap-invariant past convergence")
+  }
+
+  test("shortest-path kernels: a Landmarks run equals the All run filtered to its sources") {
+    // gr_centrality_err reads each landmark estimate as a src-membership
+    // filter of the all-sources probe detail. That is honest only if a
+    // kernel's per-source values do not depend on the layout it runs on:
+    // checked for hop d, weighted d, hop δ and weighted δ (nanounits) on
+    // the weighted toy graph above (every node a source) and on the
+    // corpus graph (every node a source, the production K and caps).
+    import spark.implicits._
+    import operators.GraphOps
+    import operators.GraphOps.{Landmarks, Layout}
+    // (src, node, value) of every non-null per-source value, node ≠ src
+    // for δ; δ read as floor(δ·1e9 + 0.5), the gate's nanounits
+    def perSource(df: org.apache.spark.sql.DataFrame, L: Layout, base: String,
+        delta: Boolean): Seq[(Long, Long, Long)] = {
+      val srcs = L match {
+        case l: Landmarks => l.ids.toSeq.zipWithIndex.map { case (id, i) => (lit(id), i) }
+        case _ => Seq((col("src"), 0))
+      }
+      srcs.map { case (src, i) =>
+        val v = col(L.c(base, i))
+        df.filter(v.isNotNull && (if (delta) col("node") =!= src else lit(true)))
+          .select(src.cast("long"), col("node"),
+            (if (delta) floor(v * 1e9 + 0.5) else v).cast("long"))
+      }.reduce(_ union _).as[(Long, Long, Long)].collect().toSeq.sorted
+    }
+    def agree(u: org.apache.spark.sql.DataFrame, kd: Int, kb: Int,
+        hop: Int, relax: Int, bHop: Int, bRelax: Int, dagIters: Int): Unit = {
+      val all = GraphOps.allSources(u.select($"node").distinct())
+      def check(what: String, k: Int, run: Layout => org.apache.spark.sql.DataFrame,
+          base: String, delta: Boolean): Unit = {
+        val lmk = GraphOps.landmarks(u, k)
+        val want = perSource(run(all), all, base, delta).filter(t => lmk.ids.contains(t._1))
+        val got = perSource(run(lmk), lmk, base, delta)
+        assert(got.nonEmpty, s"$what: no values")
+        assert(got === want, s"$what: Landmarks(${lmk.ids.mkString(",")}) differs from All")
+      }
+      check("hop d", kd, L => GraphOps.bfsKernel(u, L, hop, sigma = false), "d", delta = false)
+      check("weighted d", kd, L => GraphOps.relaxKernel(u, L, relax), "d", delta = false)
+      check("hop delta", kb, L => GraphOps.brandesKernel(u, L,
+        GraphOps.bfsKernel(u, L, bHop, sigma = true), bHop), "pd", delta = true)
+      check("weighted delta", kb, L => GraphOps.brandesWKernel(u, L,
+        GraphOps.relaxKernel(u, L, bRelax), dagIters), "p", delta = true)
+    }
+    val ew: Seq[(Long, Long, Long)] = Seq(
+      (1L, 2L, 1L), (2L, 3L, 1L), (3L, 4L, 1L), (1L, 4L, 10L),
+      (2L, 4L, 2L), (4L, 5L, 2L), (5L, 6L, 2L), (1L, 6L, 9L), (2L, 7L, 1L))
+    val toy = (ew ++ ew.map(e => (e._2, e._1, e._3))).toDF("node", "nb", "weight")
+    agree(toy, kd = 3, kb = 3, hop = 4, relax = 5, bHop = 4, bRelax = 5, dagIters = 5)
+    // the production caps: closeness K=24 over 6 hop / 8 relax rounds,
+    // betweenness K=8 over 4 hop / 5 relax rounds and 5 σ/δ rounds
+    agree(GraphOps.sharedUnd(spark, sfDir), kd = 24, kb = 8,
+      hop = 6, relax = 8, bHop = 4, bRelax = 5, dagIters = 5)
   }
 
   test("every node gets a component and labels are canonical members") {
@@ -578,7 +632,7 @@ class GraphSpec extends GraftSuite {
     val totE = bfsTot(pn)
     // the production landmark rule (r17): top-24 by probe degree
     // (degree DESC, node ASC) — over NON-ISOLATED nodes only, exactly
-    // like probeLmk/lmkSeedSql which aggregate over the edge relation
+    // like maxDegreeSeed/lmkSeedSql which aggregate over the edge relation
     // (an isolated probe node never appears there). When fewer than 24
     // probe nodes have edges, production's total still uses the
     // CONSTANT base 24·(R+1) (ceClosTotSql), i.e. every missing
